@@ -184,9 +184,9 @@ def _runs_from_ints(
 
 def encode_group_frame(pdf: pd.DataFrame, block_size: int = 128) -> pd.DataFrame:
     """pandas frame of posting rows (doc_id, field, term, tf, doc_len,
-    pos_bytes, bucket, salt) → block rows (BLOCK_SCHEMA). Shared by the bulk
-    builder, incremental segment writer, and the merge compactor so block
-    bytes are identical regardless of which path wrote them.
+    pos_bytes, bucket, salt) → block rows (BLOCK_SCHEMA). The independent
+    per-group reference for encode_group_table, which every write path
+    (build, segment put, merge) runs: tests pin the two byte-identical.
 
     pos_bytes per posting are already delta+varint framed (absolute first
     position per doc), so a block's pos_bytes is a plain concatenation —

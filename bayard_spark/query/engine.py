@@ -36,6 +36,7 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -99,29 +100,38 @@ class SearchEngine:
     def __init__(self, spark: SparkSession, root: str,
                  preload_dictionary: bool = True,
                  max_expansions: int = 1024):
-        from bayard_spark.fsio import IndexFS
+        import pyarrow.dataset as ds
+
+        from bayard_spark.build.segments import (
+            CommitLog,
+            count_tombstone_rows,
+            load_tombstones,
+            parquet_files,
+            visible_docs,
+            visible_postings,
+        )
 
         self.spark = spark
         self.paths = IndexPaths(root)
-        self.meta = IndexMeta.from_json(IndexFS(root).read_text(self.paths.meta))
+        log = CommitLog(root)
+        self.meta = IndexMeta.from_json(log.io.read_text(self.paths.meta))
         from bayard_spark.analysis.analyzer import build_analyzers
 
         self.analyzers = build_analyzers(self.meta.analyzers)
         self.field_analyzers = {
             f.name: f.analyzer for f in self.meta.fields if f.type == "text"
         }
-        from bayard_spark.build.segments import (
-            load_tombstones,
-            visible_docs,
-            visible_postings,
-        )
-
-        self.postings = visible_postings(spark, self.paths)
-        self.docs = visible_docs(spark, self.paths)
+        # The snapshot: ONE commit-log read pins the postings, docs and
+        # tombstones below to the same version. Opening runs no Spark job —
+        # every table read carries an explicit schema, and the stats and
+        # term dictionary are read with pyarrow from the files themselves.
+        state = log.read()
+        self.postings = visible_postings(spark, self.paths, state)
+        self.docs = visible_docs(spark, self.paths, state)
         # Tombstoned ids are filtered out of every decoded posting stream.
         # BM25 stats refresh only at build/merge time (documented: same
         # semantics as per-segment-reader stats in Lucene/tantivy).
-        self.tombstones = load_tombstones(spark, self.paths)
+        self.tombstones = load_tombstones(spark, self.paths, state)
         # counted once per engine snapshot: the per-query anti-join's
         # broadcast hint is size-gated (build/segments.py
         # TOMBSTONE_BROADCAST_MAX) — a web-scale purge must shuffle the
@@ -132,9 +142,7 @@ class SearchEngine:
         if self.tombstones is None:
             self._n_tombstones = 0
         else:
-            from bayard_spark.build.segments import count_tombstone_rows
-
-            n = count_tombstone_rows(self.paths)
+            n = count_tombstone_rows(self.paths, state)
             self._n_tombstones = (
                 n if n is not None else self.tombstones.count()
             )
@@ -143,16 +151,19 @@ class SearchEngine:
                 "n_docs": r["n_docs"],
                 "avg_len": r["avg_len"],
             }
-            for r in spark.read.parquet(self.paths.stats).collect()
+            for r in ds.dataset(
+                parquet_files(log.io, log.io.path("stats")),
+                filesystem=log.io.fs, format="parquet",
+            )
+            .to_table(columns=["field", "n_docs", "avg_len"])
+            .to_pylist()
         }
         # Doc-store size estimate for the response-path gate (zero Spark
         # jobs): the commit log's high-water doc_id over-counts by deleted
         # docs — the SAFE direction, since an overestimate only switches to
         # the point-lookup path earlier. Fresh pre-log indexes fall back to
         # the max per-field n_docs stat.
-        from bayard_spark.build.segments import CommitLog
-
-        _nd = CommitLog(root).read().get("next_doc_id")
+        _nd = state.get("next_doc_id")
         self._n_docs_estimate = (
             int(_nd)
             if _nd is not None
@@ -190,30 +201,53 @@ class SearchEngine:
         # dictionary to the driver.
         self.max_expansions = int(max_expansions)
         if preload_dictionary:
-            self._preload_dictionary()
+            self._preload_dictionary(log.io, state)
 
-    def _preload_dictionary(self) -> None:
-        rows = (
-            self.postings.groupBy("field", "term")
-            .agg(F.sum("n_docs").alias("df"), F.first("bucket").alias("b"))
-            .limit(self.MAX_DICT_TERMS + 1)
-            .collect()
-        )
-        if len(rows) > self.MAX_DICT_TERMS:
+    def _preload_dictionary(self, io, state: dict) -> None:
+        """(field, term) → (df, bucket) from the `term` and `n_docs`
+        columns of the visible postings files and their (field, bucket)
+        directories, read with pyarrow. The term cap is checked before the
+        terms are read, the byte cap on the aggregated Arrow table before
+        any Python object is built."""
+        import pyarrow.compute as pc
+
+        from bayard_spark.build.segments import visible_postings_dataset
+
+        dataset = visible_postings_dataset(io, state)
+        # Every run of a term's blocks (one per wave and salt) starts at
+        # block 0, so the block-0 count bounds the distinct (field, term)
+        # pairs from one int column. Only an index over that bound pays a
+        # Spark job for the exact count.
+        if (
+            dataset.count_rows(filter=pc.field("block_id") == 0)
+            > self.MAX_DICT_TERMS
+            and self.postings.select("field", "term").distinct()
+            .limit(self.MAX_DICT_TERMS + 1).count() > self.MAX_DICT_TERMS
+        ):
             return  # vocabulary too large for the driver; use lazy lookups
-        est_bytes = sum(120 + len(r["term"].encode()) for r in rows)
+        agg = (
+            dataset.to_table(columns=["field", "bucket", "term", "n_docs"])
+            .group_by(["field", "term"])
+            .aggregate([("n_docs", "sum"), ("bucket", "min")])
+        )
+        est_bytes = 120 * agg.num_rows + (
+            pc.sum(pc.binary_length(agg["term"])).as_py() or 0
+        )
         if est_bytes > self.MAX_DICT_BYTES:
             import logging
 
             logging.getLogger(__name__).info(
                 "dictionary preload skipped: %d terms ≈ %.1f MB over the "
                 "%d MB cap; falling back to lazy metadata lookups",
-                len(rows), est_bytes / 1e6, self.MAX_DICT_BYTES >> 20,
+                agg.num_rows, est_bytes / 1e6, self.MAX_DICT_BYTES >> 20,
             )
             return
-        for r in rows:
-            self._df_cache[(r["field"], r["term"])] = int(r["df"])
-            self._bucket_cache[r["term"]] = int(r["b"])
+        for f, t, df, b in zip(
+            agg["field"].to_pylist(), agg["term"].to_pylist(),
+            agg["n_docs_sum"].to_pylist(), agg["bucket_min"].to_pylist(),
+        ):
+            self._df_cache[(f, t)] = int(df)
+            self._bucket_cache[t] = int(b)
         self._dict_complete = True
 
     # ---------- helpers ----------
@@ -1523,23 +1557,14 @@ class SearchEngine:
         if len(ids) <= self.ISIN_LOOKUP_MAX:
             rows = proj.filter(F.col("doc_id").isin(ids)).collect()
         else:
-            # ship the id list as ONE Arrow batch: a list-of-tuples
+            # ship the id list as ONE Arrow table: a list-of-tuples
             # createDataFrame pays per-row Python->JVM pickling, which
             # profiling showed dominates this fetch (~0.45 s of a 0.56 s
-            # fetch for 3k ids at sf0.1); the Arrow path is ~3x faster
-            arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
-            prev = self.spark.conf.get(arrow_key, "false")
-            if prev != "true":
-                self.spark.conf.set(arrow_key, "true")
-            try:
-                id_df = self.spark.createDataFrame(
-                    pd.DataFrame(
-                        {"doc_id": np.asarray(ids, dtype=np.int64)}
-                    ),
-                    schema="doc_id long",
-                )
-                rows = proj.join(F.broadcast(id_df), "doc_id").collect()
-            finally:
-                if prev != "true":
-                    self.spark.conf.set(arrow_key, prev)
+            # fetch for 3k ids at sf0.1). A pyarrow.Table takes the Arrow
+            # path without the session-wide arrow conf, which other client
+            # threads share.
+            id_df = self.spark.createDataFrame(
+                pa.table({"doc_id": pa.array(ids, type=pa.int64())})
+            )
+            rows = proj.join(F.broadcast(id_df), "doc_id").collect()
         return {r["doc_id"]: r.asDict() for r in rows}
