@@ -13,10 +13,11 @@ re-expressed Spark-first:
               compiled to DataFrame plans; BM25 (k1=1.2, b=0.75) top-k
 - sources/    deterministic Common-Crawl-style webtext synthesis + HTML
               text extraction (byte-identical per url)
-- functions/  large-scale training-data ops: dedup (exact/minhash/simhash/
-              jaccard), ANN similarity search, text quality/language stats,
-              multimodal binary-column plumbing
+- streaming/  Structured Streaming ingestion into segment commits
 - oracle/     pure-Python reference engine for rank-identity testing
+- functions/  training-data pipeline ops kept for bench.py's report-only
+              pipeline section (clean_pipeline, BPE and the ops they use);
+              the search engine does not import them
 
 Design point: 10^12 documents on a multi-executor cluster; tested on local
 mode with the same partitioning/shuffle discipline.

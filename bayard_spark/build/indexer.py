@@ -944,6 +944,7 @@ class IndexBuilder:
         if n_docs is None:
             n_docs = self.spark.read.parquet(self.paths.docs).count()
         self._write_stats_from_norms(n_docs)
+        self._publish_next_doc_id(n_docs)
 
     def write_norms_stats_direct(
         self, docs: DataFrame, n_docs: int | None = None
@@ -956,6 +957,7 @@ class IndexBuilder:
         if n_docs is None:
             n_docs = self.spark.read.parquet(self.paths.docs).count()
         self._write_stats_from_norms(n_docs)
+        self._publish_next_doc_id(n_docs)
 
     def write_norms_stats_from_blocks(self, n_docs: int | None = None) -> None:
         """Merge-path variant: norms decoded from the written blocks."""
@@ -981,6 +983,18 @@ class IndexBuilder:
             )
         )
         stats.write.mode("overwrite").parquet(self.paths.stats)
+
+    def _publish_next_doc_id(self, n_docs: int) -> None:
+        """Record the build's dense-id count as the commit log's high-water
+        doc_id, so the first put after a build reads it from the log.
+        Read-modify-write: committed segments and tombstones survive a
+        rebuild, and the mark never moves back."""
+        from bayard_spark.build.segments import CommitLog
+
+        log = CommitLog(self.paths.root)
+        state = log.read()
+        state["next_doc_id"] = max(int(state.get("next_doc_id", 0)), n_docs)
+        log.write(state)
 
     # ---------- orchestration ----------
 

@@ -130,21 +130,19 @@ class SegmentWriter:
         writer advances its reservations via tiny `_reserved.json` files
         before it commits, so two writers never hand out the same range
         (ADVICE r4 — the old committed-only read reintroduced the
-        collision the original dir scan prevented). The max-over-every-
-        segment Spark scan below runs only ONCE per index lifetime, to
-        migrate indexes built before the field existed. Within a writer
-        the reservation advances locally as puts stage ids, so
-        consecutive puts don't re-read the log."""
+        collision the original dir scan prevented). The build publishes
+        the first `next_doc_id` (its dense-id count). Within a writer the
+        reservation advances locally as puts stage ids, so consecutive
+        puts don't re-read the log."""
         if self._reserved_next is not None:
             return self._reserved_next
-        state = self.log.read()
-        nd = state.get("next_doc_id")
-        if nd is None:
-            nd = self._scan_max_doc_id() + 1
-        nd = max(int(nd), self._staged_reservation_high())
-        self._reserved_next = int(nd)
-        self._reserved_base = int(nd)
-        return self._reserved_next
+        nd = max(
+            int(self.log.read()["next_doc_id"]),
+            self._staged_reservation_high(),
+        )
+        self._reserved_next = nd
+        self._reserved_base = nd
+        return nd
 
     def _staged_reservation_high(self) -> int:
         """Max reserved id bound over segment dirs not yet in the commit
@@ -165,22 +163,6 @@ class SegmentWriter:
                 except (ValueError, KeyError, json.JSONDecodeError):
                     continue
         return high
-
-    def _scan_max_doc_id(self) -> int:
-        # legacy migration path: max over base + all segment docs including
-        # tombstoned ones (O(#segments) jobs — replaced by the commit-log
-        # high-water mark for every index that has committed since)
-        dfs = [self.spark.read.parquet(self.paths.docs)]
-        seg_root = self.io.path("segments")
-        for seg in self.io.listdir(seg_root):
-            seg_docs = posixpath.join(seg_root, seg, "docs")
-            if self.io.exists(seg_docs):
-                dfs.append(self.spark.read.parquet(seg_docs))
-        m = -1
-        for d in dfs:
-            row = d.agg(F.max("doc_id").alias("m")).collect()[0]
-            m = max(m, int(row["m"] if row["m"] is not None else -1))
-        return m
 
     def _segment_name(self) -> str:
         return f"seg{int(time.time() * 1000)}_{len(self._staged_segments)}"
@@ -630,8 +612,10 @@ def merge_segments(spark: SparkSession, builder) -> dict:
     # swap postings dir; rewrite docs without tombstones; reset log
     new_docs_dir = io.path("docs_merged")
     io.delete_dir(new_docs_dir)
-    visible_docs(spark, paths, state).write.mode("overwrite").parquet(
-        new_docs_dir
+    (
+        visible_docs(spark, paths, state).write.mode("overwrite")
+        .option("compression", builder.meta.docstore_compression)
+        .parquet(new_docs_dir)
     )
     old_post = paths.postings + ".old"
     io.delete_dir(old_post)
@@ -646,10 +630,11 @@ def merge_segments(spark: SparkSession, builder) -> dict:
     io.delete_dir(io.path("segments"))
     io.delete_dir(io.path("tombstones"))
     prior = log.read()
-    reset = {"segments": [], "tombstones": [], "version": prior["version"] + 1}
-    if "next_doc_id" in prior:  # merge keeps doc ids; the high-water survives
-        reset["next_doc_id"] = prior["next_doc_id"]
-    log.write(reset)
+    # merge keeps doc ids; the high-water mark survives
+    log.write({
+        "segments": [], "tombstones": [],
+        "version": prior["version"] + 1, "next_doc_id": prior["next_doc_id"],
+    })
     builder.write_norms_stats_from_blocks()
     return {"merged": True}
 

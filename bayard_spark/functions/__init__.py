@@ -1,7 +1,8 @@
-"""Large-scale training-data pipeline operations.
+"""Training-data pipeline operations.
 
-Beyond the reference's search operators: deduplication, similarity search,
-text analysis, and multimodal column plumbing — the ops a 100 TB pretraining
-corpus pipeline needs, built Spark-first (JVM expressions where possible,
-Arrow-batch UDFs where not).
+Kept for bench.py's report-only pipeline section, which imports `bpe` and
+`pipeline`; `pipeline.clean_pipeline` composes `chunking`, `dedup`,
+`encoding`, `sampling` and `textstats`. Built Spark-first (JVM
+expressions where possible, Arrow-batch UDFs where not). The search
+engine does not import this package.
 """

@@ -15,9 +15,7 @@ Scale design notes (the point of each op is the shuffle shape):
   (drop shingles appearing in > max_shingle_df docs — same hot-key discipline
   as the index builder's salting).
 
-All hashes are xxhash64 (JVM, fast). The driver-gated twins in
-__spark_entry__ use an md5-derived hash instead so DuckDB reproduces them
-bit-for-bit; semantics are identical.
+All hashes are xxhash64 (JVM, fast).
 """
 
 from __future__ import annotations

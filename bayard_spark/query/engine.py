@@ -161,16 +161,8 @@ class SearchEngine:
         # Doc-store size estimate for the response-path gate (zero Spark
         # jobs): the commit log's high-water doc_id over-counts by deleted
         # docs — the SAFE direction, since an overestimate only switches to
-        # the point-lookup path earlier. Fresh pre-log indexes fall back to
-        # the max per-field n_docs stat.
-        _nd = state.get("next_doc_id")
-        self._n_docs_estimate = (
-            int(_nd)
-            if _nd is not None
-            else max(
-                (int(s["n_docs"]) for s in self.stats.values()), default=0
-            )
-        )
+        # the point-lookup path earlier.
+        self._n_docs_estimate = int(state["next_doc_id"])
         self._last_response_path: str | None = None
         self._bucket_cache: dict[str, int] = {}
         self._df_cache: dict[tuple[str, str], int] = {}

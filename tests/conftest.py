@@ -67,3 +67,32 @@ def built(spark, tmp_index_root):
     return engine, oracle
 
 
+@pytest.fixture(scope="session")
+def pruned_idx(spark):
+    """1600 docs, every one containing 'common' (df=1600 > 1024 gate), with a
+    planted score gradient: doc i repeats 'common' (i % 5 + 1) times inside
+    filler, so high-tf docs are scattered across blocks.
+
+    Shared by test_block_max_pruning.py (whose TestTombstonePruning
+    deletes 20 docs), test_regex_expansion.py and test_response_path.py."""
+    from pyspark.sql import functions as F
+
+    from bayard_spark.build.indexer import IndexBuilder
+    from bayard_spark.schema import webtext_index_meta
+
+    n = 1600  # > 8 * block_size(128) so the pruning gate opens for 'common'
+    root = tempfile.mkdtemp(prefix="prune_idx_")
+    rows = []
+    for i in range(n):
+        reps = " ".join(["common"] * (i % 5 + 1))
+        filler = " ".join(f"w{j}" for j in range((i * 7) % 11 + 3))
+        rows.append((f"https://p.example/{i:05d}", f"2024-01-01 00:{i % 60:02d}:00",
+                     f"{filler} {reps}", "en"))
+    src = spark.createDataFrame(
+        rows, "url string, warc_ts string, text string, lang string"
+    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
+    meta = webtext_index_meta(num_buckets=4, num_waves=1)
+    builder = IndexBuilder(spark, meta, root)
+    builder.build(src, resume=False)
+    yield spark, root, builder
+    shutil.rmtree(root, ignore_errors=True)

@@ -209,3 +209,65 @@ class TestAnalyzer:
         a = builtin_analyzers()["default"]
         out = a.terms_per_row(pd.Series(["Hello world", "", "Rust"]))
         assert out.tolist() == [["hello", "world"], [], ["rust"]]
+
+
+class TestArrowFilterOrder:
+    def test_stop_word_before_lower_case_falls_back(self):
+        from bayard_spark.analysis import arrow_native
+        from bayard_spark.analysis.analyzer import build_analyzer
+
+        ok = build_analyzer("ok", {
+            "tokenizer": {"name": "simple"},
+            "filters": [{"name": "lower_case"},
+                        {"name": "stop_word", "args": {"words": ["the"]}}],
+        })
+        bad = build_analyzer("bad", {
+            "tokenizer": {"name": "simple"},
+            "filters": [{"name": "stop_word", "args": {"words": ["the"]}},
+                        {"name": "lower_case"}],
+        })
+        assert arrow_native.supports(ok)
+        assert not arrow_native.supports(bad)
+
+
+OFFSET_PROBES = [
+    "",
+    None,
+    "   ",
+    "hello world!",
+    "  leading and trailing  ",
+    "café au lait",
+    "日本語 テキスト",
+    "tab\tsep\nnew line",
+    "emoji 🎉 party",
+    "a" * 1000,
+    "x-y_z.w",
+    "ÀÉÎõü mixed ÇASE",
+]
+
+
+@pytest.mark.parametrize(
+    "tokenize", [tokenize_simple, tokenize_whitespace, tokenize_raw],
+    ids=["simple", "whitespace", "raw"],
+)
+@pytest.mark.parametrize("text", OFFSET_PROBES)
+def test_offsets_path_agrees_with_fast_path(tokenize, text):
+    """The offsets path (a per-row scan) and the vectorized path emit the
+    same (row, token, pos) rows; every token is the UTF-8 byte slice its
+    offsets name, positions count up from 0 per row, and a row's tokens do
+    not depend on its neighbours."""
+    s = pd.Series([text, "pad row", text])
+    fast = tokenize(s)
+    slow = tokenize(s, offsets=True)
+    cols = ["idx", "token", "pos"]
+    assert fast[cols].values.tolist() == slow[cols].values.tolist()
+    raw = (text or "").encode("utf-8")
+    rows = slow[slow["idx"] == 0]
+    for r in rows.itertuples(index=False):
+        assert raw[r.start:r.end].decode("utf-8") == r.token
+    assert rows["pos"].tolist() == list(range(len(rows)))
+    assert (rows["start"].to_numpy()[1:] >= rows["end"].to_numpy()[:-1]).all()
+    last = slow[slow["idx"] == 2]
+    assert last[["token", "pos", "start", "end"]].values.tolist() == (
+        rows[["token", "pos", "start", "end"]].values.tolist()
+    )

@@ -1,6 +1,9 @@
-"""Posting block codec: exact round-trips + property-based checks."""
+"""Posting block codec: exact round-trips + property-based checks, the
+indexer's packed-key run sort, and byte identity of the Arrow block
+encoder against the pandas reference encoder."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -96,6 +99,48 @@ class TestBlock:
             np.cumsum(varint_decode(runs[2]), dtype=np.uint64),
             np.array([7, 8, 2000], dtype=np.uint64),
         )
+
+    @pytest.mark.parametrize(
+        "doc_ids,doc_positions",
+        [
+            ([0], [[0]]),
+            ([0], [[2**32]]),
+            ([5], [[0, 1, 2, 3, 4, 5, 6, 7]]),
+            ([1, 2], [[3], [3]]),
+            ([7, 2**40], [[1, 2**20], [0]]),
+            ([0, 1, 2**63 - 1], [[9], [0, 9], [4, 5, 6]]),
+            (list(range(128)), [[i] for i in range(128)]),
+            (list(range(0, 1280, 10)), [[0, i + 1] for i in range(128)]),
+            ([3, 4, 5], [[1000, 1001], [0], [127, 128, 16383, 16384]]),
+        ],
+        ids=[
+            "one-doc-pos0", "one-doc-pos2^32", "one-doc-tf8", "pos-restart",
+            "gap2^40", "max-doc-id", "full-block", "full-block-strided",
+            "varint-boundaries",
+        ],
+    )
+    def test_block_roundtrip_shapes(self, doc_ids, doc_positions):
+        # every doc's positions restart from their absolute value, so a
+        # doc whose first position is below the previous doc's last still
+        # round-trips; the per-doc byte runs tile the stream
+        doc_ids = np.array(doc_ids, dtype=np.uint64)
+        tfs = np.array([len(p) for p in doc_positions], dtype=np.uint64)
+        offs = np.zeros(len(tfs) + 1, dtype=np.int64)
+        np.cumsum(tfs, out=offs[1:])
+        positions = np.concatenate(
+            [np.array(p, dtype=np.uint64) for p in doc_positions]
+        )
+        db, tb, pb = encode_block(doc_ids, tfs, positions, offs)
+        d2, t2, p2, o2 = decode_block(db, tb, pb)
+        assert np.array_equal(d2, doc_ids)
+        assert np.array_equal(t2, tfs)
+        assert np.array_equal(p2, positions)
+        assert np.array_equal(o2, offs)
+        runs = split_pos_bytes(pb, tfs)
+        assert b"".join(runs) == pb
+        for run, want in zip(runs, doc_positions):
+            got = np.cumsum(varint_decode(run), dtype=np.uint64)
+            assert got.tolist() == want
 
     def test_partial_block_and_single_doc(self):
         d = np.array([42], dtype=np.uint64)
@@ -199,3 +244,134 @@ class TestBatchedDecode:
         vals, voffs = varint_decode_many(buf, offs)
         for k, s in enumerate(streams):
             assert vals[voffs[k] : voffs[k + 1]].tolist() == s
+
+
+def _rows_of(batch):
+    if batch is None:
+        return []
+    d = batch.to_pydict()
+    return list(
+        zip(d["doc_id"], d["field"], d["term"], d["tf"], d["doc_len"],
+            d["pos_bytes"])
+    )
+
+
+class TestRunsPackedSort:
+    def _mk(self, rng, n_rows=50, n_codes=30, max_tok=40):
+        idx, codes, pos = [], [], []
+        for r in range(n_rows):
+            k = int(rng.integers(0, max_tok))
+            idx.extend([r] * k)
+            codes.extend(rng.integers(0, n_codes, k).tolist())
+            pos.extend(range(k))
+        return (
+            np.array(idx, dtype=np.int64),
+            np.array(codes, dtype=np.int32),
+            np.array(pos, dtype=np.int64),
+        )
+
+    def test_matches_lexsort_on_row_major(self, monkeypatch):
+        from bayard_spark.build import indexer
+
+        rng = np.random.default_rng(3)
+        for _ in range(5):
+            idx, codes, pos = self._mk(rng)
+            dictionary = pa.array([f"t{i}" for i in range(30)])
+            doc_ids = np.arange(100, 150, dtype=np.int64)
+            dl = np.bincount(idx, minlength=50).astype(np.int32)
+            got = indexer._runs_from_ints(
+                idx, codes, pos, dictionary, dl, doc_ids, "text", True
+            )
+            # force the general path by shadowing argsort's precondition:
+            # recompute with an explicit lexsort on the same inputs
+            order = np.lexsort((pos, codes, idx))
+            packed = np.argsort(
+                idx * (np.int64(codes.max()) + 1) + codes, kind="stable"
+            )
+            assert np.array_equal(order, packed)
+            want = indexer._runs_from_ints(
+                idx[order], codes[order], pos[order],
+                dictionary, dl, doc_ids, "text", True,
+            )
+            # already-sorted input goes through either path identically
+            assert _rows_of(got) == _rows_of(want)
+
+    def test_fallback_on_unordered_input(self):
+        from bayard_spark.build import indexer
+
+        # pos DESCENDING within a row: the row-major check must fail and
+        # the lexsort fallback must still sort positions ascending
+        idx = np.array([0, 0, 0], dtype=np.int64)
+        codes = np.array([5, 5, 5], dtype=np.int32)
+        pos = np.array([2, 1, 0], dtype=np.int64)
+        dictionary = pa.array([f"t{i}" for i in range(6)])
+        doc_ids = np.array([7], dtype=np.int64)
+        dl = np.array([3], dtype=np.int32)
+        got = indexer._runs_from_ints(
+            idx, codes, pos, dictionary, dl, doc_ids, "text", True
+        )
+        rows = _rows_of(got)
+        assert len(rows) == 1 and rows[0][3] == 3  # tf aggregated
+        # delta+varint of sorted positions 0,1,1? -> absolute first = 0
+        from bayard_spark.build.codec import varint_decode
+
+        deltas = varint_decode(rows[0][5])
+        assert deltas.tolist() == [0, 1, 1]
+
+
+class TestEncodeGroupZeroCopy:
+    """encode_group_table (zero-copy per-block payload columns, r7) must
+    stay byte-identical to encode_group_frame, the independent pandas
+    encoder the incremental segment writer uses."""
+
+    def test_identical_blocks(self):
+        import pandas as pd
+
+        from bayard_spark.build.indexer import (
+            encode_group_frame,
+            encode_group_table,
+        )
+        from bayard_spark.build.codec import varint_encode
+
+        rng = np.random.default_rng(11)
+        rows = []
+        for fld in ("text", "url"):
+            for t in range(6):
+                term = f"term{t}"
+                salts = [0, 1] if t == 0 else [0]
+                for salt in salts:
+                    docs = np.sort(
+                        rng.choice(100_000, size=300, replace=False)
+                    )
+                    for d in docs:
+                        pos = np.sort(
+                            rng.choice(50, size=3, replace=False)
+                        ).astype(np.uint64)
+                        deltas = pos.copy()
+                        deltas[1:] -= pos[:-1]
+                        rows.append(
+                            (
+                                int(d), fld, term,
+                                3, int(rng.integers(1, 200)),
+                                bytes(varint_encode(deltas)),
+                                7, salt,
+                            )
+                        )
+        cols = ["doc_id", "field", "term", "tf", "doc_len", "pos_bytes",
+                "bucket", "salt"]
+        pdf = pd.DataFrame(rows, columns=cols)
+        want = encode_group_frame(pdf.copy(), block_size=128)
+        got = (
+            encode_group_table(
+                pa.Table.from_pandas(pdf, preserve_index=False),
+                block_size=128,
+            )
+            .to_pandas()
+        )
+        key = ["field", "term", "salt", "block_id"]
+        want = want.sort_values(key, ignore_index=True)
+        got = got.sort_values(key, ignore_index=True)
+        assert list(want.columns) == list(got.columns)
+        for c in want.columns:
+            a, b = want[c].tolist(), got[c].tolist()
+            assert a == b, f"column {c} diverges"

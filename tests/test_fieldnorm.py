@@ -42,6 +42,17 @@ class TestCode:
             nxt = TABLE[np.searchsorted(TABLE, q) + 1]
             assert n < nxt
 
+    @pytest.mark.parametrize("k", [0, 1, 39, 40, 41, 42, 100, 200, 254, 255])
+    def test_bucket_edges(self, k):
+        # code k covers [TABLE[k], TABLE[k+1]); the last code is open-ended
+        lo = int(TABLE[k])
+        hi = int(TABLE[k + 1]) - 1 if k + 1 < len(TABLE) else 2 * lo
+        assert quantize_one(lo) == lo
+        assert quantize_one(hi) == lo
+        assert quantize(np.array([lo, hi, (lo + hi) // 2])).tolist() == [lo] * 3
+        if k > 0:
+            assert quantize_one(lo - 1) == int(TABLE[k - 1])
+
 
 @pytest.fixture(scope="module")
 def lossy_idx(spark):

@@ -1,16 +1,10 @@
-"""Training-data pipeline ops: dedup / similarity / textstats / multimodal."""
+"""Training-data pipeline ops: dedup / chunking / encoding / textstats /
+sampling."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bayard_spark.functions import (
-    chunking,
-    dedup,
-    multimodal,
-    similarity,
-    textstats,
-)
+from bayard_spark.functions import chunking, dedup, textstats
 
 SF = "/root/testdata/sf0.001"
 
@@ -18,11 +12,6 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet")
 
 
 class TestDedup:
@@ -358,62 +347,6 @@ class TestMojibake:
         assert got == s
 
 
-class TestSimilarity:
-    def test_cosine_topk_matches_numpy(self, emb):
-        rows = emb.orderBy("vec_id").limit(200).collect()
-        ids = np.array([r["vec_id"] for r in rows])
-        m = np.array([r["embedding"] for r in rows], dtype=np.float64)
-        q = m[0]
-        cos = (m @ q) / (np.linalg.norm(m, axis=1) * np.linalg.norm(q))
-        order = np.lexsort((ids, -np.round(cos, 12)))[:5]
-        expected = ids[order].tolist()
-        sub = emb.orderBy("vec_id").limit(200)
-        got = similarity.cosine_topk(sub, q.tolist(), k=5).collect()
-        assert [r["vec_id"] for r in got] == expected
-        for r, i in zip(got, order):
-            assert abs(r["cosine"] - cos[i]) < 1e-9
-
-    def test_ivf_recall_vs_brute(self, emb):
-        q_row = emb.filter(F.col("vec_id") == 1).collect()[0]
-        q = list(q_row["embedding"])
-        brute = {
-            r["vec_id"]
-            for r in similarity.cosine_topk(emb, q, k=10).collect()
-        }
-        cents = similarity.deterministic_centroids(emb, 8)
-        assigned = similarity.ivf_assign(emb, cents)
-        got = {
-            r["vec_id"]
-            for r in similarity.ivf_search(assigned, cents, q, k=10, nprobe=4)
-            .collect()
-        }
-        # probing half the centroids should keep most of the true top-10
-        assert len(brute & got) >= 6
-
-    def test_lsh_buckets_deterministic(self, emb):
-        s1 = {
-            (r["vec_id"], r["sig"])
-            for r in similarity.lsh_signatures(emb.limit(50)).collect()
-        }
-        s2 = {
-            (r["vec_id"], r["sig"])
-            for r in similarity.lsh_signatures(
-                emb.limit(50).repartition(7)
-            ).collect()
-        }
-        assert s1 == s2
-
-    def test_embedding_near_dup_self(self, spark, emb):
-        two = emb.limit(1)
-        dup = two.select(
-            (F.col("vec_id") + 1000).alias("vec_id"), "embedding", "label"
-        )
-        both = two.unionByName(dup)
-        pairs = similarity.embedding_near_dup_pairs(both, min_cosine=0.999)
-        got = pairs.collect()
-        assert len(got) == 1 and abs(got[0]["cosine"] - 1.0) < 1e-9
-
-
 class TestTextstats:
     def test_language_id(self, spark):
         df = spark.createDataFrame(
@@ -494,111 +427,6 @@ class TestTextstats:
         assert fps[1] == fps[2] != fps[3]
 
 
-class TestMultimodal:
-    def test_image_metadata_png_header(self, spark):
-        png = (b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\x0dIHDR"
-               + (640).to_bytes(4, "big") + (480).to_bytes(4, "big"))
-        df = spark.createDataFrame(
-            [(1, png), (2, b"\xff\xd8rest"), (3, b"junkbytes"), (4, None)],
-            "asset_id long, media binary",
-        )
-        rows = {r["asset_id"]: r for r in multimodal.image_metadata(df).collect()}
-        assert (rows[1]["format"], rows[1]["width"], rows[1]["height"]) == (
-            "png", 640, 480)
-        assert rows[2]["format"] == "jpeg"
-        assert rows[3]["format"] == "unknown"
-        assert rows[4]["n_bytes"] == 0
-
-    def test_image_features_deterministic_and_shaped(self, spark):
-        df = spark.createDataFrame(
-            [(1, b"imagebytes-a"), (2, b"imagebytes-a"), (3, b"imagebytes-b")],
-            "asset_id long, media binary",
-        )
-        rows = {r["asset_id"]: r["feature"] for r in
-                multimodal.image_features(df, dim=32).collect()}
-        assert len(rows[1]) == 32
-        assert rows[1] == rows[2] != rows[3]
-        # real_decode now actually decodes PNG pixels (round 4); the
-        # honest gate moved to NON-decodable containers and raises from
-        # the executor when the job runs
-        from py4j.protocol import Py4JJavaError
-        from pyspark.errors.exceptions.captured import PythonException
-
-        with pytest.raises((PythonException, Py4JJavaError)) as err:
-            multimodal.image_features(df, real_decode=True).collect()
-        assert "MediaDecodeUnavailable" in str(err.value)
-
-    def test_video_frame_sampling(self, spark):
-        vid = bytes(1024 * 55)  # 55 fake frames
-        df = spark.createDataFrame(
-            [(1, vid), (2, b"short")], "asset_id long, media binary"
-        )
-        rows = multimodal.sample_video_frames(df, every_n=10, max_frames=4).collect()
-        by_asset = {}
-        for r in rows:
-            by_asset.setdefault(r["asset_id"], []).append(r["frame_no"])
-        assert by_asset[1] == [0, 10, 20, 30]  # capped at max_frames
-        assert 2 not in by_asset  # too short to have frames
-        assert all(len(r["frame_bytes"]) == 1024 for r in rows)
-
-    def test_image_metadata_real_headers_all_formats(self, spark):
-        # structurally-valid minimal files built with stdlib only — the
-        # decoder must read dimensions from each container's real header
-        import struct
-        import zlib
-
-        def make_png(w, h):
-            def chunk(tag, data):
-                return (struct.pack(">I", len(data)) + tag + data
-                        + struct.pack(">I", zlib.crc32(tag + data)))
-            ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-            raw = b"".join(b"\x00" + b"\x00\x00\x00" * w for _ in range(h))
-            return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-
-        def make_jpeg(w, h):
-            app0 = (b"\xff\xe0" + struct.pack(">H", 16)
-                    + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-            dqt = b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(64)
-            sof = (b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, h, w, 1)
-                   + b"\x01\x11\x00")
-            return b"\xff\xd8" + app0 + dqt + sof + b"\xff\xd9"
-
-        def make_gif(w, h):
-            return (b"GIF89a" + struct.pack("<HH", w, h)
-                    + b"\x00\x00\x00" + b"\x3b")
-
-        def make_webp_lossless(w, h):
-            b0 = (w - 1) & 0xFF
-            b1 = (((w - 1) >> 8) & 0x3F) | (((h - 1) & 0x3) << 6)
-            b2 = ((h - 1) >> 2) & 0xFF
-            b3 = ((h - 1) >> 10) & 0x0F
-            payload = b"\x2f" + bytes([b0, b1, b2, b3]) + b"\x00\x00\x00"
-            return (b"RIFF" + struct.pack("<I", 4 + 8 + len(payload))
-                    + b"WEBP" + b"VP8L" + struct.pack("<I", len(payload))
-                    + payload)
-
-        def make_bmp(w, h):
-            dib = struct.pack("<Iii", 40, w, h) + bytes(28)
-            return (b"BM" + struct.pack("<IHHI", 54, 0, 0, 54) + dib)
-
-        cases = [
-            (1, make_png(640, 480), ("png", 640, 480)),
-            (2, make_jpeg(1024, 768), ("jpeg", 1024, 768)),
-            (3, make_gif(320, 200), ("gif", 320, 200)),
-            (4, make_webp_lossless(512, 384), ("webp", 512, 384)),
-            (5, make_bmp(800, 600), ("bmp", 800, 600)),
-            (6, b"not an image at all", ("unknown", 0, 0)),
-        ]
-        df = spark.createDataFrame(
-            [(i, b) for i, b, _ in cases], "asset_id long, media binary"
-        )
-        rows = {r["asset_id"]: r for r in multimodal.image_metadata(df).collect()}
-        for i, _, want in cases:
-            got = (rows[i]["format"], rows[i]["width"], rows[i]["height"])
-            assert got == want, f"asset {i}: {got} != {want}"
-
-
 class TestUnigramLogprob:
     def test_matches_hand_computation(self, spark):
         import math
@@ -628,50 +456,6 @@ class TestUnigramLogprob:
         plan = textstats.unigram_logprob(df)._jdf.queryExecution() \
             .executedPlan().toString()
         assert "Broadcast" in plan, "unigram table must broadcast, not shuffle"
-
-
-def test_ivf_physical_layout_prunes_partitions(spark, emb, tmp_path):
-    """write_ivf_index lays vectors out hive-partitioned by centroid so
-    ivf_search's probe filter becomes FILE pruning (PartitionFilters in
-    the scan), with one file per cell; results are identical to the
-    in-memory assigned path."""
-    import contextlib
-    import io
-    import os
-
-    path = str(tmp_path / "ivf")
-    cents = similarity.write_ivf_index(emb, path, n_centroids=8)
-    vectors, cents2 = similarity.load_ivf_index(spark, path)
-    assert np.allclose(cents, cents2)
-
-    # one file per cell: the pre-write repartition on centroid keeps each
-    # cell in a single task
-    for d in os.listdir(f"{path}/vectors"):
-        if d.startswith("centroid="):
-            files = [
-                f for f in os.listdir(f"{path}/vectors/{d}")
-                if f.endswith(".parquet")
-            ]
-            assert len(files) == 1, (d, files)
-
-    q = list(emb.filter(F.col("vec_id") == 1).collect()[0]["embedding"])
-    assigned = similarity.ivf_assign(emb, cents)
-    mem = [
-        (r["vec_id"], round(r["cosine"], 9))
-        for r in similarity.ivf_search(assigned, cents, q, k=10, nprobe=3)
-        .collect()
-    ]
-    disk_q = similarity.ivf_search(vectors, cents2, q, k=10, nprobe=3)
-    disk = [(r["vec_id"], round(r["cosine"], 9)) for r in disk_q.collect()]
-    assert mem == disk
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        disk_q.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters", 1)[1][:300]
-    assert "centroid" in pf and "IN" in pf.upper(), pf
 
 
 class TestRepetitionDecontaminate:
@@ -750,33 +534,6 @@ class TestRepetitionDecontaminate:
         # repetition: 1-token doc has no 2-grams at all
         rep = {r["doc_id"]: r for r in textstats.repetition_stats(df).collect()}
         assert rep[2]["top2gram_frac"] == 0.0 and rep[2]["total_chars"] == 1
-
-    def test_banded_near_dup_recall(self, spark):
-        rng = np.random.default_rng(11)
-        base = rng.normal(size=(20, 32))
-        base /= np.linalg.norm(base, axis=1, keepdims=True)
-        noisy = base + rng.normal(scale=0.005, size=base.shape)
-        rows = [
-            (int(i), [float(x) for x in base[i]], 0) for i in range(20)
-        ] + [
-            (int(i + 1000), [float(x) for x in noisy[i]], 0)
-            for i in range(20)
-        ]
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>, label int"
-        )
-        pairs = similarity.embedding_near_dup_pairs(
-            df, min_cosine=0.99
-        ).collect()
-        found = {(r["id_a"], r["id_b"]) for r in pairs}
-        planted = {(i, i + 1000) for i in range(20)}
-        # banding (4 x 16-bit over 64 bits) keeps nearly all ~0.9999-cosine
-        # pairs; everything found must be a planted pair (cross cosines
-        # are far below the threshold on random gaussians)
-        assert found <= planted
-        assert len(found) >= 18
-        for r in pairs:
-            assert r["cosine"] >= 0.99
 
 
 class TestGopherPiiParaDedup:
@@ -926,103 +683,6 @@ class TestGopherPiiParaDedup:
         assert (out["n_tokens"], out["n_removed"]) == (15, 10)
 
 
-class TestUrlOps:
-    """Hand-computed expectations for URL canonicalization and
-    domain-blocklist tagging (functions/urls.py)."""
-
-    def test_url_normalize_hand_computed(self, spark):
-        from bayard_spark.functions import urls
-
-        df = spark.createDataFrame(
-            [
-                (
-                    1,
-                    "HTTPS://User:Pw@WWW.Shop.Example.CO.UK:443/Items/"
-                    "?utm_source=x&b=2&a=1&fbclid=z#top",
-                ),
-                (2, "http://example.com:8080"),
-                (3, "http://EXAMPLE.com:80/a//b/"),
-                (4, "https://192.168.0.1/x?ref=abc"),
-                (5, "not a url"),
-                (6, "ftp://files.example.org/pub/"),
-                (7, "http://localhost/"),
-                (8, "https://sub.domain.github.io/x?&&a=1"),
-            ],
-            "doc_id long, url string",
-        )
-        out = {r["doc_id"]: r for r in urls.url_normalize(df).collect()}
-        r = out[1]
-        assert r["url_norm"] == "https://shop.example.co.uk/Items?a=1&b=2"
-        assert r["host"] == "shop.example.co.uk"
-        assert r["registered_domain"] == "example.co.uk"
-        assert out[2]["url_norm"] == "http://example.com:8080/"
-        assert out[2]["registered_domain"] == "example.com"
-        assert out[3]["url_norm"] == "http://example.com/a//b"
-        assert out[4]["url_norm"] == "https://192.168.0.1/x"
-        assert out[4]["registered_domain"] == "192.168.0.1"
-        assert out[5]["url_norm"] is None
-        assert out[5]["registered_domain"] is None
-        assert out[6]["url_norm"] == "ftp://files.example.org/pub"
-        assert out[6]["registered_domain"] == "example.org"
-        assert out[7]["url_norm"] == "http://localhost/"
-        assert out[7]["registered_domain"] == "localhost"
-        # empty params dropped; github.io not a bundled multi-part suffix
-        assert out[8]["url_norm"] == "https://sub.domain.github.io/x?a=1"
-        assert out[8]["registered_domain"] == "github.io"
-
-    def test_ipv6_bracket_host_is_typed_null(self, spark):
-        from bayard_spark.functions import urls
-
-        df = spark.createDataFrame(
-            [(1, "http://[::1]:8080/x"), (2, "https://[2001:db8::1]/y")],
-            "doc_id long, url string",
-        )
-        out = {r["doc_id"]: r for r in urls.url_normalize(df).collect()}
-        for i in (1, 2):
-            assert out[i]["url_norm"] is None
-            assert out[i]["host"] is None
-            assert out[i]["registered_domain"] is None
-
-    def test_domain_filter_hand_computed(self, spark):
-        from bayard_spark.functions import urls
-
-        df = spark.createDataFrame(
-            [
-                (1, "https://a.shop.example.co.uk/x"),
-                (2, "https://www.clean.org/y"),
-                (3, "http://spam.com/z?gclid=1"),
-                (4, "garbage"),
-            ],
-            "doc_id long, url string",
-        )
-        bl = spark.createDataFrame(
-            [("example.co.uk",), ("spam.com",)], "domain string"
-        )
-        out = {
-            r["doc_id"]: r for r in urls.domain_filter(df, bl).collect()
-        }
-        assert out[1]["is_blocked"] is True
-        assert out[2]["is_blocked"] is False
-        assert out[3]["is_blocked"] is True
-        assert out[4]["is_blocked"] is False  # unparseable -> never blocked
-
-        # identical results through the shuffle-join branch
-        import bayard_spark.functions.urls as u
-
-        old = u.DOMAIN_BLOCKLIST_BROADCAST_MAX
-        try:
-            u.DOMAIN_BLOCKLIST_BROADCAST_MAX = 0
-            out2 = {
-                r["doc_id"]: r
-                for r in urls.domain_filter(df, bl).collect()
-            }
-        finally:
-            u.DOMAIN_BLOCKLIST_BROADCAST_MAX = old
-        assert {k: v["is_blocked"] for k, v in out.items()} == {
-            k: v["is_blocked"] for k, v in out2.items()
-        }
-
-
 class TestLinearTextScore:
     """Hand-computed fastText-style hashed linear classifier inference."""
 
@@ -1161,3 +821,210 @@ class TestSampling:
             df.repartition(7), "src", cap=40, seed=3
         ).collect()
         assert {r["doc_id"] for r in out3} == {r["doc_id"] for r in out}
+
+
+def _uni_df(spark):
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the the the the"),
+        (3, "   "),
+        (4, ""),
+        (5, "zyzzyva qwertyuiop"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_unigram_logprob_null_for_tokenless_docs(spark):
+    from bayard_spark.functions.textstats import unigram_logprob
+
+    out = {r["doc_id"]: r["logprob"]
+           for r in unigram_logprob(_uni_df(spark)).collect()}
+    assert out[3] is None and out[4] is None
+    # every real doc scores strictly below the old empty-doc sentinel 0.0
+    assert all(v < 0 for k, v in out.items() if v is not None)
+    # repetitive high-frequency page ranks above the rare-vocab page
+    assert out[2] > out[5]
+
+
+def test_unigram_broadcast_gate(spark):
+    from bayard_spark.functions.textstats import unigram_logprob
+
+    df = _uni_df(spark)
+    # r7: the measuring count persists the vocab table, so Catalyst now
+    # sees its REAL materialized size and may auto-broadcast a tiny
+    # cached vocab even above the explicit gate — which is safe (the
+    # decision is from actual bytes, not estimates; a web-scale cached
+    # vocab is huge and never auto-broadcasts). The gate governs the
+    # FORCED hint, so isolate the hint by disabling auto-broadcast.
+    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan_small = unigram_logprob(
+            df, broadcast_vocab_max=10**9
+        )._jdf.queryExecution().executedPlan().toString()
+        plan_wide = unigram_logprob(
+            df, broadcast_vocab_max=0
+        )._jdf.queryExecution().executedPlan().toString()
+        # the vocab-table join must LOSE its broadcast above the gate
+        assert plan_small.count("BroadcastHashJoin") > plan_wide.count(
+            "BroadcastHashJoin"
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+    a = {(r["doc_id"], r["logprob"])
+         for r in unigram_logprob(df, broadcast_vocab_max=10**9).collect()}
+    b = {(r["doc_id"], r["logprob"])
+         for r in unigram_logprob(df, broadcast_vocab_max=0).collect()}
+    assert a == b
+
+
+def test_unigram_vocab_count_override_skips_measuring(spark, monkeypatch):
+    """A caller-supplied vocab_count must be honored (no count() job) and
+    steer the branch exactly like a measured one."""
+    from pyspark.sql import DataFrame
+
+    from bayard_spark.functions.textstats import unigram_logprob
+
+    df = _uni_df(spark)
+    calls = []
+    real_count = DataFrame.count
+
+    def spy(self):
+        calls.append(1)
+        return real_count(self)
+
+    monkeypatch.setattr(DataFrame, "count", spy)
+    plan = unigram_logprob(
+        df, vocab_count=10**9
+    )._jdf.queryExecution().executedPlan().toString()
+    assert calls == [], "vocab_count must skip the measuring pass"
+    plan_bc = unigram_logprob(
+        df, vocab_count=1
+    )._jdf.queryExecution().executedPlan().toString()
+    assert plan_bc.count("BroadcastHashJoin") > plan.count(
+        "BroadcastHashJoin"
+    )
+
+
+class TestGopherRowLocal:
+    @pytest.fixture(scope="class")
+    def docs(self, spark):
+        rows = [
+            (1, "the be to of and that have with " + "alpha beta " * 30),
+            (2, "dup line\ndup line\nunique line\n\n  \nthe be to of"),
+            (3, None),
+            (4, ""),
+            (5, "   "),
+            (6, "..\n.juxtaposed dots\n# one hash ...\nthe be"),
+            (7, "- bullet one\n* bullet two\nends with ...\nthe be have"),
+            (8, "\n\n\n"),
+            (9, "UPPER case The BE to\nUPPER case The BE to"),
+        ]
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    def test_edge_semantics(self, docs):
+        from bayard_spark.functions.textstats import gopher_rules
+
+        out = {
+            r["doc_id"]: r.asDict()
+            for r in gopher_rules(docs).collect()
+        }
+        assert set(out) == {1, 2, 3, 4, 5, 6, 7, 8, 9}
+        # NULL / empty / whitespace / blank-only docs: all zeros, fail
+        for d in (3, 4, 5, 8):
+            assert out[d]["n_words"] == 0
+            assert out[d]["n_lines"] == 0
+            assert out[d]["mean_word_len"] == 0.0
+            assert out[d]["gopher_pass"] is False
+        # dup-line accounting: doc 2 has lines [dup, dup, unique, the-be...]
+        assert out[2]["n_lines"] == 4
+        assert round(out[2]["dup_line_frac"], 6) == round(1 / 4, 6)
+        # ".." on one line and "." starting the next must NOT count as a
+        # '...' symbol match (the whole-text count cannot cross '\n')
+        assert out[6]["symbol_word_ratio"] == round(
+            2 / out[6]["n_words"], 6
+        )  # '#' and the literal '...' only
+        # bullets / ellipsis per-line anchors
+        assert out[7]["bullet_line_ratio"] == round(2 / 4, 6)
+        assert out[7]["ellipsis_line_ratio"] == round(1 / 4, 6)
+        # duplicate lines count words per instance
+        assert out[9]["n_words"] == 10
+        assert out[9]["dup_line_frac"] == 0.5
+
+    def test_append_matches_base(self, docs):
+        from bayard_spark.functions.textstats import gopher_rules
+
+        base = gopher_rules(docs).orderBy("doc_id").collect()
+        app = (
+            gopher_rules(docs, append=True)
+            .select(*[c for c in gopher_rules(docs).columns])
+            .orderBy("doc_id")
+            .collect()
+        )
+        assert [r.asDict() for r in base] == [r.asDict() for r in app]
+
+
+class TestParaDedupHashProxy:
+    def test_planted_boilerplate(self, spark):
+        from bayard_spark.functions.dedup import paragraph_dedup
+
+        rows = [
+            (1, "keep one\nBOILER\nkeep two"),
+            (2, "BOILER\nonly here"),
+            (3, "solo text"),
+            (4, None),
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        out = {
+            r["doc_id"]: r
+            for r in paragraph_dedup(df, sep="\n").collect()
+        }
+        assert out[1]["text_clean"] == "keep one\nkeep two"
+        assert out[1]["n_removed"] == 1
+        assert out[2]["text_clean"] == "only here"
+        assert out[3]["text_clean"] == "solo text"
+        assert 4 not in out  # NULL text emits no row (unchanged contract)
+
+    def test_dup_count_fast_path_identical(self, spark):
+        from bayard_spark.functions.dedup import paragraph_dedup
+
+        rows = [(i, f"common\nuniq {i}") for i in range(20)]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        a = sorted(
+            (r["doc_id"], r["text_clean"], r["n_removed"])
+            for r in paragraph_dedup(df, sep="\n").collect()
+        )
+        b = sorted(
+            (r["doc_id"], r["text_clean"], r["n_removed"])
+            for r in paragraph_dedup(df, sep="\n", dup_count=1).collect()
+        )
+        assert a == b
+        assert all(t == f"uniq {d}" for d, t, _ in a)
+
+
+class TestLinearScoreAppend:
+    def test_append_matches_base(self, spark):
+        from bayard_spark.functions.textstats import linear_text_score
+
+        docs = spark.createDataFrame(
+            [(1, "good fine text"), (2, None), (3, "bad awful")],
+            "doc_id long, text string",
+        )
+        w = spark.createDataFrame(
+            [(i, (i % 7 - 3) * 0.1) for i in range(64)],
+            "bucket long, weight double",
+        )
+        base = {
+            r["doc_id"]: (r["n_feats"], r["score"])
+            for r in linear_text_score(docs, w, num_buckets=64).collect()
+        }
+        app = {
+            r["doc_id"]: (r["n_feats"], r["score"], r["text"])
+            for r in linear_text_score(
+                docs, w, num_buckets=64, append=True
+            ).collect()
+        }
+        assert set(base) == set(app)
+        for d in base:
+            assert base[d] == app[d][:2]
+        assert app[3][2] == "bad awful"  # input columns preserved

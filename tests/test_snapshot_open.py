@@ -26,6 +26,7 @@ from bayard_spark.build.segments import (
     CommitLog,
     SegmentWriter,
     load_tombstones,
+    merge_segments,
 )
 from bayard_spark.query import SearchEngine
 from bayard_spark.schema import webtext_index_meta
@@ -232,17 +233,33 @@ class TestSnapshotOpen:
         assert engine._bucket_cache == full._bucket_cache
 
 class TestSegmentPut:
-    def test_segment_docs_use_index_compression(self, spark, snapshot):
+    def test_segment_docs_use_index_compression(
+        self, spark, snapshot, tmp_path
+    ):
         root, builder, _ = snapshot
         seg = CommitLog(root).committed_segments()[0]
-        seg_docs = os.path.join(root, "segments", seg, "docs")
-        files = [f for f in os.listdir(seg_docs) if f.endswith(".parquet")]
-        assert files
-        for f in files:
-            md = pq.read_metadata(os.path.join(seg_docs, f))
-            assert md.row_group(0).column(0).compression == (
-                builder.meta.docstore_compression.upper()
-            )
+        # a merge rewrites the doc store: same codec as a put's segment
+        merged = IndexBuilder(
+            spark, webtext_index_meta(num_buckets=4), str(tmp_path)
+        )
+        merged.build(webtext_df(spark, 40, partitions=2))
+        w = SegmentWriter(spark, merged)
+        w.put_documents(batch(spark, 1000, 5))
+        w.commit()
+        merge_segments(spark, merged)
+        for docs_dir, meta in (
+            (os.path.join(root, "segments", seg, "docs"), builder.meta),
+            (merged.paths.docs, merged.meta),
+        ):
+            files = [
+                f for f in os.listdir(docs_dir) if f.endswith(".parquet")
+            ]
+            assert files
+            for f in files:
+                md = pq.read_metadata(os.path.join(docs_dir, f))
+                assert md.row_group(0).column(0).compression == (
+                    meta.docstore_compression.upper()
+                )
 
     def test_put_leaves_nothing_persisted(self, spark, snapshot):
         _, builder, _ = snapshot
@@ -302,3 +319,39 @@ def test_prev_round_queries_returns_queries_dict():
     name, queries = bench._prev_round_queries()
     assert name.startswith("BENCH_r")
     assert isinstance(queries, dict) and queries
+
+
+def _mini_builder(spark, tmp_path_factory):
+    from bayard_spark.build.indexer import IndexBuilder
+    from bayard_spark.schema import webtext_index_meta
+    from bayard_spark.sources.webtext import webtext_df
+
+    root = str(tmp_path_factory.mktemp("resv_idx"))
+    meta = webtext_index_meta(num_buckets=4, num_waves=1)
+    builder = IndexBuilder(spark, meta, root)
+    builder.build(webtext_df(spark, 40, partitions=2))
+    return builder
+
+
+def test_preload_cap_is_byte_sized(spark, tmp_path_factory):
+    from bayard_spark.query import SearchEngine
+
+    builder = _mini_builder(spark, tmp_path_factory)
+    root = builder.paths.root
+
+    class TinyCapEngine(SearchEngine):
+        MAX_DICT_BYTES = 256  # force the wide-vocabulary fallback
+
+    engine = TinyCapEngine(spark, root)
+    assert not engine._dict_complete, "byte cap must skip the preload"
+    # lazy metadata lookups still answer correctly
+    resp = engine.search(
+        {
+            "query": {
+                "kind": "term", "options": {"field": "text", "term": "water"}
+            },
+            "collection_kind": "count_and_top_docs",
+            "hits": 5,
+        }
+    )
+    assert resp.total_hits >= 0

@@ -1,6 +1,5 @@
 """Structured Streaming ingestion → segment commits (SURVEY §2.9 analogue)."""
 
-import os
 import shutil
 import tempfile
 
@@ -62,81 +61,3 @@ def test_epoch_replay_is_idempotent(spark, stream_env):
     assert CommitLog(root).committed_segments() == segs_after_first
     ing(batch.limit(0), epoch_id=1)  # empty batch commits nothing
     assert CommitLog(root).committed_segments() == segs_after_first
-
-
-class TestStreamingDedup:
-    """Cross-batch exact dedup (streaming/dedup.py): first-seen wins,
-    replayed epochs are idempotent, state anti-join never eats its own
-    epoch."""
-
-    def _env(self):
-        dirs = [tempfile.mkdtemp(prefix=f"sdedup_{k}_")
-                for k in ("out", "state")]
-        return dirs
-
-    def test_batchwise_semantics_and_replay(self, spark):
-        from bayard_spark.streaming.dedup import StreamingDeduper
-
-        out, state = self._env()
-        try:
-            d = StreamingDeduper(spark, out, state)
-            b0 = spark.createDataFrame(
-                [(5, "alpha"), (3, "alpha"), (7, "beta")],
-                "doc_id long, text string",
-            )
-            b1 = spark.createDataFrame(
-                [(10, "alpha"), (11, "gamma"), (12, "gamma"), (13, None)],
-                "doc_id long, text string",
-            )
-            d(b0, 0)
-            d(b1, 1)
-            got = {
-                r["doc_id"]
-                for r in spark.read.parquet(out).collect()
-            }
-            # within-batch min id (3 beats 5), cross-batch dup dropped
-            # (10 loses to epoch 0's alpha), NULL text hashes like ""
-            assert got == {3, 7, 11, 13}
-            # replay epoch 1 (crash-after-state-write scenario): its own
-            # epoch-1 state must NOT anti-join it into emptiness, and
-            # overwrite mode must not duplicate rows
-            d(b1, 1)
-            got2 = spark.read.parquet(out).collect()
-            assert {r["doc_id"] for r in got2} == {3, 7, 11, 13}
-            assert len(got2) == 4
-        finally:
-            for p in (out, state):
-                shutil.rmtree(p, ignore_errors=True)
-
-    def test_end_to_end_stream(self, spark):
-        from bayard_spark.streaming.dedup import start_streaming_dedup
-
-        src = tempfile.mkdtemp(prefix="sdedup_src_")
-        out, state = self._env()
-        ckpt = tempfile.mkdtemp(prefix="sdedup_ckpt_")
-        try:
-            rows = [
-                [(0, "x"), (1, "y")],
-                [(2, "x"), (3, "z")],
-                [(4, "z"), (5, "w"), (6, "w")],
-            ]
-            for i, batch in enumerate(rows):
-                tmp = tempfile.mkdtemp(prefix="sdedup_tmp_")
-                spark.createDataFrame(
-                    batch, "doc_id long, text string"
-                ).coalesce(1).write.mode("overwrite").parquet(tmp)
-                pf = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-                dst = os.path.join(src, f"b{i}.parquet")
-                shutil.copy(os.path.join(tmp, pf), dst)
-                os.utime(dst, times=(1_700_000_000 + i, 1_700_000_000 + i))
-                shutil.rmtree(tmp, ignore_errors=True)
-            schema = "doc_id long, text string"
-            q = start_streaming_dedup(
-                spark, src, schema, out, state, ckpt
-            )
-            q.awaitTermination(300)
-            got = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-            assert got == {0, 1, 3, 5}
-        finally:
-            for p in (src, out, state, ckpt):
-                shutil.rmtree(p, ignore_errors=True)

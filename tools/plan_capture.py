@@ -19,9 +19,7 @@ DEFAULT_TARGETS = [
     "pipeline_clean",
     "corpus_report",
     "bigram_logprob",
-    "regex_terms",
     "repetition",
-    "quality",
     "text_classifier",
     "unigram_logprob",
     "para_dedup",
