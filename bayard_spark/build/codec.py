@@ -21,11 +21,18 @@ Encode/decode are whole-array numpy kernels (no per-value Python loops):
 encode loops over the ≤10 varint byte slots, decode reconstructs values with
 a segmented shift-or. Round-trip is exact for uint64 < 2^63.
 
+`decode_blocks` is the one decoder the rest of the package uses: it takes
+the Arrow payload columns of a whole batch of blocks (query, merge and the
+json-field norms all call it). `decode_block` decodes ONE block with the
+single-stream kernels and is kept as its independent reference.
+
 This is an original layout informed by public IR practice (tantivy's 128-doc
 blocks + skip info; Lucene's block-max metadata); no reference code reused.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -141,11 +148,83 @@ def delta_decode_segments(
     the result is exact whenever the true values fit in uint64."""
     d = np.asarray(deltas, dtype=np.uint64)
     offs = np.asarray(value_offsets, dtype=np.int64)
+    if d.size == 0:
+        return d
     c = np.cumsum(d, dtype=np.uint64)
     starts = offs[:-1]
     base = np.where(starts > 0, c[np.maximum(starts - 1, 0)], np.uint64(0))
     with np.errstate(over="ignore"):
         return c - np.repeat(base, np.diff(offs))
+
+
+class DecodedBlocks(NamedTuple):
+    """The postings of a batch of blocks, in block order."""
+
+    doc_ids: np.ndarray  # uint64, one per posting
+    tfs: np.ndarray  # uint64
+    lens: np.ndarray  # uint64
+    counts: np.ndarray  # int64, postings per block
+    # with positions only: the values (each doc restarts from its absolute
+    # first position), doc k's value range positions[pos_offsets[k]:
+    # pos_offsets[k + 1]], and its varint byte range in pos_bytes'
+    # data buffer (pos_bytes.buffers()[2]), both n_postings + 1 long
+    positions: np.ndarray | None = None
+    pos_offsets: np.ndarray | None = None
+    pos_byte_offsets: np.ndarray | None = None
+
+
+def _binary_view(arr) -> tuple[np.ndarray, np.ndarray, int]:
+    """Zero-copy (data, offsets from 0, data start in buffers()[2]) of an
+    Arrow BinaryArray."""
+    if arr.null_count:
+        raise ValueError("null block payload: the index is corrupt")
+    bufs = arr.buffers()
+    offs = np.frombuffer(bufs[1], dtype=np.int32)[
+        arr.offset : arr.offset + len(arr) + 1
+    ].astype(np.int64)
+    data = (
+        np.empty(0, dtype=np.uint8) if bufs[2] is None
+        else np.frombuffer(bufs[2], dtype=np.uint8)
+    )
+    return data[offs[0] : offs[-1]], offs - offs[0], int(offs[0])
+
+
+def decode_blocks(
+    doc_bytes, tf_bytes, len_bytes, pos_bytes=None
+) -> DecodedBlocks:
+    """Decode a batch of blocks from the Arrow BinaryArray payload columns
+    in whole-batch numpy passes (no per-block Python).
+
+    Doc ids restart from an absolute value in every block, positions in
+    every doc, so both decode as segmented deltas. A block with empty
+    pos_bytes (a freq-only field) contributes no position values."""
+    dd, do, _ = _binary_view(doc_bytes)
+    deltas, voffs = varint_decode_many(dd, do)
+    doc_ids = delta_decode_segments(deltas, voffs)
+    tfs, _ = varint_decode_many(*_binary_view(tf_bytes)[:2])
+    lens, _ = varint_decode_many(*_binary_view(len_bytes)[:2])
+    if not doc_ids.size == tfs.size == lens.size:
+        raise ValueError("block payload columns disagree on posting counts")
+    counts = np.diff(voffs)
+    if pos_bytes is None:
+        return DecodedBlocks(doc_ids, tfs, lens, counts)
+    pb, po, base = _binary_view(pos_bytes)
+    per_doc = np.where(
+        np.repeat(np.diff(po) > 0, counts), tfs.astype(np.int64), 0
+    )
+    pos_offsets = np.zeros(doc_ids.size + 1, dtype=np.int64)
+    np.cumsum(per_doc, out=pos_offsets[1:])
+    pdeltas, _ = varint_decode_many(pb, po)
+    if pdeltas.size != pos_offsets[-1]:
+        raise ValueError("block position streams disagree with the tfs")
+    # values tile the bytes, so doc k's bytes end where its last value does
+    value_ends = np.zeros(pdeltas.size + 1, dtype=np.int64)
+    value_ends[1:] = np.flatnonzero((pb & 0x80) == 0) + 1
+    return DecodedBlocks(
+        doc_ids, tfs, lens, counts,
+        delta_decode_segments(pdeltas, pos_offsets), pos_offsets,
+        value_ends[pos_offsets] + base,
+    )
 
 
 def delta_encode(sorted_vals: np.ndarray) -> np.ndarray:
@@ -162,23 +241,6 @@ def delta_encode(sorted_vals: np.ndarray) -> np.ndarray:
 def delta_decode(deltas: np.ndarray) -> np.ndarray:
     d = np.asarray(deltas, dtype=np.uint64)
     return np.cumsum(d, dtype=np.uint64)
-
-
-def split_pos_bytes(pos_bytes: bytes, tfs: np.ndarray) -> list[bytes]:
-    """Slice a block's concatenated position stream back into per-doc byte
-    runs (doc k holds tfs[k] varint values)."""
-    b = np.frombuffer(pos_bytes, dtype=np.uint8)
-    is_end = (b & 0x80) == 0
-    value_end_bytes = np.flatnonzero(is_end) + 1  # exclusive byte offset
-    offs = np.zeros(len(tfs) + 1, dtype=np.int64)
-    np.cumsum(np.asarray(tfs, dtype=np.int64), out=offs[1:])
-    out = []
-    prev = 0
-    for k in range(len(tfs)):
-        end = int(value_end_bytes[offs[k + 1] - 1]) if offs[k + 1] > 0 else 0
-        out.append(pos_bytes[prev:end])
-        prev = end
-    return out
 
 
 def encode_block(

@@ -16,8 +16,8 @@ batches):
     │ 5. per wave: groupBy(bucket, term, salt) → applyInPandas block encoder
     │    (delta+varint, 128-doc blocks, block-max metadata as plain columns)
     ├─ postings/field=<f>/bucket=<b>/  parquet
-    ├─ norms/   (field, doc_id, len)   — exact lengths (SURVEY §2.7)
-    ├─ stats/   (field, n_docs, total_len, avg_len)
+    ├─ stats/   (field, n_docs, total_len, avg_len) — exact lengths
+    │           (SURVEY §2.7) live per posting in each block's len_bytes
     └─ lineage/ per-stage/wave metrics: docs, postings, bytes, build_ms —
        restart skips completed stages/waves (resumable builds).
 
@@ -847,35 +847,36 @@ class IndexBuilder:
         return out
 
     def norms_from_blocks(self, fields: list[str] | None = None) -> DataFrame:
-        """Derive (field, doc_id, len) by decoding block doc/len columns —
-        a pass over the COMPRESSED index instead of a second tokenize."""
-        from bayard_spark.build.codec import delta_decode, varint_decode
+        """Derive (field, doc_id, len) by decoding the committed snapshot's
+        block doc/len columns — a pass over the COMPRESSED index instead of
+        a second tokenize."""
+        from bayard_spark.build.codec import decode_blocks
+        from bayard_spark.build.segments import visible_postings
 
-        blocks = read_postings(self.spark, self.paths).select(
-            "field", "doc_bytes", "len_bytes"
+        blocks = visible_postings(self.spark, self.paths).select(
+            "field", "doc_bytes", "tf_bytes", "len_bytes"
         )
         if fields is not None:
             blocks = blocks.filter(F.col("field").isin(fields))
 
-        def run(batches):
-            for pdf in batches:
-                fields, dids, lens = [], [], []
-                for r in pdf.itertuples(index=False):
-                    d = delta_decode(varint_decode(r.doc_bytes))
-                    ln = varint_decode(r.len_bytes)
-                    fields.append(np.full(len(d), r.field, dtype=object))
-                    dids.append(d.astype(np.int64))
-                    lens.append(ln.astype(np.int64))
-                if dids:
-                    yield pd.DataFrame(
-                        {
-                            "field": np.concatenate(fields),
-                            "doc_id": np.concatenate(dids),
-                            "len": np.concatenate(lens),
-                        }
-                    )
+        def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                dec = decode_blocks(*rb.columns[1:4])
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        rb.column(0).take(pa.array(np.repeat(
+                            np.arange(rb.num_rows, dtype=np.int32),
+                            dec.counts,
+                        ))),
+                        pa.array(dec.doc_ids.astype(np.int64)),
+                        pa.array(dec.lens.astype(np.int64)),
+                    ],
+                    names=["field", "doc_id", "len"],
+                )
 
-        decoded = blocks.mapInPandas(run, "field string, doc_id long, len long")
+        decoded = blocks.mapInArrow(run, "field string, doc_id long, len long")
         return decoded.groupBy("field", "doc_id").agg(F.max("len").alias("len"))
 
     def blockify_wave(self, staging: DataFrame, wave: int,
@@ -929,60 +930,35 @@ class IndexBuilder:
         )
         return {"build_ms": (time.time() - t0) * 1000}
 
-    # ---------- stage 4: norms + stats ----------
-
-    def write_norms_stats(
-        self, staging: DataFrame, n_docs: int | None = None
-    ) -> None:
-        norms = (
-            staging.groupBy("field", "doc_id")
-            .agg(F.max("doc_len").alias("len"))
-        )
-        norms.repartition("field").write.mode("overwrite").partitionBy(
-            "field"
-        ).parquet(self.paths.norms)
-        if n_docs is None:
-            n_docs = self.spark.read.parquet(self.paths.docs).count()
-        self._write_stats_from_norms(n_docs)
-        self._publish_next_doc_id(n_docs)
+    # ---------- stage 4: stats ----------
 
     def write_norms_stats_direct(
         self, docs: DataFrame, n_docs: int | None = None
     ) -> None:
-        """Fast-path variant: shuffle-free norms from the analyzer kernels."""
-        norms = self.norms_direct(docs)
-        norms.repartition("field").write.mode("overwrite").partitionBy(
-            "field"
-        ).parquet(self.paths.norms)
+        """Build fast path: stats from the analyzer's per-field lengths,
+        then the dense-id count published to the commit log."""
+        self._publish_next_doc_id(
+            self.write_stats(self.norms_direct(docs), n_docs)
+        )
+
+    def write_stats(self, norms: DataFrame, n_docs: int | None = None) -> int:
+        """Per-field (n_docs_field, total_len, n_docs, avg_len) from a
+        (field, doc_id, len) frame; returns n_docs. The lengths themselves
+        are not stored apart: every block carries them in `len_bytes`."""
         if n_docs is None:
             n_docs = self.spark.read.parquet(self.paths.docs).count()
-        self._write_stats_from_norms(n_docs)
-        self._publish_next_doc_id(n_docs)
-
-    def write_norms_stats_from_blocks(self, n_docs: int | None = None) -> None:
-        """Merge-path variant: norms decoded from the written blocks."""
-        norms = self.norms_from_blocks()
-        norms.repartition("field").write.mode("overwrite").partitionBy(
-            "field"
-        ).parquet(self.paths.norms)
-        if n_docs is None:
-            n_docs = self.spark.read.parquet(self.paths.docs).count()
-        self._write_stats_from_norms(n_docs)
-
-    def _write_stats_from_norms(self, n_docs: int) -> None:
-        stats = (
-            self.spark.read.parquet(self.paths.norms)
-            .groupBy("field")
+        (
+            norms.groupBy("field")
             .agg(
                 F.count("*").alias("n_docs_field"),
                 F.sum("len").alias("total_len"),
             )
             .withColumn("n_docs", F.lit(n_docs))
-            .withColumn(
-                "avg_len", F.col("total_len") / F.col("n_docs")
-            )
+            .withColumn("avg_len", F.col("total_len") / F.col("n_docs"))
+            .write.mode("overwrite")
+            .parquet(self.paths.stats)
         )
-        stats.write.mode("overwrite").parquet(self.paths.stats)
+        return n_docs
 
     def _publish_next_doc_id(self, n_docs: int) -> None:
         """Record the build's dense-id count as the commit log's high-water
@@ -1029,12 +1005,12 @@ class IndexBuilder:
         if self.meta.num_waves <= 1:
             # FAST PATH (single wave): no staging parquet, no persist — ONE
             # full tokenize pass flows straight into the blockify exchange.
-            # Hot terms come from a deterministic 5% sample; norms are
-            # decoded from the written blocks (compressed, much smaller than
-            # a staging table). Resume granularity is unchanged (a single
-            # wave restarts whole either way). Multi-wave builds (the 100 TB
-            # path) keep the durable staging table, which is what makes
-            # waves independently restartable.
+            # Hot terms come from a deterministic 5% sample; field lengths
+            # come from the docs write's `_dl_<field>` columns. Resume
+            # granularity is unchanged (a single wave restarts whole either
+            # way). Multi-wave builds (the 100 TB path) keep the durable
+            # staging table, which is what makes waves independently
+            # restartable.
             staging = None
             if resume and self._lineage_done("blocks", 0):
                 skipped.append("blocks_w0")
@@ -1089,7 +1065,11 @@ class IndexBuilder:
             if staging is None:
                 self.write_norms_stats_direct(docs, n_docs)
             else:
-                self.write_norms_stats(staging, n_docs)
+                self._publish_next_doc_id(self.write_stats(
+                    staging.groupBy("field", "doc_id")
+                    .agg(F.max("doc_len").alias("len")),
+                    n_docs,
+                ))
             self._log_lineage("stats", 0,
                               {"build_ms": (time.time() - t0) * 1e3})
             run.append("stats")
@@ -1103,10 +1083,3 @@ class IndexBuilder:
             wall_s=time.time() - t_start,
         )
 
-
-def read_postings(spark: SparkSession, paths: IndexPaths) -> DataFrame:
-    """All postings blocks across waves (wave dirs are a build artifact;
-    readers see one logical table)."""
-    return spark.read.option("basePath", paths.postings).parquet(
-        os.path.join(paths.postings, "wave=*")
-    ).drop("wave")

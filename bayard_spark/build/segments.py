@@ -33,7 +33,6 @@ from collections.abc import Iterator
 from functools import reduce
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
@@ -452,11 +451,10 @@ def visible_docs(
     # (Spark path, IndexFS path) of the base store and each segment's docs
     tables = [(paths.docs, log.io.path("docs"))]
     for seg in state["segments"]:
-        seg_docs = log.io.path("segments", seg, "docs")
-        if log.io.exists(seg_docs):
-            tables.append(
-                (posixpath.join(paths.root, "segments", seg, "docs"), seg_docs)
-            )
+        seg_docs = _committed(log.io, log.io.path("segments", seg, "docs"))
+        tables.append(
+            (posixpath.join(paths.root, "segments", seg, "docs"), seg_docs)
+        )
     # each read is pinned to its footer schema (no inference job);
     # segments may lack optional stored columns (e.g. html) or carry extra
     # ones — union on names, padding missing ones with nulls
@@ -478,7 +476,7 @@ def load_tombstones(
 ) -> DataFrame | None:
     log = CommitLog(paths.root)
     state = log.read() if state is None else state
-    files = [f for f in state["tombstones"] if log.io.exists(f)]
+    files = [_committed(log.io, f) for f in state["tombstones"]]
     if not files:
         return None
     return (
@@ -487,9 +485,15 @@ def load_tombstones(
     )
 
 
-def count_tombstone_rows(
-    paths: IndexPaths, state: dict | None = None
-) -> int | None:
+def _committed(io: IndexFS, path: str) -> str:
+    """A file the commit log names must exist: silently skipping it would
+    resurrect a tombstone's deleted docs or drop a segment's live ones."""
+    if not io.exists(path):
+        raise FileNotFoundError(f"committed file missing: {path}")
+    return path
+
+
+def count_tombstone_rows(paths: IndexPaths, state: dict | None = None) -> int:
     """Metadata-only tombstone count: sum parquet-footer num_rows over the
     committed tombstone files — zero Spark jobs (VERDICT r5 residual nit:
     engines constructed per query paid a count() job each).
@@ -497,18 +501,14 @@ def count_tombstone_rows(
     Counts raw rows, not distinct doc_ids, so a doc tombstoned in two
     files counts twice — pure OVER-count, the safe direction for the
     TOMBSTONE_BROADCAST_MAX gate (an overestimate can only switch the
-    anti-join from broadcast to shuffle early). Returns None when any
-    footer is unreadable; callers fall back to a Spark count."""
+    anti-join from broadcast to shuffle early)."""
     log = CommitLog(paths.root)
     state = log.read() if state is None else state
-    try:
-        return sum(
-            pq.read_metadata(p, filesystem=log.io.fs).num_rows
-            for f in state["tombstones"]
-            for p in parquet_files(log.io, f)
-        )
-    except Exception:
-        return None
+    return sum(
+        pq.read_metadata(p, filesystem=log.io.fs).num_rows
+        for f in state["tombstones"]
+        for p in parquet_files(log.io, f)
+    )
 
 
 # Tombstone-count ceiling for the broadcast anti-join hint: 10M ids ≈
@@ -524,39 +524,51 @@ def tombstone_side(ts: DataFrame, n_ts: int) -> DataFrame:
     return F.broadcast(ts) if n_ts <= TOMBSTONE_BROADCAST_MAX else ts
 
 
-def block_rows(spark: SparkSession, post: DataFrame) -> DataFrame:
-    """Decode posting blocks → one row per posting (doc_id, field, term,
-    salt, bucket, tf, doc_len, pos_bytes). Positions stay as their original
-    per-doc varint byte runs — never re-encoded after the analyzer pass."""
-    from bayard_spark.build.codec import (
-        decode_block,
-        split_pos_bytes,
-        varint_decode,
-    )
+def block_rows(post: DataFrame) -> DataFrame:
+    """Decode posting blocks → one row per posting (doc_id, tf, doc_len,
+    pos_bytes, field, term, salt, bucket). Positions stay as their original
+    per-doc varint byte runs — never re-encoded after the analyzer pass:
+    each row's pos_bytes is a zero-copy slice of its block's buffer, null
+    for a freq-only field."""
+    from bayard_spark.build.codec import decode_blocks
 
-    def to_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                d, t, _, _ = decode_block(r.doc_bytes, r.tf_bytes, None)
-                ln = varint_decode(r.len_bytes)
-                out = pd.DataFrame(
-                    {
-                        "doc_id": d.astype(np.int64),
-                        "tf": t.astype(np.int32),
-                        "doc_len": ln.astype(np.int32),
-                    }
-                )
-                out["pos_bytes"] = (
-                    split_pos_bytes(r.pos_bytes, t) if r.pos_bytes else None
-                )
-                out["field"] = r.field
-                out["term"] = r.term
-                out["salt"] = np.int32(r.salt)
-                out["bucket"] = np.int32(r.bucket)
-                outs.append(out)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+    def to_rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            pos_col = rb.column("pos_bytes")
+            dec = decode_blocks(
+                rb.column("doc_bytes"), rb.column("tf_bytes"),
+                rb.column("len_bytes"), pos_col,
+            )
+            n = dec.doc_ids.size
+            has_pos = np.diff(dec.pos_byte_offsets) > 0
+            pos_bytes = pa.BinaryArray.from_buffers(
+                pa.binary(),
+                n,
+                [
+                    None if has_pos.all() else pa.py_buffer(
+                        np.packbits(has_pos, bitorder="little")
+                    ),
+                    pa.py_buffer(dec.pos_byte_offsets.astype(np.int32)),
+                    pos_col.buffers()[2] or pa.py_buffer(b""),
+                ],
+            )
+            block_of = pa.array(
+                np.repeat(np.arange(rb.num_rows, dtype=np.int32), dec.counts)
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(dec.doc_ids.astype(np.int64)),
+                    pa.array(dec.tfs.astype(np.int32)),
+                    pa.array(dec.lens.astype(np.int32)),
+                    pos_bytes,
+                    *(rb.column(c).take(block_of)
+                      for c in ("field", "term", "salt", "bucket")),
+                ],
+                names=["doc_id", "tf", "doc_len", "pos_bytes", "field",
+                       "term", "salt", "bucket"],
+            )
 
     cols = ["field", "bucket", "term", "salt", "doc_bytes", "tf_bytes",
             "len_bytes", "pos_bytes"]
@@ -564,14 +576,14 @@ def block_rows(spark: SparkSession, post: DataFrame) -> DataFrame:
         "doc_id long, tf int, doc_len int, pos_bytes binary, field string, "
         "term string, salt int, bucket int"
     )
-    return post.select(*cols).mapInPandas(to_rows, schema)
+    return post.select(*cols).mapInArrow(to_rows, schema)
 
 
 def merge_segments(spark: SparkSession, builder) -> dict:
     """Compact all visible postings into fresh base waves, applying
     tombstones physically; resets the commit log.
 
-    Fully distributed: blocks decode to posting rows (mapInPandas),
+    Fully distributed: blocks decode to posting rows (mapInArrow),
     tombstones drop via an anti-join (JVM-side — the driver never
     materializes doomed ids). The broadcast hint on the tombstone side
     is SIZE-GATED: at web scale a purge can doom billions of ids, and
@@ -586,7 +598,7 @@ def merge_segments(spark: SparkSession, builder) -> dict:
     post = visible_postings(spark, paths, state)
     ts = load_tombstones(spark, paths, state)
 
-    rows = block_rows(spark, post)
+    rows = block_rows(post)
     if ts is not None:
         # a re-put url lives under a new doc_id; its old id is doomed.
         # merge is a rare offline job — one count to pick the join
@@ -635,7 +647,7 @@ def merge_segments(spark: SparkSession, builder) -> dict:
         "segments": [], "tombstones": [],
         "version": prior["version"] + 1, "next_doc_id": prior["next_doc_id"],
     })
-    builder.write_norms_stats_from_blocks()
+    builder.write_stats(builder.norms_from_blocks())
     return {"merged": True}
 
 

@@ -106,10 +106,6 @@ class IndexPaths:
         return os.path.join(self.root, "docs")
 
     @property
-    def norms(self) -> str:
-        return os.path.join(self.root, "norms")
-
-    @property
     def postings(self) -> str:
         return os.path.join(self.root, "postings")
 

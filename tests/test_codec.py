@@ -10,14 +10,65 @@ from hypothesis import strategies as st
 
 from bayard_spark.build.codec import (
     decode_block,
+    decode_blocks,
     delta_decode,
     delta_encode,
     encode_block,
-    split_pos_bytes,
     varint_decode,
     varint_encode,
     varint_lengths,
 )
+
+# (doc_ids, per-doc positions) block shapes
+BLOCK_SHAPES = [
+    ([0], [[0]]),
+    ([0], [[2**32]]),
+    ([5], [[0, 1, 2, 3, 4, 5, 6, 7]]),
+    ([1, 2], [[3], [3]]),
+    ([7, 2**40], [[1, 2**20], [0]]),
+    ([0, 1, 2**63 - 1], [[9], [0, 9], [4, 5, 6]]),
+    (list(range(128)), [[i] for i in range(128)]),
+    (list(range(0, 1280, 10)), [[0, i + 1] for i in range(128)]),
+    ([3, 4, 5], [[1000, 1001], [0], [127, 128, 16383, 16384]]),
+]
+BLOCK_SHAPE_IDS = [
+    "one-doc-pos0", "one-doc-pos2^32", "one-doc-tf8", "pos-restart",
+    "gap2^40", "max-doc-id", "full-block", "full-block-strided",
+    "varint-boundaries",
+]
+
+
+def _encode_shape(doc_ids, doc_positions, with_positions=True):
+    """(doc_bytes, tf_bytes, len_bytes, pos_bytes) of one block; the
+    lengths are arbitrary distinct values."""
+    doc_ids = np.array(doc_ids, dtype=np.uint64)
+    tfs = np.array([len(p) for p in doc_positions], dtype=np.uint64)
+    offs = np.zeros(len(tfs) + 1, dtype=np.int64)
+    np.cumsum(tfs, out=offs[1:])
+    positions = np.concatenate(
+        [np.array(p, dtype=np.uint64) for p in doc_positions]
+    )
+    db, tb, pb = encode_block(
+        doc_ids, tfs, positions if with_positions else None, offs
+    )
+    lb = varint_encode(np.arange(len(doc_ids), dtype=np.uint64) * 300)
+    return db, tb, lb, pb
+
+
+def _batch_columns(blocks):
+    """The four payload columns of a batch of encoded blocks, as Arrow
+    BinaryArrays sliced off a longer array (a non-zero array offset)."""
+    return [
+        pa.array([b"\x01"] + [b[j] for b in blocks], type=pa.binary()).slice(1)
+        for j in range(4)
+    ]
+
+
+def _pos_runs(dec, pos_col):
+    """Per-doc position byte runs, sliced by decode_blocks' byte offsets."""
+    data = pos_col.buffers()[2].to_pybytes()
+    bo = dec.pos_byte_offsets
+    return [data[bo[k]:bo[k + 1]] for k in range(len(bo) - 1)]
 
 
 class TestVarint:
@@ -82,14 +133,16 @@ class TestBlock:
         assert np.array_equal(p2, positions)
         assert np.array_equal(o2, offs)
 
-    def test_split_pos_bytes_framing(self):
+    def test_pos_byte_runs_framing(self):
         # per-doc byte runs of the concatenated stream decode independently
         tfs = np.array([2, 1, 3], dtype=np.uint64)
         doc_ids = np.array([10, 20, 30], dtype=np.uint64)
         positions = np.array([5, 9, 1000, 7, 8, 2000], dtype=np.uint64)
         offs = np.array([0, 2, 3, 6], dtype=np.int64)
-        _, _, pb = encode_block(doc_ids, tfs, positions, offs)
-        runs = split_pos_bytes(pb, tfs)
+        db, tb, pb = encode_block(doc_ids, tfs, positions, offs)
+        lb = varint_encode(np.array([4, 4, 4], dtype=np.uint64))
+        cols = _batch_columns([(db, tb, lb, pb)])
+        runs = _pos_runs(decode_blocks(*cols), cols[3])
         assert b"".join(runs) == pb
         assert np.array_equal(
             np.cumsum(varint_decode(runs[0]), dtype=np.uint64),
@@ -101,46 +154,52 @@ class TestBlock:
         )
 
     @pytest.mark.parametrize(
-        "doc_ids,doc_positions",
-        [
-            ([0], [[0]]),
-            ([0], [[2**32]]),
-            ([5], [[0, 1, 2, 3, 4, 5, 6, 7]]),
-            ([1, 2], [[3], [3]]),
-            ([7, 2**40], [[1, 2**20], [0]]),
-            ([0, 1, 2**63 - 1], [[9], [0, 9], [4, 5, 6]]),
-            (list(range(128)), [[i] for i in range(128)]),
-            (list(range(0, 1280, 10)), [[0, i + 1] for i in range(128)]),
-            ([3, 4, 5], [[1000, 1001], [0], [127, 128, 16383, 16384]]),
-        ],
-        ids=[
-            "one-doc-pos0", "one-doc-pos2^32", "one-doc-tf8", "pos-restart",
-            "gap2^40", "max-doc-id", "full-block", "full-block-strided",
-            "varint-boundaries",
-        ],
+        "doc_ids,doc_positions", BLOCK_SHAPES, ids=BLOCK_SHAPE_IDS
     )
     def test_block_roundtrip_shapes(self, doc_ids, doc_positions):
         # every doc's positions restart from their absolute value, so a
         # doc whose first position is below the previous doc's last still
         # round-trips; the per-doc byte runs tile the stream
-        doc_ids = np.array(doc_ids, dtype=np.uint64)
         tfs = np.array([len(p) for p in doc_positions], dtype=np.uint64)
         offs = np.zeros(len(tfs) + 1, dtype=np.int64)
         np.cumsum(tfs, out=offs[1:])
         positions = np.concatenate(
             [np.array(p, dtype=np.uint64) for p in doc_positions]
         )
-        db, tb, pb = encode_block(doc_ids, tfs, positions, offs)
+        db, tb, lb, pb = _encode_shape(doc_ids, doc_positions)
         d2, t2, p2, o2 = decode_block(db, tb, pb)
-        assert np.array_equal(d2, doc_ids)
+        assert np.array_equal(d2, np.array(doc_ids, dtype=np.uint64))
         assert np.array_equal(t2, tfs)
         assert np.array_equal(p2, positions)
         assert np.array_equal(o2, offs)
-        runs = split_pos_bytes(pb, tfs)
-        assert b"".join(runs) == pb
-        for run, want in zip(runs, doc_positions):
-            got = np.cumsum(varint_decode(run), dtype=np.uint64)
-            assert got.tolist() == want
+        # the batch decoder over this shape, framed by all nine shapes,
+        # each with and without positions, equals decode_block per block
+        blocks = [
+            _encode_shape(d, p, with_positions=w)
+            for w in (True, False)
+            for d, p in BLOCK_SHAPES + [(doc_ids, doc_positions)]
+        ]
+        cols = _batch_columns(blocks)
+        dec = decode_blocks(*cols)
+        runs = _pos_runs(dec, cols[3])
+        k = 0
+        for i, (bd, bt, bl, bp) in enumerate(blocks):
+            d, t, p, o = decode_block(bd, bt, bp)
+            n = len(d)
+            assert dec.counts[i] == n
+            assert np.array_equal(dec.doc_ids[k:k + n], d)
+            assert np.array_equal(dec.tfs[k:k + n], t)
+            assert np.array_equal(dec.lens[k:k + n], varint_decode(bl))
+            po = dec.pos_offsets[k:k + n + 1]
+            for j in range(n):
+                want = [] if p is None else p[o[j]:o[j + 1]].tolist()
+                assert dec.positions[po[j]:po[j + 1]].tolist() == want
+                assert np.cumsum(
+                    varint_decode(runs[k + j]), dtype=np.uint64
+                ).tolist() == want
+            assert b"".join(runs[k:k + n]) == bp
+            k += n
+        assert k == dec.doc_ids.size
 
     def test_partial_block_and_single_doc(self):
         d = np.array([42], dtype=np.uint64)

@@ -1,8 +1,8 @@
 """Posting decode paths of the engine.
 
-- The batched decode (codec.varint_decode_many over whole Arrow batches)
-  equals the per-block decoder, for one term and for several terms across
-  buckets.
+- The decode without positions (codec.decode_blocks over whole Arrow
+  batches) yields the same postings as the decode with positions, for one
+  term and for several terms across buckets.
 - Above DECODE_PARALLEL_MIN_DOCS the block frame gains a round-robin
   exchange; results are identical either way.
 - The candidate-filtered phrase decode keeps rank identity, opens only on

@@ -91,3 +91,40 @@ def test_oracle_sql_runs_on_duckdb(duck, gate):
     df = duck.execute(ORACLE_SQL[gate]).df()
     assert len(df) > 0
     assert len(set(df.columns)) == len(df.columns) > 0
+
+
+def _decodes_outside_codec(name: str) -> bool:
+    return name in {"varint_decode", "varint_decode_many", "decode_block"} \
+        or name.startswith("delta_decode")
+
+
+PACKAGE_MODULES = sorted(
+    p for p in glob.glob(os.path.join(ROOT, "bayard_spark", "**", "*.py"),
+                         recursive=True)
+    if os.path.relpath(p, ROOT) != os.path.join("bayard_spark", "build",
+                                                "codec.py")
+)
+
+
+def test_one_block_decoder():
+    # block payloads decode through codec.decode_blocks only: no package
+    # module besides the codec imports (or reaches as an attribute) a
+    # lower-level decode kernel or the per-block reference decoder
+    offenders = []
+    for path in PACKAGE_MODULES:
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            if isinstance(node, ast.ImportFrom):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            else:
+                continue
+            offenders += [
+                f"{os.path.relpath(path, ROOT)}:{node.lineno} {n}"
+                for n in names if _decodes_outside_codec(n)
+            ]
+    assert {
+        os.path.join(ROOT, "bayard_spark", *m.split("/"))
+        for m in ("query/engine.py", "build/segments.py", "build/indexer.py")
+    } <= set(PACKAGE_MODULES)
+    assert not offenders, offenders

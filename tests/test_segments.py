@@ -1,7 +1,9 @@
 """Segment lifecycle: put/delete/commit/rollback/merge (SURVEY §2.1)."""
 
+import os
 import shutil
 import tempfile
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,11 +12,13 @@ from bayard_spark.build.indexer import IndexBuilder
 from bayard_spark.build.segments import (
     CommitLog,
     SegmentWriter,
+    load_tombstones,
     merge_segments,
     visible_docs,
+    visible_postings_dataset,
 )
 from bayard_spark.query import SearchEngine
-from bayard_spark.schema import webtext_index_meta
+from bayard_spark.schema import IndexPaths, webtext_index_meta
 from bayard_spark.sources.webtext import webtext_df
 
 
@@ -37,6 +41,35 @@ def new_batch(spark, urls_texts):
         [(u, "2025-06-01 00:00:00", t, "en") for u, t in urls_texts],
         "url string, warc_ts string, text string, lang string",
     ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
+
+
+def live_postings(spark, root):
+    """Every live posting (doc_id, field, term, tf, doc_len, positions) of
+    the committed snapshot, decoded block by block with the per-block
+    reference decoder; positions are None for a freq-only field."""
+    from bayard_spark.build.codec import decode_block, varint_decode
+
+    log = CommitLog(root)
+    state = log.read()
+    dead = set()
+    if state["tombstones"]:
+        dead = {
+            r["doc_id"]
+            for r in load_tombstones(spark, IndexPaths(root), state).collect()
+        }
+    cols = ["field", "term", "doc_bytes", "tf_bytes", "len_bytes", "pos_bytes"]
+    tbl = visible_postings_dataset(log.io, state).to_table(columns=cols)
+    out = []
+    for f, t, db, tb, lb, pb in zip(*(tbl[c].to_pylist() for c in cols)):
+        d, tf, pos, offs = decode_block(db, tb, pb)
+        ln = varint_decode(lb)
+        out += [
+            (int(d[k]), f, t, int(tf[k]), int(ln[k]),
+             None if pos is None else tuple(pos[offs[k]:offs[k + 1]].tolist()))
+            for k in range(len(d))
+            if int(d[k]) not in dead
+        ]
+    return Counter(out)
 
 
 class TestSegments:
@@ -127,6 +160,72 @@ class TestSegments:
         assert e.scores(term_q("the")).count() > 0
 
 
+    def test_merge_preserves_every_live_posting(self, spark, index_root):
+        root, builder = index_root
+        w = SegmentWriter(spark, builder)
+        base_urls = [
+            r["url"] for r in visible_docs(spark, IndexPaths(root))
+            .orderBy("doc_id").limit(6).collect()
+        ]
+        w.put_documents(new_batch(spark, [
+            ("https://mp.example/1", "alpha beta alpha gamma"),
+            ("https://mp.example/2", "beta beta delta the"),
+            (base_urls[0], "replaced base text alpha"),
+        ]))
+        w.commit()
+        w2 = SegmentWriter(spark, builder)
+        w2.delete_documents(base_urls[1:3] + ["https://mp.example/2"])
+        w2.commit()
+        want = live_postings(spark, root)
+        assert max(want.values()) == 1
+        assert {p[1] for p in want} == {"url", "text", "lang"}
+        assert any(p[5] is None for p in want)  # freq-only fields ride along
+
+        merge_segments(spark, builder)
+        assert live_postings(spark, root) == want
+        # stats are the live docs' lengths, field by field
+        lens: dict[str, dict[int, int]] = {}
+        for doc_id, fld, _t, _tf, doc_len, _p in want:
+            assert lens.setdefault(fld, {}).setdefault(doc_id, doc_len) == doc_len
+        n_live = visible_docs(spark, IndexPaths(root)).count()
+        stats = {
+            r["field"]: r
+            for r in spark.read.parquet(IndexPaths(root).stats).collect()
+        }
+        assert set(stats) == set(lens)
+        for fld, by_doc in lens.items():
+            assert stats[fld]["n_docs_field"] == len(by_doc)
+            assert stats[fld]["total_len"] == sum(by_doc.values())
+            assert stats[fld]["n_docs"] == n_live
+
+
+class TestCommittedFilesRequired:
+    def test_missing_committed_file_raises(self, spark, index_root):
+        """A tombstone file or segment docs dir the commit log names must
+        exist: skipping it would resurrect deleted docs or drop live ones."""
+        root, builder = index_root
+        w = SegmentWriter(spark, builder)
+        w.put_documents(
+            new_batch(spark, [("https://cf.example/1", "gone token")])
+        )
+        w.commit()
+        w2 = SegmentWriter(spark, builder)
+        w2.delete_documents(["https://cf.example/1"])
+        w2.commit()
+        state = CommitLog(root).read()
+        ts_dir = state["tombstones"][-1]
+        shutil.move(ts_dir, ts_dir + ".moved")
+        with pytest.raises(FileNotFoundError):
+            SearchEngine(spark, root)
+        shutil.move(ts_dir + ".moved", ts_dir)
+        assert SearchEngine(spark, root).scores(term_q("gone")).count() == 0
+
+        seg_docs = os.path.join(root, "segments", state["segments"][-1], "docs")
+        shutil.rmtree(seg_docs)
+        with pytest.raises(FileNotFoundError):
+            SearchEngine(spark, root)
+
+
 class TestTombstoneCount:
     def test_footer_count_matches_and_overcounts_dups(self, spark, index_root):
         """count_tombstone_rows is metadata-only (parquet footers): equal
@@ -147,8 +246,7 @@ class TestTombstoneCount:
         )
         w.commit()
         paths = IndexPaths(root)
-        assert count_tombstone_rows(paths) in (0, None) or \
-            count_tombstone_rows(paths) == 0
+        assert count_tombstone_rows(paths) == 0
 
         w2 = SegmentWriter(spark, builder)
         w2.delete_documents(["https://tsc.example/1", "https://tsc.example/2"])
