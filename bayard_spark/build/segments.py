@@ -155,12 +155,16 @@ class SegmentWriter:
                 continue
             marker = posixpath.join(seg_root, seg, "_reserved.json")
             if self.io.exists(marker):
+                # an unreadable marker hides another writer's range, which
+                # would hand out overlapping ids; refuse to guess
                 try:
                     high = max(
                         high, int(json.loads(self.io.read_text(marker))["next"])
                     )
-                except (ValueError, KeyError, json.JSONDecodeError):
-                    continue
+                except (ValueError, KeyError, TypeError) as e:
+                    raise ValueError(
+                        f"corrupt reservation marker {marker}: {e}"
+                    ) from e
         return high
 
     def _segment_name(self) -> str:
@@ -287,8 +291,12 @@ class SegmentWriter:
         return seg
 
     def _write_segment_blocks(self, rows: DataFrame, seg: str) -> None:
-        # the build's and merge's Arrow block encoder, so a segment's blocks
-        # are byte-identical to what a build over the same postings writes
+        """The build's and merge's Arrow block encoder, so a segment's
+        blocks are byte-identical to what a build over the same postings
+        writes. The segment is ONE file sorted by (field, bucket, term),
+        with field and bucket as data columns: a (field, bucket)
+        directory tree would cost one file and one footer per pair, most
+        of a small put's bytes."""
         block_size = self.b.meta.block_size
         blocks = (
             rows.withColumn("salt", F.lit(0))
@@ -303,8 +311,9 @@ class SegmentWriter:
             )
         )
         (
-            blocks.write.mode("overwrite")
-            .partitionBy("field", "bucket")
+            blocks.coalesce(1)
+            .sortWithinPartitions("field", "bucket", "term", "salt", "block_id")
+            .write.mode("overwrite")
             .parquet(os.path.join(self.paths.postings, f"wave={seg}"))
         )
 
@@ -384,63 +393,120 @@ def parquet_files(io: IndexFS, path: str) -> list[str]:
     )
 
 
-def visible_waves(io: IndexFS, state: dict) -> list[str]:
-    """Postings wave directories of the snapshot: the integer base build
-    waves plus the committed `seg*` segments (staged ones stay hidden)."""
+def visible_waves(io: IndexFS, state: dict) -> tuple[list[str], list[str]]:
+    """Names of the snapshot's postings wave directories, as (base,
+    segments): the integer base build waves, partitioned by (field,
+    bucket), and the committed `seg*` segments, each one file with field
+    and bucket as data columns (staged segments stay hidden)."""
     committed = set(state["segments"])
-    return [
-        w for w in io.listdir(io.path("postings"))
-        if w.startswith("wave=")
-        and (re.fullmatch(r"\d+", w[5:]) or w[5:] in committed)
-    ]
+    base, segs = [], []
+    for w in io.listdir(io.path("postings")):
+        if w.startswith("wave=") and re.fullmatch(r"\d+", w[5:]):
+            base.append(w)
+        elif w.startswith("wave=") and w[5:] in committed:
+            segs.append(w)
+    return base, segs
 
 
 def visible_postings(
     spark: SparkSession, paths: IndexPaths, state: dict | None = None
 ) -> DataFrame:
-    """Postings across base waves + committed segments (commit-log aware).
-    `state` is a commits.json snapshot already read by the caller."""
+    """Postings across base waves + committed segments (commit-log aware):
+    one schema-pinned read of the base tree unioned with one of the
+    segment files. `state` is a commits.json snapshot already read by the
+    caller."""
     log = CommitLog(paths.root)
     state = log.read() if state is None else state
-    dirs = [
-        posixpath.join(paths.postings, w) for w in visible_waves(log.io, state)
-    ]
-    if not dirs:
+    base, segs = visible_waves(log.io, state)
+    if not base:
         raise FileNotFoundError(f"no postings waves under {paths.postings}")
-    return (
+    out = (
         spark.read.schema(POSTINGS_READ_SCHEMA)
         .option("basePath", paths.postings)
-        .parquet(*dirs)
+        .parquet(*(posixpath.join(paths.postings, w) for w in base))
         .drop("wave")
     )
+    if segs:
+        out = out.unionByName(
+            spark.read.schema(BLOCK_SCHEMA).parquet(
+                *(posixpath.join(paths.postings, w) for w in segs)
+            )
+        )
+    return out
 
 
 def visible_postings_dataset(io: IndexFS, state: dict) -> ds.Dataset:
     """pyarrow view of the snapshot's postings files, the same rows as
-    `visible_postings` with wave, field and bucket from the directories;
-    for driver-side metadata reads (zero Spark jobs)."""
-    base = io.path("postings")
-    return ds.dataset(
-        [
-            f
-            for w in visible_waves(io, state)
-            for f in parquet_files(io, posixpath.join(base, w))
-        ],
-        filesystem=io.fs,
-        format="parquet",
-        partitioning=POSTINGS_PARTITIONING,
-        partition_base_dir=base,
-    )
+    `visible_postings` (plus `wave`, null for segment rows); for
+    driver-side metadata reads (zero Spark jobs)."""
+    root = io.path("postings")
+    base, segs = visible_waves(io, state)
+
+    def files(waves):
+        return [f for w in waves for f in parquet_files(io, posixpath.join(root, w))]
+
+    return ds.dataset([
+        ds.dataset(files(base), filesystem=io.fs, format="parquet",
+                   partitioning=POSTINGS_PARTITIONING,
+                   partition_base_dir=root),
+        ds.dataset(files(segs), filesystem=io.fs, format="parquet"),
+    ])
+
+
+def footer_spark_schema(md: pq.FileMetaData, path: str) -> StructType:
+    """The Spark schema a parquet file was written with, from its footer."""
+    kv = md.metadata or {}
+    if SPARK_ROW_METADATA not in kv:
+        raise ValueError(f"{path}: no Spark schema in the parquet footer")
+    return StructType.fromJson(json.loads(kv[SPARK_ROW_METADATA]))
 
 
 def spark_schema(io: IndexFS, path: str) -> StructType:
     """The Spark schema in the footer of a table's first data file (zero
     Spark jobs). Spark writes at least one file per table, empty or not."""
     first = parquet_files(io, path)[0]
-    md = pq.read_metadata(first, filesystem=io.fs).metadata or {}
-    if SPARK_ROW_METADATA not in md:
-        raise ValueError(f"{first}: no Spark schema in the parquet footer")
-    return StructType.fromJson(json.loads(md[SPARK_ROW_METADATA]))
+    return footer_spark_schema(pq.read_metadata(first, filesystem=io.fs), first)
+
+
+def docs_tables(io: IndexFS, paths: IndexPaths, state: dict) -> list[tuple[str, str]]:
+    """(Spark path, IndexFS path) of the base doc store and of each
+    committed segment's docs."""
+    return [(paths.docs, io.path("docs"))] + [
+        (
+            posixpath.join(paths.root, "segments", seg, "docs"),
+            _committed(io, io.path("segments", seg, "docs")),
+        )
+        for seg in state["segments"]
+    ]
+
+
+def docs_file_ranges(
+    paths: IndexPaths, state: dict
+) -> list[tuple[str, StructType, int, int]]:
+    """(file, Spark schema, min doc_id, max doc_id) of every non-empty data
+    file of the snapshot's doc stores, from the parquet footers (zero Spark
+    jobs). Build files hold a few contiguous bucket ranges each and a put
+    writes one file, so a handful of ids maps to a handful of files."""
+    io = IndexFS(paths.root)
+    out = []
+    for _, table in docs_tables(io, paths, state):
+        for f in parquet_files(io, table):
+            md = pq.read_metadata(f, filesystem=io.fs)
+            if md.num_rows == 0:
+                continue
+            col = [
+                md.schema.column(i).path for i in range(md.num_columns)
+            ].index("doc_id")
+            stats = [
+                md.row_group(r).column(col).statistics
+                for r in range(md.num_row_groups)
+            ]
+            if all(st is not None and st.has_min_max for st in stats):
+                lo, hi = min(st.min for st in stats), max(st.max for st in stats)
+            else:
+                lo, hi = -(1 << 63), (1 << 63) - 1
+            out.append((f, footer_spark_schema(md, f), lo, hi))
+    return out
 
 
 def visible_docs(
@@ -448,13 +514,6 @@ def visible_docs(
 ) -> DataFrame:
     log = CommitLog(paths.root)
     state = log.read() if state is None else state
-    # (Spark path, IndexFS path) of the base store and each segment's docs
-    tables = [(paths.docs, log.io.path("docs"))]
-    for seg in state["segments"]:
-        seg_docs = _committed(log.io, log.io.path("segments", seg, "docs"))
-        tables.append(
-            (posixpath.join(paths.root, "segments", seg, "docs"), seg_docs)
-        )
     # each read is pinned to its footer schema (no inference job);
     # segments may lack optional stored columns (e.g. html) or carry extra
     # ones — union on names, padding missing ones with nulls
@@ -462,7 +521,7 @@ def visible_docs(
         lambda a, b: a.unionByName(b, allowMissingColumns=True),
         (
             spark.read.schema(spark_schema(log.io, io_path)).parquet(p)
-            for p, io_path in tables
+            for p, io_path in docs_tables(log.io, paths, state)
         ),
     )
     ts = load_tombstones(spark, paths, state)
@@ -509,6 +568,20 @@ def count_tombstone_rows(paths: IndexPaths, state: dict | None = None) -> int:
         for f in state["tombstones"]
         for p in parquet_files(log.io, f)
     )
+
+
+def tombstone_ids(paths: IndexPaths, state: dict) -> np.ndarray:
+    """The committed tombstoned doc ids, sorted and distinct, read on the
+    driver with pyarrow (zero Spark jobs). Callers bound the size first
+    with `count_tombstone_rows`."""
+    io = IndexFS(paths.root)
+    files = [
+        p for f in state["tombstones"] for p in parquet_files(io, _committed(io, f))
+    ]
+    col = ds.dataset(files, filesystem=io.fs, format="parquet").to_table(
+        columns=["doc_id"]
+    )["doc_id"]
+    return np.unique(col.to_numpy().astype(np.int64))
 
 
 # Tombstone-count ceiling for the broadcast anti-join hint: 10M ids ≈
@@ -600,11 +673,11 @@ def merge_segments(spark: SparkSession, builder) -> dict:
 
     rows = block_rows(post)
     if ts is not None:
-        # a re-put url lives under a new doc_id; its old id is doomed.
-        # merge is a rare offline job — one count to pick the join
-        # strategy is noise next to the re-encode it gates.
+        # a re-put url lives under a new doc_id; its old id is doomed. The
+        # join strategy is picked from the footer row count (no job).
         rows = rows.join(
-            tombstone_side(ts, ts.count()), "doc_id", "left_anti"
+            tombstone_side(ts, count_tombstone_rows(paths, state)),
+            "doc_id", "left_anti",
         )
     block_size = builder.meta.block_size
 

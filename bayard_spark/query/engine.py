@@ -3,14 +3,17 @@
 Plan shape per query (SURVEY §2.4-2.5 mapping):
 
 - leaf terms resolve to parquet scans of postings blocks with predicates on
-  (field, bucket, term): field/bucket are PARTITION columns (pruned before
-  I/O), term hits row-group min/max stats. Block payloads decode in one
-  Arrow-native mapInArrow pass (numpy codec, zero-copy position lists);
-  scoring is pure JVM expressions with IDF as a driver-computed literal
-  (exact float parity with the Python oracle).
+  (field, bucket, term): in the base waves field/bucket are PARTITION
+  columns (pruned before I/O), in a segment's single file they are sorted
+  data columns; term hits row-group min/max stats. Block payloads decode in
+  one Arrow-native mapInArrow pass (numpy codec, zero-copy position lists),
+  which also drops tombstoned doc ids; scoring is pure JVM expressions with
+  IDF as a driver-computed literal (exact float parity with the Python
+  oracle).
 - boolean: must = inner joins ordered rarest-df-first (classic IR
-  intersection ordering — SURVEY §4), should = full-outer + left-to-right
-  score sum, must_not = left_anti (boolean.rs:272-290 semantics).
+  intersection ordering — SURVEY §4), should = union + per-doc score sum
+  (plain term clauses on one field share one decode), must_not = left_anti
+  (boolean.rs:272-290 semantics).
 - phrase: per-term position arrays joined on doc_id, adjacency-within-slop
   verified in a vectorized mapInArrow kernel; scored with tf = match count
   and idf = Σ constituent idfs (phrase.rs:13-33).
@@ -19,7 +22,10 @@ Plan shape per query (SURVEY §2.4-2.5 mapping):
   (fuzzy_term.rs:5-39, regex.rs:12-25).
 - top-k: orderBy(score desc, doc_id asc).offset(o).limit(k) — Spark compiles
   this to TakeOrderedAndProject (per-partition partial top-k + merge), the
-  same push-down the reference coordinator does (client.rs:843-844).
+  same push-down the reference coordinator does (client.rs:843-844). The
+  same collect() counts the matches through an Observation, and the
+  winners' stored columns are read on the driver: one Spark action per
+  search request.
 - block-max pruning: for top-k term queries, a block survives only if its
   metadata upper bound can beat the k-th guaranteed lower bound — computed
   entirely from (max_tf, min_len / min_tf, max_len) columns, JVM-side, before
@@ -30,6 +36,8 @@ Plan shape per query (SURVEY §2.4-2.5 mapping):
 from __future__ import annotations
 
 import math
+import threading
+from collections import OrderedDict
 from collections.abc import Iterator
 from dataclasses import dataclass, field as dc_field
 from functools import reduce
@@ -37,7 +45,7 @@ from functools import reduce
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from bayard_spark.build.codec import decode_blocks
@@ -47,6 +55,44 @@ from bayard_spark.schema import IndexMeta, IndexPaths
 DECODED_SCHEMA = (
     "term string, doc_id long, tf double, len double, positions array<int>"
 )
+
+
+class LRUCache:
+    """A fixed-capacity, thread-safe least-recently-used map. The engine's
+    plan and expansion caches live as long as the snapshot and are shared
+    by every client thread; a stream of novel queries must not grow them
+    without bound."""
+
+    def __init__(self, capacity: int):
+        self.capacity = capacity
+        self._items: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, key):
+        with self._lock:
+            if key not in self._items:
+                return None
+            self._items.move_to_end(key)
+            return self._items[key]
+
+    def __setitem__(self, key, value) -> None:
+        with self._lock:
+            self._items[key] = value
+            self._items.move_to_end(key)
+            while len(self._items) > self.capacity:
+                self._items.popitem(last=False)
+
+    def __contains__(self, key) -> bool:
+        with self._lock:
+            return key in self._items
+
+    def __len__(self) -> int:
+        with self._lock:
+            return len(self._items)
+
+    def clear(self) -> None:
+        with self._lock:
+            self._items.clear()
 
 
 @dataclass
@@ -91,17 +137,24 @@ class SearchEngine:
     # CPU per query, while the Spark job scans the same metadata in
     # parallel. (VERDICT r2 "What's wrong" #2.)
     PRELOAD_EXPAND_MAX = 50_000
+    # Entries per plan cache (decoded leaf frames, fuzzy/regex
+    # neighborhoods): enough for a serving mix's head of the vocabulary,
+    # bounded so a stream of one-off queries cannot grow them.
+    CACHE_ENTRIES = 512
 
     def __init__(self, spark: SparkSession, root: str,
                  preload_dictionary: bool = True,
                  max_expansions: int = 1024):
         import pyarrow.dataset as ds
 
+        from bayard_spark.build import segments
         from bayard_spark.build.segments import (
             CommitLog,
             count_tombstone_rows,
+            docs_file_ranges,
             load_tombstones,
             parquet_files,
+            tombstone_ids,
             visible_docs,
             visible_postings,
         )
@@ -121,20 +174,33 @@ class SearchEngine:
         # every table read carries an explicit schema, and the stats and
         # term dictionary are read with pyarrow from the files themselves.
         state = log.read()
+        self._io = log.io
         self.postings = visible_postings(spark, self.paths, state)
         self.docs = visible_docs(spark, self.paths, state)
         # Tombstoned ids are filtered out of every decoded posting stream.
-        # BM25 stats refresh only at build/merge time (documented: same
-        # semantics as per-segment-reader stats in Lucene/tantivy).
-        self.tombstones = load_tombstones(spark, self.paths, state)
-        # counted once per engine snapshot: the per-query anti-join's
-        # broadcast hint is size-gated (build/segments.py
-        # TOMBSTONE_BROADCAST_MAX) — a web-scale purge must shuffle the
-        # anti-join, not force billions of ids into a broadcast. The
-        # count is metadata-only (parquet footers, zero Spark jobs);
-        # it over-counts duplicate tombstones, which only flips the
-        # gate toward shuffle — the safe direction.
+        # BM25 stats refresh only at build/merge time (ROADMAP item 1).
+        # The count is metadata-only (parquet footers, zero Spark jobs); it
+        # over-counts duplicate tombstones, which only moves the gate
+        # below toward the anti-join — the safe direction. Block-max
+        # pruning keys on it too: a full block may hold deleted docs.
         self._n_tombstones = count_tombstone_rows(self.paths, state)
+        # Under TOMBSTONE_BROADCAST_MAX the sorted ids are broadcast once
+        # per engine and dropped inside the decoder's own batch loop (no
+        # join, no extra job). A web-scale purge above it keeps the
+        # shuffle anti-join against `tombstones` instead of forcing
+        # billions of ids into a broadcast.
+        self._dead_ids = None
+        self.tombstones = None
+        if 0 < self._n_tombstones <= segments.TOMBSTONE_BROADCAST_MAX:
+            self._dead_ids = spark.sparkContext.broadcast(
+                tombstone_ids(self.paths, state)
+            )
+        elif self._n_tombstones > 0:
+            self.tombstones = load_tombstones(spark, self.paths, state)
+        # doc-id range of every docs file, from the footers: the winners'
+        # stored columns are read on the driver from the files that hold
+        # them (see _fetch_stored)
+        self._doc_files = docs_file_ranges(self.paths, state)
         self.stats = {
             r["field"]: {
                 "n_docs": r["n_docs"],
@@ -147,12 +213,9 @@ class SearchEngine:
             .to_table(columns=["field", "n_docs", "avg_len"])
             .to_pylist()
         }
-        # Doc-store size estimate for the response-path gate (zero Spark
-        # jobs): the commit log's high-water doc_id over-counts by deleted
-        # docs — the SAFE direction, since an overestimate only switches to
-        # the point-lookup path earlier.
+        # Doc-count bound for must-join ordering (zero Spark jobs): the
+        # commit log's high-water doc_id, over-counting deleted docs.
         self._n_docs_estimate = int(state["next_doc_id"])
-        self._last_response_path: str | None = None
         self._bucket_cache: dict[str, int] = {}
         self._df_cache: dict[tuple[str, str], int] = {}
         # Prepared-plan cache for decoded LEAF frames (scan→decode→score),
@@ -164,7 +227,7 @@ class SearchEngine:
         # open over an immutable index snapshot. Compositions that contain
         # shuffles (boolean joins, should-aggs) are rebuilt per call so no
         # shuffle-stage output is ever silently reused as a cached result.
-        self._leaf_cache: dict[tuple, DataFrame] = {}
+        self._leaf_cache = LRUCache(self.CACHE_ENTRIES)
         # Expansion-neighborhood cache for fuzzy/regex: the matched
         # {term: df} map is pure index metadata (static per snapshot,
         # like _df_cache), but computing it costs a dictionary-scan
@@ -172,7 +235,7 @@ class SearchEngine:
         # A server answering repeated patterns over one snapshot must
         # not re-run that job per request (r7; same rationale as the
         # leaf plan cache above).
-        self._expansion_cache: dict[tuple, dict[str, int]] = {}
+        self._expansion_cache = LRUCache(self.CACHE_ENTRIES)
         self._dict_complete = False
         self.k1 = self.meta.bm25_k1
         self.b = self.meta.bm25_b
@@ -324,6 +387,11 @@ class SearchEngine:
         block frame is round-robin repartitioned so decode parallelizes
         across the cluster instead of running on the one task that scans
         the term's bucket file.
+
+        Tombstoned doc ids (the engine's broadcast, under
+        TOMBSTONE_BROADCAST_MAX) drop in the same batch loop, with the same
+        sorted-array membership test as the candidates; above the cap the
+        decoded stream is anti-joined instead.
         """
 
         lossy = self.meta.lossy_fieldnorms
@@ -334,6 +402,7 @@ class SearchEngine:
             if candidate_ids is not None
             else None
         )
+        dead_bc = self._dead_ids
 
         def run(batches):
             # Arrow-native: each input batch decodes in whole-batch numpy
@@ -350,12 +419,13 @@ class SearchEngine:
                 # rare term was tombstoned): emit nothing rather than index
                 # into an empty candidate array below (ADVICE r4)
                 return
+            dead = dead_bc.value if dead_bc is not None else None
 
-            def is_cand(doc_ids):
+            def member(sorted_ids, doc_ids):
                 ids = doc_ids.astype(np.int64)
-                idx = np.searchsorted(cand, ids)
-                idx[idx == len(cand)] = 0
-                return cand[idx] == ids
+                idx = np.searchsorted(sorted_ids, ids)
+                idx[idx == len(sorted_ids)] = 0
+                return sorted_ids[idx] == ids
 
             for rb in batches:
                 if cand is not None and rb.num_rows:
@@ -364,7 +434,7 @@ class SearchEngine:
                     dec = decode_blocks(*rb.columns[1:4])
                     hit = np.zeros(rb.num_rows, dtype=bool)
                     hit[np.repeat(np.arange(rb.num_rows), dec.counts)[
-                        is_cand(dec.doc_ids)
+                        member(cand, dec.doc_ids)
                     ]] = True
                     rb = rb.filter(pa.array(hit))
                 if rb.num_rows == 0:
@@ -403,8 +473,14 @@ class SearchEngine:
                     ],
                     names=["term", "doc_id", "tf", "len", "positions"],
                 )
+                keep = None
                 if cand is not None:
-                    out = out.filter(pa.array(is_cand(dec.doc_ids)))
+                    keep = member(cand, dec.doc_ids)
+                if dead is not None:
+                    live = ~member(dead, dec.doc_ids)
+                    keep = live if keep is None else keep & live
+                if keep is not None:
+                    out = out.filter(pa.array(keep))
                 yield out
 
         cols = ["term", "doc_bytes", "tf_bytes", "len_bytes"] + (
@@ -424,13 +500,7 @@ class SearchEngine:
             payload = payload.repartition(target)
         decoded = payload.mapInArrow(run, DECODED_SCHEMA)
         if self.tombstones is not None:
-            from bayard_spark.build.segments import tombstone_side
-
-            decoded = decoded.join(
-                tombstone_side(self.tombstones, self._n_tombstones),
-                "doc_id",
-                "left_anti",
-            )
+            decoded = decoded.join(self.tombstones, "doc_id", "left_anti")
         return decoded
 
     def _score_expr(self, idf, avg_len: float):
@@ -473,7 +543,7 @@ class SearchEngine:
             topk_prune is not None
             and topk_prune <= self.meta.block_size
             and df_count > 8 * self.meta.block_size
-            and self.tombstones is None
+            and self._n_tombstones == 0
             and not self.meta.lossy_fieldnorms
         )
         key = ("term", fld, term, pruned)
@@ -997,11 +1067,20 @@ class SearchEngine:
         return {r["term"]: int(r["df"]) for r in rows}
 
     def _multi_term_scores(self, fld: str, term_dfs: dict[str, int]) -> DataFrame:
-        """Sum of per-term BM25 over an expanded term set (fuzzy/regex).
+        """Sum of per-term BM25 over a term set (fuzzy/regex expansions, and
+        a `should` of plain terms on one field): see _multi_term_rows."""
+        rows = self._multi_term_rows(fld, term_dfs)
+        if sum(d > 0 for d in term_dfs.values()) < 2:
+            return rows
+        return rows.groupBy("doc_id").agg(F.sum("score").alias("score"))
 
-        ONE decode pass over all matched terms' blocks; per-term idf values
+    def _multi_term_rows(self, fld: str, term_dfs: dict[str, int]) -> DataFrame:
+        """(doc_id, score) per matching (term, doc) of a term set, before
+        the per-doc sum.
+
+        ONE decode pass over all the terms' blocks; per-term idf values
         are driver-computed (math.log — exact float parity with the oracle)
-        and broadcast-joined onto the decoded stream.
+        and attached as a CASE chain (or a broadcast join for large sets).
         """
         terms = sorted(t for t, d in term_dfs.items() if d > 0)
         if not terms:
@@ -1044,8 +1123,9 @@ class SearchEngine:
                 scored = decoded.join(F.broadcast(idf_map), "term").withColumn(
                     "score", self._score_expr(F.col("_idf"), avg)
                 )
+            scored = scored.select("doc_id", "score")
             self._leaf_cache[key] = scored
-        return scored.groupBy("doc_id").agg(F.sum("score").alias("score"))
+        return scored
 
     def _empty_scores(self) -> DataFrame:
         return self.spark.createDataFrame([], "doc_id long, score double")
@@ -1130,10 +1210,7 @@ class SearchEngine:
     def _cand_upper_estimate(self, query: dict) -> int | None:
         """Upper bound on the candidate (matching-doc) count of a query, from
         dictionary metadata only — None when no sound bound is cheap (fuzzy/
-        regex before expansion, range). Drives the response-path carry gate:
-        the carry-through join's cost scales with the CANDIDATE count, not
-        the doc-store size, so a hot term (df ≈ corpus) must take the
-        point-lookup branch even on a small store."""
+        regex before expansion, range)."""
         kind = query["kind"]
         opts = query.get("options", {})
         try:
@@ -1218,7 +1295,22 @@ class SearchEngine:
         else:
             cand = self._all_scores().withColumn("score", F.lit(0.0))
         if shoulds:
-            sframes = [self.scores(q) for _, q in shoulds]
+            # plain term clauses on one field share ONE decode of all their
+            # blocks (a url lookup is a should of url terms); every other
+            # clause, and a repeated term, keeps its own plan
+            by_field: dict[str, list[str]] = {}
+            sframes = []
+            for _, q in shoulds:
+                if q["kind"] == "term":
+                    terms = by_field.setdefault(q["options"]["field"], [])
+                    if q["options"]["term"] not in terms:
+                        terms.append(q["options"]["term"])
+                        continue
+                sframes.append(self.scores(q))
+            for fld, terms in by_field.items():
+                sframes.append(
+                    self._multi_term_rows(fld, self._df_of_many(fld, terms))
+                )
             unioned = reduce(lambda a, b: a.unionByName(b), sframes)
             ssum = unioned.groupBy("doc_id").agg(F.sum("score").alias("_s"))
             if cand is None:
@@ -1239,6 +1331,12 @@ class SearchEngine:
     # ---------- search API (docs/rest_api/search_api.md shape) ----------
 
     def search(self, request: dict) -> SearchResponse:
+        """One Spark action per request: the top-k `collect()` also counts
+        the matches (an Observation on the unpruned scores, like the
+        reference's MultiCollector pass, node/search.rs:29-67), and the
+        winners' url, timestamp and requested stored fields are read on
+        the driver (_fetch_stored). Only a `count` request runs a bare
+        count()."""
         query = request["query"]
         hits = int(request.get("hits", 10))
         offset = int(request.get("offset", 0))
@@ -1249,186 +1347,105 @@ class SearchEngine:
         want_count = collection_kind in ("count", "count_and_top_docs")
         want_docs = collection_kind in ("top_docs", "count_and_top_docs")
 
-        # total_hits is defined over ALL matches (search_api.md), so the
-        # count path must see an UNPRUNED plan — block-max pruning is only
-        # legal on the top-docs branch. When both collectors run, the scores
-        # are persisted so the request does ONE posting decode (the
-        # reference's MultiCollector is likewise one pass, node/search.rs:
-        # 29-67).
-        prune_hint = (hits + offset) if (want_docs and not sort) else None
-        scores = self.scores(
-            query, topk_hint=None if want_count else prune_hint
-        )
-        persisted = want_count and want_docs
-        if persisted:
-            scores = scores.persist()
-        try:
-            return self._collect_response(
-                scores, want_count, want_docs, sort, fields, hits, offset,
-                cand_estimate=self._cand_upper_estimate(query),
-            )
-        finally:
-            if persisted:
-                scores.unpersist()
-
-    # Point-lookup id-list size above which the stored-field fetch switches
-    # from an IN-list filter to a broadcast semi-join: a deep-pagination or
-    # huge-hits request would otherwise inflate the pushed predicate (and
-    # the filter expression tree) linearly with the id count.
-    ISIN_LOOKUP_MAX = 2048
-    # Doc-store size above which the narrow response columns (url, warc_ts)
-    # stop riding the candidate frame through TakeOrderedAndProject and are
-    # instead point-looked-up for the ≤k winners (VERDICT r4 Wrong #1).
-    # Below it, the carry-through join's extra input is one narrow
-    # 3-column scan of the doc store — measured faster than the fixed
-    # ~0.1 s overhead of a second Spark job at bench scale. Above it, that
-    # scan is an O(corpus) cost paid per query (at 10^12 docs, a
-    # non-starter), while the point-lookup path reads only the winners'
-    # row groups via an IN-pushdown. A sort-by-fast-field request still
-    # joins THE SORT COLUMN pre-top-k above the gate (ordering needs it),
-    # but url/warc_ts move to the point-lookup.
-    CARRY_JOIN_DOCS_MAX = 2_000_000
-    # Candidate-count bound above which carry-through is abandoned even on a
-    # small store: the join's shuffled volume is O(candidates), so a hot
-    # term (df ≈ corpus) pays ~1 s riding 1M rows through the join while
-    # the point-lookup branch costs one fixed ~0.1 s job + ≤k row-group
-    # reads regardless of df (measured at the 960k-doc bench corpus:
-    # carry 1.95 s vs point-lookup 0.9 s end-to-end for df = 960k).
-    # Unknown estimates (fuzzy/regex/range) keep the carry branch — the
-    # status quo measured faster for typical expansions at bench scale.
-    CARRY_JOIN_CANDIDATES_MAX = 131_072
-
-    def _collect_response(
-        self, scores, want_count, want_docs, sort, fields, hits, offset,
-        cand_estimate: int | None = None,
-    ) -> SearchResponse:
-        total = -1
+        # total_hits is defined over ALL matches (search_api.md), so a
+        # counting request scores an UNPRUNED plan — block-max pruning is
+        # only legal when nothing is counted.
+        prune = want_docs and not want_count and not sort
+        scores = self.scores(query, topk_hint=(hits + offset) if prune else None)
+        if not want_docs or hits <= 0:
+            # a zero-row limit is optimized away with the observation in
+            # it, so an empty page counts on its own
+            total = scores.count() if want_count else -1
+            return SearchResponse(total_hits=total)
+        counted = None
         if want_count:
-            total = scores.count()
-        documents = []
-        if want_docs:
-            # The NARROW response columns (url, warc_ts, and the sort fast
-            # field when sorting) ride the slim frame THROUGH
-            # TakeOrderedAndProject: the whole top-docs branch is ONE Spark
-            # job. Round 2 joined stored fields onto the post-limit winners
-            # (a join stage after the barrier); round 3 collected the slim
-            # winners and ran a SECOND point-lookup job — both measured
-            # slower on the driver bench than carrying the two fixed-width
-            # columns through the top-k (they cost ~nothing per shuffled
-            # candidate, and the docs side is a broadcast-size projection).
-            # WIDE user-requested stored fields (`fields`, e.g. full text)
-            # still fetch by doc_id point-lookup over the ≤k winners only,
-            # so fat columns never ride the candidate-set shuffle.
-            if sort:
-                sfield = sort["field"]
-                sdef = self.meta.field_def(sfield)
-                if not sdef.fast:
-                    raise ValueError(
-                        f"field {sfield!r} is not a fast field"
-                    )  # node.rs:1312-1331
-                order = (
-                    [F.col(sfield).asc(), F.col("doc_id").asc()]
-                    if sort.get("order", "asc") == "asc"
-                    else [F.col(sfield).desc(), F.col("doc_id").asc()]
-                )
-                sort_col = sfield
-            else:
-                order = [F.desc("score"), F.asc("doc_id")]
-                sort_col = None
-            carry = [
-                c
-                for c in dict.fromkeys(
-                    ["url", "warc_ts"] + ([sort_col] if sort_col else [])
-                )
-                if c not in scores.columns
+            counted = Observation()
+            scores = scores.observe(counted, F.count(F.lit(1)).alias("n"))
+        if sort:
+            sort_col = sort["field"]
+            if not self.meta.field_def(sort_col).fast:
+                raise ValueError(
+                    f"field {sort_col!r} is not a fast field"
+                )  # node.rs:1312-1331
+            key = F.col(sort_col)
+            order = [
+                key.asc() if sort.get("order", "asc") == "asc" else key.desc(),
+                F.col("doc_id").asc(),
             ]
-            # Size-gated carry-through (VERDICT r4 Wrong #1): on a small
-            # doc store the narrow response columns ride the slim frame
-            # through TakeOrderedAndProject (whole top-docs branch = ONE
-            # job); on a big one only the sort fast field (when sorting)
-            # joins pre-top-k — url/warc_ts resolve via the existing ≤k
-            # point-lookup so no O(corpus) docs scan rides every query.
-            small_store = self._n_docs_estimate <= self.CARRY_JOIN_DOCS_MAX
-            small_cand = (
-                cand_estimate is None
-                or cand_estimate <= self.CARRY_JOIN_CANDIDATES_MAX
+            # the ordering needs the sort column before the top-k
+            scores = scores.join(
+                self.docs.select("doc_id", sort_col), "doc_id"
             )
-            if small_store and small_cand:
-                carry_through = carry
-            else:
-                carry_through = (
-                    [sort_col]
-                    if sort_col and sort_col in carry
-                    else []
-                )
-            self._last_response_path = (
-                "carry" if carry_through == carry else "point_lookup"
+        else:
+            sort_col = None
+            order = [F.desc("score"), F.asc("doc_id")]
+        top = scores.orderBy(*order)
+        win_rows = (top.offset(offset) if offset else top).limit(hits).collect()
+        total = int(counted.get["n"]) if counted is not None else -1
+
+        present = set(scores.columns)
+        stored = self._fetch_stored(
+            [r["doc_id"] for r in win_rows],
+            list(dict.fromkeys(
+                ["url", "warc_ts"] + [c for c in fields if c not in present]
+            )),
+        )
+        documents = []
+        for r in win_rows:
+            d = {**stored[r["doc_id"]], **r.asDict()}
+            ts = d.get("warc_ts")
+            # response shape per docs/rest_api/search_api.md: score is 0
+            # under a field sort, sort_value is 0 under a score sort, and
+            # the timestamp is an integer unix epoch.
+            documents.append(
+                {
+                    "id": d.get("url"),
+                    "score": 0.0 if sort_col else float(d.get("score", 0.0)),
+                    "timestamp": (
+                        int(ts.timestamp()) if ts is not None else 0
+                    ),
+                    "sort_value": d.get(sort_col) if sort_col else 0,
+                    "fields": {f: d.get(f) for f in fields},
+                }
             )
-            lookup_extra = [c for c in carry if c not in carry_through]
-            slim = (
-                scores.join(
-                    self.docs.select("doc_id", *carry_through), "doc_id"
-                )
-                if carry_through
-                else scores
-            )
-            top = slim.orderBy(*order)
-            winners = (
-                top.offset(offset).limit(hits) if offset
-                else top.limit(hits)
-            )
-            win_rows = winners.collect()
-            present = set(winners.columns)
-            stored_cols = list(
-                dict.fromkeys(
-                    [c for c in fields if c not in present] + lookup_extra
-                )
-            )
-            if stored_cols and win_rows:
-                fetched = self._fetch_stored(
-                    [r["doc_id"] for r in win_rows], stored_cols
-                )
-            else:
-                fetched = {}
-            for r in win_rows:
-                d = {**r.asDict(), **fetched.get(r["doc_id"], {})}
-                ts = d.get("warc_ts")
-                # response shape per docs/rest_api/search_api.md: score is 0
-                # under a field sort, sort_value is 0 under a score sort, and
-                # the timestamp is an integer unix epoch.
-                documents.append(
-                    {
-                        "id": d.get("url"),
-                        "score": 0.0 if sort_col else float(d.get("score", 0.0)),
-                        "timestamp": (
-                            int(ts.timestamp()) if ts is not None else 0
-                        ),
-                        "sort_value": d.get(sort_col) if sort_col else 0,
-                        "fields": {f: d.get(f) for f in fields},
-                    }
-                )
         return SearchResponse(total_hits=total, documents=documents)
 
     def _fetch_stored(self, ids: list[int], cols: list[str]) -> dict:
-        """Stored-field fetch for the winner ids.
+        """doc_id → {doc_id, *cols} for the winner ids, read on the driver
+        with pyarrow (no Spark job): only the docs files whose footer
+        doc-id range holds a winner are opened, and the `in` filter skips
+        their other row groups. Values are converted from Arrow the way
+        Spark Connect's collect() does, with each file's footer schema, so
+        they equal a Spark collect() of the same rows; a column a file
+        lacks (an older segment) reads as None, like the unionByName of
+        `docs`."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
 
-        Small id lists (the common top-k case) push an IN filter into the
-        doc-store parquet scan — non-winning docs are never read for their
-        stored columns. Large id lists (deep pagination / huge hits) would
-        inflate the IN predicate linearly, so they switch to a broadcast
-        semi-join of the ids against the doc store instead."""
-        proj = self.docs.select("doc_id", *cols)
-        if len(ids) <= self.ISIN_LOOKUP_MAX:
-            rows = proj.filter(F.col("doc_id").isin(ids)).collect()
-        else:
-            # ship the id list as ONE Arrow table: a list-of-tuples
-            # createDataFrame pays per-row Python->JVM pickling, which
-            # profiling showed dominates this fetch (~0.45 s of a 0.56 s
-            # fetch for 3k ids at sf0.1). A pyarrow.Table takes the Arrow
-            # path without the session-wide arrow conf, which other client
-            # threads share.
-            id_df = self.spark.createDataFrame(
-                pa.table({"doc_id": pa.array(ids, type=pa.int64())})
+        known = {c for _, schema, _, _ in self._doc_files for c in schema.names}
+        unknown = [c for c in cols if c not in known]
+        if unknown:
+            raise ValueError(f"no stored field {unknown[0]!r} in the index")
+        want = np.unique(np.asarray(ids, dtype=np.int64))
+        out: dict = {}
+        for path, schema, lo, hi in self._doc_files:
+            hit = want[(want >= lo) & (want <= hi)]
+            if not hit.size:
+                continue
+            sub = StructType(
+                [schema["doc_id"]] + [schema[c] for c in cols if c in schema.names]
             )
-            rows = proj.join(F.broadcast(id_df), "doc_id").collect()
-        return {r["doc_id"]: r.asDict() for r in rows}
+            table = pq.read_table(
+                path,
+                columns=sub.names,
+                filters=[("doc_id", "in", hit.tolist())],
+                filesystem=self._io.fs,
+            ).select(sub.names)
+            rows = ArrowTableToRowsConversion.convert(
+                table.cast(to_arrow_schema(sub)), sub
+            )
+            for row in rows:
+                out[row["doc_id"]] = {**dict.fromkeys(cols), **row.asDict()}
+        return out

@@ -2,7 +2,8 @@
 
 1. total_hits is computed from an UNPRUNED plan.
 2. Block-max pruning is disabled once tombstones exist: the build-time
-   threshold is unsound over deleted docs.
+   threshold is unsound over deleted docs (checked on the shared fixture
+   and on an index whose threshold block is deleted whole).
 
 TestTombstonePruning deletes 20 docs from the shared fixture, so it runs
 after the count tests.
@@ -64,7 +65,7 @@ class TestTombstonePruning:
         writer.commit()
 
         engine = SearchEngine(spark, root)
-        assert engine.tombstones is not None
+        assert engine._n_tombstones > 0
         resp = engine.search({
             "query": q, "collection_kind": "count_and_top_docs", "hits": 10,
         })
@@ -78,3 +79,55 @@ class TestTombstonePruning:
         }
         assert got_urls == [url_of[d] for d in expected_survivors]
         assert resp.total_hits == N - 20
+
+
+def test_deleted_threshold_block_prunes_no_live_hit(spark, tmp_path):
+    """The pruning threshold τ is the guaranteed floor of a FULL block,
+    read from build-time metadata. Delete every doc of the block that sets
+    τ: the live top-k now sits in blocks whose upper bound is below τ, so
+    a top_docs request on this snapshot must not prune."""
+    from bayard_spark.build.indexer import IndexBuilder
+    from bayard_spark.schema import webtext_index_meta
+
+    n = 1300  # 10 full blocks of 'common' + a partial one; no salting
+    meta = webtext_index_meta(num_buckets=4, num_waves=1, hot_df_threshold=n + 1)
+    urls = [f"https://tau.example/{i:05d}" for i in range(n)]
+    frame = spark.createDataFrame(
+        [(u, "2024-01-01 00:00:00", "x", "en") for u in urls],
+        "url string, warc_ts string, text string, lang string",
+    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
+    builder = IndexBuilder(spark, meta, str(tmp_path))
+    # doc ids depend only on the url set: learn them first, then give the
+    # docs of block 0 (ids 0-127) the top scores and ids 500-519 the next
+    ids = {
+        r["url"]: r["doc_id"]
+        for r in builder.assign_doc_ids(frame).select("url", "doc_id").collect()
+    }
+
+    def text(doc_id):
+        if doc_id < meta.block_size:
+            return "common " * 5
+        if 500 <= doc_id < 520:
+            return "common common " + " ".join(f"m{j}" for j in range(8))
+        return "common " + " ".join(f"w{j}" for j in range(20))
+
+    src = spark.createDataFrame(
+        [(u, "2024-01-01 00:00:00", text(ids[u]), "en") for u in urls],
+        "url string, warc_ts string, text string, lang string",
+    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
+    builder.build(src, resume=False)
+    q = {"kind": "term", "options": {"field": "text", "term": "common"}}
+    clean = SearchEngine(spark, builder.paths.root).search(
+        {"query": q, "collection_kind": "top_docs", "hits": 10}
+    )
+    by_id = {v: k for k, v in ids.items()}
+    assert [d["id"] for d in clean.documents] == [by_id[i] for i in range(10)]
+
+    writer = SegmentWriter(spark, builder)
+    writer.delete_documents([by_id[i] for i in range(meta.block_size)])
+    writer.commit()
+    engine = SearchEngine(spark, builder.paths.root)
+    resp = engine.search({"query": q, "collection_kind": "top_docs", "hits": 10})
+    assert [d["id"] for d in resp.documents] == [
+        by_id[i] for i in range(500, 510)
+    ]

@@ -264,3 +264,73 @@ def test_sort_by_fast_field(built):
     )
     ts = [d["sort_value"] for d in resp.documents]
     assert ts == sorted(ts, reverse=True)
+
+
+# ------------------------------------------------- snapshot with tombstones
+
+TS_DOCS = 1200  # "the" then spans more than 8 blocks, where pruning opens
+
+
+@pytest.fixture(scope="module")
+def tombstoned(spark):
+    """A built index with deletes committed on top: the top-20 docs of the
+    hot term "the" and the top-3 of every query in QUERIES. BM25 stats and
+    df keep counting deleted docs until a merge, so the oracle holds every
+    doc and the expected ranking drops the deleted ones."""
+    import shutil
+    import tempfile
+
+    from bayard_spark.build.segments import SegmentWriter
+
+    root = tempfile.mkdtemp(prefix="ts_rank_idx_")
+    meta = webtext_index_meta(
+        num_buckets=8, num_waves=2, salt_span=100, hot_df_threshold=250
+    )
+    builder = IndexBuilder(spark, meta, root)
+    builder.build(webtext_df(spark, TS_DOCS, partitions=8))
+    ids = {
+        r["url"]: r["doc_id"]
+        for r in spark.read.parquet(builder.paths.docs)
+        .select("url", "doc_id").collect()
+    }
+    probe = SearchEngine(spark, root)
+    oracle = OracleIndex(
+        analyzers=probe.analyzers,
+        field_analyzers={"url": "raw", "text": "default", "lang": "raw"},
+    )
+    for row in synthesize_batch(np.arange(TS_DOCS)).itertuples(index=False):
+        oracle.add(ids[row.url], {"url": row.url, "text": row.text,
+                                  "lang": row.lang})
+    hot = {"kind": "term", "options": {"field": "text", "term": "the"}}
+    dead = {d for d, _ in oracle.top_k(hot, k=20)}
+    for _, q in QUERIES:
+        dead |= {d for d, _ in oracle.top_k(q, k=3)}
+    writer = SegmentWriter(spark, builder)
+    writer.delete_documents(sorted(oracle.docs[d]["url"] for d in dead))
+    writer.commit()
+    engine = SearchEngine(spark, root)
+    assert engine._n_tombstones == len(dead)
+    assert engine._df_of("text", "the") > 8 * meta.block_size
+    yield engine, oracle, dead
+    shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.parametrize("name,query", QUERIES, ids=[q[0] for q in QUERIES])
+def test_rank_identity_with_tombstones(tombstoned, name, query):
+    """Both collectors: top_docs (block-max pruning allowed, which must
+    stay off while deleted docs sit in full blocks) and
+    count_and_top_docs (total_hits over the live matches)."""
+    engine, oracle, dead = tombstoned
+    live = {d: s for d, s in oracle.run(query).items() if d not in dead}
+    expected = sorted(live.items(), key=lambda kv: (-kv[1], kv[0]))[:K]
+    for kind in ("top_docs", "count_and_top_docs"):
+        resp = engine.search(
+            {"query": query, "collection_kind": kind, "hits": K}
+        )
+        assert [d["id"] for d in resp.documents] == [
+            oracle.docs[d]["url"] for d, _ in expected
+        ], f"{name} {kind}: ranking diverges"
+        for d, (_, es) in zip(resp.documents, expected):
+            assert math.isclose(d["score"], es, rel_tol=1e-9, abs_tol=1e-12)
+        if kind == "count_and_top_docs":
+            assert resp.total_hits == len(live), name

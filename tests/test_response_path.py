@@ -1,25 +1,60 @@
 """How a search turns winners into a response.
 
-- The top-docs path runs a single action when no stored fields are
-  requested: url/warc_ts ride the slim frame through
-  TakeOrderedAndProject. Requested stored fields are fetched by a bounded
-  doc_id point-lookup over the winners only, and large id lists switch
-  from an IN-list to a broadcast semi-join.
-- The carry-through docs join switches to the point-lookup above the
-  doc-store size gate and above the candidate-count gate, with identical
-  results on both branches.
+- A request is one Spark action: term top_docs and count_and_top_docs run
+  one job each, and a 5-url `should` lookup at most two, on a snapshot
+  with tombstones. total_hits rides the top-k collect (an Observation).
+- The winners' url, timestamp and requested stored fields are read on the
+  driver for the winners only; the values equal a Spark collect() of the
+  same rows for every stored type (timestamp, binary, u64 decimal, json),
+  and no session conf is set.
+- A fast-field sort joins its sort column before the top-k.
 - Response shape (docs/rest_api/search_api.md): score=0 under a field
   sort, sort_value=0 under a score sort, integer unix timestamps; phrase
   queries on fields without positions raise a clear error.
 - One engine answers concurrent client threads with the sequential
-  results.
+  results, and its plan caches are bounded LRU maps.
 """
 
 from __future__ import annotations
 
+import datetime
+import itertools
+import shutil
+import tempfile
+from decimal import Decimal
+
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    DecimalType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from bayard_spark.query import SearchEngine
+
+_groups = itertools.count()
+
+
+def spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    sc = spark.sparkContext
+    gid = f"response-path-{next(_groups)}"
+    sc.setJobGroup(gid, "test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _term(t, field="text"):
+    return {"kind": "term", "options": {"field": field, "term": t}}
 
 
 @pytest.fixture()
@@ -36,200 +71,280 @@ def spy_fetch(built, monkeypatch):
     return engine, calls
 
 
-def test_top_docs_single_action_without_fields(built, spy_fetch):
-    engine, calls = spy_fetch
-    _, oracle = built
+def test_top_docs_rank_identity_and_complete_response(built):
+    engine, oracle = built
     resp = engine.search(
-        {
-            "query": {
-                "kind": "term", "options": {"field": "text", "term": "water"}
-            },
-            "collection_kind": "top_docs",
-            "hits": 10,
-        }
+        {"query": _term("water"), "collection_kind": "top_docs", "hits": 10}
     )
-    assert calls == [], "no-fields search must not run a point-lookup action"
-    # response still complete: url + timestamp come from the carried columns
     assert resp.documents, "query should match documents"
     for d in resp.documents:
         assert d["id"].startswith("http")
         assert isinstance(d["timestamp"], int) and d["timestamp"] > 0
-    # and rank-identical to the oracle
-    ranked = oracle.top_k(
-        {"kind": "term", "options": {"field": "text", "term": "water"}}, 10
-    )
-    got_urls = [d["id"] for d in resp.documents]
-    want_urls = [oracle.docs[i]["url"] for i, _score in ranked]
-    assert got_urls == want_urls
+    ranked = oracle.top_k(_term("water"), 10)
+    assert [d["id"] for d in resp.documents] == [
+        oracle.docs[i]["url"] for i, _score in ranked
+    ]
 
 
-def test_stored_fields_fetch_is_bounded_point_lookup(built, spy_fetch):
+def test_stored_fields_fetch_only_the_winners(built, spy_fetch):
     engine, calls = spy_fetch
     resp = engine.search(
         {
-            "query": {
-                "kind": "term", "options": {"field": "text", "term": "water"}
-            },
-            "collection_kind": "top_docs",
+            "query": _term("water"),
+            "collection_kind": "count_and_top_docs",
             "hits": 5,
             "fields": ["lang", "url"],
         }
     )
-    # exactly one lookup, winners only, and only the NOT-carried column
+    # one driver read, of exactly the winners, each column once
     assert len(calls) == 1
     ids, cols = calls[0]
-    assert len(ids) <= 5
-    assert cols == ["lang"], "url is carried in the slim frame, not re-fetched"
+    winners = [
+        r["doc_id"]
+        for r in engine.scores(_term("water"))
+        .orderBy(F.desc("score"), "doc_id").limit(5).collect()
+    ]
+    assert ids == winners
+    assert cols == ["url", "warc_ts", "lang"]
+    assert resp.total_hits > 5
     for d in resp.documents:
         assert d["fields"]["lang"] in ("en", "de", "fr", "es", "ja", "pt", "it")
         assert d["fields"]["url"] == d["id"]
 
 
-def test_large_id_list_uses_broadcast_semi_join(built):
+def test_fetch_equals_spark_collect(built):
+    """Every live doc at once (no size gate): same dict as a Spark
+    collect() of the same columns."""
     engine, _ = built
-    all_ids = [r["doc_id"] for r in engine.docs.select("doc_id").collect()]
-    engine.ISIN_LOOKUP_MAX = 16  # force the join path on this instance
-    try:
-        fetched = engine._fetch_stored(all_ids, ["lang", "url"])
-    finally:
-        del engine.ISIN_LOOKUP_MAX
-    assert set(fetched) == set(all_ids)
-    sample = fetched[all_ids[0]]
-    assert set(sample) == {"doc_id", "lang", "url"}
-
-
-def test_sort_path_single_action_and_shape(built, spy_fetch):
-    engine, calls = spy_fetch
-    resp = engine.search(
-        {
-            "query": {
-                "kind": "term", "options": {"field": "text", "term": "water"}
-            },
-            "collection_kind": "top_docs",
-            "hits": 5,
-            "sort": {"field": "warc_ts", "order": "desc"},
-        }
-    )
-    assert calls == [], "sorted no-fields search must not run a point-lookup"
-    ts = [d["timestamp"] for d in resp.documents]
-    assert ts == sorted(ts, reverse=True)
-    for d in resp.documents:
-        assert d["score"] == 0.0 and d["sort_value"] is not None
-
-
-def _term_req(fields=None, sort=None, hits=10):
-    req = {
-        "query": {"kind": "term",
-                  "options": {"field": "text", "term": "water"}},
-        "collection_kind": "count_and_top_docs",
-        "hits": hits,
+    want = {
+        r["doc_id"]: r.asDict()
+        for r in engine.docs.select("doc_id", "url", "warc_ts", "lang").collect()
     }
-    if fields:
-        req["fields"] = fields
-    if sort:
-        req["sort"] = sort
-    return req
+    got = engine._fetch_stored(sorted(want) + [10**9], ["url", "warc_ts", "lang"])
+    assert got == want
 
 
-def _doc_key(d):
-    return (d["id"], d["score"], d["timestamp"], d["sort_value"], d["fields"])
-
-
-def test_response_path_switches_at_doc_store_gate(built, monkeypatch):
+def test_unknown_stored_field_raises(built):
     engine, _ = built
-    small = engine.search(_term_req())
-    assert engine._last_response_path == "carry"
-    monkeypatch.setattr(engine, "CARRY_JOIN_DOCS_MAX", 0)
-    big = engine.search(_term_req())
-    assert engine._last_response_path == "point_lookup"
-    assert [_doc_key(d) for d in small.documents] == [
-        _doc_key(d) for d in big.documents
-    ]
-    assert small.total_hits == big.total_hits
+    with pytest.raises(ValueError, match="no stored field"):
+        engine.search({"query": _term("water"), "fields": ["nope"]})
 
 
-def test_big_store_point_lookup_fetches_only_winners(built, monkeypatch):
-    engine, _ = built
-    calls = []
-    real = engine._fetch_stored
-
-    def spy(ids, cols):
-        calls.append((list(ids), list(cols)))
-        return real(ids, cols)
-
-    monkeypatch.setattr(engine, "_fetch_stored", spy)
-    monkeypatch.setattr(engine, "CARRY_JOIN_DOCS_MAX", 0)
-    resp = engine.search(_term_req(hits=5))
-    assert len(calls) == 1
-    ids, cols = calls[0]
-    assert len(ids) <= 5
-    assert set(cols) == {"url", "warc_ts"}
-    for d in resp.documents:
-        assert d["id"].startswith("http") and d["timestamp"] > 0
-
-
-def test_big_store_sort_carries_only_sort_field(built, monkeypatch):
-    """Above the gate a fast-field sort still joins THE SORT COLUMN before
-    top-k (ordering needs it) but url/warc_ts resolve via point-lookup;
-    results identical to the small-store carry branch."""
+def test_sort_joins_sort_column_before_top_k(built):
+    """The page is the top of the sort order over ALL matches, not the
+    score winners re-sorted: the sort column is joined before the top-k."""
     engine, _ = built
     sort = {"field": "warc_ts", "order": "desc"}
-    small = engine.search(_term_req(sort=sort, hits=5))
-    assert engine._last_response_path == "carry"
-    monkeypatch.setattr(engine, "CARRY_JOIN_DOCS_MAX", 0)
-    big = engine.search(_term_req(sort=sort, hits=5))
-    assert engine._last_response_path == "point_lookup"
-    assert [_doc_key(d) for d in small.documents] == [
-        _doc_key(d) for d in big.documents
+    resp = engine.search(
+        {"query": _term("the"), "collection_kind": "top_docs", "hits": 5,
+         "sort": sort}
+    )
+    want = (
+        engine.scores(_term("the"))
+        .join(engine.docs.select("doc_id", "url", "warc_ts"), "doc_id")
+        .orderBy(F.desc("warc_ts"), "doc_id").limit(5).collect()
+    )
+    assert [d["id"] for d in resp.documents] == [r["url"] for r in want]
+    assert [d["sort_value"] for d in resp.documents] == [
+        r["warc_ts"] for r in want
     ]
+    by_score = engine.search(
+        {"query": _term("the"), "collection_kind": "top_docs", "hits": 5}
+    )
+    assert [d["id"] for d in by_score.documents] != [r["url"] for r in want]
+    for d in resp.documents:
+        assert d["score"] == 0.0
+        assert d["timestamp"] == int(d["sort_value"].timestamp())
 
 
-def _req(term="water", hits=10):
-    return {
-        "query": {"kind": "term",
-                  "options": {"field": "text", "term": term}},
-        "collection_kind": "count_and_top_docs",
-        "hits": hits,
-    }
+def test_search_sets_no_session_conf(built, monkeypatch):
+    """The session conf is shared by every client thread, so a request
+    must not set it, even temporarily."""
+    from pyspark.sql.conf import RuntimeConfig
 
-
-def test_response_path_switches_at_candidate_gate(built, monkeypatch):
     engine, _ = built
-    small = engine.search(_req())
-    assert engine._last_response_path == "carry"
-    monkeypatch.setattr(engine, "CARRY_JOIN_CANDIDATES_MAX", 0)
-    big = engine.search(_req())
-    assert engine._last_response_path == "point_lookup"
-    assert [_doc_key(d) for d in small.documents] == [
-        _doc_key(d) for d in big.documents
+    sets = []
+    monkeypatch.setattr(RuntimeConfig, "set",
+                        lambda self, k, v: sets.append((k, v)))
+    resp = engine.search(
+        {"query": _term("the"), "hits": 200, "fields": ["lang", "text"]}
+    )
+    assert len(resp.documents) == 200
+    assert sets == []
+
+
+def test_plan_caches_are_bounded_lru(built):
+    engine, _ = built
+
+    class TwoEntryEngine(SearchEngine):
+        CACHE_ENTRIES = 2
+
+    small = TwoEntryEngine(engine.spark, engine.paths.root)
+    for t in ("water", "people", "water", "day"):
+        small.scores(_term(t))
+    keys = [("term", "text", t, False) for t in ("water", "people", "day")]
+    assert len(small._leaf_cache) == 2
+    # "people" was least recently used when "day" arrived
+    assert keys[0] in small._leaf_cache and keys[2] in small._leaf_cache
+    assert keys[1] not in small._leaf_cache
+    for pattern in ("wat.*", "peo.*", "da.*"):
+        small._expand_regex("text", pattern)
+    assert len(small._expansion_cache) == 2
+    assert ("regex", "text", "wat.*") not in small._expansion_cache
+
+
+def test_term_top_k_single_action(built):
+    engine, _ = built
+    for kind in ("top_docs", "count_and_top_docs"):
+        engine.search({"query": _term("water"), "collection_kind": kind})
+        _, n = spark_jobs(
+            engine.spark,
+            lambda: engine.search(
+                {"query": _term("water"), "collection_kind": kind}
+            ),
+        )
+        assert n == 1, kind
+
+
+# ---------------------------------------------------------------- tombstones
+
+
+@pytest.fixture(scope="module")
+def tombstoned(spark):
+    """A 200-doc base, one committed put with re-puts of base urls and a
+    delete: a snapshot with tombstones."""
+    from bayard_spark.build.indexer import IndexBuilder
+    from bayard_spark.build.segments import SegmentWriter
+    from bayard_spark.schema import webtext_index_meta
+    from bayard_spark.sources.webtext import (
+        WEBTEXT_SCHEMA,
+        synthesize_batch,
+        webtext_df,
+    )
+
+    root = tempfile.mkdtemp(prefix="resp_ts_idx_")
+    builder = IndexBuilder(spark, webtext_index_meta(num_buckets=4), root)
+    builder.build(webtext_df(spark, 200, partitions=4))
+    base = sorted(
+        r["url"] for r in spark.read.parquet(builder.paths.docs).collect()
+    )
+    pdf = synthesize_batch(np.arange(1000, 1030), 7)
+    pdf.loc[25:, "url"] = base[:5]
+    w = SegmentWriter(spark, builder)
+    w.put_documents(spark.createDataFrame(pdf, WEBTEXT_SCHEMA))
+    w.delete_documents(base[5:9])
+    w.commit()
+    yield root, list(pdf.url[:25]), base
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def test_jobs_per_request_on_tombstoned_snapshot(spark, tombstoned):
+    root, new_urls, base = tombstoned
+    engine = SearchEngine(spark, root)
+    assert engine._n_tombstones == 9
+    for kind in ("top_docs", "count_and_top_docs"):
+        req = {"query": _term("water"), "collection_kind": kind, "hits": 10}
+        resp, n = spark_jobs(spark, lambda: engine.search(req))
+        assert n == 1, kind
+        assert resp.documents
+    live, gone = new_urls[:2] + base[:2], base[5:6]
+    lookup = {
+        "query": {"kind": "boolean", "options": {"subqueries": [
+            {"occurrence": "should", "query": _term(u, "url")}
+            for u in live + gone
+        ]}},
+        "hits": 10,
+    }
+    resp, n = spark_jobs(spark, lambda: engine.search(lookup))
+    assert n <= 2
+    assert resp.total_hits == len(live)
+    assert sorted(d["id"] for d in resp.documents) == sorted(live)
+
+
+@pytest.fixture(scope="module")
+def typed(spark):
+    """Stored columns of every type the test schemas use: timestamp,
+    binary, u64 decimal and a json string."""
+    from bayard_spark.build.indexer import IndexBuilder
+    from bayard_spark.schema import FieldDef, IndexMeta
+
+    root = tempfile.mkdtemp(prefix="resp_typed_idx_")
+    meta = IndexMeta(
+        name="typed",
+        fields=[
+            FieldDef(name="url", type="text", analyzer="raw", record="basic"),
+            FieldDef(name="title", type="text", analyzer="default",
+                     record="position"),
+            FieldDef(name="attrs", type="json_object", analyzer="default",
+                     record="freq"),
+            FieldDef(name="payload", type="bytes", record="basic"),
+            FieldDef(name="views", type="u64", fast=True),
+            FieldDef(name="warc_ts", type="date", fast=True),
+        ],
+        num_buckets=4,
+        num_waves=1,
+    )
+    schema = StructType([
+        StructField("url", StringType()),
+        StructField("warc_ts", TimestampType()),
+        StructField("title", StringType()),
+        StructField("attrs", StringType()),
+        StructField("payload", BinaryType()),
+        StructField("views", DecimalType(20, 0)),
+    ])
+    rows = [
+        (f"https://t.example/{i}",
+         datetime.datetime(2024, 1, 1 + i, 3, 4, 5, 123456),
+         f"page {i} rust", f'{{"lang": "en", "n": {i}}}',
+         None if i == 3 else bytes([i, 255 - i]), Decimal(2**63 + i - 2))
+        for i in range(6)
     ]
-    assert small.total_hits == big.total_hits
+    IndexBuilder(spark, meta, root).build(
+        spark.createDataFrame(rows, schema), resume=False
+    )
+    yield root
+    shutil.rmtree(root, ignore_errors=True)
 
 
-def test_candidate_gate_uses_query_df_estimate(built):
-    """A hot term (df over the gate) flips to point-lookup on its own df
-    even though the doc store is far under CARRY_JOIN_DOCS_MAX; estimates
-    compose through boolean musts (min) so a selective must keeps carry."""
+def test_fetched_values_equal_spark_collect_for_every_type(spark, typed):
+    engine = SearchEngine(spark, typed)
+    cols = ["url", "warc_ts", "attrs", "payload", "views"]
+    want = {
+        r["doc_id"]: r.asDict()
+        for r in engine.docs.select("doc_id", *cols).collect()
+    }
+    got = engine._fetch_stored(sorted(want), cols)
+    assert got == want
+    for doc_id, row in want.items():
+        for c in cols:
+            assert type(got[doc_id][c]) is type(row[c]), c
+    assert any(r["payload"] is None for r in got.values())
+    resp = engine.search(
+        {"query": _term("rust", "title"), "hits": 10, "fields": cols}
+    )
+    assert resp.total_hits == 6
+    for d in resp.documents:
+        row = next(r for r in want.values() if r["url"] == d["id"])
+        assert d["fields"] == {c: row[c] for c in cols}
+        assert d["timestamp"] == int(row["warc_ts"].timestamp())
+
+
+def test_candidate_estimate_composes_through_musts(built):
+    """The must-join order's size estimate: a term's df, the smallest must
+    of a boolean, and no estimate for a regex before its expansion."""
     engine, _ = built
     hot_df = engine._df_of("text", "the")
-    assert engine._cand_upper_estimate(
-        {"kind": "term", "options": {"field": "text", "term": "the"}}
-    ) == hot_df
+    assert engine._cand_upper_estimate(_term("the")) == hot_df
     must = {
         "kind": "boolean",
         "options": {"subqueries": [
-            {"occurrence": "must",
-             "query": {"kind": "term",
-                       "options": {"field": "text", "term": "water"}}},
-            {"occurrence": "must",
-             "query": {"kind": "term",
-                       "options": {"field": "text", "term": "the"}}},
+            {"occurrence": "must", "query": _term("water")},
+            {"occurrence": "must", "query": _term("the")},
         ]},
     }
     assert engine._cand_upper_estimate(must) == engine._df_of(
         "text", "water"
     )
-    # unknown kinds stay on the measured-faster carry branch
     assert engine._cand_upper_estimate(
         {"kind": "regex", "options": {"field": "text", "regex": "wat.*"}}
     ) is None
@@ -309,3 +424,40 @@ def test_engine_is_thread_safe_for_concurrent_search(built):
         got = list(ex.map(ids, reqs))
     for i, g in enumerate(got):
         assert g == sequential[i % len(shapes)]
+
+
+def test_lru_cache_under_thread_contention():
+    """More threads than cores hammer one small cache with a short switch
+    interval: it never holds more than its capacity and every read returns
+    the value stored under its key."""
+    import sys
+    import threading
+
+    from bayard_spark.query.engine import LRUCache
+
+    cache = LRUCache(8)
+    errors: list[str] = []
+
+    def work(tid):
+        for i in range(2000):
+            key = (tid + i) % 32
+            cache[key] = ("v", key)
+            got = cache.get(key)
+            if got is not None and got != ("v", key):
+                errors.append(f"{key}: {got}")
+            if len(cache) > 8:
+                errors.append(f"size {len(cache)}")
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(cache) == 8

@@ -98,16 +98,21 @@ def spark_visible_docs(spark, root, state):
 
 
 def spark_visible_postings(spark, builder, root):
-    """The pre-footer reference: a schema-inferring read of every wave,
-    filtered to the base waves and the committed segments."""
-    committed = CommitLog(root).committed_segments()
+    """The pre-footer reference: a schema-inferring read of the base waves
+    (hive-partitioned by wave, field and bucket) unioned with one of each
+    committed segment's single file (field and bucket as data columns),
+    tagged with its wave."""
     post = spark.read.option("basePath", builder.paths.postings).parquet(
-        os.path.join(builder.paths.postings, "wave=*")
-    )
-    return post.filter(
-        F.col("wave").cast("string").rlike(r"^\d+$")
-        | F.col("wave").isin(committed)
-    )
+        os.path.join(builder.paths.postings, "wave=[0-9]*")
+    ).withColumn("wave", F.col("wave").cast("string"))
+    for seg in CommitLog(root).committed_segments():
+        post = post.unionByName(
+            spark.read.parquet(
+                os.path.join(builder.paths.postings, f"wave={seg}")
+            ).withColumn("wave", F.lit(seg)),
+            allowMissingColumns=True,
+        )
+    return post
 
 
 def rows(df):
@@ -121,7 +126,7 @@ class TestSnapshotOpen:
         root, _, _ = snapshot
         engine, n_jobs = spark_jobs(spark, lambda: SearchEngine(spark, root))
         assert n_jobs == 0
-        assert engine.tombstones is not None and engine._dict_complete
+        assert engine._n_tombstones > 0 and engine._dict_complete
 
     def test_stats_and_dictionary_match_spark_reads(self, spark, snapshot):
         root, builder, _ = snapshot
@@ -152,6 +157,9 @@ class TestSnapshotOpen:
         ) == sorted(
             (f.name, f.dataType) for f in post.drop("wave").schema
         )
+        cols = ["field", "bucket", "term", "block_id", "n_docs", "doc_bytes"]
+        assert sorted(map(tuple, engine.postings.select(*cols).collect())) == \
+            sorted(map(tuple, post.select(*cols).collect()))
 
     def test_docs_match_union_by_name_of_spark_reads(self, spark, snapshot):
         root, _, base_urls = snapshot
@@ -272,41 +280,24 @@ class TestSegmentPut:
 
 
 class TestFetchStored:
-    def test_large_fetch_leaves_arrow_conf_alone(
-        self, spark, snapshot, monkeypatch
+    def test_fetch_of_drifted_segments_equals_spark_collect(
+        self, spark, snapshot
     ):
-        """The session conf is shared by every client thread, so the
-        fetch must not set it, even temporarily."""
-        from pyspark.sql.conf import RuntimeConfig
-
+        """The driver-side read of stored columns across the base store and
+        segments whose columns drifted (no html; an extra note) equals a
+        Spark collect of the unioned docs, timestamp_ntz included."""
         root, _, _ = snapshot
         engine = SearchEngine(spark, root)
-        key = "spark.sql.execution.arrow.pyspark.enabled"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "false")
-        try:
-            live = [r["doc_id"] for r in engine.docs.select("doc_id").collect()]
-            # pad past the IN-list gate with ids no doc has
-            ids = live + list(
-                range(10**9, 10**9 + engine.ISIN_LOOKUP_MAX + 1)
-            )
-            sets = []
-            with monkeypatch.context() as m:
-                m.setattr(RuntimeConfig, "set",
-                          lambda self, k, v: sets.append((k, v)))
-                fetched = engine._fetch_stored(ids, ["url", "lang"])
-            assert sets == []
-            assert spark.conf.get(key) == "false"
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
+        cols = ["url", "warc_ts", "html", "note", "lang"]
         want = {
             r["doc_id"]: r.asDict()
-            for r in engine.docs.select("doc_id", "url", "lang").collect()
+            for r in engine.docs.select("doc_id", *cols).collect()
         }
-        assert fetched == want
+        got = engine._fetch_stored(sorted(want), cols)
+        assert got == want
+        assert {type(r["warc_ts"]) for r in got.values()} == {
+            type(next(iter(want.values()))["warc_ts"])
+        }
 
 
 def test_prev_round_queries_returns_queries_dict():

@@ -3,8 +3,9 @@
 - The commit log carries next_doc_id: a fresh writer starts at the
   persisted high-water mark, and large puts assign dense ids per bucket.
 - Writers reserve id ranges: interleaved writers never share a range, an
-  overlapping reservation fails the commit loudly, and one writer reused
-  across commits (the streaming shape) opens a new window per commit.
+  overlapping reservation fails the commit loudly, a corrupt reservation
+  marker fails the reservation, and one writer reused across commits (the
+  streaming shape) opens a new window per commit.
 """
 
 import itertools
@@ -180,6 +181,25 @@ def test_commit_fails_loudly_on_overlapping_reservation(
     w1.put_documents(_put_batch(spark, 5, seed=404))
     with pytest.raises(RuntimeError, match="reservation conflict"):
         w1.commit()
+
+
+def test_corrupt_reservation_marker_raises(spark, tmp_path_factory):
+    """An unreadable marker hides another writer's staged range; a writer
+    must refuse to reserve rather than hand out ids that may overlap."""
+    import os
+
+    builder = _mini_builder(spark, tmp_path_factory)
+    seg = os.path.join(builder.paths.root, "segments", "seg0_0")
+    os.makedirs(seg)
+    with open(os.path.join(seg, "_reserved.json"), "w") as f:
+        f.write("{not json")
+    w = SegmentWriter(spark, builder)
+    with pytest.raises(ValueError, match="corrupt reservation marker"):
+        w._next_doc_id()
+    with open(os.path.join(seg, "_reserved.json"), "w") as f:
+        f.write('{"other": 1}')
+    with pytest.raises(ValueError, match="corrupt reservation marker"):
+        SegmentWriter(spark, builder)._next_doc_id()
 
 
 def test_same_writer_put_commit_put_commit(spark, tmp_path_factory):
