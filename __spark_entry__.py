@@ -62,7 +62,7 @@ def _engine_index(spark, sf_dir: str) -> str:
     )
     root = tempfile.mkdtemp(prefix="gate_engine_idx_")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
-    meta = webtext_index_meta(num_buckets=8, num_waves=1)
+    meta = webtext_index_meta(num_buckets=8)
     IndexBuilder(spark, meta, root).build(src, resume=False)
     _ENGINE_GATE_CACHE[sf_dir] = root
     return root
@@ -251,7 +251,7 @@ def q_engine_merge_after_delete(spark, sf_dir):
         shutil.rmtree(root)
         shutil.copytree(src, root)
         atexit.register(shutil.rmtree, root, ignore_errors=True)
-        meta = webtext_index_meta(num_buckets=8, num_waves=1)
+        meta = webtext_index_meta(num_buckets=8)
         builder = IndexBuilder(spark, meta, root)
         doomed = [
             int(r["doc_id"])
@@ -325,7 +325,7 @@ def q_streaming_upsert(spark, sf_dir):
     src_dir = tempfile.mkdtemp(prefix="gate_stream_src_")
     ckpt = tempfile.mkdtemp(prefix="gate_stream_ckpt_")
     try:
-        meta = webtext_index_meta(num_buckets=8, num_waves=1)
+        meta = webtext_index_meta(num_buckets=8)
         builder = IndexBuilder(spark, meta, root)
         builder.build(base, resume=False)
         # refreshed versions arrive as a stream (newer warc_ts, marker term)

@@ -18,8 +18,7 @@ from bayard_spark.schema import IndexMeta, IndexPaths
 # (The reference likewise refuses index_settings changes with a warning,
 # node.rs:1055; num_buckets/block_size define the physical layout.)
 MUTABLE_FIELDS = {
-    "num_waves", "salt_span", "hot_df_threshold", "seed",
-    "docstore_compression",
+    "salt_span", "hot_df_threshold", "seed", "docstore_compression",
 }
 LAYOUT_FIELDS = {"num_buckets", "block_size", "bm25_k1", "bm25_b"}
 

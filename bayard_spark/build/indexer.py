@@ -9,33 +9,35 @@ batches):
     │ 2. dense doc_id: rank of url within url-hash bucket + bucket offset
     │    (deterministic: no sampling; one shuffle; bucket ranges contiguous)
     ├─ docs/    parquet, doc_id-sorted within partitions (min/max pruning)
-    │ 3. analyzer pass (mapInPandas): per (doc, field, term) → tf, positions,
-    │    doc_len — shuffle volume is postings, not token occurrences
-    ├─ postings_staging/  parquet, partitioned by wave (= bucket % num_waves)
-    │ 4. term df agg → hot-term set (df > hot_df_threshold) → salting plan
-    │ 5. per wave: groupBy(bucket, term, salt) → applyInPandas block encoder
-    │    (delta+varint, 128-doc blocks, block-max metadata as plain columns)
-    ├─ postings/field=<f>/bucket=<b>/  parquet
+    │ 3. hot-term set from a deterministic 5% doc sample (df estimate >
+    │    hot_df_threshold) → salting plan
+    │ 4. analyzer pass (mapInArrow): per (doc, field, term) → tf, positions,
+    │    doc_len — shuffle volume is postings, not token occurrences —
+    │    straight into encode_blocks: groupBy(bucket, salt) → Arrow block
+    │    encoder (delta+varint, 128-doc blocks, block-max metadata as plain
+    │    columns)
+    ├─ postings/wave=0/field=<f>/bucket=<b>/  parquet
     ├─ stats/   (field, n_docs, total_len, avg_len) — exact lengths
     │           (SURVEY §2.7) live per posting in each block's len_bytes
-    └─ lineage/ per-stage/wave metrics: docs, postings, bytes, build_ms —
-       restart skips completed stages/waves (resumable builds).
+    └─ lineage/ per-stage metrics: docs, blocks, stats, build_ms —
+       restart skips completed stages (resumable builds).
 
 Salting: a hot term's postings are split into contiguous doc_id ranges
 (salt = doc_id // salt_span), so concatenating salts in order preserves
 global doc order — intersection/WAND never needs a re-sort. Cold terms get
 salt 0. This is explicit skew handling for Zipfian df (SURVEY §7).
 
-Scale notes: the only full-data shuffles are (dedupe by url) + (doc-bucket
-exchange) + (staging write by wave) + (blockify exchange by bucket/term/salt).
-All aggregations are partial-agg friendly. No driver-side iteration over
-data, no collect() of anything larger than bucket counts (num_buckets rows).
+Scale notes: the only full-data shuffles are (dedupe by url + doc-bucket
+exchange) + (blockify exchange by bucket/salt). All aggregations are
+partial-agg friendly. No driver-side iteration over data, no collect() of
+anything larger than bucket counts (num_buckets rows).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass
@@ -43,11 +45,12 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bayard_spark.analysis.analyzer import Analyzer, build_analyzers
-from bayard_spark.build.codec import encode_block, varint_encode, varint_lengths
+from bayard_spark.build.codec import varint_encode, varint_lengths
 from bayard_spark.schema import IndexMeta, IndexPaths
 
 # positions are ALREADY delta+varint encoded per (doc, term) at analyzer
@@ -182,70 +185,16 @@ def _runs_from_ints(
     )
 
 
-def encode_group_frame(pdf: pd.DataFrame, block_size: int = 128) -> pd.DataFrame:
-    """pandas frame of posting rows (doc_id, field, term, tf, doc_len,
-    pos_bytes, bucket, salt) → block rows (BLOCK_SCHEMA). The independent
-    per-group reference for encode_group_table, which every write path
-    (build, segment put, merge) runs: tests pin the two byte-identical.
-
-    pos_bytes per posting are already delta+varint framed (absolute first
-    position per doc), so a block's pos_bytes is a plain concatenation —
-    no position re-encoding ever happens after the analyzer pass."""
-    pdf = pdf.sort_values(["field", "term", "salt", "doc_id"], ignore_index=True)
-    out_rows = []
-    for (fld, term, salt), g in pdf.groupby(["field", "term", "salt"], sort=False):
-        doc_ids = g["doc_id"].to_numpy(dtype=np.int64)
-        tfs = g["tf"].to_numpy(dtype=np.uint64)
-        lens = g["doc_len"].to_numpy(dtype=np.uint64)
-        has_pos = g["pos_bytes"].iloc[0] is not None
-        pos_list = g["pos_bytes"].tolist() if has_pos else None
-        bucket = int(g["bucket"].iloc[0])
-        n = len(g)
-        starts = np.arange(0, n, block_size)
-        ends = np.minimum(starts + block_size, n)
-        # whole-group varint encodes, sliced at block byte-boundaries —
-        # per-block work is O(1) byte slicing, all math is vectorized
-        deltas = doc_ids.astype(np.uint64).copy()
-        with np.errstate(over="ignore"):
-            deltas[1:] -= doc_ids[:-1].astype(np.uint64)
-        deltas[starts] = doc_ids[starts].astype(np.uint64)  # blocks self-contained
-        enc_d = varint_encode(deltas)
-        off_d = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(varint_lengths(deltas), out=off_d[1:])
-        enc_t = varint_encode(tfs)
-        off_t = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(varint_lengths(tfs), out=off_t[1:])
-        enc_l = varint_encode(lens)
-        off_l = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(varint_lengths(lens), out=off_l[1:])
-        max_tf = np.maximum.reduceat(tfs, starts)
-        min_tf = np.minimum.reduceat(tfs, starts)
-        max_len = np.maximum.reduceat(lens, starts)
-        min_len = np.minimum.reduceat(lens, starts)
-        for bi in range(len(starts)):
-            b0, b1 = int(starts[bi]), int(ends[bi])
-            out_rows.append(
-                (fld, bucket, term, int(salt), bi, b1 - b0,
-                 int(doc_ids[b0]), int(doc_ids[b1 - 1]),
-                 int(max_tf[bi]), int(min_tf[bi]),
-                 int(min_len[bi]), int(max_len[bi]),
-                 enc_d[off_d[b0]:off_d[b1]],
-                 enc_t[off_t[b0]:off_t[b1]],
-                 enc_l[off_l[b0]:off_l[b1]],
-                 b"".join(pos_list[b0:b1]) if has_pos else b"")
-            )
-    cols = [c.split(" ")[0] for c in BLOCK_SCHEMA.split(", ")]
-    return pd.DataFrame(out_rows, columns=cols)
-
-
 def encode_group_table(table: pa.Table, block_size: int = 128) -> pa.Table:
     """Arrow-native block encoder for one (bucket, salt) group.
 
-    Same output as encode_group_frame (byte-identical blocks), but terms
-    stay dictionary-encoded ints end-to-end: one lexsort over (field, term,
-    salt, doc_id) int codes, run/block boundaries vectorized, ONE varint
-    pass per payload column for the whole group, per-block byte slicing.
-    Python work is O(#blocks), not O(#postings).
+    Terms stay dictionary-encoded ints end-to-end: one lexsort over
+    (field, term, salt, doc_id) int codes, run/block boundaries vectorized,
+    ONE varint pass per payload column for the whole group, per-block byte
+    slicing. Python work is O(#blocks), not O(#postings). pos_bytes per
+    posting are already delta+varint framed (absolute first position per
+    doc), so a block's pos_bytes is a plain concatenation. tests/test_codec.py
+    pins the output byte-identical to a per-group pandas reference.
     """
     n = table.num_rows
     cols = [c.split(" ")[0] for c in BLOCK_SCHEMA.split(", ")]
@@ -403,7 +352,44 @@ _BLOCK_TYPES = [
     pa.binary(), pa.binary(), pa.binary(), pa.binary(),
 ]
 
-import pyarrow.compute as pc  # noqa: E402  (used by encode_group_table)
+def encode_blocks(rows: DataFrame, block_size: int) -> DataFrame:
+    """Posting rows → block rows (BLOCK_SCHEMA), the one encode step of the
+    build, of a segment put and of a merge, so all three write
+    byte-identical blocks for the same postings.
+
+    Rows are projected to exactly the encoder's inputs BEFORE the exchange:
+    anything else a caller left on the frame (a `wave` bookkeeping column,
+    say) would otherwise ride the full posting-row shuffle. The exchange
+    hash-partitions by (bucket, salt), so each bucket's rows of one salt
+    sit in exactly one task."""
+    return (
+        rows.select(
+            "doc_id", "field", "term", "tf", "doc_len", "pos_bytes",
+            "bucket", "salt",
+        )
+        .groupBy("bucket", "salt")
+        .applyInArrow(
+            lambda table: encode_group_table(table, block_size), BLOCK_SCHEMA
+        )
+    )
+
+
+def write_base_blocks(blocks: DataFrame, path: str) -> None:
+    """A base wave directory: one (field, bucket) directory level each.
+    After encode_blocks' exchange the dynamic-partition writer emits one
+    file per (field, bucket) dir per salt group, so no re-shuffle of the
+    encoded payloads is needed to keep the file count at O(dirs). (r7: an
+    explicit repartition(field, bucket) re-shuffled the whole encoded index
+    a second time, ~30% of the blockify stage at 960k.)"""
+    blocks.write.mode("overwrite").partitionBy("field", "bucket").parquet(path)
+
+
+def row_tiebreak(df: DataFrame):
+    """Order among one url's rows with equal warc_ts: an xxhash64 over every
+    column, taken descending, so the build and a put pick the same upsert
+    winner from the same rows."""
+    return F.xxhash64(*[F.col(c) for c in df.columns])
+
 
 
 @dataclass
@@ -432,25 +418,51 @@ class IndexBuilder:
 
     # ---------- lineage ----------
 
-    def _log_lineage(self, stage: str, wave: int, metrics: dict) -> None:
+    def _lineage_path(self, stage: str) -> str:
+        # `_w0`: the marker names of the older multi-wave build, so an index
+        # that build completed with one wave still resumes stage by stage
+        return self.io.path("lineage", f"{stage}_w0.json")
+
+    def _log_lineage(self, stage: str, metrics: dict) -> None:
         row = {
             "stage": stage,
-            "wave": wave,
             "ts": time.time(),
             **{k: float(v) for k, v in metrics.items()},
         }
-        self.io.write_text(
-            self.io.path("lineage", f"{stage}_w{wave}.json"), json.dumps(row)
-        )
+        self.io.write_text(self._lineage_path(stage), json.dumps(row))
 
-    def _lineage_done(self, stage: str, wave: int = 0) -> bool:
-        return self.io.exists(
-            self.io.path("lineage", f"{stage}_w{wave}.json")
-        )
+    def _lineage_done(self, stage: str) -> bool:
+        return self.io.exists(self._lineage_path(stage))
 
     # ---------- stage 1: docs + dense ids ----------
 
     last_n_docs: int | None = None
+
+    def url_bucket(self):
+        """A row's doc bucket: its url hash modulo num_buckets."""
+        return F.pmod(F.xxhash64("url"), F.lit(self.meta.num_buckets)).cast("int")
+
+    def bucket_offsets(
+        self, frame: DataFrame, count, base: int
+    ) -> tuple[DataFrame, int]:
+        """Contiguous doc-id ranges per url bucket, the build's and a large
+        put's id method: per-bucket `count`s of `frame` (num_buckets rows to
+        the driver — metadata, not data), prefix-summed from `base`. Returns
+        the broadcast (doc_bucket, _offset) frame and the end of the last
+        range."""
+        counts = dict(
+            frame.groupBy(self.url_bucket().alias("doc_bucket"))
+            .agg(count.alias("n"))
+            .collect()
+        )
+        offsets, acc = [], base
+        for b in range(self.meta.num_buckets):
+            offsets.append((b, acc))
+            acc += counts.get(b, 0)
+        off_df = self.spark.createDataFrame(
+            offsets, "doc_bucket int, _offset long"
+        )
+        return F.broadcast(off_df), acc
 
     def assign_doc_ids(self, source: DataFrame) -> DataFrame:
         """Dedupe-by-url (last write wins) + dense doc_id assignment in ONE
@@ -466,26 +478,12 @@ class IndexBuilder:
         then window by bucket) plus a persist; at 100 TB the saved exchange
         is the dominant cost of this stage.
         """
-        nb = self.meta.num_buckets
-        bucket_col = F.pmod(F.xxhash64("url"), F.lit(nb)).cast("int")
-        counts = {
-            r["doc_bucket"]: r["n"]
-            for r in source.select(bucket_col.alias("doc_bucket"), "url")
-            .groupBy("doc_bucket")
-            .agg(F.countDistinct("url").alias("n"))
-            .collect()
-        }
-        offsets, acc = {}, 0
-        for b in range(nb):
-            offsets[b] = acc
-            acc += counts.get(b, 0)
-        self.last_n_docs = acc
-        off_df = self.spark.createDataFrame(
-            [(b, offsets[b]) for b in range(nb)], "doc_bucket int, _offset long"
+        off_df, self.last_n_docs = self.bucket_offsets(
+            source, F.countDistinct("url"), 0
         )
-        src = source.withColumn(
-            "_tb", F.xxhash64(*[F.col(c) for c in source.columns])
-        ).withColumn("doc_bucket", bucket_col)
+        src = source.withColumn("_tb", row_tiebreak(source)).withColumn(
+            "doc_bucket", self.url_bucket()
+        )
         w = Window.partitionBy("doc_bucket").orderBy(
             "url", F.desc("warc_ts"), F.desc("_tb")
         )
@@ -514,7 +512,7 @@ class IndexBuilder:
                 "_urlrank", F.row_number().over(w_sorted)
             )
         return (
-            deduped.join(F.broadcast(off_df), "doc_bucket")
+            deduped.join(off_df, "doc_bucket")
             .withColumn("doc_id", F.col("_offset") + F.col("_urlrank") - 1)
             .drop("_offset", "doc_bucket", "_new", "_urlrank", "_tb")
         )
@@ -756,45 +754,17 @@ class IndexBuilder:
             out = part if out is None else out.unionByName(part)
         return out
 
-    # ---------- stage 3: staging / df / blockify ----------
-
-    def stage_postings(self, docs: DataFrame) -> None:
-        nb = self.meta.num_buckets
-        nw = self.meta.num_waves
-        rows = self.posting_rows(docs).withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(nb)).cast("int")
-        ).withColumn("wave", (F.col("bucket") % nw).cast("int"))
-        (
-            rows.write.mode("overwrite")
-            .partitionBy("wave")
-            .parquet(self._staging_path)
-        )
-
-    @property
-    def _staging_path(self) -> str:
-        return os.path.join(self.paths.root, "postings_staging")
-
-    def _hot_terms(self, staging: DataFrame) -> list[str]:
-        thr = self.meta.hot_df_threshold
-        hot = (
-            staging.groupBy("field", "term")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > thr)
-            .select("term")
-            .distinct()
-        )
-        return [r["term"] for r in hot.collect()]
+    # ---------- stage 3: hot terms / blockify ----------
 
     HOT_SAMPLE_MOD = 20  # 5% deterministic doc sample for hot-term detection
 
     def _hot_terms_sampled(self, docs: DataFrame) -> list[str]:
-        """Hot-term detection from a deterministic 5% doc sample (fast path).
+        """Hot-term detection from a deterministic 5% doc sample.
 
         Salting is a performance decision, not a correctness one: a term's
         df estimate only needs order-of-magnitude accuracy, so a hash-based
         sample (pure function of url → deterministic, resumable) avoids a
-        full tokenize pass. Multi-wave builds use exact df over the durable
-        staging table instead.
+        full tokenize pass.
         """
         mod = self.HOT_SAMPLE_MOD
         sample = docs.filter(F.pmod(F.xxhash64("url"), F.lit(mod)) == 0)
@@ -879,54 +849,21 @@ class IndexBuilder:
         decoded = blocks.mapInArrow(run, "field string, doc_id long, len long")
         return decoded.groupBy("field", "doc_id").agg(F.max("len").alias("len"))
 
-    def blockify_wave(self, staging: DataFrame, wave: int,
+    def blockify_wave(self, rows: DataFrame, wave: int,
                       hot_terms: list[str]) -> dict:
-        meta = self.meta
-        span = meta.salt_span
-        block_size = meta.block_size
-
-        part = staging.filter(F.col("wave") == wave)
+        """Salt the hot terms' posting rows, encode them and write base wave
+        `wave` (a directory name only: every row of `rows` lands in it)."""
         if hot_terms:
-            hot_set = F.array([F.lit(t) for t in hot_terms])
-            part = part.withColumn(
-                "salt",
-                F.when(
-                    F.array_contains(hot_set, F.col("term")),
-                    (F.col("doc_id") / F.lit(span)).cast("int"),
-                ).otherwise(F.lit(0)),
-            )
+            salt = F.when(
+                F.col("term").isin(hot_terms),
+                (F.col("doc_id") / F.lit(self.meta.salt_span)).cast("int"),
+            ).otherwise(F.lit(0))
         else:
-            part = part.withColumn("salt", F.lit(0))
-
-        # project to exactly the encoder's inputs BEFORE the exchange: the
-        # `wave` bookkeeping column (and anything else a caller left on the
-        # frame) would otherwise ride the full posting-row shuffle — 8+
-        # bytes × every posting in the corpus (guide §2.3)
-        part = part.select(
-            "doc_id", "field", "term", "tf", "doc_len", "pos_bytes",
-            "bucket", "salt",
-        )
-
-        def encode_group(table: pa.Table) -> pa.Table:
-            return encode_group_table(table, block_size)
-
-        blocks = part.groupBy("bucket", "salt").applyInArrow(
-            encode_group, BLOCK_SCHEMA
-        )
+            salt = F.lit(0)
         t0 = time.time()
-        (
-            # The groupBy exchange above hash-partitions by (bucket, salt),
-            # so every bucket's rows (per salt) already sit in exactly ONE
-            # task and the dynamic-partition writer emits one file per
-            # (field, bucket) dir per salt group — no re-shuffle of the
-            # encoded block payloads is needed to keep the commit's file
-            # count at O(dirs). (r7: the previous explicit
-            # repartition(field, bucket) re-shuffled the entire encoded
-            # index a second time for a layout the encode exchange already
-            # guarantees — measured ~30% of the blockify stage at 960k.)
-            blocks.write.mode("overwrite")
-            .partitionBy("field", "bucket")
-            .parquet(os.path.join(self.paths.postings, f"wave={wave}"))
+        write_base_blocks(
+            encode_blocks(rows.withColumn("salt", salt), self.meta.block_size),
+            os.path.join(self.paths.postings, f"wave={wave}"),
         )
         return {"build_ms": (time.time() - t0) * 1000}
 
@@ -975,10 +912,13 @@ class IndexBuilder:
     # ---------- orchestration ----------
 
     def build(self, source: DataFrame, resume: bool = True) -> BuildReport:
+        """docs → blocks_w0 → stats; with `resume`, a stage whose lineage
+        marker and output exist is skipped."""
         t_start = time.time()
         run: list[str] = []
         skipped: list[str] = []
         self.io.makedirs(self.paths.root)
+        self._drop_multiwave_build(resume)
         self.io.write_text(self.paths.meta, self.meta.to_json())
 
         n_docs: int | None = None
@@ -989,8 +929,8 @@ class IndexBuilder:
             with_ids = self.assign_doc_ids(source)
             self.write_docs(with_ids)
             n_docs = self.last_n_docs
-            self._log_lineage("docs", 0, {"docs": n_docs,
-                                          "build_ms": (time.time() - t0) * 1e3})
+            self._log_lineage("docs", {"docs": n_docs,
+                                       "build_ms": (time.time() - t0) * 1e3})
             run.append("docs")
 
         docs = self.spark.read.parquet(self.paths.docs)
@@ -1002,76 +942,34 @@ class IndexBuilder:
         if docs.rdd.getNumPartitions() < par:
             docs = docs.repartition(par * 2)
 
-        if self.meta.num_waves <= 1:
-            # FAST PATH (single wave): no staging parquet, no persist — ONE
-            # full tokenize pass flows straight into the blockify exchange.
-            # Hot terms come from a deterministic 5% sample; field lengths
-            # come from the docs write's `_dl_<field>` columns. Resume
-            # granularity is unchanged (a single wave restarts whole either
-            # way). Multi-wave builds (the 100 TB path) keep the durable
-            # staging table, which is what makes waves independently
-            # restartable.
-            staging = None
-            if resume and self._lineage_done("blocks", 0):
-                skipped.append("blocks_w0")
-            else:
-                t0 = time.time()
-                hot_terms = self._hot_terms_sampled(docs)
-                t1 = time.time()
-                nb = self.meta.num_buckets
-                rows = (
-                    self.posting_rows(docs)
-                    .withColumn(
-                        "bucket",
-                        F.pmod(F.xxhash64("term"), F.lit(nb)).cast("int"),
-                    )
-                    .withColumn("wave", F.lit(0))
-                )
-                metrics = self.blockify_wave(rows, 0, hot_terms)
-                metrics["hot_detect_ms"] = (t1 - t0) * 1e3
-                metrics["n_hot_terms"] = len(hot_terms)
-                self._log_lineage("blocks", 0, metrics)
-                run.append("blocks_w0")
+        # one tokenize pass flows straight into the blockify exchange; hot
+        # terms come from a deterministic 5% sample
+        if resume and self._lineage_done("blocks"):
+            skipped.append("blocks_w0")
         else:
-            if resume and _success(self._staging_path) and self._lineage_done(
-                "staging"
-            ):
-                skipped.append("staging")
-            else:
-                t0 = time.time()
-                self.stage_postings(docs)
-                self._log_lineage(
-                    "staging", 0, {"build_ms": (time.time() - t0) * 1e3}
-                )
-                run.append("staging")
+            t0 = time.time()
+            hot_terms = self._hot_terms_sampled(docs)
+            t1 = time.time()
+            rows = self.posting_rows(docs).withColumn(
+                "bucket",
+                F.pmod(F.xxhash64("term"), F.lit(self.meta.num_buckets))
+                .cast("int"),
+            )
+            metrics = self.blockify_wave(rows, 0, hot_terms)
+            metrics["hot_detect_ms"] = (t1 - t0) * 1e3
+            metrics["n_hot_terms"] = len(hot_terms)
+            self._log_lineage("blocks", metrics)
+            run.append("blocks_w0")
 
-            staging = self.spark.read.parquet(self._staging_path)
-            hot_terms = self._hot_terms(staging)
-
-            for wave in range(self.meta.num_waves):
-                if resume and self._lineage_done("blocks", wave):
-                    skipped.append(f"blocks_w{wave}")
-                    continue
-                metrics = self.blockify_wave(staging, wave, hot_terms)
-                self._log_lineage("blocks", wave, metrics)
-                run.append(f"blocks_w{wave}")
-
+        # field lengths come from the docs write's `_dl_<field>` columns
         if resume and _success(self.paths.stats) and self._lineage_done(
             "stats"
         ):
             skipped.append("stats")
         else:
             t0 = time.time()
-            if staging is None:
-                self.write_norms_stats_direct(docs, n_docs)
-            else:
-                self._publish_next_doc_id(self.write_stats(
-                    staging.groupBy("field", "doc_id")
-                    .agg(F.max("doc_len").alias("len")),
-                    n_docs,
-                ))
-            self._log_lineage("stats", 0,
-                              {"build_ms": (time.time() - t0) * 1e3})
+            self.write_norms_stats_direct(docs, n_docs)
+            self._log_lineage("stats", {"build_ms": (time.time() - t0) * 1e3})
             run.append("stats")
 
         if n_docs is None:
@@ -1083,3 +981,22 @@ class IndexBuilder:
             wall_s=time.time() - t_start,
         )
 
+    def _drop_multiwave_build(self, resume: bool) -> None:
+        """An index begun by the old staged multi-wave build cannot resume:
+        its completed stages may lack waves 1+. A fresh build
+        (resume=False) removes the staging table, base waves 1+ and their
+        lineage, which wave 0 alone would otherwise sit beside."""
+        if not self._lineage_done("staging"):
+            return
+        if resume:
+            raise RuntimeError(
+                f"{self.paths.root} holds an interrupted or older multi-wave "
+                "build; rebuild it with resume=False"
+            )
+        self.io.delete_dir(self.io.path("postings_staging"))
+        for w in self.io.listdir(self.io.path("postings")):
+            if re.fullmatch(r"wave=\d+", w) and w != "wave=0":
+                self.io.delete_dir(self.io.path("postings", w))
+        for f in self.io.listdir(self.io.path("lineage")):
+            if f.startswith(("staging_", "blocks_")):
+                self.io.delete_file(self.io.path("lineage", f))

@@ -41,7 +41,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from bayard_spark.build.indexer import BLOCK_SCHEMA, encode_group_table
+from bayard_spark.build.indexer import (
+    BLOCK_SCHEMA,
+    encode_blocks,
+    row_tiebreak,
+    write_base_blocks,
+)
 from bayard_spark.fsio import IndexFS
 from bayard_spark.schema import IndexPaths
 
@@ -95,8 +100,7 @@ class SegmentWriter:
     # global row_number window (which serializes on a single task).
     BULK_ID_THRESHOLD = 65_536
 
-    def __init__(self, spark: SparkSession, builder,
-                 bulk_id_threshold: int | None = None) -> None:
+    def __init__(self, spark: SparkSession, builder) -> None:
         # builder: bayard_spark.build.indexer.IndexBuilder (shares analyzers,
         # meta, paths)
         self.spark = spark
@@ -108,10 +112,6 @@ class SegmentWriter:
         self._staged_tombstones: list[str] = []
         self._reserved_next: int | None = None
         self._reserved_base: int | None = None
-        self.bulk_id_threshold = (
-            self.BULK_ID_THRESHOLD if bulk_id_threshold is None
-            else int(bulk_id_threshold)
-        )
 
     # ---------- helpers ----------
 
@@ -174,8 +174,9 @@ class SegmentWriter:
 
     def put_documents(self, source: DataFrame) -> str:
         """Stage an upsert segment; returns segment name (invisible until
-        commit). Last write per url wins within the batch; urls already in
-        the index get tombstoned (delete-by-id + add).
+        commit). Last write per url wins within the batch, ties broken as
+        the build breaks them; urls already in the index get tombstoned
+        (delete-by-id + add).
 
         The deduplicated batch feeds the tombstone join, the count and the
         id write, so it is persisted for the call: the url window runs
@@ -185,7 +186,9 @@ class SegmentWriter:
             source.withColumn(
                 "_rn",
                 F.row_number().over(
-                    Window.partitionBy("url").orderBy(F.desc("warc_ts"))
+                    Window.partitionBy("url").orderBy(
+                        F.desc("warc_ts"), F.desc(row_tiebreak(source))
+                    )
                 ),
             )
             .filter(F.col("_rn") == 1)
@@ -206,7 +209,7 @@ class SegmentWriter:
         # assign fresh contiguous ids after the current high-water mark
         base = self._next_doc_id()
         n = latest.count()
-        if n > self.bulk_id_threshold:
+        if n > self.BULK_ID_THRESHOLD:
             # large put: the same bucket-offset method as the bulk build —
             # per-bucket distinct-url counts (metadata-sized collect) give
             # contiguous offsets, ids assigned by an in-bucket url rank;
@@ -248,32 +251,14 @@ class SegmentWriter:
         return seg
 
     def _assign_ids_bucketed(self, latest: DataFrame, base: int) -> DataFrame:
-        """Dense deterministic ids for a large batch: hash urls into
-        num_buckets, collect per-bucket counts (num_buckets rows — metadata,
-        not data), prefix-sum into offsets, then rank urls within each
-        bucket. Mirrors IndexBuilder.assign_doc_ids (build/indexer.py:403)
-        minus the dedupe (latest is already one row per url)."""
-        nb = self.b.meta.num_buckets
-        bucket_col = F.pmod(F.xxhash64("url"), F.lit(nb)).cast("int")
-        counts = {
-            r["doc_bucket"]: r["n"]
-            for r in latest.select(bucket_col.alias("doc_bucket"))
-            .groupBy("doc_bucket")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        offsets, acc = {}, base
-        for bkt in range(nb):
-            offsets[bkt] = acc
-            acc += counts.get(bkt, 0)
-        off_df = self.spark.createDataFrame(
-            [(bkt, offsets[bkt]) for bkt in range(nb)],
-            "doc_bucket int, _offset long",
-        )
+        """Dense deterministic ids for a large batch from the build's bucket
+        offsets (IndexBuilder.bucket_offsets), then a url rank within each
+        bucket; no dedupe (latest is already one row per url)."""
+        off_df, _ = self.b.bucket_offsets(latest, F.count("*"), base)
         w = Window.partitionBy("doc_bucket").orderBy("url")
         return (
-            latest.withColumn("doc_bucket", bucket_col)
-            .join(F.broadcast(off_df), "doc_bucket")
+            latest.withColumn("doc_bucket", self.b.url_bucket())
+            .join(off_df, "doc_bucket")
             .withColumn(
                 "doc_id", F.col("_offset") + F.row_number().over(w) - 1
             )
@@ -291,24 +276,13 @@ class SegmentWriter:
         return seg
 
     def _write_segment_blocks(self, rows: DataFrame, seg: str) -> None:
-        """The build's and merge's Arrow block encoder, so a segment's
-        blocks are byte-identical to what a build over the same postings
-        writes. The segment is ONE file sorted by (field, bucket, term),
-        with field and bucket as data columns: a (field, bucket)
-        directory tree would cost one file and one footer per pair, most
-        of a small put's bytes."""
-        block_size = self.b.meta.block_size
-        blocks = (
-            rows.withColumn("salt", F.lit(0))
-            .select(
-                "doc_id", "field", "term", "tf", "doc_len", "pos_bytes",
-                "bucket", "salt",
-            )
-            .groupBy("bucket", "salt")
-            .applyInArrow(
-                lambda table: encode_group_table(table, block_size),
-                BLOCK_SCHEMA,
-            )
+        """The build's and merge's encode step, so a segment's blocks are
+        byte-identical to what a build over the same postings writes. The
+        segment is ONE file sorted by (field, bucket, term), with field and
+        bucket as data columns: a (field, bucket) directory tree would cost
+        one file and one footer per pair, most of a small put's bytes."""
+        blocks = encode_blocks(
+            rows.withColumn("salt", F.lit(0)), self.b.meta.block_size
         )
         (
             blocks.coalesce(1)
@@ -661,9 +635,9 @@ def merge_segments(spark: SparkSession, builder) -> dict:
     materializes doomed ids). The broadcast hint on the tombstone side
     is SIZE-GATED: at web scale a purge can doom billions of ids, and
     forcing a broadcast there would fail exactly when deletes are
-    biggest; past the gate the anti-join shuffles. Then the same
-    (bucket, salt) Arrow block encoder as the build runs, so merged
-    output is byte-deterministic with a fresh build.
+    biggest; past the gate the anti-join shuffles. Then the build's encode
+    step and base-wave write run, so merged output is byte-deterministic
+    with a fresh build.
     """
     paths: IndexPaths = builder.paths
     log = CommitLog(paths.root)
@@ -679,20 +653,12 @@ def merge_segments(spark: SparkSession, builder) -> dict:
             tombstone_side(ts, count_tombstone_rows(paths, state)),
             "doc_id", "left_anti",
         )
-    block_size = builder.meta.block_size
-
     io = log.io
     merged_dir = io.path("postings_merged")
     io.delete_dir(merged_dir)
-    (
-        rows.groupBy("bucket", "salt")
-        .applyInArrow(
-            lambda table: encode_group_table(table, block_size), BLOCK_SCHEMA
-        )
-        .repartition(F.col("field"), F.col("bucket"))
-        .write.mode("overwrite")
-        .partitionBy("field", "bucket")
-        .parquet(os.path.join(merged_dir, "wave=0"))
+    write_base_blocks(
+        encode_blocks(rows, builder.meta.block_size),
+        os.path.join(merged_dir, "wave=0"),
     )
     # swap postings dir; rewrite docs without tombstones; reset log
     new_docs_dir = io.path("docs_merged")

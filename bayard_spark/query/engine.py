@@ -143,7 +143,6 @@ class SearchEngine:
     CACHE_ENTRIES = 512
 
     def __init__(self, spark: SparkSession, root: str,
-                 preload_dictionary: bool = True,
                  max_expansions: int = 1024):
         import pyarrow.dataset as ds
 
@@ -244,8 +243,7 @@ class SearchEngine:
         # '.*' must fail fast instead of collecting the whole term
         # dictionary to the driver.
         self.max_expansions = int(max_expansions)
-        if preload_dictionary:
-            self._preload_dictionary(log.io, state)
+        self._preload_dictionary(log.io, state)
 
     def _preload_dictionary(self, io, state: dict) -> None:
         """(field, term) → (df, bucket) from the `term` and `n_docs`

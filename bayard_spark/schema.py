@@ -21,6 +21,8 @@ from bayard_spark import BM25_B, BM25_K1
 
 FIELD_TYPES = {"text", "u64", "i64", "f64", "date", "facet", "bytes", "json_object"}
 RECORD_OPTIONS = {"basic", "freq", "position"}  # docs/schema.md:62-65
+# Settings older metas and callers still carry; read and ignored.
+RETIRED_FIELDS = {"num_waves"}
 
 
 @dataclass
@@ -56,7 +58,6 @@ class IndexMeta:
     bm25_b: float = BM25_B
     # build
     seed: int = 42
-    num_waves: int = 4             # resume granularity for the postings build
     # index-time presort (docs/rest_api/create_index_api.md "Sort by field"):
     # doc ids are assigned by this field's order WITHIN each url-hash bucket
     # (the per-segment presort tantivy does), so the doc store is physically
@@ -86,6 +87,8 @@ class IndexMeta:
     @classmethod
     def from_json(cls, s: str) -> "IndexMeta":
         d = json.loads(s)
+        for k in RETIRED_FIELDS:
+            d.pop(k, None)
         d["fields"] = [FieldDef(**f) for f in d.get("fields", [])]
         return cls(**d)
 
@@ -132,5 +135,6 @@ def webtext_index_meta(name: str = "webtext", **overrides) -> IndexMeta:
         ],
     )
     for k, v in overrides.items():
-        setattr(meta, k, v)
+        if k not in RETIRED_FIELDS:
+            setattr(meta, k, v)
     return meta

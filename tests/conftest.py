@@ -39,7 +39,7 @@ def built(spark, tmp_index_root):
     N_DOCS = 600
 
     meta = webtext_index_meta(
-        num_buckets=8, num_waves=2, salt_span=100, hot_df_threshold=250
+        num_buckets=8, salt_span=100, hot_df_threshold=250
     )
     src = webtext_df(spark, N_DOCS, partitions=8)
     builder = IndexBuilder(spark, meta, tmp_index_root)
@@ -91,7 +91,7 @@ def pruned_idx(spark):
     src = spark.createDataFrame(
         rows, "url string, warc_ts string, text string, lang string"
     ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
-    meta = webtext_index_meta(num_buckets=4, num_waves=1)
+    meta = webtext_index_meta(num_buckets=4)
     builder = IndexBuilder(spark, meta, root)
     builder.build(src, resume=False)
     yield spark, root, builder

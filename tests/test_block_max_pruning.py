@@ -90,7 +90,7 @@ def test_deleted_threshold_block_prunes_no_live_hit(spark, tmp_path):
     from bayard_spark.schema import webtext_index_meta
 
     n = 1300  # 10 full blocks of 'common' + a partial one; no salting
-    meta = webtext_index_meta(num_buckets=4, num_waves=1, hot_df_threshold=n + 1)
+    meta = webtext_index_meta(num_buckets=4, hot_df_threshold=n + 1)
     urls = [f"https://tau.example/{i:05d}" for i in range(n)]
     frame = spark.createDataFrame(
         [(u, "2024-01-01 00:00:00", "x", "en") for u in urls],

@@ -3,6 +3,7 @@ indexer's packed-key run sort, and byte identity of the Arrow block
 encoder against the pandas reference encoder."""
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pytest
 from hypothesis import given, settings
@@ -18,6 +19,7 @@ from bayard_spark.build.codec import (
     varint_encode,
     varint_lengths,
 )
+from bayard_spark.build.indexer import BLOCK_SCHEMA, encode_group_table
 
 # (doc_ids, per-doc positions) block shapes
 BLOCK_SHAPES = [
@@ -378,20 +380,65 @@ class TestRunsPackedSort:
         assert deltas.tolist() == [0, 1, 1]
 
 
+def encode_group_frame(pdf: pd.DataFrame, block_size: int = 128) -> pd.DataFrame:
+    """pandas frame of posting rows (doc_id, field, term, tf, doc_len,
+    pos_bytes, bucket, salt) → block rows (BLOCK_SCHEMA), one Python loop
+    per (field, term, salt) group: the independent reference for
+    encode_group_table, which every write path (build, segment put, merge)
+    runs through encode_blocks."""
+    pdf = pdf.sort_values(["field", "term", "salt", "doc_id"], ignore_index=True)
+    out_rows = []
+    for (fld, term, salt), g in pdf.groupby(["field", "term", "salt"], sort=False):
+        doc_ids = g["doc_id"].to_numpy(dtype=np.int64)
+        tfs = g["tf"].to_numpy(dtype=np.uint64)
+        lens = g["doc_len"].to_numpy(dtype=np.uint64)
+        has_pos = g["pos_bytes"].iloc[0] is not None
+        pos_list = g["pos_bytes"].tolist() if has_pos else None
+        bucket = int(g["bucket"].iloc[0])
+        n = len(g)
+        starts = np.arange(0, n, block_size)
+        ends = np.minimum(starts + block_size, n)
+        # whole-group varint encodes, sliced at block byte-boundaries —
+        # per-block work is O(1) byte slicing, all math is vectorized
+        deltas = doc_ids.astype(np.uint64).copy()
+        with np.errstate(over="ignore"):
+            deltas[1:] -= doc_ids[:-1].astype(np.uint64)
+        deltas[starts] = doc_ids[starts].astype(np.uint64)  # blocks self-contained
+        enc_d = varint_encode(deltas)
+        off_d = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(varint_lengths(deltas), out=off_d[1:])
+        enc_t = varint_encode(tfs)
+        off_t = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(varint_lengths(tfs), out=off_t[1:])
+        enc_l = varint_encode(lens)
+        off_l = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(varint_lengths(lens), out=off_l[1:])
+        max_tf = np.maximum.reduceat(tfs, starts)
+        min_tf = np.minimum.reduceat(tfs, starts)
+        max_len = np.maximum.reduceat(lens, starts)
+        min_len = np.minimum.reduceat(lens, starts)
+        for bi in range(len(starts)):
+            b0, b1 = int(starts[bi]), int(ends[bi])
+            out_rows.append(
+                (fld, bucket, term, int(salt), bi, b1 - b0,
+                 int(doc_ids[b0]), int(doc_ids[b1 - 1]),
+                 int(max_tf[bi]), int(min_tf[bi]),
+                 int(min_len[bi]), int(max_len[bi]),
+                 enc_d[off_d[b0]:off_d[b1]],
+                 enc_t[off_t[b0]:off_t[b1]],
+                 enc_l[off_l[b0]:off_l[b1]],
+                 b"".join(pos_list[b0:b1]) if has_pos else b"")
+            )
+    cols = [c.split(" ")[0] for c in BLOCK_SCHEMA.split(", ")]
+    return pd.DataFrame(out_rows, columns=cols)
+
+
 class TestEncodeGroupZeroCopy:
     """encode_group_table (zero-copy per-block payload columns, r7) must
     stay byte-identical to encode_group_frame, the independent pandas
-    encoder the incremental segment writer uses."""
+    reference encoder above."""
 
     def test_identical_blocks(self):
-        import pandas as pd
-
-        from bayard_spark.build.indexer import (
-            encode_group_frame,
-            encode_group_table,
-        )
-        from bayard_spark.build.codec import varint_encode
-
         rng = np.random.default_rng(11)
         rows = []
         for fld in ("text", "url"):

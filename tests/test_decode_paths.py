@@ -165,7 +165,7 @@ def _mini_builder(spark, tmp_path_factory, n_docs=40):
     from bayard_spark.sources.webtext import webtext_df
 
     root = str(tmp_path_factory.mktemp("r5_idx"))
-    meta = webtext_index_meta(num_buckets=4, num_waves=1)
+    meta = webtext_index_meta(num_buckets=4)
     builder = IndexBuilder(spark, meta, root)
     builder.build(webtext_df(spark, n_docs, partitions=2))
     return builder

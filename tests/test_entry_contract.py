@@ -128,3 +128,85 @@ def test_one_block_decoder():
         for m in ("query/engine.py", "build/segments.py", "build/indexer.py")
     } <= set(PACKAGE_MODULES)
     assert not offenders, offenders
+
+
+INDEXER = os.path.join(ROOT, "bayard_spark", "build", "indexer.py")
+
+
+def _names(path: str) -> list[tuple[int, str]]:
+    """(line, name) of every imported name, bare name and attribute."""
+    out = []
+    for node in ast.walk(ast.parse(open(path).read(), path)):
+        if isinstance(node, ast.ImportFrom):
+            out += [(node.lineno, a.name) for a in node.names]
+        elif isinstance(node, ast.Attribute):
+            out.append((node.lineno, node.attr))
+        elif isinstance(node, ast.Name):
+            out.append((node.lineno, node.id))
+    return out
+
+
+def test_one_block_encode_step():
+    # build, put and merge encode blocks through indexer.encode_blocks:
+    # no other package module reaches the group encoder, and inside the
+    # indexer encode_blocks is its one caller
+    offenders = [
+        f"{os.path.relpath(path, ROOT)}:{line}"
+        for path in PACKAGE_MODULES if path != INDEXER
+        for line, name in _names(path) if name == "encode_group_table"
+    ]
+    assert not offenders, offenders
+    uses = [line for line, name in _names(INDEXER) if name == "encode_group_table"]
+    assert len(uses) == 1, uses
+
+
+# The IndexBuilder / SegmentWriter calls the frozen benchmark scripts
+# (bench.py, bench_extra.py, perfbench/) make, as (method, args, kwargs).
+FROZEN_BUILDER_CALLS = [
+    ("__init__", ("spark", "meta", "root"), {}),
+    ("build", ("src",), {"resume": False}),
+    ("assign_doc_ids", ("src",), {}),
+    ("write_docs", ("with_ids",), {}),
+    ("_hot_terms_sampled", ("docs",), {}),
+    ("posting_rows", ("docs",), {}),
+    ("blockify_wave", ("rows", 0, "hot"), {}),
+    ("write_norms_stats_direct", ("docs", "n"), {}),
+]
+FROZEN_WRITER_CALLS = [
+    ("__init__", ("spark", "builder"), {}),
+    ("put_documents", ("df",), {}),
+    ("delete_documents", ("urls",), {}),
+    ("commit", (), {}),
+]
+
+
+FROZEN_CALLS = [("IndexBuilder", *c) for c in FROZEN_BUILDER_CALLS] + [
+    ("SegmentWriter", *c) for c in FROZEN_WRITER_CALLS
+]
+
+
+@pytest.mark.parametrize(
+    "cls_name, method, args, kwargs", FROZEN_CALLS,
+    ids=[f"{c[0]}.{c[1]}" for c in FROZEN_CALLS],
+)
+def test_frozen_script_calls_bind(cls_name, method, args, kwargs):
+    import inspect
+
+    from bayard_spark.build import indexer, segments
+
+    cls = getattr(indexer if cls_name == "IndexBuilder" else segments, cls_name)
+    inspect.signature(getattr(cls, method)).bind("self", *args, **kwargs)
+
+
+def test_frozen_script_meta_builds():
+    # bench.py, bench_extra.py and perfbench still pass the retired
+    # num_waves; it is accepted and ignored
+    from bayard_spark.schema import IndexMeta, webtext_index_meta
+
+    meta = webtext_index_meta(
+        num_buckets=16, num_waves=1, salt_span=50_000, hot_df_threshold=100_000
+    )
+    assert (meta.num_buckets, meta.salt_span, meta.hot_df_threshold) == (
+        16, 50_000, 100_000
+    )
+    assert IndexMeta.from_json(meta.to_json()) == meta

@@ -58,7 +58,7 @@ class TestCode:
 def lossy_idx(spark):
     root = tempfile.mkdtemp(prefix="lossy_idx_")
     meta = webtext_index_meta(
-        num_buckets=4, num_waves=1, lossy_fieldnorms=True
+        num_buckets=4, lossy_fieldnorms=True
     )
     # docs long enough (>40 tokens) that quantization actually loses bits
     rows = []

@@ -68,7 +68,6 @@ def jidx(spark):
             FieldDef(name="warc_ts", type="date", fast=True),
         ],
         num_buckets=4,
-        num_waves=1,
     )
     schema = StructType([
         StructField("url", StringType()),
@@ -215,7 +214,7 @@ class TestSortByField:
 
         root = _tf.mkdtemp(prefix="presort_")
         meta = webtext_index_meta(
-            num_buckets=2, num_waves=1, sort_by_field="n_chars"
+            num_buckets=2, sort_by_field="n_chars"
         )
         meta.fields.append(
             __import__("bayard_spark.schema", fromlist=["FieldDef"]).FieldDef(

@@ -218,6 +218,15 @@ def test_rank_identity(built, name, query):
         )
 
 
+def test_built_index_is_salted(built):
+    # hot terms come from the build's 5% doc sample: the fixture's low
+    # hot_df_threshold and salt_span must still split the head terms into
+    # salts, so every query above also runs over salted postings
+    engine, _ = built
+    salted = engine.postings.filter("salt > 0").select("term").distinct()
+    assert "the" in {r["term"] for r in salted.collect()}
+
+
 def test_count_matches_oracle(built):
     engine, oracle = built
     q = {"kind": "term", "options": {"field": "text", "term": "the"}}
@@ -284,7 +293,7 @@ def tombstoned(spark):
 
     root = tempfile.mkdtemp(prefix="ts_rank_idx_")
     meta = webtext_index_meta(
-        num_buckets=8, num_waves=2, salt_span=100, hot_df_threshold=250
+        num_buckets=8, salt_span=100, hot_df_threshold=250
     )
     builder = IndexBuilder(spark, meta, root)
     builder.build(webtext_df(spark, TS_DOCS, partitions=8))

@@ -129,21 +129,20 @@ class TestExpansionGuards:
         with pytest.raises(ValueError, match="max_expansions"):
             eng.scores(_regex_q(".*")).count()
 
-    def test_regex_cap_distributed(self, spark, built, tmp_index_root):
-        eng = SearchEngine(
-            spark, tmp_index_root, preload_dictionary=False, max_expansions=5
-        )
+    def test_regex_cap_distributed(self, spark, built, tmp_index_root,
+                                   monkeypatch):
+        monkeypatch.setattr(SearchEngine, "MAX_DICT_TERMS", 0)
+        eng = SearchEngine(spark, tmp_index_root, max_expansions=5)
+        assert not eng._dict_complete
         with pytest.raises(ValueError, match="max_expansions"):
             eng.scores(_regex_q(".*")).count()
 
-    def test_fuzzy_cap_both_branches(self, spark, built, tmp_index_root):
-        for preload in (True, False):
-            eng = SearchEngine(
-                spark,
-                tmp_index_root,
-                preload_dictionary=preload,
-                max_expansions=2,
-            )
+    def test_fuzzy_cap_both_branches(self, spark, built, tmp_index_root,
+                                     monkeypatch):
+        for dict_cap in (SearchEngine.MAX_DICT_TERMS, 0):
+            monkeypatch.setattr(SearchEngine, "MAX_DICT_TERMS", dict_cap)
+            eng = SearchEngine(spark, tmp_index_root, max_expansions=2)
+            assert eng._dict_complete == (dict_cap > 0)
             with pytest.raises(ValueError, match="max_expansions"):
                 # distance 3 around a short common stem matches >2 terms
                 eng.scores(_fuzzy_q("data", 3)).count()
@@ -169,10 +168,12 @@ class TestExpansionGuards:
 
 
 class TestDistributedExpansion:
-    def test_fuzzy_regex_without_dictionary_preload(self, pruned_idx):
+    def test_fuzzy_regex_without_dictionary_preload(self, pruned_idx,
+                                                    monkeypatch):
         spark, root, _ = pruned_idx
-        warm = SearchEngine(spark, root, preload_dictionary=True)
-        cold = SearchEngine(spark, root, preload_dictionary=False)
+        warm = SearchEngine(spark, root)
+        monkeypatch.setattr(SearchEngine, "MAX_DICT_TERMS", 0)
+        cold = SearchEngine(spark, root)
         assert warm._dict_complete and not cold._dict_complete
         for q in [
             {"kind": "fuzzy_term",

@@ -282,7 +282,6 @@ def typed(spark):
             FieldDef(name="warc_ts", type="date", fast=True),
         ],
         num_buckets=4,
-        num_waves=1,
     )
     schema = StructType([
         StructField("url", StringType()),

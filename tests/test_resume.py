@@ -6,7 +6,6 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 
 from bayard_spark.build.indexer import IndexBuilder
 from bayard_spark.query import SearchEngine
@@ -18,63 +17,92 @@ class _Boom(RuntimeError):
     pass
 
 
+def _term_results(engine, term):
+    q = {"kind": "term", "options": {"field": "text", "term": term}}
+    return sorted(
+        (r["doc_id"], round(r["score"], 10)) for r in engine.scores(q).collect()
+    )
+
+
 def test_resume_after_midbuild_failure(spark):
     rootA = tempfile.mkdtemp(prefix="resA_")
     rootB = tempfile.mkdtemp(prefix="resB_")
     try:
-        meta = webtext_index_meta(num_buckets=4, num_waves=2)
+        meta = webtext_index_meta(num_buckets=4)
         src = webtext_df(spark, 300, partitions=4)
 
         # A: uninterrupted build
         IndexBuilder(spark, meta, rootA).build(src)
 
-        # B: kill the build right after wave 0 completes, then resume
+        # B: kill the build inside the blocks stage (docs completed and its
+        # lineage was logged), then resume
         builder = IndexBuilder(spark, meta, rootB)
         original = builder.blockify_wave
 
-        def sabotage(staging, wave, hot_terms):
-            if wave == 1:  # wave 0 completed AND its lineage was logged
-                builder.blockify_wave = original  # next run is clean
-                raise _Boom("simulated driver loss before wave 1")
-            return original(staging, wave, hot_terms)
+        def sabotage(rows, wave, hot_terms):
+            builder.blockify_wave = original  # next run is clean
+            raise _Boom("simulated driver loss inside blocks_w0")
 
         builder.blockify_wave = sabotage
         with pytest.raises(_Boom):
             builder.build(src)
         # lineage shows partial progress
-        assert os.path.exists(os.path.join(rootB, "lineage", "blocks_w0.json"))
-        assert not os.path.exists(
-            os.path.join(rootB, "lineage", "blocks_w1.json")
-        )
+        lineage = os.path.join(rootB, "lineage")
+        assert os.path.exists(os.path.join(lineage, "docs_w0.json"))
+        assert not os.path.exists(os.path.join(lineage, "blocks_w0.json"))
+        assert not os.path.exists(os.path.join(lineage, "stats_w0.json"))
 
         report = builder.build(src)  # resume
-        assert "blocks_w0" in report.stages_skipped
-        assert "blocks_w1" in report.stages_run
-        assert "docs" in report.stages_skipped
-        assert "staging" in report.stages_skipped
+        assert report.stages_skipped == ["docs"]
+        assert report.stages_run == ["blocks_w0", "stats"]
+        assert report.n_docs == 300
 
         # identical query results across the two indexes
         ea, eb = SearchEngine(spark, rootA), SearchEngine(spark, rootB)
+        assert eb.stats == ea.stats
         for term in ["the", "water", "father"]:
-            q = {"kind": "term", "options": {"field": "text", "term": term}}
-            ra = sorted(
-                (r["doc_id"], round(r["score"], 10))
-                for r in ea.scores(q).collect()
-            )
-            rb = sorted(
-                (r["doc_id"], round(r["score"], 10))
-                for r in eb.scores(q).collect()
-            )
-            assert ra == rb
+            assert _term_results(ea, term) == _term_results(eb, term)
     finally:
         shutil.rmtree(rootA, ignore_errors=True)
         shutil.rmtree(rootB, ignore_errors=True)
 
 
+def test_multiwave_build_leftovers(spark):
+    """An index begun by the retired staged multi-wave build refuses to
+    resume (its stages may lack waves 1+); a fresh build clears the
+    staging table, the waves past 0 and their lineage."""
+    root = tempfile.mkdtemp(prefix="resW_")
+    try:
+        lineage = os.path.join(root, "lineage")
+        os.makedirs(lineage)
+        for f in ("docs_w0.json", "staging_w0.json", "blocks_w0.json",
+                  "blocks_w1.json"):
+            with open(os.path.join(lineage, f), "w") as fh:
+                fh.write("{}")
+        for d in ("postings_staging/wave=0", "postings/wave=1/field=text"):
+            os.makedirs(os.path.join(root, d))
+        meta = webtext_index_meta(num_buckets=4)
+        src = webtext_df(spark, 60, partitions=2)
+        builder = IndexBuilder(spark, meta, root)
+        with pytest.raises(RuntimeError, match="resume=False"):
+            builder.build(src)
+
+        report = builder.build(src, resume=False)
+        assert report.stages_run == ["docs", "blocks_w0", "stats"]
+        assert sorted(os.listdir(os.path.join(root, "postings"))) == ["wave=0"]
+        assert not os.path.exists(os.path.join(root, "postings_staging"))
+        assert sorted(os.listdir(lineage)) == [
+            "blocks_w0.json", "docs_w0.json", "stats_w0.json"
+        ]
+        assert builder.build(src).stages_run == []
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def test_resume_noop_when_complete(spark):
     root = tempfile.mkdtemp(prefix="resC_")
     try:
-        meta = webtext_index_meta(num_buckets=4, num_waves=1)
+        meta = webtext_index_meta(num_buckets=4)
         src = webtext_df(spark, 120, partitions=4)
         b = IndexBuilder(spark, meta, root)
         b.build(src)

@@ -27,9 +27,15 @@ def term_q(t):
 
 
 @pytest.fixture()
-def index_root(spark):
+def index_root(spark, request):
+    # indirect param "salted": a low hot_df_threshold and a small salt_span
+    # split the head terms of the 200 docs into several salts
+    salted = getattr(request, "param", "plain") == "salted"
     root = tempfile.mkdtemp(prefix="seg_idx_")
-    meta = webtext_index_meta(num_buckets=4, num_waves=1)
+    meta = webtext_index_meta(
+        num_buckets=4,
+        **({"hot_df_threshold": 40, "salt_span": 50} if salted else {}),
+    )
     builder = IndexBuilder(spark, meta, root)
     builder.build(webtext_df(spark, 200, partitions=4))
     yield root, builder
@@ -70,6 +76,14 @@ def live_postings(spark, root):
             if int(d[k]) not in dead
         ]
     return Counter(out)
+
+
+def max_salt(root):
+    log = CommitLog(root)
+    salts = visible_postings_dataset(log.io, log.read()).to_table(
+        columns=["salt"]
+    )["salt"]
+    return max(salts.to_pylist())
 
 
 class TestSegments:
@@ -160,8 +174,13 @@ class TestSegments:
         assert e.scores(term_q("the")).count() > 0
 
 
-    def test_merge_preserves_every_live_posting(self, spark, index_root):
+    @pytest.mark.parametrize(
+        "index_root", ["plain", "salted"], indirect=True
+    )
+    def test_merge_preserves_every_live_posting(self, spark, index_root,
+                                                request):
         root, builder = index_root
+        salted = request.node.callspec.params["index_root"] == "salted"
         w = SegmentWriter(spark, builder)
         base_urls = [
             r["url"] for r in visible_docs(spark, IndexPaths(root))
@@ -180,9 +199,11 @@ class TestSegments:
         assert max(want.values()) == 1
         assert {p[1] for p in want} == {"url", "text", "lang"}
         assert any(p[5] is None for p in want)  # freq-only fields ride along
+        assert (max_salt(root) > 0) == salted
 
         merge_segments(spark, builder)
         assert live_postings(spark, root) == want
+        assert (max_salt(root) > 0) == salted
         # stats are the live docs' lengths, field by field
         lens: dict[str, dict[int, int]] = {}
         for doc_id, fld, _t, _tf, doc_len, _p in want:
@@ -197,6 +218,36 @@ class TestSegments:
             assert stats[fld]["n_docs_field"] == len(by_doc)
             assert stats[fld]["total_len"] == sum(by_doc.values())
             assert stats[fld]["n_docs"] == n_live
+
+
+def test_put_and_build_pick_the_same_tied_winner(spark, index_root):
+    """Two rows per url with equal warc_ts: a put keeps the same row per
+    url as a build over the same batch (the build's all-column hash
+    tiebreak), not whichever row came first."""
+    root, builder = index_root
+    batch = new_batch(spark, [
+        (f"https://tie.example/{i:02d}", f"tie {v} {i}")
+        for i in range(20) for v in ("first", "second")
+    ])
+    built_root = tempfile.mkdtemp(prefix="tie_idx_")
+    try:
+        IndexBuilder(spark, builder.meta, built_root).build(batch)
+        want = {
+            r["url"]: r["text"]
+            for r in visible_docs(spark, IndexPaths(built_root)).collect()
+        }
+    finally:
+        shutil.rmtree(built_root, ignore_errors=True)
+    w = SegmentWriter(spark, builder)
+    w.put_documents(batch)
+    w.commit()
+    got = {
+        r["url"]: r["text"]
+        for r in visible_docs(spark, IndexPaths(root))
+        .filter(F.col("url").startswith("https://tie.example/")).collect()
+    }
+    assert len(want) == 20
+    assert got == want
 
 
 class TestCommittedFilesRequired:

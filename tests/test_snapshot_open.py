@@ -318,7 +318,7 @@ def _mini_builder(spark, tmp_path_factory):
     from bayard_spark.sources.webtext import webtext_df
 
     root = str(tmp_path_factory.mktemp("resv_idx"))
-    meta = webtext_index_meta(num_buckets=4, num_waves=1)
+    meta = webtext_index_meta(num_buckets=4)
     builder = IndexBuilder(spark, meta, root)
     builder.build(webtext_df(spark, 40, partitions=2))
     return builder

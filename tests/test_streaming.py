@@ -20,7 +20,7 @@ def stream_env(spark):
     root = tempfile.mkdtemp(prefix="stream_idx_")
     src = tempfile.mkdtemp(prefix="stream_src_")
     ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    meta = webtext_index_meta(num_buckets=4, num_waves=1)
+    meta = webtext_index_meta(num_buckets=4)
     builder = IndexBuilder(spark, meta, root)
     builder.build(webtext_df(spark, 100, partitions=4))
     yield root, src, ckpt, builder

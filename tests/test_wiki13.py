@@ -68,7 +68,6 @@ def wiki13(spark):
         ],
         analyzers={"facet": {"tokenizer": {"name": "facet"}}},
         num_buckets=4,
-        num_waves=1,
     )
     rows = [
         (f"https://wiki.example/{n.lower()}", f"2021-0{1 + i % 9}-01 00:00:00",

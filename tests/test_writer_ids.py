@@ -40,7 +40,7 @@ class TestIncrementalPutScale:
     @pytest.fixture()
     def index_root(self, spark):
         root = tempfile.mkdtemp(prefix="seg_idx_r3_")
-        meta = webtext_index_meta(num_buckets=4, num_waves=1)
+        meta = webtext_index_meta(num_buckets=4)
         builder = IndexBuilder(spark, meta, root)
         builder.build(webtext_df(spark, 200, partitions=4))
         yield root, builder
@@ -57,9 +57,10 @@ class TestIncrementalPutScale:
             rows, "url string, warc_ts string, text string, lang string"
         ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
 
-    def test_large_put_bucket_offset_ids(self, spark, index_root):
+    def test_large_put_bucket_offset_ids(self, spark, index_root, monkeypatch):
         root, builder = index_root
-        w = SegmentWriter(spark, builder, bulk_id_threshold=10)
+        monkeypatch.setattr(SegmentWriter, "BULK_ID_THRESHOLD", 10)
+        w = SegmentWriter(spark, builder)
         w.put_documents(self._batch(spark, 50))
         w.commit()
 
@@ -84,14 +85,16 @@ class TestIncrementalPutScale:
         )
         assert len({r["b"] for r in rows}) > 1
 
-    def test_next_doc_id_survives_new_writer(self, spark, index_root):
+    def test_next_doc_id_survives_new_writer(self, spark, index_root,
+                                             monkeypatch):
         root, builder = index_root
+        monkeypatch.setattr(SegmentWriter, "BULK_ID_THRESHOLD", 10)
         # the build publishes its dense-id count: the first put after a
         # fresh build starts there and runs the same Spark jobs as the
         # writer's next put, which serves ids from its own reservation (no
         # max-scan of the doc store)
         assert CommitLog(root).read()["next_doc_id"] == 200
-        w0 = SegmentWriter(spark, builder, bulk_id_threshold=10)
+        w0 = SegmentWriter(spark, builder)
         seg, first_put_jobs = spark_jobs(
             spark,
             lambda: w0.put_documents(
@@ -112,12 +115,12 @@ class TestIncrementalPutScale:
         w0.rollback()
         assert ids == list(range(200, 215))
         assert first_put_jobs == next_put_jobs
-        w1 = SegmentWriter(spark, builder, bulk_id_threshold=10)
+        w1 = SegmentWriter(spark, builder)
         w1.put_documents(self._batch(spark, 15))
         w1.commit()
         # fresh writer: must start at the persisted high-water mark (no
         # segment scan needed) and never reuse ids
-        w2 = SegmentWriter(spark, builder, bulk_id_threshold=10)
+        w2 = SegmentWriter(spark, builder)
         w2.put_documents(self._batch(spark, 3, prefix="https://w2.example/"))
         w2.commit()
         assert CommitLog(root).read()["next_doc_id"] == 218
@@ -132,7 +135,7 @@ def _mini_builder(spark, tmp_path_factory, n_docs=40):
     from bayard_spark.sources.webtext import webtext_df
 
     root = str(tmp_path_factory.mktemp("r5_idx"))
-    meta = webtext_index_meta(num_buckets=4, num_waves=1)
+    meta = webtext_index_meta(num_buckets=4)
     builder = IndexBuilder(spark, meta, root)
     builder.build(webtext_df(spark, n_docs, partitions=2))
     return builder

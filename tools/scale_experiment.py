@@ -104,7 +104,6 @@ def run_arm(executors: int, cores: int, corpus: str) -> dict:
         root = tempfile.mkdtemp(prefix="scale_idx_", dir=IDX_BASE)
         meta = webtext_index_meta(
             num_buckets=NUM_BUCKETS,
-            num_waves=1,
             salt_span=50_000,
             hot_df_threshold=100_000,
         )

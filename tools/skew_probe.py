@@ -67,7 +67,6 @@ def one_build(spark, corpus: str, salted: bool) -> dict:
 
     meta = webtext_index_meta(
         num_buckets=256,
-        num_waves=1,
         salt_span=SALT_SPAN,
         hot_df_threshold=(HOT_DF_THRESHOLD if salted else 1 << 60),
     )
@@ -112,7 +111,7 @@ def main() -> None:
 
     wroot = tempfile.mkdtemp(prefix="skew_warm_", dir="/dev/shm")
     IndexBuilder(
-        spark, webtext_index_meta(num_buckets=256, num_waves=1), wroot
+        spark, webtext_index_meta(num_buckets=256), wroot
     ).build(warm, resume=False)
     shutil.rmtree(wroot, ignore_errors=True)
 

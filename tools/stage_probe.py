@@ -45,7 +45,7 @@ def main():
 
     nb = int(os.environ.get("PROBE_BUCKETS", "64"))
     meta = webtext_index_meta(
-        num_buckets=nb, num_waves=1, salt_span=50_000,
+        num_buckets=nb, salt_span=50_000,
         hot_df_threshold=100_000,
     )
     root = tempfile.mkdtemp(prefix="probe_", dir="/dev/shm/idx")
@@ -76,11 +76,9 @@ def main():
         rows = rows.withColumn("salt", F.lit(0))
     timed("t_tokenize", lambda: rows.count())
 
-    from bayard_spark.build.indexer import BLOCK_SCHEMA, encode_group_table
+    from bayard_spark.build.indexer import encode_blocks
 
-    blocks = rows.groupBy("bucket", "salt").applyInArrow(
-        lambda t: encode_group_table(t, 128), BLOCK_SCHEMA
-    )
+    blocks = encode_blocks(rows, 128)
     timed("t_encode", lambda: blocks.count())
 
     def write_with_repart():
