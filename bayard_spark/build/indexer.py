@@ -10,7 +10,8 @@ batches):
     │    (deterministic: no sampling; one shuffle; bucket ranges contiguous)
     ├─ docs/    parquet, doc_id-sorted within partitions (min/max pruning)
     │ 3. hot-term set from a deterministic 5% doc sample (df estimate >
-    │    hot_df_threshold) → salting plan
+    │    hot_df_threshold) → salting plan; skipped when no salt can be
+    │    nonzero (n_docs ≤ salt_span or hot_df_threshold ≥ n_docs)
     │ 4. analyzer pass (mapInArrow): per (doc, field, term) → tf, positions,
     │    doc_len — shuffle volume is postings, not token occurrences —
     │    straight into encode_blocks: groupBy(bucket, salt) → Arrow block
@@ -352,7 +353,9 @@ _BLOCK_TYPES = [
     pa.binary(), pa.binary(), pa.binary(), pa.binary(),
 ]
 
-def encode_blocks(rows: DataFrame, block_size: int) -> DataFrame:
+def encode_blocks(
+    rows: DataFrame | pa.Table, block_size: int
+) -> DataFrame | pa.Table:
     """Posting rows → block rows (BLOCK_SCHEMA), the one encode step of the
     build, of a segment put and of a merge, so all three write
     byte-identical blocks for the same postings.
@@ -361,16 +364,28 @@ def encode_blocks(rows: DataFrame, block_size: int) -> DataFrame:
     anything else a caller left on the frame (a `wave` bookkeeping column,
     say) would otherwise ride the full posting-row shuffle. The exchange
     hash-partitions by (bucket, salt), so each bucket's rows of one salt
-    sit in exactly one task."""
-    return (
-        rows.select(
-            "doc_id", "field", "term", "tf", "doc_len", "pos_bytes",
-            "bucket", "salt",
+    sit in exactly one task. An Arrow table (a put small enough for the
+    driver) is grouped by (bucket, salt) on the driver instead, and the
+    blocks come back as an Arrow table."""
+
+    def encode(table: pa.Table) -> pa.Table:
+        return encode_group_table(table, block_size)
+
+    cols = ["doc_id", "field", "term", "tf", "doc_len", "pos_bytes",
+            "bucket", "salt"]
+    if isinstance(rows, DataFrame):
+        return rows.select(*cols).groupBy("bucket", "salt").applyInArrow(
+            encode, BLOCK_SCHEMA
         )
-        .groupBy("bucket", "salt")
-        .applyInArrow(
-            lambda table: encode_group_table(table, block_size), BLOCK_SCHEMA
-        )
+    rows = rows.select(cols).sort_by([("bucket", "ascending"),
+                                      ("salt", "ascending")])
+    key = np.stack([rows[c].to_numpy() for c in ("bucket", "salt")])
+    starts = np.flatnonzero(
+        np.r_[True, (key[:, 1:] != key[:, :-1]).any(axis=0)]
+    )
+    ends = np.r_[starts[1:], rows.num_rows]
+    return pa.concat_tables(
+        [encode(rows.slice(s, e - s)) for s, e in zip(starts, ends)]
     )
 
 
@@ -441,6 +456,10 @@ class IndexBuilder:
     def url_bucket(self):
         """A row's doc bucket: its url hash modulo num_buckets."""
         return F.pmod(F.xxhash64("url"), F.lit(self.meta.num_buckets)).cast("int")
+
+    def term_bucket(self):
+        """A posting row's bucket: its term hash modulo num_buckets."""
+        return F.pmod(F.xxhash64("term"), F.lit(self.meta.num_buckets)).cast("int")
 
     def bucket_offsets(
         self, frame: DataFrame, count, base: int
@@ -571,6 +590,14 @@ class IndexBuilder:
         return docs.mapInArrow(run, schema)
 
     # ---------- stage 2: analyzer pass → posting rows ----------
+
+    def posting_columns(self) -> list[str]:
+        """The columns besides doc_id that posting_rows reads: the indexed
+        text, bytes and json_object fields."""
+        return [
+            f.name for f in self.meta.fields
+            if f.indexed and f.type in ("text", "bytes", "json_object")
+        ]
 
     def posting_rows(self, docs: DataFrame) -> DataFrame:
         fields = [
@@ -948,12 +975,19 @@ class IndexBuilder:
             skipped.append("blocks_w0")
         else:
             t0 = time.time()
-            hot_terms = self._hot_terms_sampled(docs)
+            # No salt can be nonzero when every doc_id // salt_span is 0,
+            # and no term can pass a threshold at or above the doc count:
+            # then the sample's Spark jobs would decide nothing.
+            if n_docs is not None and (
+                n_docs <= self.meta.salt_span
+                or self.meta.hot_df_threshold >= n_docs
+            ):
+                hot_terms = []
+            else:
+                hot_terms = self._hot_terms_sampled(docs)
             t1 = time.time()
             rows = self.posting_rows(docs).withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("term"), F.lit(self.meta.num_buckets))
-                .cast("int"),
+                "bucket", self.term_bucket()
             )
             metrics = self.blockify_wave(rows, 0, hot_terms)
             metrics["hot_detect_ms"] = (t1 - t0) * 1e3

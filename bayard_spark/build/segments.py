@@ -4,9 +4,11 @@ Reference semantics re-expressed for a storage-shared Spark layout:
 
 - put_documents: upsert = delete-by-id + add, buffered until commit
   (bayard/src/node.rs:1108-1196, upsert pair :1191-1192). Here: a new
-  SEGMENT (postings wave dir + docs/norms appendix) is staged; existing urls
-  are tombstoned. Nothing is visible until commit().
-- delete_documents: tombstone doc_ids by url (node.rs:1198-1241).
+  SEGMENT (one postings file + a docs table) is staged; existing urls
+  are tombstoned. Nothing is visible until commit(). An update-sized
+  batch stages on the driver in two Spark jobs; a larger one in Spark.
+- delete_documents: tombstone doc_ids by url (node.rs:1198-1241), found
+  through the url field's postings on the driver (no Spark job).
 - commit: atomically publish staged segments + tombstones by rewriting the
   commit log (node.rs:1243-1261 — tantivy IndexWriter::commit per shard;
   ours is one atomic rename, strictly stronger than the reference's
@@ -28,19 +30,22 @@ import json
 import os
 import posixpath
 import re
+import secrets
 import time
 from collections.abc import Iterator
 from functools import reduce
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
+from bayard_spark.build.codec import decode_blocks
 from bayard_spark.build.indexer import (
     BLOCK_SCHEMA,
     encode_blocks,
@@ -69,6 +74,13 @@ TOMBSTONE_SCHEMA = "doc_id long"
 # keeps Spark-only types (timestamp_ntz) that an Arrow conversion of the
 # parquet schema would turn into plain timestamps.
 SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+# Spark reads a file whose footer names a Spark version, and no legacy
+# calendar key, without rebasing its dates and timestamps.
+SPARK_VERSION_METADATA = b"org.apache.spark.version"
+# The build's per-row upsert tiebreak, carried by a put's batch on the driver.
+TIEBREAK = "_tiebreak"
+# Row order and statistics columns of a segment's postings file.
+SEGMENT_SORT = ["field", "bucket", "term", "salt", "block_id"]
 
 
 class CommitLog:
@@ -93,16 +105,38 @@ class CommitLog:
 
 
 class SegmentWriter:
-    """Stages new segments; commit()/rollback() control visibility."""
+    """Stages new segments; commit()/rollback() control visibility.
 
-    # Batches with more rows than this get bucket-offset id assignment
-    # (multi-partition, same method as the bulk build) instead of one
-    # global row_number window (which serializes on a single task).
-    BULK_ID_THRESHOLD = 65_536
+    A put or a delete resolves urls against the writer's view: the
+    committed snapshot plus this writer's staged segments and tombstones.
+    So a url put twice before one commit keeps one live version, and a url
+    put and then deleted keeps none. Urls are found through the url
+    field's postings, so `url` must be an indexed text field under the
+    raw analyzer, and a null or empty url (which has no url posting) is
+    rejected."""
+
+    # A put of at most this many rows runs on the driver: one Spark job
+    # brings the batch back, the driver deduplicates it, finds the urls it
+    # replaces, assigns ids and writes the docs and tombstone files, and a
+    # second job runs the analyzer and the term bucket. A larger batch,
+    # which need not fit in driver memory, stages through Spark with the
+    # build's bucket-offset ids.
+    BULK_ID_THRESHOLD = 4_096
 
     def __init__(self, spark: SparkSession, builder) -> None:
         # builder: bayard_spark.build.indexer.IndexBuilder (shares analyzers,
         # meta, paths)
+        url = {f.name: f for f in builder.meta.fields}.get("url")
+        an = url and builder.analyzers.get(url.analyzer)
+        if not (
+            url and url.type == "text" and url.indexed
+            and an and an.tokenizer_name == "raw" and not an.filter_specs
+        ):
+            raise ValueError(
+                "a SegmentWriter needs `url` to be an indexed text field "
+                "under the raw analyzer: puts and deletes find a url's "
+                "live docs through its url postings"
+            )
         self.spark = spark
         self.b = builder
         self.paths: IndexPaths = builder.paths
@@ -115,10 +149,15 @@ class SegmentWriter:
 
     # ---------- helpers ----------
 
-    def _existing_docs(self) -> DataFrame:
-        # commit-log aware (committed segments included, tombstones applied)
-        # so re-puts tombstone the LATEST live version, not just base docs
-        return visible_docs(self.spark, self.paths)
+    def _view(self) -> dict:
+        """The committed snapshot plus this writer's staged segments and
+        tombstones, in the commit log's shape."""
+        state = self.log.read()
+        return {
+            **state,
+            "segments": state["segments"] + self._staged_segments,
+            "tombstones": state["tombstones"] + self._staged_tombstones,
+        }
 
     def _next_doc_id(self) -> int:
         """High-water doc_id — ids are never reused.
@@ -168,20 +207,140 @@ class SegmentWriter:
         return high
 
     def _segment_name(self) -> str:
-        return f"seg{int(time.time() * 1000)}_{len(self._staged_segments)}"
+        # the random part keeps two writers in one millisecond, or one
+        # writer's successive deletes, from writing the same files
+        return f"seg{int(time.time() * 1000)}_{secrets.token_hex(4)}"
+
+    def _reserve(self, seg: str, base: int, n: int) -> None:
+        """Take ids [base, base + n) and publish the reservation BEFORE any
+        data lands: a concurrent writer created after this point sees the
+        marker and reserves past base + n (see _staged_reservation_high)."""
+        self._reserved_next = base + n
+        seg_dir = self.io.path("segments", seg)
+        self.io.makedirs(seg_dir)
+        self.io.write_text(
+            posixpath.join(seg_dir, "_reserved.json"),
+            json.dumps({"next": base + n}),
+        )
+
+    def _stage(self, seg: str, ts_file: str) -> str:
+        self._staged_segments.append(seg)
+        self._staged_tombstones.append(ts_file)
+        return seg
 
     # ---------- §2.1 put / delete ----------
 
     def put_documents(self, source: DataFrame) -> str:
         """Stage an upsert segment; returns segment name (invisible until
         commit). Last write per url wins within the batch, ties broken as
-        the build breaks them; urls already in the index get tombstoned
-        (delete-by-id + add).
+        the build breaks them; urls live in the writer's view get
+        tombstoned (delete-by-id + add).
 
-        The deduplicated batch feeds the tombstone join, the count and the
-        id write, so it is persisted for the call: the url window runs
-        once instead of once per action."""
+        One Spark job brings back at most BULK_ID_THRESHOLD + 1 rows with
+        the build's tiebreak hash; a batch within the gate stages on the
+        driver (`_put_on_driver`), a larger one through Spark."""
         seg = self._segment_name()
+        batch = (
+            source.select("*", row_tiebreak(source).alias(TIEBREAK))
+            .limit(self.BULK_ID_THRESHOLD + 1)
+            .toArrow()
+        )
+        if batch.num_rows > self.BULK_ID_THRESHOLD:
+            return self._put_with_spark(seg, source)
+        return self._put_on_driver(seg, batch, source.schema)
+
+    def _put_on_driver(
+        self, seg: str, batch: pa.Table, schema: StructType
+    ) -> str:
+        """Dedupe, url lookup, ids and the docs and tombstone files on the
+        driver with pyarrow; the analyzer pass and the term bucket are the
+        one Spark job, over doc_id and the indexed columns only."""
+        check_urls(batch["url"])
+        batch = batch.take(pc.sort_indices(
+            batch,
+            sort_keys=[("url", "ascending"), ("warc_ts", "descending"),
+                       (TIEBREAK, "descending")],
+            null_placement="at_end",
+        ))
+        url = batch["url"].combine_chunks()
+        first = np.ones(len(url), dtype=bool)
+        first[1:] = pc.not_equal(url[1:], url[:-1]).to_numpy(
+            zero_copy_only=False
+        )
+        latest = batch.filter(pa.array(first)).drop_columns([TIEBREAK])
+        dead = live_url_ids(self.paths, self._view(), latest["url"])
+        # ids by url rank, as Spark's window over the same batch gives them
+        base, n = self._next_doc_id(), latest.num_rows
+        latest = latest.append_column(
+            pa.field("doc_id", pa.int64(), nullable=False),
+            [np.arange(base, base + n, dtype=np.int64)],
+        )
+        self._reserve(seg, base, n)
+        ts_file = self.io.path("tombstones", f"{seg}.parquet")
+        write_tombstones(self.io, ts_file, dead)
+        self._write_docs(seg, latest, StructType(
+            schema.fields + [StructField("doc_id", LongType(), False)]
+        ))
+        cols = self.b.posting_columns()
+        rows = (
+            self.b.posting_rows(self.spark.createDataFrame(
+                latest.select(["doc_id", *cols]),
+                StructType([StructField("doc_id", LongType(), False)]
+                           + [schema[c] for c in cols]),
+            ))
+            .withColumn("bucket", self.b.term_bucket())
+            .toArrow()
+        )
+        blocks = encode_blocks(
+            rows.append_column(
+                "salt", pa.array(np.zeros(rows.num_rows, dtype=np.int32))
+            ),
+            self.b.meta.block_size,
+        )
+        write_parquet(
+            self.io, self.io.path("postings", f"wave={seg}"),
+            blocks.sort_by([(c, "ascending") for c in SEGMENT_SORT]),
+            compression="snappy",
+            use_dictionary=["field", "term"],
+            write_statistics=SEGMENT_SORT,
+        )
+        return self._stage(seg, ts_file)
+
+    def _write_docs(self, seg: str, docs: pa.Table, schema: StructType) -> None:
+        """A driver-side put's docs file, no larger than Spark's for the
+        same rows: the footer carries the Spark schema (footer_spark_schema
+        reads it), min/max statistics exist only where a reader prunes
+        (doc_id and the fast fields), only a column with at most half as
+        many distinct values as rows is dictionary-encoded, and zstd runs
+        at parquet-mr's default level 3."""
+        meta = self.b.meta
+        fast = {f.name for f in meta.fields if f.fast}
+        codec = {"uncompressed": "none"}.get(
+            meta.docstore_compression, meta.docstore_compression
+        )
+        write_parquet(
+            self.io, self.io.path("segments", seg, "docs"),
+            docs.replace_schema_metadata({
+                SPARK_ROW_METADATA: schema.json(),
+                SPARK_VERSION_METADATA: self.spark.version,
+            }),
+            compression=codec,
+            compression_level=3 if codec == "zstd" else None,
+            use_dictionary=[
+                c for c in docs.column_names
+                if 2 * pc.count_distinct(docs[c]).as_py() <= docs.num_rows
+            ],
+            write_statistics=[
+                c for c in docs.column_names if c == "doc_id" or c in fast
+            ],
+        )
+
+    def _put_with_spark(self, seg: str, source: DataFrame) -> str:
+        """A batch over the gate: the url window, the build's bucket-offset
+        ids, the tombstone join against the writer's view of the doc store
+        and every write run in Spark. The deduplicated batch feeds the
+        count, the ids and the join, so it is persisted for the call: the
+        url window runs once instead of once per action."""
         latest = (
             source.withColumn(
                 "_rn",
@@ -196,59 +355,37 @@ class SegmentWriter:
             .persist()
         )
         try:
-            return self._stage_segment(seg, latest)
+            n, bad = latest.agg(
+                F.count("*"),
+                F.count(F.when(F.coalesce("url", F.lit("")) == "", 1)),
+            ).first()
+            if bad:
+                raise ValueError(f"{bad} put urls are null or empty")
+            base = self._next_doc_id()
+            with_ids = self._assign_ids_bucketed(latest, base)
+            self._reserve(seg, base, n)
+            ts_file = self.io.path("tombstones", f"{seg}.parquet")
+            (
+                visible_docs(self.spark, self.paths, self._view())
+                .join(latest.select("url"), "url").select("doc_id")
+                .write.mode("overwrite").parquet(ts_file)
+            )
+            seg_docs = os.path.join(self.paths.root, "segments", seg, "docs")
+            (
+                with_ids.write.mode("overwrite")
+                .option("compression", self.b.meta.docstore_compression)
+                .parquet(seg_docs)
+            )
+            docs_df = self.spark.read.schema(with_ids.schema).parquet(seg_docs)
+            self._write_segment_blocks(
+                self.b.posting_rows(docs_df).withColumn(
+                    "bucket", self.b.term_bucket()
+                ),
+                seg,
+            )
         finally:
             latest.unpersist()
-
-    def _stage_segment(self, seg: str, latest: DataFrame) -> str:
-        # tombstone replaced urls
-        existing = self._existing_docs().select("doc_id", "url")
-        replaced = existing.join(latest.select("url"), "url").select("doc_id")
-        ts_file = self.io.path("tombstones", f"{seg}.parquet")
-        replaced.write.mode("overwrite").parquet(ts_file)
-        # assign fresh contiguous ids after the current high-water mark
-        base = self._next_doc_id()
-        n = latest.count()
-        if n > self.BULK_ID_THRESHOLD:
-            # large put: the same bucket-offset method as the bulk build —
-            # per-bucket distinct-url counts (metadata-sized collect) give
-            # contiguous offsets, ids assigned by an in-bucket url rank;
-            # the window stays partitioned, nothing serializes on one task
-            with_ids = self._assign_ids_bucketed(latest, base)
-        else:
-            # update-sized batch: one tiny global window is cheaper than
-            # the counting pre-pass
-            w = Window.orderBy("url")
-            with_ids = latest.withColumn(
-                "doc_id", F.lit(base) + F.row_number().over(w) - 1
-            )
-        self._reserved_next = base + n
-        # publish the reservation BEFORE any data lands: a concurrent
-        # writer created after this point sees the marker and reserves
-        # past base+n (see _staged_reservation_high)
-        seg_dir = self.io.path("segments", seg)
-        self.io.makedirs(seg_dir)
-        self.io.write_text(
-            posixpath.join(seg_dir, "_reserved.json"),
-            json.dumps({"next": base + n}),
-        )
-        seg_docs = os.path.join(self.paths.root, "segments", seg, "docs")
-        (
-            with_ids.write.mode("overwrite")
-            .option("compression", self.b.meta.docstore_compression)
-            .parquet(seg_docs)
-        )
-        docs_df = self.spark.read.schema(with_ids.schema).parquet(seg_docs)
-        rows = self.b.posting_rows(docs_df).withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("term"), F.lit(self.b.meta.num_buckets)).cast(
-                "int"
-            ),
-        )
-        self._write_segment_blocks(rows, seg)
-        self._staged_segments.append(seg)
-        self._staged_tombstones.append(ts_file)
-        return seg
+        return self._stage(seg, ts_file)
 
     def _assign_ids_bucketed(self, latest: DataFrame, base: int) -> DataFrame:
         """Dense deterministic ids for a large batch from the build's bucket
@@ -266,12 +403,16 @@ class SegmentWriter:
         )
 
     def delete_documents(self, urls: list[str]) -> str:
-        """Stage deletes: tombstone every doc whose url matches."""
+        """Stage deletes: tombstone every doc live in the writer's view
+        whose url matches. The lookup and the write run on the driver
+        (zero Spark jobs)."""
         seg = self._segment_name() + "_del"
-        existing = self._existing_docs().select("doc_id", "url")
-        doomed = existing.filter(F.col("url").isin(urls)).select("doc_id")
+        urls = pa.array(urls, type=pa.string())
+        check_urls(urls)
         ts_file = self.io.path("tombstones", f"{seg}.parquet")
-        doomed.write.mode("overwrite").parquet(ts_file)
+        write_tombstones(
+            self.io, ts_file, live_url_ids(self.paths, self._view(), urls)
+        )
         self._staged_tombstones.append(ts_file)
         return seg
 
@@ -286,7 +427,7 @@ class SegmentWriter:
         )
         (
             blocks.coalesce(1)
-            .sortWithinPartitions("field", "bucket", "term", "salt", "block_id")
+            .sortWithinPartitions(*SEGMENT_SORT)
             .write.mode("overwrite")
             .parquet(os.path.join(self.paths.postings, f"wave={seg}"))
         )
@@ -507,10 +648,14 @@ def visible_docs(
 def load_tombstones(
     spark: SparkSession, paths: IndexPaths, state: dict | None = None
 ) -> DataFrame | None:
+    """The distinct tombstoned ids of snapshot `state`, or None when its
+    tombstone files hold no rows (footer counts, zero Spark jobs): a put
+    that replaced nothing leaves an empty file, and an anti-join against
+    it would cost a job and filter nothing."""
     log = CommitLog(paths.root)
     state = log.read() if state is None else state
     files = [_committed(log.io, f) for f in state["tombstones"]]
-    if not files:
+    if count_tombstone_rows(paths, state) == 0:
         return None
     return (
         spark.read.schema(TOMBSTONE_SCHEMA).parquet(*files)
@@ -558,6 +703,54 @@ def tombstone_ids(paths: IndexPaths, state: dict) -> np.ndarray:
     return np.unique(col.to_numpy().astype(np.int64))
 
 
+def check_urls(urls: pa.Array | pa.ChunkedArray) -> None:
+    """A null or empty url has no url posting, so no later put or delete
+    could find its doc: reject it."""
+    bad = urls.null_count + (pc.sum(pc.equal(urls, "")).as_py() or 0)
+    if bad:
+        raise ValueError(f"{bad} urls are null or empty")
+
+
+def live_url_ids(paths: IndexPaths, state: dict, urls: pa.Array) -> np.ndarray:
+    """Sorted doc ids of the docs live in snapshot `state` whose url is in
+    `urls`, read on the driver with pyarrow (zero Spark jobs): the url
+    field's raw analyzer makes each url its own term, so its blocks list
+    every doc that ever held it, and the tombstones drop the dead ones."""
+    io = IndexFS(paths.root)
+    blocks = visible_postings_dataset(io, state).to_table(
+        columns=["doc_bytes", "tf_bytes", "len_bytes"],
+        filter=(pc.field("field") == "url") & pc.field("term").isin(urls),
+    )
+    ids = decode_blocks(
+        *(blocks[c].combine_chunks() for c in blocks.column_names)
+    ).doc_ids.astype(np.int64)
+    if state["tombstones"]:
+        return np.setdiff1d(ids, tombstone_ids(paths, state))
+    return np.unique(ids)
+
+
+def write_parquet(io: IndexFS, table_dir: str, table: pa.Table, **options) -> None:
+    """`table` as the one data file of parquet table directory `table_dir`,
+    written with pyarrow (Spark and `parquet_files` list it like a file
+    Spark wrote); `options` go to `pq.write_table`. pyarrow writes a
+    table's schema metadata to the footer only beside the serialized
+    Arrow schema, so a table without metadata gets neither."""
+    io.makedirs(table_dir)
+    pq.write_table(
+        table, posixpath.join(table_dir, "part-00000.parquet"),
+        filesystem=io.fs, store_schema=bool(table.schema.metadata), **options,
+    )
+
+
+def write_tombstones(io: IndexFS, ts_file: str, doc_ids: np.ndarray) -> None:
+    """A staged tombstone file: one file inside the `<seg>.parquet/`
+    directory the commit log names."""
+    write_parquet(
+        io, ts_file, pa.table({"doc_id": pa.array(doc_ids, type=pa.int64())}),
+        compression="snappy", use_dictionary=False, write_statistics=False,
+    )
+
+
 # Tombstone-count ceiling for the broadcast anti-join hint: 10M ids ≈
 # 80 MB — comfortably a broadcast. Above it (a web-scale purge can doom
 # billions of ids) the anti-join must shuffle; forcing the hint would
@@ -577,7 +770,6 @@ def block_rows(post: DataFrame) -> DataFrame:
     per-doc varint byte runs — never re-encoded after the analyzer pass:
     each row's pos_bytes is a zero-copy slice of its block's buffer, null
     for a freq-only field."""
-    from bayard_spark.build.codec import decode_blocks
 
     def to_rows(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:

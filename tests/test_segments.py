@@ -307,7 +307,7 @@ class TestTombstoneCount:
         assert footer == distinct == 2
 
         # deleting an already-deleted url matches no LIVE docs
-        # (_existing_docs is commit-log aware), so the new tombstone file
+        # (the url lookup is commit-log aware), so the new tombstone file
         # is empty and the footer count stays exact
         w3 = SegmentWriter(spark, builder)
         w3.delete_documents(["https://tsc.example/1"])
@@ -318,3 +318,61 @@ class TestTombstoneCount:
         e = SearchEngine(spark, root)
         assert e._n_tombstones == 2
         assert e.scores(term_q("alpha")).count() == 0
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_writer_sees_its_own_staged_work(spark, index_root, monkeypatch, path):
+    """Put, re-put and delete before one commit: the re-put tombstones the
+    first put's staged docs and the delete the re-put's, so each url is
+    visible once and the deleted one not at all, on either put path."""
+    root, builder = index_root
+    if path == "spark":
+        monkeypatch.setattr(SegmentWriter, "BULK_ID_THRESHOLD", 1)
+    urls = [f"https://own.example/{i}" for i in range(3)]
+    w = SegmentWriter(spark, builder)
+    w.put_documents(new_batch(spark, [(u, "ownfirst words") for u in urls]))
+    w.put_documents(new_batch(spark, [(u, "ownsecond words") for u in urls]))
+    w.delete_documents(urls[:1])
+    w.commit()
+    got = Counter(
+        r["url"] for r in visible_docs(spark, IndexPaths(root))
+        .filter(F.col("url").startswith("https://own.example/")).collect()
+    )
+    assert got == {urls[1]: 1, urls[2]: 1}
+    e = SearchEngine(spark, root)
+    url_q = {"kind": "term", "options": {"field": "url", "term": urls[0]}}
+    assert e.search({"query": url_q, "limit": 5}).total_hits == 0
+    assert e.scores(term_q("ownfirst")).count() == 0
+    assert e.scores(term_q("ownsecond")).count() == 2
+
+
+def test_segment_names_do_not_collide(spark, index_root, monkeypatch):
+    """Two writers in one millisecond, and one writer's two deletes in it,
+    stage under distinct names: every put and delete survives its commit."""
+    from bayard_spark.build import segments
+
+    root, builder = index_root
+    monkeypatch.setattr(
+        segments, "time", type("Clock", (), {"time": staticmethod(lambda: 1e9)})
+    )
+    doomed = [
+        r["url"] for r in visible_docs(spark, IndexPaths(root))
+        .orderBy("doc_id").limit(3).collect()
+    ]
+    w1, w2 = SegmentWriter(spark, builder), SegmentWriter(spark, builder)
+    w1.put_documents(new_batch(spark, [("https://c.example/1", "collideone")]))
+    w2.put_documents(new_batch(spark, [("https://c.example/2", "collidetwo")]))
+    w1.delete_documents(doomed[:1])
+    w1.delete_documents(doomed[1:2])
+    w2.delete_documents(doomed[2:])
+    w1.commit()
+    w2.commit()
+    state = CommitLog(root).read()
+    assert len(set(state["segments"])) == 2
+    assert len(set(state["tombstones"])) == 5
+    live = {r["url"] for r in visible_docs(spark, IndexPaths(root)).collect()}
+    assert {"https://c.example/1", "https://c.example/2"} <= live
+    assert not live & set(doomed)
+    e = SearchEngine(spark, root)
+    assert e.scores(term_q("collideone")).count() == 1
+    assert e.scores(term_q("collidetwo")).count() == 1
