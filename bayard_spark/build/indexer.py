@@ -10,8 +10,9 @@ batches):
     │    (deterministic: no sampling; one shuffle; bucket ranges contiguous)
     ├─ docs/    parquet, doc_id-sorted within partitions (min/max pruning)
     │ 3. hot-term set from a deterministic 5% doc sample (df estimate >
-    │    hot_df_threshold) → salting plan; skipped when no salt can be
-    │    nonzero (n_docs ≤ salt_span or hot_df_threshold ≥ n_docs)
+    │    hot_df_threshold) → salting plan; skipped, salting nothing,
+    │    when every salt is 0 (n_docs ≤ salt_span) or no true df can
+    │    exceed the threshold (hot_df_threshold ≥ n_docs)
     │ 4. analyzer pass (mapInArrow): per (doc, field, term) → tf, positions,
     │    doc_len — shuffle volume is postings, not token occurrences —
     │    straight into encode_blocks: groupBy(bucket, salt) → Arrow block
@@ -52,7 +53,7 @@ from pyspark.sql import functions as F
 
 from bayard_spark.analysis.analyzer import Analyzer, build_analyzers
 from bayard_spark.build.codec import varint_encode, varint_lengths
-from bayard_spark.schema import IndexMeta, IndexPaths
+from bayard_spark.schema import FieldDef, IndexMeta, IndexPaths
 
 # positions are ALREADY delta+varint encoded per (doc, term) at analyzer
 # time — one vectorized encode over the whole Arrow batch, zero-copy sliced
@@ -406,6 +407,24 @@ def row_tiebreak(df: DataFrame):
     return F.xxhash64(*[F.col(c) for c in df.columns])
 
 
+# The column that carries row_tiebreak while rows are ordered.
+TIEBREAK = "_tiebreak"
+# The upsert order, with nulls last on every key: one url's winner is its
+# first row. The build's window, a large put's window and a small put's
+# pyarrow sort all order by these keys, so they pick the same winner.
+UPSERT_ORDER = (
+    ("url", "ascending"), ("warc_ts", "descending"), (TIEBREAK, "descending")
+)
+
+
+def upsert_order() -> list:
+    """UPSERT_ORDER as Spark sort columns."""
+    return [
+        F.col(c).asc_nulls_last() if order == "ascending"
+        else F.col(c).desc_nulls_last()
+        for c, order in UPSERT_ORDER
+    ]
+
 
 @dataclass
 class BuildReport:
@@ -500,18 +519,16 @@ class IndexBuilder:
         off_df, self.last_n_docs = self.bucket_offsets(
             source, F.countDistinct("url"), 0
         )
-        src = source.withColumn("_tb", row_tiebreak(source)).withColumn(
+        src = source.withColumn(TIEBREAK, row_tiebreak(source)).withColumn(
             "doc_bucket", self.url_bucket()
         )
-        w = Window.partitionBy("doc_bucket").orderBy(
-            "url", F.desc("warc_ts"), F.desc("_tb")
-        )
+        w = Window.partitionBy("doc_bucket").orderBy(*upsert_order())
         is_first = (
             F.lag("url").over(w).isNull()
             | (F.lag("url").over(w) != F.col("url"))
         ).cast("int")
         cum = Window.partitionBy("doc_bucket").orderBy(
-            "url", F.desc("warc_ts"), F.desc("_tb")
+            *upsert_order()
         ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
         deduped = (
             src.withColumn("_new", is_first)
@@ -533,7 +550,7 @@ class IndexBuilder:
         return (
             deduped.join(off_df, "doc_bucket")
             .withColumn("doc_id", F.col("_offset") + F.col("_urlrank") - 1)
-            .drop("_offset", "doc_bucket", "_new", "_urlrank", "_tb")
+            .drop("_offset", "doc_bucket", "_new", "_urlrank", TIEBREAK)
         )
 
     def write_docs(self, with_ids: DataFrame) -> None:
@@ -591,18 +608,26 @@ class IndexBuilder:
 
     # ---------- stage 2: analyzer pass → posting rows ----------
 
-    def posting_columns(self) -> list[str]:
-        """The columns besides doc_id that posting_rows reads: the indexed
-        text, bytes and json_object fields."""
+    POSTING_TYPES = ("text", "bytes", "json_object")
+
+    def posting_fields(self, type_: str | None = None) -> list[FieldDef]:
+        """The indexed fields posting_rows reads (of one type, if given).
+        posting_rows and its bytes and json parts take their fields from
+        here, so posting_columns names every column they read."""
         return [
-            f.name for f in self.meta.fields
-            if f.indexed and f.type in ("text", "bytes", "json_object")
+            f for f in self.meta.fields
+            if f.indexed and f.type in self.POSTING_TYPES
+            and type_ in (None, f.type)
         ]
+
+    def posting_columns(self) -> list[str]:
+        """The columns besides doc_id that posting_rows reads."""
+        return [f.name for f in self.posting_fields()]
 
     def posting_rows(self, docs: DataFrame) -> DataFrame:
         fields = [
             (f.name, self.analyzers[f.analyzer], f.record)
-            for f in self.meta.text_fields()
+            for f in self.posting_fields("text")
         ]
         want_pos = {name: rec == "position" for name, _, rec in fields}
         analyzer_by_field: dict[str, Analyzer] = {
@@ -660,11 +685,8 @@ class IndexBuilder:
         """bytes fields (docs/schema.md:27,106-122): one raw term per value,
         encoded base64 (the reference API carries bytes values as base64).
         Pure JVM expressions — no Python."""
-        bfields = [
-            f for f in self.meta.fields if f.type == "bytes" and f.indexed
-        ]
         out: DataFrame | None = None
-        for f in bfields:
+        for f in self.posting_fields("bytes"):
             part = (
                 docs.filter(F.col(f.name).isNotNull())
                 .select(
@@ -727,10 +749,7 @@ class IndexBuilder:
         phrase queries across json leaves are ill-defined, so json fields
         require record ∈ {basic, freq} (the engine rejects phrase on them).
         """
-        jfields = [
-            f for f in self.meta.fields
-            if f.type == "json_object" and f.indexed
-        ]
+        jfields = self.posting_fields("json_object")
         if not jfields:
             return None
         out: DataFrame | None = None
@@ -975,9 +994,11 @@ class IndexBuilder:
             skipped.append("blocks_w0")
         else:
             t0 = time.time()
-            # No salt can be nonzero when every doc_id // salt_span is 0,
-            # and no term can pass a threshold at or above the doc count:
-            # then the sample's Spark jobs would decide nothing.
+            # Salt only a term whose true df can exceed the threshold: none
+            # can when the threshold is at or above the doc count, and no
+            # salt is nonzero when every doc_id // salt_span is 0. The 5%
+            # sample's scaled estimate can pass such a threshold, so this
+            # skip, not the sample, decides that no term is salted then.
             if n_docs is not None and (
                 n_docs <= self.meta.salt_span
                 or self.meta.hot_df_threshold >= n_docs

@@ -48,8 +48,11 @@ from pyspark.sql.types import LongType, StructField, StructType
 from bayard_spark.build.codec import decode_blocks
 from bayard_spark.build.indexer import (
     BLOCK_SCHEMA,
+    TIEBREAK,
+    UPSERT_ORDER,
     encode_blocks,
     row_tiebreak,
+    upsert_order,
     write_base_blocks,
 )
 from bayard_spark.fsio import IndexFS
@@ -77,8 +80,6 @@ SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 # Spark reads a file whose footer names a Spark version, and no legacy
 # calendar key, without rebasing its dates and timestamps.
 SPARK_VERSION_METADATA = b"org.apache.spark.version"
-# The build's per-row upsert tiebreak, carried by a put's batch on the driver.
-TIEBREAK = "_tiebreak"
 # Row order and statistics columns of a segment's postings file.
 SEGMENT_SORT = ["field", "bucket", "term", "salt", "block_id"]
 
@@ -115,13 +116,21 @@ class SegmentWriter:
     raw analyzer, and a null or empty url (which has no url posting) is
     rejected."""
 
-    # A put of at most this many rows runs on the driver: one Spark job
-    # brings the batch back, the driver deduplicates it, finds the urls it
-    # replaces, assigns ids and writes the docs and tombstone files, and a
-    # second job runs the analyzer and the term bucket. A larger batch,
-    # which need not fit in driver memory, stages through Spark with the
-    # build's bucket-offset ids.
-    BULK_ID_THRESHOLD = 4_096
+    # A put of at most BULK_ID_THRESHOLD rows and BULK_BYTES_THRESHOLD
+    # Arrow bytes runs on the driver: one Spark job brings the batch back,
+    # the driver deduplicates it, finds the urls it replaces, assigns ids
+    # and writes the docs and tombstone files, and a second job runs the
+    # analyzer and the term bucket. A larger batch, which need not fit in
+    # driver memory, stages through Spark with the build's bucket-offset
+    # ids. The row bound caps what the first job brings back; the byte
+    # bound caps the driver's work after it, whose peak grows with the
+    # batch's bytes (about 8x its Arrow bytes on webtext). On webtext, 4
+    # cores and a 2 GB driver heap, the driver path was 2.3-2.7x faster
+    # than Spark at 16,384 rows (22 MB) for 230 MB more driver Python,
+    # and 1.7-2.1x at 65,536 rows (87 MB) for 770 MB and up to 1.9 GB of
+    # JVM heap (ARCHITECTURE.md, Commit/rollback).
+    BULK_ID_THRESHOLD = 16_384
+    BULK_BYTES_THRESHOLD = 32 << 20
 
     def __init__(self, spark: SparkSession, builder) -> None:
         # builder: bayard_spark.build.indexer.IndexBuilder (shares analyzers,
@@ -237,7 +246,7 @@ class SegmentWriter:
         tombstoned (delete-by-id + add).
 
         One Spark job brings back at most BULK_ID_THRESHOLD + 1 rows with
-        the build's tiebreak hash; a batch within the gate stages on the
+        the build's tiebreak hash; a batch within both gates stages on the
         driver (`_put_on_driver`), a larger one through Spark."""
         seg = self._segment_name()
         batch = (
@@ -245,7 +254,11 @@ class SegmentWriter:
             .limit(self.BULK_ID_THRESHOLD + 1)
             .toArrow()
         )
-        if batch.num_rows > self.BULK_ID_THRESHOLD:
+        if (
+            batch.num_rows > self.BULK_ID_THRESHOLD
+            or batch.nbytes > self.BULK_BYTES_THRESHOLD
+        ):
+            del batch  # the Spark path reads the source again
             return self._put_with_spark(seg, source)
         return self._put_on_driver(seg, batch, source.schema)
 
@@ -257,10 +270,7 @@ class SegmentWriter:
         one Spark job, over doc_id and the indexed columns only."""
         check_urls(batch["url"])
         batch = batch.take(pc.sort_indices(
-            batch,
-            sort_keys=[("url", "ascending"), ("warc_ts", "descending"),
-                       (TIEBREAK, "descending")],
-            null_placement="at_end",
+            batch, sort_keys=list(UPSERT_ORDER), null_placement="at_end"
         ))
         url = batch["url"].combine_chunks()
         first = np.ones(len(url), dtype=bool)
@@ -342,16 +352,15 @@ class SegmentWriter:
         count, the ids and the join, so it is persisted for the call: the
         url window runs once instead of once per action."""
         latest = (
-            source.withColumn(
+            source.withColumn(TIEBREAK, row_tiebreak(source))
+            .withColumn(
                 "_rn",
                 F.row_number().over(
-                    Window.partitionBy("url").orderBy(
-                        F.desc("warc_ts"), F.desc(row_tiebreak(source))
-                    )
+                    Window.partitionBy("url").orderBy(*upsert_order())
                 ),
             )
             .filter(F.col("_rn") == 1)
-            .drop("_rn")
+            .drop("_rn", TIEBREAK)
             .persist()
         )
         try:

@@ -2,8 +2,8 @@
 
 - Spark jobs on the webtext meta: a 50-doc put runs 2 (the batch comes
   back, then the analyzer pass with the term bucket), a delete 0 and a
-  commit 0. A put over BULK_ID_THRESHOLD stages through Spark, with the
-  same visible result.
+  commit 0. A put over BULK_ID_THRESHOLD rows or BULK_BYTES_THRESHOLD
+  Arrow bytes stages through Spark, with the same visible result.
 - A driver-written segment holds exactly the blocks the encode step
   makes from a Spark read of its docs.
 - Every stored type read back from a driver-written docs file equals a
@@ -83,11 +83,13 @@ def ingest_batch(spark, base_urls):
     return pdf, spark.createDataFrame(pdf, WEBTEXT_SCHEMA)
 
 
-@pytest.mark.parametrize("path", ["driver", "spark"])
+@pytest.mark.parametrize("path", ["driver", "spark", "spark_bytes"])
 def test_put_delete_commit_jobs(spark, webtext_root, monkeypatch, path):
     root, builder, base_urls = webtext_root
     if path == "spark":
         monkeypatch.setattr(SegmentWriter, "BULK_ID_THRESHOLD", 10)
+    if path == "spark_bytes":
+        monkeypatch.setattr(SegmentWriter, "BULK_BYTES_THRESHOLD", 10_000)
     pdf, df = ingest_batch(spark, base_urls)
     doomed = base_urls[10:14]
     w = SegmentWriter(spark, builder)

@@ -1,6 +1,7 @@
 """Resumability: interrupted builds restart from lineage and converge to the
 same index (FIXTURES.md §5: restart → identical query results)."""
 
+import json
 import os
 import shutil
 import tempfile
@@ -109,5 +110,26 @@ def test_resume_noop_when_complete(spark):
         rep = b.build(src)
         assert rep.stages_run == []
         assert set(rep.stages_skipped) >= {"docs", "blocks_w0", "stats"}
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_threshold_at_doc_count_salts_nothing(spark):
+    """With hot_df_threshold at the doc count no term's true df can exceed
+    it, so the build salts nothing: it skips the 5% sample, whose scaled
+    estimate does pass the threshold for this corpus."""
+    root = tempfile.mkdtemp(prefix="resH_")
+    try:
+        n = 200
+        meta = webtext_index_meta(
+            num_buckets=4, salt_span=50, hot_df_threshold=n
+        )
+        b = IndexBuilder(spark, meta, root)
+        assert b.build(webtext_df(spark, n, partitions=4)).n_docs == n
+        with open(b._lineage_path("blocks")) as fh:
+            assert json.load(fh)["n_hot_terms"] == 0
+        salts = spark.read.parquet(b.paths.postings).select("salt").distinct()
+        assert [r.salt for r in salts.collect()] == [0]
+        assert b._hot_terms_sampled(spark.read.parquet(b.paths.docs))
     finally:
         shutil.rmtree(root, ignore_errors=True)
