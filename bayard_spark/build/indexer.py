@@ -400,6 +400,18 @@ def write_base_blocks(blocks: DataFrame, path: str) -> None:
     blocks.write.mode("overwrite").partitionBy("field", "bucket").parquet(path)
 
 
+def salt_column(hot_terms: list[str], salt_span: int):
+    """A posting row's salt: doc_id // salt_span for a hot term, 0 for any
+    other. The build and merge both salt with it, so a merge keeps the
+    build's block layout."""
+    if not hot_terms:
+        return F.lit(0)
+    return F.when(
+        F.col("term").isin(hot_terms),
+        (F.col("doc_id") / F.lit(salt_span)).cast("int"),
+    ).otherwise(F.lit(0))
+
+
 def row_tiebreak(df: DataFrame):
     """Order among one url's rows with equal warc_ts: an xxhash64 over every
     column, taken descending, so the build and a put pick the same upsert
@@ -867,9 +879,9 @@ class IndexBuilder:
         block doc/len columns — a pass over the COMPRESSED index instead of
         a second tokenize."""
         from bayard_spark.build.codec import decode_blocks
-        from bayard_spark.build.segments import visible_postings
+        from bayard_spark.build.segments import Snapshot
 
-        blocks = visible_postings(self.spark, self.paths).select(
+        blocks = Snapshot(self.paths).postings(self.spark).select(
             "field", "doc_bytes", "tf_bytes", "len_bytes"
         )
         if fields is not None:
@@ -899,13 +911,7 @@ class IndexBuilder:
                       hot_terms: list[str]) -> dict:
         """Salt the hot terms' posting rows, encode them and write base wave
         `wave` (a directory name only: every row of `rows` lands in it)."""
-        if hot_terms:
-            salt = F.when(
-                F.col("term").isin(hot_terms),
-                (F.col("doc_id") / F.lit(self.meta.salt_span)).cast("int"),
-            ).otherwise(F.lit(0))
-        else:
-            salt = F.lit(0)
+        salt = salt_column(hot_terms, self.meta.salt_span)
         t0 = time.time()
         write_base_blocks(
             encode_blocks(rows.withColumn("salt", salt), self.meta.block_size),

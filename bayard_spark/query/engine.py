@@ -144,45 +144,31 @@ class SearchEngine:
 
     def __init__(self, spark: SparkSession, root: str,
                  max_expansions: int = 1024):
-        import pyarrow.dataset as ds
-
-        from bayard_spark.build import segments
-        from bayard_spark.build.segments import (
-            CommitLog,
-            count_tombstone_rows,
-            docs_file_ranges,
-            load_tombstones,
-            parquet_files,
-            tombstone_ids,
-            visible_docs,
-            visible_postings,
-        )
+        from bayard_spark.analysis.analyzer import build_analyzers
+        from bayard_spark.build.segments import TOMBSTONE_BROADCAST_MAX, Snapshot
 
         self.spark = spark
         self.paths = IndexPaths(root)
-        log = CommitLog(root)
-        self.meta = IndexMeta.from_json(log.io.read_text(self.paths.meta))
-        from bayard_spark.analysis.analyzer import build_analyzers
-
+        # The snapshot: ONE commit-log read pins the postings, docs,
+        # tombstones and stats below to the same version. Opening runs no
+        # Spark job — every table read carries an explicit schema, and the
+        # stats and term dictionary are read with pyarrow from the files.
+        snap = Snapshot(self.paths)
+        self._io = snap.io
+        self.meta = IndexMeta.from_json(snap.io.read_text(self.paths.meta))
         self.analyzers = build_analyzers(self.meta.analyzers)
         self.field_analyzers = {
             f.name: f.analyzer for f in self.meta.fields if f.type == "text"
         }
-        # The snapshot: ONE commit-log read pins the postings, docs and
-        # tombstones below to the same version. Opening runs no Spark job —
-        # every table read carries an explicit schema, and the stats and
-        # term dictionary are read with pyarrow from the files themselves.
-        state = log.read()
-        self._io = log.io
-        self.postings = visible_postings(spark, self.paths, state)
-        self.docs = visible_docs(spark, self.paths, state)
+        self.postings = snap.postings(spark)
+        self.docs = snap.docs(spark)
         # Tombstoned ids are filtered out of every decoded posting stream.
         # BM25 stats refresh only at build/merge time (ROADMAP item 1).
         # The count is metadata-only (parquet footers, zero Spark jobs); it
         # over-counts duplicate tombstones, which only moves the gate
         # below toward the anti-join — the safe direction. Block-max
         # pruning keys on it too: a full block may hold deleted docs.
-        self._n_tombstones = count_tombstone_rows(self.paths, state)
+        self._n_tombstones = snap.tombstone_rows
         # Under TOMBSTONE_BROADCAST_MAX the sorted ids are broadcast once
         # per engine and dropped inside the decoder's own batch loop (no
         # join, no extra job). A web-scale purge above it keeps the
@@ -190,31 +176,18 @@ class SearchEngine:
         # billions of ids into a broadcast.
         self._dead_ids = None
         self.tombstones = None
-        if 0 < self._n_tombstones <= segments.TOMBSTONE_BROADCAST_MAX:
-            self._dead_ids = spark.sparkContext.broadcast(
-                tombstone_ids(self.paths, state)
-            )
+        if 0 < self._n_tombstones <= TOMBSTONE_BROADCAST_MAX:
+            self._dead_ids = spark.sparkContext.broadcast(snap.tombstone_ids())
         elif self._n_tombstones > 0:
-            self.tombstones = load_tombstones(spark, self.paths, state)
+            self.tombstones = snap.tombstones(spark)
         # doc-id range of every docs file, from the footers: the winners'
         # stored columns are read on the driver from the files that hold
         # them (see _fetch_stored)
-        self._doc_files = docs_file_ranges(self.paths, state)
-        self.stats = {
-            r["field"]: {
-                "n_docs": r["n_docs"],
-                "avg_len": r["avg_len"],
-            }
-            for r in ds.dataset(
-                parquet_files(log.io, log.io.path("stats")),
-                filesystem=log.io.fs, format="parquet",
-            )
-            .to_table(columns=["field", "n_docs", "avg_len"])
-            .to_pylist()
-        }
+        self._doc_files = snap.doc_files
+        self.stats = snap.stats()
         # Doc-count bound for must-join ordering (zero Spark jobs): the
         # commit log's high-water doc_id, over-counting deleted docs.
-        self._n_docs_estimate = int(state["next_doc_id"])
+        self._n_docs_estimate = snap.next_doc_id
         self._bucket_cache: dict[str, int] = {}
         self._df_cache: dict[tuple[str, str], int] = {}
         # Prepared-plan cache for decoded LEAF frames (scan→decode→score),
@@ -243,19 +216,16 @@ class SearchEngine:
         # '.*' must fail fast instead of collecting the whole term
         # dictionary to the driver.
         self.max_expansions = int(max_expansions)
-        self._preload_dictionary(log.io, state)
+        self._preload_dictionary(snap.postings_dataset())
 
-    def _preload_dictionary(self, io, state: dict) -> None:
+    def _preload_dictionary(self, dataset) -> None:
         """(field, term) → (df, bucket) from the `term` and `n_docs`
-        columns of the visible postings files and their (field, bucket)
-        directories, read with pyarrow. The term cap is checked before the
-        terms are read, the byte cap on the aggregated Arrow table before
-        any Python object is built."""
+        columns of the snapshot's postings files (`dataset`) and their
+        (field, bucket) directories, read with pyarrow. The term cap is
+        checked before the terms are read, the byte cap on the aggregated
+        Arrow table before any Python object is built."""
         import pyarrow.compute as pc
 
-        from bayard_spark.build.segments import visible_postings_dataset
-
-        dataset = visible_postings_dataset(io, state)
         # Every run of a term's blocks (one per wave and salt) starts at
         # block 0, so the block-0 count bounds the distinct (field, term)
         # pairs from one int column. Only an index over that bound pays a

@@ -3,7 +3,8 @@
 - Spark jobs on the webtext meta: a 50-doc put runs 2 (the batch comes
   back, then the analyzer pass with the term bucket), a delete 0 and a
   commit 0. A put over BULK_ID_THRESHOLD rows or BULK_BYTES_THRESHOLD
-  Arrow bytes stages through Spark, with the same visible result.
+  Arrow bytes stages through Spark, with the same visible result. Either
+  path writes one tombstone file per put.
 - A driver-written segment holds exactly the blocks the encode step
   makes from a Spark read of its docs.
 - Every stored type read back from a driver-written docs file equals a
@@ -16,6 +17,7 @@
 from __future__ import annotations
 
 import datetime
+import glob
 import itertools
 import shutil
 import tempfile
@@ -93,13 +95,15 @@ def test_put_delete_commit_jobs(spark, webtext_root, monkeypatch, path):
     pdf, df = ingest_batch(spark, base_urls)
     doomed = base_urls[10:14]
     w = SegmentWriter(spark, builder)
-    _, put_jobs = spark_jobs(spark, lambda: w.put_documents(df))
+    seg, put_jobs = spark_jobs(spark, lambda: w.put_documents(df))
     _, delete_jobs = spark_jobs(spark, lambda: w.delete_documents(doomed))
     _, commit_jobs = spark_jobs(spark, w.commit)
     if path == "driver":
         assert (put_jobs, delete_jobs, commit_jobs) == (2, 0, 0)
     else:
         assert put_jobs > 2 and (delete_jobs, commit_jobs) == (0, 0)
+    # either path writes the put's tombstones as one file
+    assert len(glob.glob(f"{root}/tombstones/{seg}.parquet/*.parquet")) == 1
     counts = Counter(
         r["url"] for r in visible_docs(spark, IndexPaths(root)).collect()
     )

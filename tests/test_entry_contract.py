@@ -198,6 +198,29 @@ def test_frozen_script_calls_bind(cls_name, method, args, kwargs):
     inspect.signature(getattr(cls, method)).bind("self", *args, **kwargs)
 
 
+# The build.segments functions perfbench calls, as (name, args): the
+# ingest round's visibility check, its merge, and its visible-file count.
+FROZEN_SEGMENTS_CALLS = [
+    ("visible_docs", ("spark", "paths")),
+    ("merge_segments", ("spark", "builder")),
+    ("CommitLog", ("root",)),
+    ("CommitLog.committed_segments", ("self",)),
+]
+
+
+@pytest.mark.parametrize(
+    "name, args", FROZEN_SEGMENTS_CALLS, ids=[c[0] for c in FROZEN_SEGMENTS_CALLS]
+)
+def test_frozen_segments_calls_bind(name, args):
+    import functools
+    import inspect
+
+    from bayard_spark.build import segments
+
+    target = functools.reduce(getattr, name.split("."), segments)
+    inspect.signature(target).bind(*args)
+
+
 def test_frozen_script_meta_builds():
     # bench.py, bench_extra.py and perfbench still pass the retired
     # num_waves; it is accepted and ignored

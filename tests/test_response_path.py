@@ -1,8 +1,9 @@
 """How a search turns winners into a response.
 
 - A request is one Spark action: term top_docs and count_and_top_docs run
-  one job each, and a 5-url `should` lookup at most two, on a snapshot
-  with tombstones. total_hits rides the top-k collect (an Observation).
+  one job each, a 5-url `should` lookup at most two and a sorted match-all
+  three, on a snapshot with tombstones. total_hits rides the top-k collect
+  (an Observation).
 - The winners' url, timestamp and requested stored fields are read on the
   driver for the winners only; the values equal a Spark collect() of the
   same rows for every stored type (timestamp, binary, u64 decimal, json),
@@ -259,6 +260,15 @@ def test_jobs_per_request_on_tombstoned_snapshot(spark, tombstoned):
     assert n <= 2
     assert resp.total_hits == len(live)
     assert sorted(d["id"] for d in resp.documents) == sorted(live)
+    # the docs anti-join the tombstones without a distinct: the sorted
+    # match-all runs 3 jobs (4 with the distinct's shuffle)
+    all_sorted = {
+        "query": {"kind": "all"}, "collection_kind": "count_and_top_docs",
+        "hits": 10, "sort": {"field": "warc_ts", "order": "desc"},
+    }
+    resp, n = spark_jobs(spark, lambda: engine.search(all_sorted))
+    assert n == 3
+    assert resp.total_hits == 200 + 25 - 4
 
 
 @pytest.fixture(scope="module")

@@ -12,10 +12,9 @@ from bayard_spark.build.indexer import IndexBuilder
 from bayard_spark.build.segments import (
     CommitLog,
     SegmentWriter,
-    load_tombstones,
+    Snapshot,
     merge_segments,
     visible_docs,
-    visible_postings_dataset,
 )
 from bayard_spark.query import SearchEngine
 from bayard_spark.schema import IndexPaths, webtext_index_meta
@@ -55,16 +54,11 @@ def live_postings(spark, root):
     reference decoder; positions are None for a freq-only field."""
     from bayard_spark.build.codec import decode_block, varint_decode
 
-    log = CommitLog(root)
-    state = log.read()
-    dead = set()
-    if state["tombstones"]:
-        dead = {
-            r["doc_id"]
-            for r in load_tombstones(spark, IndexPaths(root), state).collect()
-        }
+    snap = Snapshot(IndexPaths(root))
+    ts = snap.tombstones(spark)
+    dead = set() if ts is None else {r["doc_id"] for r in ts.collect()}
     cols = ["field", "term", "doc_bytes", "tf_bytes", "len_bytes", "pos_bytes"]
-    tbl = visible_postings_dataset(log.io, state).to_table(columns=cols)
+    tbl = snap.postings_dataset().to_table(columns=cols)
     out = []
     for f, t, db, tb, lb, pb in zip(*(tbl[c].to_pylist() for c in cols)):
         d, tf, pos, offs = decode_block(db, tb, pb)
@@ -79,8 +73,7 @@ def live_postings(spark, root):
 
 
 def max_salt(root):
-    log = CommitLog(root)
-    salts = visible_postings_dataset(log.io, log.read()).to_table(
+    salts = Snapshot(IndexPaths(root)).postings_dataset().to_table(
         columns=["salt"]
     )["salt"]
     return max(salts.to_pylist())
@@ -220,6 +213,44 @@ class TestSegments:
             assert stats[fld]["n_docs"] == n_live
 
 
+@pytest.mark.parametrize("index_root", ["salted"], indirect=True)
+def test_merge_keeps_the_build_salt_layout(spark, index_root):
+    """After a put of docs holding a hot term and a merge, each salt-s
+    block of a term the build salted holds only doc ids in
+    [s * salt_span, (s + 1) * salt_span), as a build lays them out, and
+    every query matches the same docs as before the merge."""
+    from bayard_spark.build.codec import decode_block
+
+    root, builder = index_root
+    span = builder.meta.salt_span
+    w = SegmentWriter(spark, builder)
+    w.put_documents(new_batch(spark, [
+        (f"https://salt.example/{i}", "the salted page") for i in range(3)
+    ]))
+    w.commit()
+    queries = [term_q(t) for t in ("the", "salted", "page", "water")]
+
+    def matches():
+        e = SearchEngine(spark, root)
+        return [
+            sorted(r["doc_id"] for r in e.scores(q).collect()) for q in queries
+        ]
+
+    before = matches()
+    merge_segments(spark, builder)
+    assert matches() == before
+    cols = ["term", "salt", "doc_bytes", "tf_bytes", "pos_bytes"]
+    tbl = Snapshot(IndexPaths(root)).postings_dataset().to_table(columns=cols)
+    rows = list(zip(*(tbl[c].to_pylist() for c in cols)))
+    hot = {t for t, salt, *_ in rows if salt > 0}
+    assert "the" in hot
+    for t, salt, db, tb, pb in rows:
+        if t in hot:
+            ids = decode_block(db, tb, pb)[0]
+            assert salt * span <= ids.min(), (t, salt)
+            assert ids.max() < (salt + 1) * span, (t, salt)
+
+
 def test_put_and_build_pick_the_same_tied_winner(spark, index_root):
     """Two rows per url with equal warc_ts: a put keeps the same row per
     url as a build over the same batch (the build's all-column hash
@@ -252,8 +283,9 @@ def test_put_and_build_pick_the_same_tied_winner(spark, index_root):
 
 class TestCommittedFilesRequired:
     def test_missing_committed_file_raises(self, spark, index_root):
-        """A tombstone file or segment docs dir the commit log names must
-        exist: skipping it would resurrect deleted docs or drop live ones."""
+        """A tombstone file, segment docs dir or segment postings dir the
+        commit log names must exist: skipping it would resurrect deleted
+        docs, drop live ones, or leave live docs that no term finds."""
         root, builder = index_root
         w = SegmentWriter(spark, builder)
         w.put_documents(
@@ -272,23 +304,22 @@ class TestCommittedFilesRequired:
         assert SearchEngine(spark, root).scores(term_q("gone")).count() == 0
 
         seg_docs = os.path.join(root, "segments", state["segments"][-1], "docs")
-        shutil.rmtree(seg_docs)
-        with pytest.raises(FileNotFoundError):
-            SearchEngine(spark, root)
+        seg_postings = os.path.join(
+            root, "postings", f"wave={state['segments'][-1]}"
+        )
+        for gone in (seg_postings, seg_docs):
+            shutil.move(gone, gone + ".moved")
+            with pytest.raises(FileNotFoundError):
+                SearchEngine(spark, root)
+            shutil.move(gone + ".moved", gone)
 
 
 class TestTombstoneCount:
     def test_footer_count_matches_and_overcounts_dups(self, spark, index_root):
-        """count_tombstone_rows is metadata-only (parquet footers): equal
-        to the distinct tombstone count normally, and an OVER-count when
-        the same doc is tombstoned in two commits — the safe direction
+        """Snapshot.tombstone_rows is metadata-only (parquet footers):
+        equal to the distinct tombstone count normally, and an OVER-count
+        when the same doc is tombstoned in two commits — the safe direction
         for the broadcast gate."""
-        from bayard_spark.build.segments import (
-            count_tombstone_rows,
-            load_tombstones,
-        )
-        from bayard_spark.query.engine import IndexPaths
-
         root, builder = index_root
         w = SegmentWriter(spark, builder)
         w.put_documents(
@@ -297,14 +328,13 @@ class TestTombstoneCount:
         )
         w.commit()
         paths = IndexPaths(root)
-        assert count_tombstone_rows(paths) == 0
+        assert Snapshot(paths).tombstone_rows == 0
 
         w2 = SegmentWriter(spark, builder)
         w2.delete_documents(["https://tsc.example/1", "https://tsc.example/2"])
         w2.commit()
-        distinct = load_tombstones(spark, paths).count()
-        footer = count_tombstone_rows(paths)
-        assert footer == distinct == 2
+        snap = Snapshot(paths)
+        assert snap.tombstone_rows == snap.tombstone_ids().size == 2
 
         # deleting an already-deleted url matches no LIVE docs
         # (the url lookup is commit-log aware), so the new tombstone file
@@ -312,8 +342,8 @@ class TestTombstoneCount:
         w3 = SegmentWriter(spark, builder)
         w3.delete_documents(["https://tsc.example/1"])
         w3.commit()
-        assert load_tombstones(spark, paths).count() == 2
-        assert count_tombstone_rows(paths) == 2
+        snap = Snapshot(paths)
+        assert snap.tombstones(spark).count() == snap.tombstone_rows == 2
 
         e = SearchEngine(spark, root)
         assert e._n_tombstones == 2

@@ -9,27 +9,31 @@ engine reads equals what Spark's own schema-inferring reads return.
 
 from __future__ import annotations
 
+import glob
 import importlib.util
 import itertools
 import os
 import shutil
 import tempfile
+from collections import Counter
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
 
+from bayard_spark.build import segments
 from bayard_spark.build.indexer import IndexBuilder
 from bayard_spark.build.segments import (
     CommitLog,
     SegmentWriter,
-    load_tombstones,
+    Snapshot,
     merge_segments,
 )
 from bayard_spark.query import SearchEngine
-from bayard_spark.schema import webtext_index_meta
+from bayard_spark.schema import IndexPaths, webtext_index_meta
 from bayard_spark.sources.webtext import (
     WEBTEXT_SCHEMA,
     synthesize_batch,
@@ -128,6 +132,43 @@ class TestSnapshotOpen:
         assert n_jobs == 0
         assert engine._n_tombstones > 0 and engine._dict_complete
 
+    def test_open_reads_each_footer_and_lists_each_table_once(
+        self, spark, snapshot, monkeypatch
+    ):
+        """One open, on a snapshot with three segments and a delete, reads
+        the footer of every docs and tombstone file exactly once and lists
+        each table directory once."""
+        root, _, base_urls = snapshot
+        state = CommitLog(root).read()
+        assert len(state["segments"]) == 3
+        assert any(t.endswith("_del.parquet") for t in state["tombstones"])
+        footers, listings = Counter(), Counter()
+        read_metadata, parquet_files = pq.read_metadata, segments.parquet_files
+
+        def count_footer(where, *args, **kwargs):
+            footers[where] += 1
+            return read_metadata(where, *args, **kwargs)
+
+        def count_listing(io, path):
+            listings[path] += 1
+            return parquet_files(io, path)
+
+        monkeypatch.setattr(pq, "read_metadata", count_footer)
+        monkeypatch.setattr(segments, "parquet_files", count_listing)
+        SearchEngine(spark, root)
+        want = {
+            f for pattern in ("docs", "segments/*/docs", "tombstones/*.parquet")
+            for f in glob.glob(os.path.join(root, pattern, "*.parquet"))
+        }
+        assert set(footers) == want
+        assert set(footers.values()) == {1}
+        assert set(listings.values()) == {1}
+        # a put's or a delete's url lookup reads no docs footer
+        footers.clear()
+        snap = Snapshot(IndexPaths(root))
+        assert snap.live_url_ids(pa.array(base_urls[:5])).size == 3
+        assert set(footers) == {f for f in want if "/tombstones/" in f}
+
     def test_stats_and_dictionary_match_spark_reads(self, spark, snapshot):
         root, builder, _ = snapshot
         engine = SearchEngine(spark, root)
@@ -187,11 +228,11 @@ class TestSnapshotOpen:
     def test_tombstones_match_spark_read(self, spark, snapshot):
         root, builder, _ = snapshot
         state = CommitLog(root).read()
-        got = load_tombstones(spark, builder.paths, state)
+        got = Snapshot(builder.paths, state).tombstones(spark)
         want = spark.read.parquet(*state["tombstones"]).select("doc_id")
-        assert got.schema == want.distinct().schema
+        assert got.schema == want.schema
         assert sorted(r[0] for r in got.collect()) == sorted(
-            {r[0] for r in want.collect()}
+            r[0] for r in want.collect()
         )
 
     def test_over_cap_dictionary_falls_back_to_lazy_lookups(

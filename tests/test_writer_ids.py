@@ -158,7 +158,7 @@ def test_interleaved_writers_never_share_id_ranges(spark, tmp_path_factory):
     # a second writer created while w1 has staged-but-uncommitted work must
     # reserve PAST w1's marker, not reuse its range
     w2 = SegmentWriter(spark, builder)
-    base2 = w2._next_doc_id()
+    base2 = w2._next_doc_id(w2._view())
     assert base2 >= w1._reserved_next
     w2.put_documents(_put_batch(spark, 5, seed=202))
     w2.commit()
@@ -177,7 +177,7 @@ def test_commit_fails_loudly_on_overlapping_reservation(
 
     builder = _mini_builder(spark, tmp_path_factory)
     w1 = SegmentWriter(spark, builder)
-    w1._next_doc_id()  # reserve BEFORE w2 stages (no marker yet -> overlap)
+    w1._next_doc_id(w1._view())  # reserve BEFORE w2 stages (no marker yet -> overlap)
     w2 = SegmentWriter(spark, builder)
     w2.put_documents(_put_batch(spark, 5, seed=303))
     w2.commit()
@@ -198,11 +198,12 @@ def test_corrupt_reservation_marker_raises(spark, tmp_path_factory):
         f.write("{not json")
     w = SegmentWriter(spark, builder)
     with pytest.raises(ValueError, match="corrupt reservation marker"):
-        w._next_doc_id()
+        w._next_doc_id(w._view())
     with open(os.path.join(seg, "_reserved.json"), "w") as f:
         f.write('{"other": 1}')
+    w = SegmentWriter(spark, builder)
     with pytest.raises(ValueError, match="corrupt reservation marker"):
-        SegmentWriter(spark, builder)._next_doc_id()
+        w._next_doc_id(w._view())
 
 
 def test_same_writer_put_commit_put_commit(spark, tmp_path_factory):
