@@ -19,8 +19,11 @@ batches):
     │    encoder (delta+varint, 128-doc blocks, block-max metadata as plain
     │    columns)
     ├─ postings/wave=0/field=<f>/bucket=<b>/  parquet
-    ├─ stats/   (field, n_docs, total_len, avg_len) — exact lengths
-    │           (SURVEY §2.7) live per posting in each block's len_bytes
+    │ 5. BM25 stats read back from what was just written: a field's total
+    │    length is Σ tf over its postings in the wave's blocks (a doc's
+    │    length is the sum of its tfs), N is Σ num_rows over the docs
+    │    footers; both go into commits.json with next_doc_id. Exact
+    │    per-doc lengths (SURVEY §2.7) live in each block's len_bytes.
     └─ lineage/ per-stage metrics: docs, blocks, stats, build_ms —
        restart skips completed stages (resumable builds).
 
@@ -50,9 +53,14 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bayard_spark.analysis.analyzer import Analyzer, build_analyzers
-from bayard_spark.build.codec import varint_encode, varint_lengths
+from bayard_spark.build.codec import (
+    decode_blocks,
+    varint_encode,
+    varint_lengths,
+)
 from bayard_spark.schema import FieldDef, IndexMeta, IndexPaths
 
 # positions are ALREADY delta+varint encoded per (doc, term) at analyzer
@@ -570,53 +578,26 @@ class IndexBuilder:
         # CONTIGUOUS doc_id range by construction — a within-partition sort
         # already yields range-layout files (row-group min/max pruning works)
         # without repartitionByRange's extra sampling pass + shuffle.
-        #
-        # Per-field token lengths (_dl_<field>) are computed IN this pass
-        # (the text already streams through it), so norms/stats later read
-        # tiny int columns instead of re-tokenizing the corpus — one fewer
-        # full text pass per build.
         (
-            self._with_doc_lengths(with_ids.sortWithinPartitions("doc_id"))
+            with_ids.sortWithinPartitions("doc_id")
             .write.mode("overwrite")
             .option("compression", self.meta.docstore_compression)
             .parquet(self.paths.docs)
         )
 
-    def _with_doc_lengths(self, docs: DataFrame) -> DataFrame:
-        """Append one `_dl_<field>` int column per text field (kept-token
-        count under that field's analyzer) via a single Arrow pass."""
-        from bayard_spark.analysis import arrow_native
-
-        fields = [
-            (f.name, self.analyzers[f.analyzer])
-            for f in self.meta.text_fields()
-        ]
-        schema = ", ".join(
-            [f"{f.name} {f.dataType.simpleString()}" for f in docs.schema]
-            + [f"_dl_{name} int" for name, _ in fields]
+    def docs_footers(self, path: str) -> tuple[StructType, int]:
+        """The Spark schema and the row count of docs table `path`, from
+        its parquet footers (no Spark job)."""
+        from bayard_spark.build.segments import (
+            footer_spark_schema,
+            read_footers,
         )
 
-        def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for rb in batches:
-                arrays = list(rb.columns)
-                names = list(rb.schema.names)
-                pdf = None
-                for fname, an in fields:
-                    col = rb.column(fname)
-                    if arrow_native.supports(an):
-                        lens = arrow_native.doc_lengths(col, an)
-                    else:
-                        if pdf is None:
-                            pdf = rb.to_pandas()
-                        frame = an.tokenize(pdf[fname].reset_index(drop=True))
-                        lens = np.bincount(
-                            frame["idx"].to_numpy(), minlength=rb.num_rows
-                        ).astype(np.int32)
-                    arrays.append(pa.array(lens, type=pa.int32()))
-                    names.append(f"_dl_{fname}")
-                yield pa.RecordBatch.from_arrays(arrays, names)
-
-        return docs.mapInArrow(run, schema)
+        footers = read_footers(self.io, path)
+        return (
+            footer_spark_schema(footers[0][1], footers[0][0]),
+            sum(md.num_rows for _, md in footers),
+        )
 
     # ---------- stage 2: analyzer pass → posting rows ----------
 
@@ -837,76 +818,6 @@ class IndexBuilder:
         )
         return [r["term"] for r in hot.collect()]
 
-    def norms_direct(self, docs: DataFrame) -> DataFrame:
-        """(field, doc_id, len) from the `_dl_<field>` columns materialized
-        by write_docs — a JVM-only unpivot of tiny int columns (the text is
-        NOT re-tokenized). bytes fields contribute len 0/1 (JVM expr);
-        json_object fields derive lengths from the written posting blocks
-        (their token counts only exist post-expansion)."""
-        out: DataFrame | None = None
-        for f in self.meta.text_fields():
-            part = docs.select(
-                F.lit(f.name).alias("field"),
-                "doc_id",
-                F.col(f"_dl_{f.name}").cast("int").alias("len"),
-            )
-            out = part if out is None else out.unionByName(part)
-        for f in self.meta.fields:
-            if f.type == "bytes" and f.indexed:
-                part = docs.select(
-                    F.lit(f.name).alias("field"),
-                    "doc_id",
-                    F.when(F.col(f.name).isNotNull(), 1)
-                    .otherwise(0)
-                    .cast("int")
-                    .alias("len"),
-                )
-                out = part if out is None else out.unionByName(part)
-        jnames = [
-            f.name for f in self.meta.fields
-            if f.type == "json_object" and f.indexed
-        ]
-        if jnames:
-            jn = self.norms_from_blocks(fields=jnames).select(
-                "field", "doc_id", F.col("len").cast("int").alias("len")
-            )
-            out = jn if out is None else out.unionByName(jn)
-        assert out is not None, "index has no indexed fields"
-        return out
-
-    def norms_from_blocks(self, fields: list[str] | None = None) -> DataFrame:
-        """Derive (field, doc_id, len) by decoding the committed snapshot's
-        block doc/len columns — a pass over the COMPRESSED index instead of
-        a second tokenize."""
-        from bayard_spark.build.codec import decode_blocks
-        from bayard_spark.build.segments import Snapshot
-
-        blocks = Snapshot(self.paths).postings(self.spark).select(
-            "field", "doc_bytes", "tf_bytes", "len_bytes"
-        )
-        if fields is not None:
-            blocks = blocks.filter(F.col("field").isin(fields))
-
-        def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for rb in batches:
-                if rb.num_rows == 0:
-                    continue
-                dec = decode_blocks(*rb.columns[1:4])
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        rb.column(0).take(pa.array(np.repeat(
-                            np.arange(rb.num_rows, dtype=np.int32),
-                            dec.counts,
-                        ))),
-                        pa.array(dec.doc_ids.astype(np.int64)),
-                        pa.array(dec.lens.astype(np.int64)),
-                    ],
-                    names=["field", "doc_id", "len"],
-                )
-
-        decoded = blocks.mapInArrow(run, "field string, doc_id long, len long")
-        return decoded.groupBy("field", "doc_id").agg(F.max("len").alias("len"))
-
     def blockify_wave(self, rows: DataFrame, wave: int,
                       hot_terms: list[str]) -> dict:
         """Salt the hot terms' posting rows, encode them and write base wave
@@ -921,44 +832,61 @@ class IndexBuilder:
 
     # ---------- stage 4: stats ----------
 
+    def read_back_stats(self, wave: str, n_docs: int) -> dict:
+        """BM25 stats of a base wave just written, read back from its
+        blocks: {field: {"total_len", "n_docs"}} for every posting field,
+        0 for a field without postings. A doc's field length is the sum of
+        its tfs in that field, so a field's total length is Σ tf over its
+        postings: one mapInArrow decodes the wave's doc, tf and len columns
+        and sums each block's tfs, and a groupBy(field) brings back one row
+        per field. `n_docs` is the wave's doc count."""
+
+        def tf_sums(
+            batches: Iterator[pa.RecordBatch],
+        ) -> Iterator[pa.RecordBatch]:
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                dec = decode_blocks(*rb.columns[1:])
+                tfs = dec.tfs.astype(np.int64)
+                starts = np.cumsum(dec.counts) - dec.counts
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(0), pa.array(np.add.reduceat(tfs, starts))],
+                    names=["field", "total_len"],
+                )
+
+        totals = dict(
+            self.spark.read.schema(BLOCK_SCHEMA).parquet(wave)
+            .select("field", "doc_bytes", "tf_bytes", "len_bytes")
+            .mapInArrow(tf_sums, "field string, total_len long")
+            .groupBy("field").agg(F.sum("total_len"))
+            .collect()
+        )
+        return {
+            f.name: {"total_len": int(totals.get(f.name, 0)), "n_docs": n_docs}
+            for f in self.posting_fields()
+        }
+
     def write_norms_stats_direct(
-        self, docs: DataFrame, n_docs: int | None = None
+        self, docs: DataFrame | None, n_docs: int | None = None
     ) -> None:
-        """Build fast path: stats from the analyzer's per-field lengths,
-        then the dense-id count published to the commit log."""
-        self._publish_next_doc_id(
-            self.write_stats(self.norms_direct(docs), n_docs)
-        )
-
-    def write_stats(self, norms: DataFrame, n_docs: int | None = None) -> int:
-        """Per-field (n_docs_field, total_len, n_docs, avg_len) from a
-        (field, doc_id, len) frame; returns n_docs. The lengths themselves
-        are not stored apart: every block carries them in `len_bytes`."""
-        if n_docs is None:
-            n_docs = self.spark.read.parquet(self.paths.docs).count()
-        (
-            norms.groupBy("field")
-            .agg(
-                F.count("*").alias("n_docs_field"),
-                F.sum("len").alias("total_len"),
-            )
-            .withColumn("n_docs", F.lit(n_docs))
-            .withColumn("avg_len", F.col("total_len") / F.col("n_docs"))
-            .write.mode("overwrite")
-            .parquet(self.paths.stats)
-        )
-        return n_docs
-
-    def _publish_next_doc_id(self, n_docs: int) -> None:
-        """Record the build's dense-id count as the commit log's high-water
-        doc_id, so the first put after a build reads it from the log.
-        Read-modify-write: committed segments and tombstones survive a
-        rebuild, and the mark never moves back."""
+        """The build's stats stage: base wave 0's stats (read_back_stats)
+        and its dense-id count, published in one commit-log write. `docs`
+        is not read; without `n_docs` the count comes from the docs
+        footers."""
         from bayard_spark.build.segments import CommitLog
 
+        if n_docs is None:
+            _, n_docs = self.docs_footers(self.io.path("docs"))
+        stats = self.read_back_stats(
+            os.path.join(self.paths.postings, "wave=0"), n_docs
+        )
+        # Read-modify-write: committed segments and tombstones survive a
+        # rebuild, and the high-water doc_id never moves back.
         log = CommitLog(self.paths.root)
         state = log.read()
         state["next_doc_id"] = max(int(state.get("next_doc_id", 0)), n_docs)
+        state["stats"] = stats
         log.write(state)
 
     # ---------- orchestration ----------
@@ -966,6 +894,8 @@ class IndexBuilder:
     def build(self, source: DataFrame, resume: bool = True) -> BuildReport:
         """docs → blocks_w0 → stats; with `resume`, a stage whose lineage
         marker and output exist is skipped."""
+        from bayard_spark.build.segments import CommitLog
+
         t_start = time.time()
         run: list[str] = []
         skipped: list[str] = []
@@ -973,19 +903,18 @@ class IndexBuilder:
         self._drop_multiwave_build(resume)
         self.io.write_text(self.paths.meta, self.meta.to_json())
 
-        n_docs: int | None = None
         if resume and _success(self.paths.docs) and self._lineage_done("docs"):
             skipped.append("docs")
         else:
             t0 = time.time()
-            with_ids = self.assign_doc_ids(source)
-            self.write_docs(with_ids)
-            n_docs = self.last_n_docs
-            self._log_lineage("docs", {"docs": n_docs,
+            self.write_docs(self.assign_doc_ids(source))
+            self._log_lineage("docs", {"docs": self.last_n_docs,
                                        "build_ms": (time.time() - t0) * 1e3})
             run.append("docs")
 
-        docs = self.spark.read.parquet(self.paths.docs)
+        # the docs read takes its schema and the doc count from the footers
+        schema, n_docs = self.docs_footers(self.io.path("docs"))
+        docs = self.spark.read.schema(schema).parquet(self.paths.docs)
         # parquet reads coalesce small files toward maxPartitionBytes, which
         # can leave the (CPU-heavy) analyzer pass with 1-2 tasks on a small
         # corpus. Ensure at least one task per core; no-op at real scale
@@ -1005,7 +934,7 @@ class IndexBuilder:
             # salt is nonzero when every doc_id // salt_span is 0. The 5%
             # sample's scaled estimate can pass such a threshold, so this
             # skip, not the sample, decides that no term is salted then.
-            if n_docs is not None and (
+            if (
                 n_docs <= self.meta.salt_span
                 or self.meta.hot_df_threshold >= n_docs
             ):
@@ -1022,9 +951,10 @@ class IndexBuilder:
             self._log_lineage("blocks", metrics)
             run.append("blocks_w0")
 
-        # field lengths come from the docs write's `_dl_<field>` columns
-        if resume and _success(self.paths.stats) and self._lineage_done(
-            "stats"
+        # stats are read back from the wave's blocks and live in the log
+        if (
+            resume and self._lineage_done("stats")
+            and "stats" in CommitLog(self.paths.root).read()
         ):
             skipped.append("stats")
         else:
@@ -1033,8 +963,6 @@ class IndexBuilder:
             self._log_lineage("stats", {"build_ms": (time.time() - t0) * 1e3})
             run.append("stats")
 
-        if n_docs is None:
-            n_docs = self.spark.read.parquet(self.paths.docs).count()
         return BuildReport(
             n_docs=n_docs,
             stages_run=run,

@@ -519,6 +519,16 @@ def parquet_files(io: IndexFS, path: str) -> list[str]:
     )
 
 
+def read_footers(io: IndexFS, table: str) -> list[tuple[str, pq.FileMetaData]]:
+    """(file, footer) of each data file of table directory `table`. Spark
+    and `write_parquet` write at least one file per table, empty or not,
+    so a table without one is missing."""
+    files = parquet_files(io, table)
+    if not files:
+        raise FileNotFoundError(f"committed table missing: {table}")
+    return [(f, pq.read_metadata(f, filesystem=io.fs)) for f in files]
+
+
 def footer_spark_schema(md: pq.FileMetaData, path: str) -> StructType:
     """The Spark schema a parquet file was written with, from its footer."""
     kv = md.metadata or {}
@@ -529,7 +539,7 @@ def footer_spark_schema(md: pq.FileMetaData, path: str) -> StructType:
 
 class Snapshot:
     """One version of the index: the base waves and doc store plus the
-    segments and tombstones one commit-log state names, and `stats/`.
+    segments, tombstones and BM25 stats one commit-log state names.
 
     The log is read once, when no state is given. Each part is listed, and
     each of its footers read, the first time a caller asks for it and
@@ -551,15 +561,6 @@ class Snapshot:
     def next_doc_id(self) -> int:
         """The log's high-water doc id: every id below it is taken."""
         return int(self.state["next_doc_id"])
-
-    def _footers(self, table: str) -> list[tuple[str, pq.FileMetaData]]:
-        """(file, footer) of each data file of committed table `table`.
-        Spark and `write_parquet` write at least one file per table, empty
-        or not, so a table without one is missing."""
-        files = parquet_files(self.io, table)
-        if not files:
-            raise FileNotFoundError(f"committed table missing: {table}")
-        return [(f, pq.read_metadata(f, filesystem=self.io.fs)) for f in files]
 
     # ---------- postings ----------
 
@@ -649,16 +650,19 @@ class Snapshot:
         ]
         return [
             (path, [(f, footer_spark_schema(md, f), md)
-                    for f, md in self._footers(table)])
+                    for f, md in read_footers(self.io, table)])
             for path, table in tables
         ]
 
     @cached_property
-    def doc_files(self) -> list[tuple[str, StructType, int, int]]:
-        """(file, Spark schema, min doc_id, max doc_id) of every non-empty
-        docs file. Build files hold a few contiguous bucket ranges each and
-        a put writes one file, so a handful of ids maps to a handful of
-        files."""
+    def doc_files(
+        self,
+    ) -> list[tuple[str, StructType, pq.FileMetaData, np.ndarray]]:
+        """(file, Spark schema, footer, [min, max] doc_id of each row
+        group) of every non-empty docs file; a row group without
+        statistics spans every id. Build files hold a few contiguous bucket
+        ranges each and a put writes one file, so a handful of ids maps to
+        a handful of files and row groups."""
         out = []
         for _, files in self._docs_footers:
             for f, schema, md in files:
@@ -667,15 +671,14 @@ class Snapshot:
                 col = [
                     md.schema.column(i).path for i in range(md.num_columns)
                 ].index("doc_id")
-                stats = [
-                    md.row_group(r).column(col).statistics
-                    for r in range(md.num_row_groups)
-                ]
-                if all(st is not None and st.has_min_max for st in stats):
-                    out.append((f, schema, min(st.min for st in stats),
-                                max(st.max for st in stats)))
-                else:
-                    out.append((f, schema, -(1 << 63), (1 << 63) - 1))
+                ranges = []
+                for r in range(md.num_row_groups):
+                    st = md.row_group(r).column(col).statistics
+                    ranges.append(
+                        (st.min, st.max) if st is not None and st.has_min_max
+                        else (-(1 << 63), (1 << 63) - 1)
+                    )
+                out.append((f, schema, md, np.array(ranges, dtype=np.int64)))
         return out
 
     def docs(self, spark: SparkSession) -> DataFrame:
@@ -695,7 +698,10 @@ class Snapshot:
 
     @cached_property
     def _tombstone_files(self) -> list[tuple[str, pq.FileMetaData]]:
-        return [ff for t in self.state["tombstones"] for ff in self._footers(t)]
+        return [
+            ff for t in self.state["tombstones"]
+            for ff in read_footers(self.io, t)
+        ]
 
     @property
     def tombstone_rows(self) -> int:
@@ -727,14 +733,17 @@ class Snapshot:
         )
 
     def stats(self) -> dict[str, dict]:
-        """field → {n_docs, avg_len} from `stats/`."""
-        table = ds.dataset(
-            parquet_files(self.io, self.io.path("stats")),
-            filesystem=self.io.fs, format="parquet",
-        ).to_table(columns=["field", "n_docs", "avg_len"])
+        """field → {n_docs, avg_len}, from the (total_len, n_docs) pair per
+        field that a build or a merge publishes in the log."""
+        if "stats" not in self.state:
+            raise ValueError(
+                f"{self.paths.root}: {COMMIT_LOG} carries no BM25 stats; "
+                "run merge_segments or rebuild the index"
+            )
         return {
-            r["field"]: {"n_docs": r["n_docs"], "avg_len": r["avg_len"]}
-            for r in table.to_pylist()
+            f: {"n_docs": s["n_docs"],
+                "avg_len": s["total_len"] / s["n_docs"] if s["n_docs"] else 0.0}
+            for f, s in self.state["stats"].items()
         }
 
 
@@ -842,7 +851,8 @@ def block_rows(post: DataFrame) -> DataFrame:
 
 def merge_segments(spark: SparkSession, builder) -> dict:
     """Compact all visible postings into fresh base waves, applying
-    tombstones physically; resets the commit log.
+    tombstones physically; resets the commit log, with the merged
+    version's BM25 stats, in one write.
 
     Fully distributed: blocks decode to posting rows (mapInArrow),
     tombstones drop via an anti-join (JVM-side — the driver never
@@ -852,7 +862,10 @@ def merge_segments(spark: SparkSession, builder) -> dict:
     biggest; past the gate the anti-join shuffles. The build's hot terms
     (those with a block of salt > 0) are salted as the build salts them,
     then the build's encode step and base-wave write run, so merged
-    output is byte-deterministic with a fresh build.
+    output is byte-deterministic with a fresh build. The stats are read
+    back from the merged blocks and the merged docs' footers as a build
+    reads its own, so a merge also brings stats into the log of an index
+    that has none.
     """
     paths: IndexPaths = builder.paths
     snap = Snapshot(paths)
@@ -873,11 +886,11 @@ def merge_segments(spark: SparkSession, builder) -> dict:
     io = snap.io
     merged_dir = io.path("postings_merged")
     io.delete_dir(merged_dir)
+    merged_wave = os.path.join(merged_dir, "wave=0")
     write_base_blocks(
-        encode_blocks(rows, builder.meta.block_size),
-        os.path.join(merged_dir, "wave=0"),
+        encode_blocks(rows, builder.meta.block_size), merged_wave
     )
-    # swap postings dir; rewrite docs without tombstones; reset log
+    # rewrite docs without tombstones; swap the dirs; reset the log
     new_docs_dir = io.path("docs_merged")
     io.delete_dir(new_docs_dir)
     (
@@ -885,6 +898,8 @@ def merge_segments(spark: SparkSession, builder) -> dict:
         .option("compression", builder.meta.docstore_compression)
         .parquet(new_docs_dir)
     )
+    _, n_docs = builder.docs_footers(new_docs_dir)
+    stats = builder.read_back_stats(merged_wave, n_docs)
     old_post = paths.postings + ".old"
     io.delete_dir(old_post)
     io.rename(paths.postings, old_post)
@@ -897,12 +912,11 @@ def merge_segments(spark: SparkSession, builder) -> dict:
     io.delete_dir(old_docs)
     io.delete_dir(io.path("segments"))
     io.delete_dir(io.path("tombstones"))
-    log = CommitLog(paths.root)
-    prior = log.read()
+    io.delete_dir(io.path("stats"))  # the table older builds wrote
     # merge keeps doc ids; the high-water mark survives
-    log.write({
+    CommitLog(paths.root).write({
         "segments": [], "tombstones": [],
-        "version": prior["version"] + 1, "next_doc_id": prior["next_doc_id"],
+        "version": snap.state["version"] + 1,
+        "next_doc_id": snap.next_doc_id, "stats": stats,
     })
-    builder.write_stats(builder.norms_from_blocks())
     return {"merged": True}

@@ -151,8 +151,9 @@ class SearchEngine:
         self.paths = IndexPaths(root)
         # The snapshot: ONE commit-log read pins the postings, docs,
         # tombstones and stats below to the same version. Opening runs no
-        # Spark job — every table read carries an explicit schema, and the
-        # stats and term dictionary are read with pyarrow from the files.
+        # Spark job — every table read carries an explicit schema, the
+        # stats are in the log, and the term dictionary is read with
+        # pyarrow from the files.
         snap = Snapshot(self.paths)
         self._io = snap.io
         self.meta = IndexMeta.from_json(snap.io.read_text(self.paths.meta))
@@ -1380,13 +1381,14 @@ class SearchEngine:
 
     def _fetch_stored(self, ids: list[int], cols: list[str]) -> dict:
         """doc_id → {doc_id, *cols} for the winner ids, read on the driver
-        with pyarrow (no Spark job): only the docs files whose footer
-        doc-id range holds a winner are opened, and the `in` filter skips
-        their other row groups. Values are converted from Arrow the way
+        with pyarrow (no Spark job): only the row groups whose doc-id range
+        holds a winner are read, each file opened with the footer the
+        snapshot already holds. Values are converted from Arrow the way
         Spark Connect's collect() does, with each file's footer schema, so
         they equal a Spark collect() of the same rows; a column a file
         lacks (an older segment) reads as None, like the unionByName of
         `docs`."""
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark.sql.conversion import ArrowTableToRowsConversion
         from pyspark.sql.pandas.types import to_arrow_schema
@@ -1398,18 +1400,21 @@ class SearchEngine:
             raise ValueError(f"no stored field {unknown[0]!r} in the index")
         want = np.unique(np.asarray(ids, dtype=np.int64))
         out: dict = {}
-        for path, schema, lo, hi in self._doc_files:
-            hit = want[(want >= lo) & (want <= hi)]
-            if not hit.size:
+        for path, schema, footer, ranges in self._doc_files:
+            groups = np.flatnonzero(
+                ((want >= ranges[:, :1]) & (want <= ranges[:, 1:])).any(axis=1)
+            )
+            if not groups.size:
                 continue
             sub = StructType(
                 [schema["doc_id"]] + [schema[c] for c in cols if c in schema.names]
             )
-            table = pq.read_table(
-                path,
-                columns=sub.names,
-                filters=[("doc_id", "in", hit.tolist())],
-                filesystem=self._io.fs,
+            with pq.ParquetFile(
+                path, metadata=footer, filesystem=self._io.fs
+            ) as pf:
+                table = pf.read_row_groups(groups.tolist(), columns=sub.names)
+            table = table.filter(
+                pc.is_in(table["doc_id"], value_set=pa.array(want))
             ).select(sub.names)
             rows = ArrowTableToRowsConversion.convert(
                 table.cast(to_arrow_schema(sub)), sub

@@ -113,10 +113,6 @@ class IndexPaths:
         return os.path.join(self.root, "postings")
 
     @property
-    def stats(self) -> str:
-        return os.path.join(self.root, "stats")
-
-    @property
     def lineage(self) -> str:
         return os.path.join(self.root, "lineage")
 

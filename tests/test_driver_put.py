@@ -5,6 +5,9 @@
   commit 0. A put over BULK_ID_THRESHOLD rows or BULK_BYTES_THRESHOLD
   Arrow bytes stages through Spark, with the same visible result. Either
   path writes one tombstone file per put.
+- The build's stats stage reads Σ tf back from the base blocks in at
+  most 2 Spark jobs, and a merge of one ingest round, which reads its
+  stats back the same way, in at most MERGE_JOBS.
 - A driver-written segment holds exactly the blocks the encode step
   makes from a Spark read of its docs.
 - Every stored type read back from a driver-written docs file equals a
@@ -43,6 +46,7 @@ from bayard_spark.build.segments import (
     SEGMENT_SORT,
     CommitLog,
     SegmentWriter,
+    merge_segments,
     visible_docs,
 )
 from bayard_spark.query import SearchEngine
@@ -111,6 +115,28 @@ def test_put_delete_commit_jobs(spark, webtext_root, monkeypatch, path):
     assert all(counts[u] == 1 for u in pdf.url)
     assert not any(u in counts for u in doomed)
     assert CommitLog(root).read()["next_doc_id"] == BASE_DOCS + 50
+
+
+# A merge of one ingest round on the webtext meta: the encode exchange and
+# base-wave write, the docs rewrite and the 2-job stats read-back.
+MERGE_JOBS = 7
+
+
+def test_stats_stage_and_merge_jobs(spark, webtext_root):
+    root, builder, base_urls = webtext_root
+    docs = spark.read.parquet(builder.paths.docs)
+    _, stats_jobs = spark_jobs(
+        spark, lambda: builder.write_norms_stats_direct(docs, None)
+    )
+    _, df = ingest_batch(spark, base_urls)
+    w = SegmentWriter(spark, builder)
+    w.put_documents(df)
+    w.delete_documents(base_urls[10:14])
+    w.commit()
+    _, merge_jobs = spark_jobs(spark, lambda: merge_segments(spark, builder))
+    assert stats_jobs <= 2
+    assert merge_jobs <= MERGE_JOBS
+    assert set(CommitLog(root).read()["stats"]) == {"url", "text", "lang"}
 
 
 def test_driver_segment_equals_encode_step(spark, webtext_root):
@@ -195,7 +221,6 @@ def test_stored_types_round_trip(spark):
         w.put_documents(put)
         w.commit()
         want = {r["url"]: r.asDict() for r in put.collect()}
-        # base docs also carry the build's `_dl_<field>` length columns
         got = {
             r["url"]: r.asDict()
             for r in visible_docs(spark, IndexPaths(root)).collect()

@@ -9,6 +9,7 @@ import tempfile
 import pytest
 
 from bayard_spark.build.indexer import IndexBuilder
+from bayard_spark.build.segments import CommitLog
 from bayard_spark.query import SearchEngine
 from bayard_spark.schema import webtext_index_meta
 from bayard_spark.sources.webtext import webtext_df
@@ -101,15 +102,39 @@ def test_multiwave_build_leftovers(spark):
 
 
 def test_resume_noop_when_complete(spark):
+    """Resuming a complete build runs no stage and no Spark job: the docs
+    read takes its schema and the doc count from the footers, and the
+    stats are in the commit log, not in a `stats/` table or in length
+    columns of the docs."""
     root = tempfile.mkdtemp(prefix="resC_")
     try:
         meta = webtext_index_meta(num_buckets=4)
         src = webtext_df(spark, 120, partitions=4)
         b = IndexBuilder(spark, meta, root)
         b.build(src)
-        rep = b.build(src)
+        assert set(CommitLog(root).read()["stats"]) == {"url", "text", "lang"}
+        assert not os.path.exists(os.path.join(root, "stats"))
+        assert not any(
+            c.startswith("_dl_")
+            for c in spark.read.parquet(b.paths.docs).columns
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("resume-noop", "test")
+        try:
+            rep = b.build(src)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("resume-noop") == []
         assert rep.stages_run == []
         assert set(rep.stages_skipped) >= {"docs", "blocks_w0", "stats"}
+        assert rep.n_docs == 120
+        # the stats stage counts as done only while the log carries stats
+        log = CommitLog(root)
+        state = log.read()
+        stats = state.pop("stats")
+        log.write(state)
+        assert b.build(src).stages_run == ["stats"]
+        assert log.read()["stats"] == stats
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -1,5 +1,6 @@
 """Segment lifecycle: put/delete/commit/rollback/merge (SURVEY §2.1)."""
 
+import json
 import os
 import shutil
 import tempfile
@@ -202,15 +203,70 @@ class TestSegments:
         for doc_id, fld, _t, _tf, doc_len, _p in want:
             assert lens.setdefault(fld, {}).setdefault(doc_id, doc_len) == doc_len
         n_live = visible_docs(spark, IndexPaths(root)).count()
-        stats = {
-            r["field"]: r
-            for r in spark.read.parquet(IndexPaths(root).stats).collect()
-        }
+        stats = Snapshot(IndexPaths(root)).state["stats"]
         assert set(stats) == set(lens)
         for fld, by_doc in lens.items():
-            assert stats[fld]["n_docs_field"] == len(by_doc)
             assert stats[fld]["total_len"] == sum(by_doc.values())
             assert stats[fld]["n_docs"] == n_live
+
+    def test_merge_publishes_the_log_once_with_stats(
+        self, spark, index_root, monkeypatch
+    ):
+        """A merge writes the commit log exactly once, and that write
+        carries the merged version's stats: no reader sees merged postings
+        beside the old stats."""
+        root, builder = index_root
+        w = SegmentWriter(spark, builder)
+        w.put_documents(new_batch(spark, [
+            ("https://pub.example/1", "alpha beta alpha gamma"),
+        ]))
+        w.delete_documents([
+            r["url"] for r in visible_docs(spark, IndexPaths(root))
+            .orderBy("doc_id").limit(2).collect()
+        ])
+        w.commit()
+        before = CommitLog(root).read()
+        total_len = Counter()
+        for (_, fld, _, tf, _, _), k in live_postings(spark, root).items():
+            total_len[fld] += tf * k
+        writes = []
+        log_write = CommitLog.write
+
+        def record(log, state):
+            writes.append(json.loads(json.dumps(state)))
+            log_write(log, state)
+
+        monkeypatch.setattr(CommitLog, "write", record)
+        merge_segments(spark, builder)
+        assert len(writes) == 1
+        state = writes[0]
+        assert (state["segments"], state["tombstones"]) == ([], [])
+        assert state["next_doc_id"] == before["next_doc_id"]
+        n_live = 200 + 1 - 2
+        assert state["stats"] == {
+            f: {"total_len": total_len[f], "n_docs": n_live}
+            for f in ("url", "text", "lang")
+        }
+        assert CommitLog(root).read() == state
+
+    def test_merge_upgrades_an_index_without_log_stats(
+        self, spark, index_root
+    ):
+        """An index whose log carries no stats (built before they moved
+        into the log, with a `stats/` table) refuses to open until a merge,
+        which publishes the stats a rebuild would and drops `stats/`."""
+        root, builder = index_root
+        want = SearchEngine(spark, root).stats
+        log = CommitLog(root)
+        state = log.read()
+        del state["stats"]
+        log.write(state)
+        os.makedirs(os.path.join(root, "stats"))
+        with pytest.raises(ValueError, match="merge_segments or rebuild"):
+            SearchEngine(spark, root)
+        merge_segments(spark, builder)
+        assert SearchEngine(spark, root).stats == want
+        assert not os.path.exists(os.path.join(root, "stats"))
 
 
 @pytest.mark.parametrize("index_root", ["salted"], indirect=True)

@@ -2,9 +2,10 @@
 
 A SearchEngine over an index with committed segments and tombstones opens
 with zero Spark jobs: every table read carries an explicit schema, the
-commit log is read once, and stats and the term dictionary come from the
-parquet files through pyarrow. These tests pin that, and that what the
-engine reads equals what Spark's own schema-inferring reads return.
+commit log is read once and carries the stats, and the term dictionary
+comes from the parquet files through pyarrow. These tests pin that, and
+that what the engine reads equals what Spark's own schema-inferring reads
+return.
 """
 
 from __future__ import annotations
@@ -169,14 +170,62 @@ class TestSnapshotOpen:
         assert snap.live_url_ids(pa.array(base_urls[:5])).size == 3
         assert set(footers) == {f for f in want if "/tombstones/" in f}
 
+    def test_search_after_open_reads_no_docs_footer(
+        self, spark, snapshot, monkeypatch
+    ):
+        """The winners' stored columns are read with the footers the
+        engine's snapshot read at open: each docs file is opened with its
+        cached footer, and no footer is read or parsed again."""
+        root, _, _ = snapshot
+        engine = SearchEngine(spark, root)
+        footers, opened = [], []
+        read_metadata, parquet_file = pq.read_metadata, pq.ParquetFile
+
+        def count_footer(where, *args, **kwargs):
+            footers.append(where)
+            return read_metadata(where, *args, **kwargs)
+
+        def no_read_table(*args, **kwargs):
+            raise AssertionError("pq.read_table parses the footer again")
+
+        class CachedFooterFile(parquet_file):
+            def __init__(self, source, *args, metadata=None, **kwargs):
+                opened.append((source, metadata))
+                super().__init__(source, *args, metadata=metadata, **kwargs)
+
+        monkeypatch.setattr(pq, "read_metadata", count_footer)
+        monkeypatch.setattr(pq, "read_table", no_read_table)
+        monkeypatch.setattr(pq, "ParquetFile", CachedFooterFile)
+        resp = engine.search({
+            "query": {"kind": "term",
+                      "options": {"field": "text", "term": "water"}},
+            "hits": 50,
+            "fields": ["url", "html"],
+        })
+        assert resp.documents and footers == []
+        cached = {f: md for f, _, md, _ in engine._doc_files}
+        assert opened and all(cached[f] is md for f, md in opened)
+
     def test_stats_and_dictionary_match_spark_reads(self, spark, snapshot):
+        """The stats are the build's: per field, Σ tf over the base blocks
+        (decoded block by block) over the base docs' Spark count."""
+        from bayard_spark.build.codec import decode_block
+
         root, builder, _ = snapshot
         engine = SearchEngine(spark, root)
-        want_stats = {
-            r["field"]: {"n_docs": r["n_docs"], "avg_len": r["avg_len"]}
-            for r in spark.read.parquet(builder.paths.stats).collect()
+        total_len = Counter()
+        for r in spark.read.parquet(
+            os.path.join(builder.paths.postings, "wave=0")
+        ).select("field", "doc_bytes", "tf_bytes").collect():
+            total_len[r["field"]] += int(
+                decode_block(r["doc_bytes"], r["tf_bytes"])[1].sum()
+            )
+        n_docs = spark.read.parquet(builder.paths.docs).count()
+        assert n_docs == 200
+        assert engine.stats == {
+            f: {"n_docs": n_docs, "avg_len": total_len[f] / n_docs}
+            for f in ("url", "text", "lang")
         }
-        assert engine.stats == want_stats
 
         post = spark_visible_postings(spark, builder, root)
         want = {
