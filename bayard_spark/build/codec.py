@@ -161,8 +161,8 @@ class DecodedBlocks(NamedTuple):
     """The postings of a batch of blocks, in block order."""
 
     doc_ids: np.ndarray  # uint64, one per posting
-    tfs: np.ndarray  # uint64
-    lens: np.ndarray  # uint64
+    tfs: np.ndarray | None  # uint64; None in the doc-ids-only mode
+    lens: np.ndarray | None  # uint64; None in the doc-ids-only mode
     counts: np.ndarray  # int64, postings per block
     # with positions only: the values (each doc restarts from its absolute
     # first position), doc k's value range positions[pos_offsets[k]:
@@ -190,22 +190,26 @@ def _binary_view(arr) -> tuple[np.ndarray, np.ndarray, int]:
 
 
 def decode_blocks(
-    doc_bytes, tf_bytes, len_bytes, pos_bytes=None
+    doc_bytes, tf_bytes=None, len_bytes=None, pos_bytes=None
 ) -> DecodedBlocks:
     """Decode a batch of blocks from the Arrow BinaryArray payload columns
     in whole-batch numpy passes (no per-block Python).
 
     Doc ids restart from an absolute value in every block, positions in
     every doc, so both decode as segmented deltas. A block with empty
-    pos_bytes (a freq-only field) contributes no position values."""
+    pos_bytes (a freq-only field) contributes no position values. Given
+    only doc_bytes, only the doc ids decode (tfs and lens are None), for
+    a membership test; positions need the tfs."""
     dd, do, _ = _binary_view(doc_bytes)
     deltas, voffs = varint_decode_many(dd, do)
     doc_ids = delta_decode_segments(deltas, voffs)
+    counts = np.diff(voffs)
+    if tf_bytes is None and len_bytes is None and pos_bytes is None:
+        return DecodedBlocks(doc_ids, None, None, counts)
     tfs, _ = varint_decode_many(*_binary_view(tf_bytes)[:2])
     lens, _ = varint_decode_many(*_binary_view(len_bytes)[:2])
     if not doc_ids.size == tfs.size == lens.size:
         raise ValueError("block payload columns disagree on posting counts")
-    counts = np.diff(voffs)
     if pos_bytes is None:
         return DecodedBlocks(doc_ids, tfs, lens, counts)
     pb, po, base = _binary_view(pos_bytes)

@@ -1,6 +1,23 @@
-"""Spark search engine: JSON query DSL → DataFrame plans over the index.
+"""Search engine: JSON query DSL → top-k, answered at one of two sites.
 
-Plan shape per query (SURVEY §2.4-2.5 mapping):
+Each request runs where its size puts it, decided from metadata the engine
+already holds (no job, no I/O): the postings bound is Σ df of its leaf
+terms from the term dictionary (fuzzy/regex after their cached
+expansion), plus the commit log's doc-id high-water mark for `all`,
+`range`, a must_not-only boolean or a fast-field sort.
+
+- Driver site, bound below DRIVER_MAX_POSTINGS: no Spark job. The leaf
+  terms' blocks are read with pyarrow from the snapshot's files (field,
+  bucket and term filters), decoded by `codec.decode_blocks`, tombstoned
+  ids dropped, and scored in numpy with the Spark plan's BM25 operation
+  order; boolean, phrase, boost and top-k compose on sorted doc-id arrays.
+- Spark site, above it: the DataFrame plan below, which parallelizes
+  decode for head terms at web scale.
+
+Parsing, fuzzy/regex expansion, every error, `scores()` (the Spark plan)
+and the response shape are shared by both sites.
+
+Spark plan shape per query (SURVEY §2.4-2.5 mapping):
 
 - leaf terms resolve to parquet scans of postings blocks with predicates on
   (field, bucket, term): in the base waves field/bucket are PARTITION
@@ -15,8 +32,9 @@ Plan shape per query (SURVEY §2.4-2.5 mapping):
   (plain term clauses on one field share one decode), must_not = left_anti
   (boolean.rs:272-290 semantics).
 - phrase: per-term position arrays joined on doc_id, adjacency-within-slop
-  verified in a vectorized mapInArrow kernel; scored with tf = match count
-  and idf = Σ constituent idfs (phrase.rs:13-33).
+  verified by `phrase_match_counts` in a mapInArrow (the driver site calls
+  the same kernel); scored with tf = match count and idf = Σ constituent
+  idfs (phrase.rs:13-33).
 - fuzzy/regex: term-dictionary expansion over block METADATA only (parquet
   reads just the `term` column), then a should-sum over matched terms
   (fuzzy_term.rs:5-39, regex.rs:12-25).
@@ -40,21 +58,95 @@ import threading
 from collections import OrderedDict
 from collections.abc import Iterator
 from dataclasses import dataclass, field as dc_field
-from functools import reduce
+from functools import cached_property, reduce
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from bayard_spark.build.codec import decode_blocks
+from bayard_spark.fieldnorm import quantize
 from bayard_spark.query.parser import parse_query_string
 from bayard_spark.schema import IndexMeta, IndexPaths
 
 DECODED_SCHEMA = (
     "term string, doc_id long, tf double, len double, positions array<int>"
 )
+
+
+def phrase_match_counts(pos_lists: list, slop: int) -> np.ndarray:
+    """Phrase tf per row of aligned position ListArrays (one per phrase
+    term, row i of each is the same doc), vectorized over all rows.
+
+    Semantics (= oracle._phrase_matches): tf = number of start positions
+    p0 in term0's list from which a chain p0 < p1 <= p0+slop+1 < ... exists
+    through every term list. Counting starts is a BACKWARD reachability
+    sweep: S holds the positions of term i+1 that can complete the tail; a
+    position p of term i survives iff S has an element in (p, p+slop+1].
+    Per-doc segmentation is free: positions are embedded at
+    row*2^33 + pos (positions are int32, slop small), so one globally
+    sorted axis serves every doc and np.searchsorted handles all rows at
+    once. Python work is O(#terms), not O(rows × positions).
+    """
+    n = len(pos_lists[0])
+    shift = np.int64(1) << np.int64(33)
+    step = np.int64(slop + 1)
+    flat: list[np.ndarray] = []
+    docix: list[np.ndarray] = []
+    for la in pos_lists:
+        offs = la.offsets.to_numpy().astype(np.int64)
+        vals = la.flatten().to_numpy().astype(np.int64)
+        di = np.repeat(np.arange(n, dtype=np.int64), np.diff(offs))
+        flat.append(di * shift + vals)
+        docix.append(di)
+    S = flat[-1]
+    counts = np.zeros(n, dtype=np.float64)
+    for i in range(len(pos_lists) - 2, -1, -1):
+        p = flat[i]
+        lo = np.searchsorted(S, p, side="right")
+        hi = np.searchsorted(S, p + step, side="right")
+        keep = hi > lo
+        if i == 0:
+            np.add.at(counts, docix[0][keep], 1.0)
+        else:
+            S = p[keep]
+    return counts
+
+
+def _sorted_member(sorted_ids: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """ids[i] in sorted_ids, for each i (sorted_ids sorted, distinct)."""
+    if sorted_ids.size == 0:
+        return np.zeros(ids.size, dtype=bool)
+    idx = np.searchsorted(sorted_ids, ids)
+    idx[idx == sorted_ids.size] = 0
+    return sorted_ids[idx] == ids
+
+
+# Driver-site scores: (doc ids ascending and distinct, float64 scores).
+_NO_HITS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+
+
+def _sum_by_doc(ids: np.ndarray, scores: np.ndarray) -> tuple:
+    """Per-doc score sums, summed in input order within each doc."""
+    if ids.size == 0:
+        return _NO_HITS
+    order = np.argsort(ids, kind="stable")
+    ids, scores = ids[order], scores[order]
+    starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+    return ids[starts], np.add.reduceat(scores, starts)
+
+
+def _top_order(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the k best (score desc, doc id asc), best first."""
+    cand = np.arange(ids.size)
+    if k < ids.size:
+        kth = np.partition(scores, ids.size - k)[ids.size - k]
+        cand = np.flatnonzero(scores >= kth)
+    return cand[np.lexsort((ids[cand], -scores[cand]))][:k]
 
 
 class LRUCache:
@@ -141,6 +233,14 @@ class SearchEngine:
     # neighborhoods): enough for a serving mix's head of the vocabulary,
     # bounded so a stream of one-off queries cannot grow them.
     CACHE_ENTRIES = 512
+    # Execution-site gate: a request whose postings bound (module
+    # docstring) is below this runs on the driver with no Spark job; at or
+    # above it the Spark plan runs. Measured on local[4] webtext builds of
+    # 1k-1M docs (CHANGES.md): the driver answered every term, should and
+    # phrase request up to 1.3M postings faster, losing only a phrase of
+    # the two densest head terms at 2M; memory sets the bound, since such
+    # a phrase peaks at about 730 B of numpy per posting on the driver.
+    DRIVER_MAX_POSTINGS = 500_000
 
     def __init__(self, spark: SparkSession, root: str,
                  max_expansions: int = 1024):
@@ -151,18 +251,17 @@ class SearchEngine:
         self.paths = IndexPaths(root)
         # The snapshot: ONE commit-log read pins the postings, docs,
         # tombstones and stats below to the same version. Opening runs no
-        # Spark job — every table read carries an explicit schema, the
-        # stats are in the log, and the term dictionary is read with
-        # pyarrow from the files.
-        snap = Snapshot(self.paths)
+        # Spark job and builds no Spark frame — the stats are in the log,
+        # the term dictionary is read with pyarrow from the files, and the
+        # frames the Spark site reads are built from this snapshot on
+        # first use (see `postings`), with no second log read or listing.
+        self._snap = snap = Snapshot(self.paths)
         self._io = snap.io
         self.meta = IndexMeta.from_json(snap.io.read_text(self.paths.meta))
         self.analyzers = build_analyzers(self.meta.analyzers)
         self.field_analyzers = {
             f.name: f.analyzer for f in self.meta.fields if f.type == "text"
         }
-        self.postings = snap.postings(spark)
-        self.docs = snap.docs(spark)
         # Tombstoned ids are filtered out of every decoded posting stream.
         # BM25 stats refresh only at build/merge time (ROADMAP item 1).
         # The count is metadata-only (parquet footers, zero Spark jobs); it
@@ -170,27 +269,31 @@ class SearchEngine:
         # below toward the anti-join — the safe direction. Block-max
         # pruning keys on it too: a full block may hold deleted docs.
         self._n_tombstones = snap.tombstone_rows
-        # Under TOMBSTONE_BROADCAST_MAX the sorted ids are broadcast once
-        # per engine and dropped inside the decoder's own batch loop (no
-        # join, no extra job). A web-scale purge above it keeps the
-        # shuffle anti-join against `tombstones` instead of forcing
-        # billions of ids into a broadcast.
-        self._dead_ids = None
-        self.tombstones = None
-        if 0 < self._n_tombstones <= TOMBSTONE_BROADCAST_MAX:
-            self._dead_ids = spark.sparkContext.broadcast(snap.tombstone_ids())
-        elif self._n_tombstones > 0:
-            self.tombstones = snap.tombstones(spark)
+        # Under TOMBSTONE_BROADCAST_MAX the sorted ids are read to the
+        # driver at open: the driver site drops them itself, and the Spark
+        # site broadcasts them once per engine (`_dead_ids`) and drops them
+        # inside the decoder's own batch loop (no join, no extra job). A
+        # web-scale purge above it keeps the shuffle anti-join against
+        # `tombstones`, and every request runs on the Spark site.
+        self._dead_on_driver = self._n_tombstones <= TOMBSTONE_BROADCAST_MAX
+        self._dead_sorted = (
+            snap.tombstone_ids() if 0 < self._n_tombstones and
+            self._dead_on_driver else np.empty(0, dtype=np.int64)
+        )
         # doc-id range of every docs file, from the footers: the winners'
         # stored columns are read on the driver from the files that hold
         # them (see _fetch_stored)
         self._doc_files = snap.doc_files
         self.stats = snap.stats()
-        # Doc-count bound for must-join ordering (zero Spark jobs): the
-        # commit log's high-water doc_id, over-counting deleted docs.
+        # Doc-count bound for must-join ordering and the site gate (zero
+        # Spark jobs): the commit log's high-water doc_id, over-counting
+        # deleted docs.
         self._n_docs_estimate = snap.next_doc_id
-        self._bucket_cache: dict[str, int] = {}
-        self._df_cache: dict[tuple[str, str], int] = {}
+        # Per-snapshot metadata caches, replaced by the whole dictionary
+        # when it is preloaded (_preload_dictionary); bounded otherwise, so
+        # a stream of novel terms cannot grow them.
+        self._bucket_cache = LRUCache(self.CACHE_ENTRIES)
+        self._df_cache = LRUCache(self.CACHE_ENTRIES)
         # Prepared-plan cache for decoded LEAF frames (scan→decode→score),
         # keyed per (field, term, positions?, pruned?). These plans are
         # NARROW (no shuffle boundary), so re-collecting a cached frame
@@ -209,6 +312,9 @@ class SearchEngine:
         # not re-run that job per request (r7; same rationale as the
         # leaf plan cache above).
         self._expansion_cache = LRUCache(self.CACHE_ENTRIES)
+        # (live doc ids, values) of the fast fields the driver site sorts
+        # by, one entry per field at most
+        self._fast_columns = LRUCache(len(self.meta.fields))
         self._dict_complete = False
         self.k1 = self.meta.bm25_k1
         self.b = self.meta.bm25_b
@@ -217,16 +323,42 @@ class SearchEngine:
         # '.*' must fail fast instead of collecting the whole term
         # dictionary to the driver.
         self.max_expansions = int(max_expansions)
-        self._preload_dictionary(snap.postings_dataset())
+        # the driver site's block reads reuse this dataset's fragments
+        self._postings_ds = snap.postings_dataset()
+        self._preload_dictionary(self._postings_ds)
+
+    # ---------- Spark frames, built on first Spark-site use ----------
+
+    @cached_property
+    def postings(self) -> DataFrame:
+        return self._snap.postings(self.spark)
+
+    @cached_property
+    def docs(self) -> DataFrame:
+        return self._snap.docs(self.spark)
+
+    @cached_property
+    def tombstones(self) -> DataFrame | None:
+        """The tombstone frame the Spark site anti-joins, above
+        TOMBSTONE_BROADCAST_MAX only."""
+        return None if self._dead_on_driver else self._snap.tombstones(self.spark)
+
+    @cached_property
+    def _dead_ids(self):
+        """`_dead_sorted` broadcast to the Spark site's decoders, or None
+        when there is nothing to drop there."""
+        if not self._dead_sorted.size:
+            return None
+        return self.spark.sparkContext.broadcast(self._dead_sorted)
 
     def _preload_dictionary(self, dataset) -> None:
         """(field, term) → (df, bucket) from the `term` and `n_docs`
         columns of the snapshot's postings files (`dataset`) and their
         (field, bucket) directories, read with pyarrow. The term cap is
         checked before the terms are read, the byte cap on the aggregated
-        Arrow table before any Python object is built."""
-        import pyarrow.compute as pc
-
+        Arrow table before any Python object is built. A preloaded
+        dictionary replaces the bounded lazy caches with plain maps that
+        hold every term."""
         # Every run of a term's blocks (one per wave and salt) starts at
         # block 0, so the block-0 count bounds the distinct (field, term)
         # pairs from one int column. Only an index over that bound pays a
@@ -255,18 +387,22 @@ class SearchEngine:
                 agg.num_rows, est_bytes / 1e6, self.MAX_DICT_BYTES >> 20,
             )
             return
-        for f, t, df, b in zip(
-            agg["field"].to_pylist(), agg["term"].to_pylist(),
-            agg["n_docs_sum"].to_pylist(), agg["bucket_min"].to_pylist(),
-        ):
-            self._df_cache[(f, t)] = int(df)
-            self._bucket_cache[t] = int(b)
+        fields, terms = agg["field"].to_pylist(), agg["term"].to_pylist()
+        self._df_cache = {
+            (f, t): int(df) for f, t, df in zip(
+                fields, terms, agg["n_docs_sum"].to_pylist()
+            )
+        }
+        self._bucket_cache = dict(zip(terms, agg["bucket_min"].to_pylist()))
         self._dict_complete = True
 
     # ---------- helpers ----------
 
     def _buckets(self, terms: list[str]) -> dict[str, int]:
-        missing = [t for t in set(terms) if t not in self._bucket_cache]
+        """term → bucket; the values computed here are returned directly,
+        since a bounded cache may already have evicted them."""
+        out = {t: self._bucket_cache.get(t) for t in set(terms)}
+        missing = [t for t, b in out.items() if b is None]
         if missing:
             df = self.spark.createDataFrame(
                 [(t,) for t in missing], "term string"
@@ -278,8 +414,8 @@ class SearchEngine:
                 .alias("b"),
             ).collect()
             for r in rows:
-                self._bucket_cache[r["term"]] = r["b"]
-        return {t: self._bucket_cache[t] for t in set(terms)}
+                out[r["term"]] = self._bucket_cache[r["term"]] = r["b"]
+        return out
 
     def _leaf_blocks(self, fld: str, term: str) -> DataFrame:
         b = self._buckets([term])[term]
@@ -299,7 +435,8 @@ class SearchEngine:
         uniq = sorted(set(terms))
         if self._dict_complete:
             return {t: self._df_cache.get((fld, t), 0) for t in uniq}
-        missing = [t for t in uniq if (fld, t) not in self._df_cache]
+        out = {t: self._df_cache.get((fld, t)) for t in uniq}
+        missing = [t for t, df in out.items() if df is None]
         if missing:
             buckets = self._buckets(missing)
             rows = (
@@ -314,8 +451,8 @@ class SearchEngine:
             )
             found = {r["term"]: int(r["df"]) for r in rows}
             for t in missing:
-                self._df_cache[(fld, t)] = found.get(t, 0)
-        return {t: self._df_cache[(fld, t)] for t in uniq}
+                out[t] = self._df_cache[(fld, t)] = found.get(t, 0)
+        return out
 
     def idf(self, fld: str, df: int) -> float:
         n = self.stats[fld]["n_docs"]
@@ -391,16 +528,13 @@ class SearchEngine:
             dead = dead_bc.value if dead_bc is not None else None
 
             def member(sorted_ids, doc_ids):
-                ids = doc_ids.astype(np.int64)
-                idx = np.searchsorted(sorted_ids, ids)
-                idx[idx == len(sorted_ids)] = 0
-                return sorted_ids[idx] == ids
+                return _sorted_member(sorted_ids, doc_ids.astype(np.int64))
 
             for rb in batches:
                 if cand is not None and rb.num_rows:
-                    # doc ids first: a block holding no candidate is dropped
-                    # before its positions decode
-                    dec = decode_blocks(*rb.columns[1:4])
+                    # doc ids first (doc-ids-only decode): a block holding
+                    # no candidate is dropped before anything else decodes
+                    dec = decode_blocks(rb.column(1))
                     hit = np.zeros(rb.num_rows, dtype=bool)
                     hit[np.repeat(np.arange(rb.num_rows), dec.counts)[
                         member(cand, dec.doc_ids)
@@ -567,9 +701,7 @@ class SearchEngine:
             .drop("_ub", "_tau")
         )
 
-    def _phrase_scores(
-        self, fld: str, phrase_terms: list[str], slop: int = 0
-    ) -> DataFrame:
+    def _check_phrase(self, fld: str, phrase_terms: list[str]) -> None:
         if len(phrase_terms) < 2:
             raise ValueError("phrase requires >= 2 terms")
         # the reference rejects phrase queries on position-less fields with a
@@ -581,6 +713,11 @@ class SearchEngine:
                 f"field {fld!r} does not record positions "
                 "(phrase queries require record='position')"
             )
+
+    def _phrase_scores(
+        self, fld: str, phrase_terms: list[str], slop: int = 0
+    ) -> DataFrame:
+        self._check_phrase(fld, phrase_terms)
         df_map = self._df_of_many(fld, phrase_terms)
         dfs = [df_map.get(t, 0) for t in phrase_terms]
         if any(d == 0 for d in dfs):
@@ -665,48 +802,13 @@ class SearchEngine:
         # duplicate terms in the phrase reuse the same positions column
         pos_cols = [name_of[t] for t in phrase_terms]
 
-        slop_val = slop
-
         def count_matches(
             batches: Iterator[pa.RecordBatch],
         ) -> Iterator[pa.RecordBatch]:
-            """Vectorized phrase adjacency over the whole Arrow batch.
-
-            Semantics (= oracle._phrase_matches): tf = number of start
-            positions p0 in term0's list from which a chain p0 < p1 <= p0+
-            slop+1 < ... exists through every term list. Counting starts is a
-            BACKWARD reachability sweep: S holds the positions of term i+1
-            that can complete the tail; a position p of term i survives iff
-            S has an element in (p, p+slop+1]. Per-doc segmentation is free:
-            positions are embedded at doc_row*2^33 + pos (positions are
-            int32, slop small), so one globally sorted axis serves every doc
-            and np.searchsorted handles all docs of the batch at once.
-            Python work is O(#terms) per batch, not O(rows × positions).
-            """
-            shift = np.int64(1) << np.int64(33)
-            step = np.int64(slop_val + 1)
             for rb in batches:
-                n = rb.num_rows
-                flat: list[np.ndarray] = []
-                docix: list[np.ndarray] = []
-                for c in pos_cols:
-                    la = rb.column(c)
-                    offs = la.offsets.to_numpy().astype(np.int64)
-                    vals = la.flatten().to_numpy().astype(np.int64)
-                    di = np.repeat(np.arange(n, dtype=np.int64), np.diff(offs))
-                    flat.append(di * shift + vals)
-                    docix.append(di)
-                S = flat[-1]
-                counts = np.zeros(n, dtype=np.float64)
-                for i in range(len(pos_cols) - 2, -1, -1):
-                    p = flat[i]
-                    lo = np.searchsorted(S, p, side="right")
-                    hi = np.searchsorted(S, p + step, side="right")
-                    keep = hi > lo
-                    if i == 0:
-                        np.add.at(counts, docix[0][keep], 1.0)
-                    else:
-                        S = p[keep]
+                counts = phrase_match_counts(
+                    [rb.column(c) for c in pos_cols], slop
+                )
                 yield pa.RecordBatch.from_arrays(
                     [rb.column("doc_id"), pa.array(counts), rb.column("len")],
                     names=["doc_id", "tf", "len"],
@@ -1054,8 +1156,9 @@ class SearchEngine:
         terms = sorted(t for t, d in term_dfs.items() if d > 0)
         if not terms:
             return self._empty_scores()
-        for t in terms:  # keep the planning caches warm for later queries
-            self._df_cache[(fld, t)] = term_dfs[t]
+        if not self._dict_complete:  # warm the lazy df cache for later queries
+            for t in terms:
+                self._df_cache[(fld, t)] = term_dfs[t]
         if len(terms) == 1:
             return self._term_scores(fld, terms[0], df_count=term_dfs[terms[0]])
         avg = self.stats[fld]["avg_len"]
@@ -1102,7 +1205,7 @@ class SearchEngine:
     def _all_scores(self) -> DataFrame:
         return self.docs.select("doc_id", F.lit(1.0).alias("score"))
 
-    def _range_scores(self, fld: str, start, end) -> DataFrame:
+    def _range_bounds(self, fld: str, start, end) -> tuple:
         # half-open [start, end), constant score (range.rs:52-107;
         # docs/query_dsl.md:171-188). Date fields error, as in range.rs:101.
         fdef = self.meta.field_def(fld)
@@ -1115,13 +1218,38 @@ class SearchEngine:
             from decimal import Decimal
 
             start, end = Decimal(int(start)), Decimal(int(end))
+        return start, end
+
+    def _range_scores(self, fld: str, start, end) -> DataFrame:
+        start, end = self._range_bounds(fld, start, end)
         return self.docs.filter(
             (F.col(fld) >= F.lit(start)) & (F.col(fld) < F.lit(end))
         ).select("doc_id", F.lit(1.0).alias("score"))
 
     # ---------- composition ----------
 
+    def _parse(self, opts: dict) -> dict:
+        return parse_query_string(
+            opts["query"],
+            opts["default_search_fields"],
+            self.analyzers,
+            self.field_analyzers,
+        )
+
+    def _expansion(self, kind: str, opts: dict) -> dict[str, int]:
+        """{term: df} a fuzzy_term or regex query expands to (cached)."""
+        if kind == "regex":
+            return self._expand_regex(opts["field"], opts["regex"])
+        return self._expand_fuzzy(
+            opts["field"],
+            opts["term"],
+            opts.get("distance", 1),
+            opts.get("transposition_cost_one", False),
+            opts.get("prefix", False),
+        )
+
     def scores(self, query: dict, topk_hint: int | None = None) -> DataFrame:
+        """The Spark site's plan: a (doc_id, score) frame of the matches."""
         kind = query["kind"]
         opts = query.get("options", {})
         if kind == "all":
@@ -1141,33 +1269,14 @@ class SearchEngine:
             return inner.withColumn(
                 "score", F.col("score") * F.lit(float(opts["boost"]))
             )
-        if kind == "fuzzy_term":
-            fld = opts["field"]
+        if kind in ("fuzzy_term", "regex"):
             return self._multi_term_scores(
-                fld,
-                self._expand_fuzzy(
-                    fld,
-                    opts["term"],
-                    opts.get("distance", 1),
-                    opts.get("transposition_cost_one", False),
-                    opts.get("prefix", False),
-                ),
-            )
-        if kind == "regex":
-            fld = opts["field"]
-            return self._multi_term_scores(
-                fld, self._expand_regex(fld, opts["regex"])
+                opts["field"], self._expansion(kind, opts)
             )
         if kind == "boolean":
             return self._boolean_scores(opts.get("subqueries", []))
         if kind == "query_string":
-            ast = parse_query_string(
-                opts["query"],
-                opts["default_search_fields"],
-                self.analyzers,
-                self.field_analyzers,
-            )
-            return self.scores(ast, topk_hint=topk_hint)
+            return self.scores(self._parse(opts), topk_hint=topk_hint)
         raise ValueError(f"unknown query kind {kind!r}")
 
     def _df_estimate(self, query: dict) -> int:
@@ -1211,23 +1320,38 @@ class SearchEngine:
                     return sum(shoulds)
                 return None
             if kind == "query_string":
-                ast = parse_query_string(
-                    opts["query"],
-                    opts["default_search_fields"],
-                    self.analyzers,
-                    self.field_analyzers,
-                )
-                return self._cand_upper_estimate(ast)
+                return self._cand_upper_estimate(self._parse(opts))
         except Exception:
             return None
         return None
 
+    @staticmethod
+    def _clauses(subqueries: list[dict]) -> tuple[list, list, list]:
+        """(must, should, must_not) sub-queries, each in clause order."""
+        out: dict[str, list] = {"must": [], "should": [], "must_not": []}
+        for sq in subqueries:
+            out[sq["occurrence"]].append(sq["query"])
+        return out["must"], out["should"], out["must_not"]
+
+    @staticmethod
+    def _should_groups(shoulds: list[dict]) -> tuple[dict, list[dict]]:
+        """({field: [term, ...]}, other clauses) of a should: plain term
+        clauses on one field share ONE decode of all their blocks (a url
+        lookup is a should of url terms); every other clause, and a
+        repeated term, keeps its own."""
+        by_field: dict[str, list[str]] = {}
+        rest = []
+        for q in shoulds:
+            if q["kind"] == "term":
+                terms = by_field.setdefault(q["options"]["field"], [])
+                if q["options"]["term"] not in terms:
+                    terms.append(q["options"]["term"])
+                    continue
+            rest.append(q)
+        return by_field, rest
+
     def _boolean_scores(self, subqueries: list[dict]) -> DataFrame:
-        musts, shoulds, must_nots = [], [], []
-        for i, sq in enumerate(subqueries):
-            target = {"must": musts, "should": shoulds,
-                      "must_not": must_nots}[sq["occurrence"]]
-            target.append((i, sq["query"]))
+        musts, shoulds, must_nots = self._clauses(subqueries)
         if musts:
             # rarest-df-first intersection ordering (classic IR; SURVEY §4):
             # the smallest posting list anchors the join chain so later joins
@@ -1236,12 +1360,12 @@ class SearchEngine:
             # oracle — join order and sum order are independent.
             join_order = sorted(
                 range(len(musts)),
-                key=lambda j: self._df_estimate(musts[j][1]),
+                key=lambda j: self._df_estimate(musts[j]),
             )
             base = None
             est = 1 << 62
             for j in join_order:
-                _, q = musts[j]
+                q = musts[j]
                 m = self.scores(q).withColumnRenamed("score", f"_m{j}")
                 if base is None:
                     base = m
@@ -1264,22 +1388,11 @@ class SearchEngine:
         else:
             cand = self._all_scores().withColumn("score", F.lit(0.0))
         if shoulds:
-            # plain term clauses on one field share ONE decode of all their
-            # blocks (a url lookup is a should of url terms); every other
-            # clause, and a repeated term, keeps its own plan
-            by_field: dict[str, list[str]] = {}
-            sframes = []
-            for _, q in shoulds:
-                if q["kind"] == "term":
-                    terms = by_field.setdefault(q["options"]["field"], [])
-                    if q["options"]["term"] not in terms:
-                        terms.append(q["options"]["term"])
-                        continue
-                sframes.append(self.scores(q))
-            for fld, terms in by_field.items():
-                sframes.append(
-                    self._multi_term_rows(fld, self._df_of_many(fld, terms))
-                )
+            by_field, rest = self._should_groups(shoulds)
+            sframes = [self.scores(q) for q in rest] + [
+                self._multi_term_rows(fld, self._df_of_many(fld, terms))
+                for fld, terms in by_field.items()
+            ]
             unioned = reduce(lambda a, b: a.unionByName(b), sframes)
             ssum = unioned.groupBy("doc_id").agg(F.sum("score").alias("_s"))
             if cand is None:
@@ -1293,18 +1406,278 @@ class SearchEngine:
                     )
                     .drop("_s")
                 )
-        for _, q in must_nots:
+        for q in must_nots:
             cand = cand.join(self.scores(q).select("doc_id"), "doc_id", "left_anti")
         return cand
+
+    # ---------- the driver site ----------
+
+    def _postings_bound(self, query: dict) -> int:
+        """Postings a driver-site answer reads, from the dictionary, the
+        cached expansions and the commit log alone (module docstring);
+        raises what scores() raises for a malformed query."""
+        kind = query["kind"]
+        opts = query.get("options", {})
+        if kind in ("all", "range"):
+            return self._n_docs_estimate
+        if kind == "term":
+            return self._df_of(opts["field"], opts["term"])
+        if kind == "phrase":
+            return sum(
+                self._df_of_many(opts["field"], opts["phrase_terms"]).values()
+            )
+        if kind in ("fuzzy_term", "regex"):
+            return sum(self._expansion(kind, opts).values())
+        if kind == "boost":
+            return self._postings_bound(opts["query"])
+        if kind == "boolean":
+            subs = opts.get("subqueries", [])
+            musts, shoulds, _ = self._clauses(subs)
+            live = 0 if musts or shoulds else self._n_docs_estimate
+            return live + sum(self._postings_bound(sq["query"]) for sq in subs)
+        if kind == "query_string":
+            return self._postings_bound(self._parse(opts))
+        raise ValueError(f"unknown query kind {kind!r}")
+
+    def _driver_scores(self, query: dict) -> tuple[np.ndarray, np.ndarray]:
+        """The driver site's scores(): (doc ids ascending, scores) of the
+        live matches, with no Spark job."""
+        kind = query["kind"]
+        opts = query.get("options", {})
+        if kind == "all":
+            ids = self._live_doc_ids
+            return ids, np.ones(ids.size)
+        if kind == "term":
+            fld, term = opts["field"], opts["term"]
+            return self._driver_terms(fld, {term: self._df_of(fld, term)})
+        if kind == "phrase":
+            return self._driver_phrase(
+                opts["field"], opts["phrase_terms"], opts.get("slop", 0)
+            )
+        if kind == "range":
+            start, end = self._range_bounds(
+                opts["field"], opts["start"], opts["end"]
+            )
+            ids, vals = self._live_column(opts["field"])
+            hit = pc.fill_null(
+                pc.and_(pc.greater_equal(vals, start), pc.less(vals, end)),
+                False,
+            )
+            ids = ids[hit.to_numpy(zero_copy_only=False)]
+            return ids, np.ones(ids.size)
+        if kind == "boost":
+            ids, scores = self._driver_scores(opts["query"])
+            return ids, scores * float(opts["boost"])
+        if kind in ("fuzzy_term", "regex"):
+            return self._driver_terms(opts["field"], self._expansion(kind, opts))
+        if kind == "boolean":
+            return self._driver_boolean(opts.get("subqueries", []))
+        if kind == "query_string":
+            return self._driver_scores(self._parse(opts))
+        raise ValueError(f"unknown query kind {kind!r}")
+
+    def _driver_postings(
+        self, fld: str, terms: list[str], want_positions: bool = False
+    ) -> list:
+        """The live postings of `terms` (distinct, each with df > 0) in
+        field `fld`: their blocks read with pyarrow from the snapshot's
+        files, as `Snapshot.live_url_ids` reads them, and decoded on the
+        driver. Returns [index into terms, doc id, tf, len] arrays, one
+        entry per posting, plus the positions as a ListArray."""
+        filt = (pc.field("field") == fld) & pc.field("term").isin(terms)
+        buckets = {self._bucket_cache.get(t) for t in terms}
+        if None not in buckets:
+            # prunes the base tree's (field, bucket) directories before I/O
+            filt &= pc.field("bucket").isin(sorted(buckets))
+        cols = ["doc_bytes", "tf_bytes", "len_bytes"] + (
+            ["pos_bytes"] if want_positions else []
+        )
+        blocks = self._postings_ds.to_table(columns=["term"] + cols, filter=filt)
+        dec = decode_blocks(*(blocks[c].combine_chunks() for c in cols))
+        ids = dec.doc_ids.astype(np.int64)
+        live = ~_sorted_member(self._dead_sorted, ids)
+        lens = quantize(dec.lens) if self.meta.lossy_fieldnorms else dec.lens
+        out = [
+            np.repeat(
+                pc.index_in(blocks["term"], value_set=pa.array(terms))
+                .to_numpy(), dec.counts,
+            )[live],
+            ids[live],
+            dec.tfs[live].astype(np.float64),
+            lens[live].astype(np.float64),
+        ]
+        if want_positions:
+            out.append(pa.ListArray.from_arrays(
+                pa.array(dec.pos_offsets, type=pa.int32()),
+                pa.array(dec.positions.astype(np.int32)),
+            ).filter(pa.array(live)))
+        return out
+
+    def _bm25(self, idf, tf: np.ndarray, ln: np.ndarray, avg: float):
+        """_score_expr in numpy, in the same operation order."""
+        k1, b = self.k1, self.b
+        denom = tf + k1 * (1.0 - b + b * ln / avg)
+        return idf * (tf * (k1 + 1.0)) / denom
+
+    def _driver_terms(self, fld: str, term_dfs: dict[str, int]) -> tuple:
+        """Per-doc sum of per-term BM25 over a term set (a term, or a
+        fuzzy/regex expansion)."""
+        terms = sorted(t for t, d in term_dfs.items() if d > 0)
+        if not terms:
+            return _NO_HITS
+        ix, ids, tfs, lens = self._driver_postings(fld, terms)
+        idf = np.array([self.idf(fld, term_dfs[t]) for t in terms])
+        return _sum_by_doc(
+            ids, self._bm25(idf[ix], tfs, lens, self.stats[fld]["avg_len"])
+        )
+
+    def _driver_phrase(
+        self, fld: str, phrase_terms: list[str], slop: int
+    ) -> tuple:
+        self._check_phrase(fld, phrase_terms)
+        df_map = self._df_of_many(fld, phrase_terms)
+        if any(d == 0 for d in df_map.values()):
+            return _NO_HITS
+        uniq = sorted(df_map)
+        ix, ids, _, lens, pos = self._driver_postings(
+            fld, uniq, want_positions=True
+        )
+        # each term's postings in doc-id order, then the docs all hold
+        rows = [np.flatnonzero(ix == j) for j in range(len(uniq))]
+        rows = [r[np.argsort(ids[r], kind="stable")] for r in rows]
+        common = reduce(np.intersect1d, (ids[r] for r in rows))
+        at = {
+            t: r[np.searchsorted(ids[r], common)] for t, r in zip(uniq, rows)
+        }
+        taken = {t: pos.take(pa.array(at[t])) for t in uniq}
+        counts = phrase_match_counts([taken[t] for t in phrase_terms], slop)
+        hit = counts > 0
+        sum_idf = sum(self.idf(fld, df_map[t]) for t in phrase_terms)
+        return common[hit], self._bm25(
+            sum_idf, counts[hit], lens[at[uniq[0]][hit]],
+            self.stats[fld]["avg_len"],
+        )
+
+    def _driver_boolean(self, subqueries: list[dict]) -> tuple:
+        """_boolean_scores' semantics on sorted id arrays: must intersects
+        and sums in clause order, should union-sums, must_not removes, and
+        a must_not-only query starts from every live doc at 0."""
+        musts, shoulds, must_nots = self._clauses(subqueries)
+        if musts:
+            parts = [self._driver_scores(q) for q in musts]
+            ids = reduce(np.intersect1d, (i for i, _ in parts))
+            score = reduce(
+                lambda a, b: a + b,
+                (s[np.searchsorted(i, ids)] for i, s in parts),
+            )
+        elif shoulds:
+            ids = score = None
+        else:
+            ids = self._live_doc_ids
+            score = np.zeros(ids.size)
+        if shoulds:
+            by_field, rest = self._should_groups(shoulds)
+            parts = [self._driver_scores(q) for q in rest] + [
+                self._driver_terms(fld, self._df_of_many(fld, terms))
+                for fld, terms in by_field.items()
+            ]
+            sids, ssum = _sum_by_doc(
+                np.concatenate([i for i, _ in parts]),
+                np.concatenate([s for _, s in parts]),
+            )
+            if ids is None:
+                ids, score = sids, ssum
+            else:
+                hit = _sorted_member(sids, ids)
+                extra = np.zeros(ids.size)
+                extra[hit] = ssum[np.searchsorted(sids, ids[hit])]
+                score = score + extra
+        for q in must_nots:
+            keep = ~_sorted_member(self._driver_scores(q)[0], ids)
+            ids, score = ids[keep], score[keep]
+        return ids, score
+
+    @cached_property
+    def _live_doc_ids(self) -> np.ndarray:
+        return self._live_column(None)[0]
+
+    def _live_column(self, col: str | None) -> tuple[np.ndarray, pa.Array]:
+        """(ids ascending, values of `col`) over the live docs, read on the
+        driver with the snapshot's footers; a docs file without the column
+        reads nulls, as the unionByName of `docs` does. A fast field's
+        column is cached (the driver site sorts by it)."""
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        fast = col is not None and self.meta.field_def(col).fast
+        cached = self._fast_columns.get(col) if fast else None
+        if cached is not None:
+            return cached
+        types = [s[col].dataType for _, s, _, _ in self._doc_files
+                 if col is not None and col in s.names]
+        if col is not None and not types:
+            raise ValueError(f"no stored field {col!r} in the index")
+        ids, vals = [], []
+        for path, schema, footer, _ in self._doc_files:
+            has = col is not None and col in schema.names
+            with pq.ParquetFile(
+                path, metadata=footer, filesystem=self._io.fs
+            ) as pf:
+                t = pf.read(columns=["doc_id"] + ([col] if has else []))
+            ids.append(t["doc_id"].to_numpy())
+            if types:
+                atype = to_arrow_type(types[0])
+                vals.append(t[col].combine_chunks().cast(atype) if has
+                            else pa.nulls(t.num_rows, atype))
+        ids = np.concatenate(ids or [np.empty(0, dtype=np.int64)])
+        order = np.argsort(ids, kind="stable")
+        order = order[~_sorted_member(self._dead_sorted, ids[order])]
+        out = (
+            ids[order],
+            pa.concat_arrays(vals).take(pa.array(order)) if types else None,
+        )
+        if fast:
+            self._fast_columns[col] = out
+        return out
+
+    def _search_on_driver(
+        self, query: dict, hits: int, offset: int, want_count: bool,
+        want_docs: bool, sort: dict | None, fields: list[str],
+    ) -> SearchResponse:
+        ids, scores = self._driver_scores(query)
+        total = int(ids.size) if want_count else -1
+        if not want_docs or hits <= 0:
+            return SearchResponse(total_hits=total)
+        if sort:
+            sort_col = sort["field"]
+            col_ids, vals = self._live_column(sort_col)
+            asc = sort.get("order", "asc") == "asc"
+            # Spark's null order: first when ascending, last when descending
+            order = pc.sort_indices(
+                pa.table({
+                    "key": vals.take(pa.array(np.searchsorted(col_ids, ids))),
+                    "doc_id": ids,
+                }),
+                sort_keys=[("key", "ascending" if asc else "descending"),
+                           ("doc_id", "ascending")],
+                null_placement="at_start" if asc else "at_end",
+            ).to_numpy()[offset:offset + hits]
+        else:
+            sort_col = None
+            order = _top_order(ids, scores, offset + hits)[offset:]
+        rows = [{"doc_id": int(i), "score": float(s)}
+                for i, s in zip(ids[order], scores[order])]
+        return self._respond(rows, {"doc_id", "score"}, total, sort_col, fields)
 
     # ---------- search API (docs/rest_api/search_api.md shape) ----------
 
     def search(self, request: dict) -> SearchResponse:
-        """One Spark action per request: the top-k `collect()` also counts
-        the matches (an Observation on the unpruned scores, like the
-        reference's MultiCollector pass, node/search.rs:29-67), and the
-        winners' url, timestamp and requested stored fields are read on
-        the driver (_fetch_stored). Only a `count` request runs a bare
+        """Answers on the driver when the request's postings bound is below
+        DRIVER_MAX_POSTINGS (and the tombstones are driver-sized), else as
+        one Spark action: the top-k `collect()` also counts the matches (an
+        Observation on the unpruned scores, like the reference's
+        MultiCollector pass, node/search.rs:29-67). Either way the winners'
+        url, timestamp and requested stored fields are read on the driver
+        (_fetch_stored). Only a Spark-site `count` request runs a bare
         count()."""
         query = request["query"]
         hits = int(request.get("hits", 10))
@@ -1315,6 +1688,20 @@ class SearchEngine:
 
         want_count = collection_kind in ("count", "count_and_top_docs")
         want_docs = collection_kind in ("top_docs", "count_and_top_docs")
+        if sort and not self.meta.field_def(sort["field"]).fast:
+            raise ValueError(
+                f"field {sort['field']!r} is not a fast field"
+            )  # node.rs:1312-1331
+        if query["kind"] == "query_string":
+            # parsed once: the site gate and the chosen site read one AST
+            query = self._parse(query["options"])
+        if self._dead_on_driver and (
+            self._postings_bound(query) + (self._n_docs_estimate if sort else 0)
+            < self.DRIVER_MAX_POSTINGS
+        ):
+            return self._search_on_driver(
+                query, hits, offset, want_count, want_docs, sort, fields
+            )
 
         # total_hits is defined over ALL matches (search_api.md), so a
         # counting request scores an UNPRUNED plan — block-max pruning is
@@ -1332,10 +1719,6 @@ class SearchEngine:
             scores = scores.observe(counted, F.count(F.lit(1)).alias("n"))
         if sort:
             sort_col = sort["field"]
-            if not self.meta.field_def(sort_col).fast:
-                raise ValueError(
-                    f"field {sort_col!r} is not a fast field"
-                )  # node.rs:1312-1331
             key = F.col(sort_col)
             order = [
                 key.asc() if sort.get("order", "asc") == "asc" else key.desc(),
@@ -1351,17 +1734,28 @@ class SearchEngine:
         top = scores.orderBy(*order)
         win_rows = (top.offset(offset) if offset else top).limit(hits).collect()
         total = int(counted.get["n"]) if counted is not None else -1
+        return self._respond(
+            [r.asDict() for r in win_rows], set(scores.columns), total,
+            sort_col, fields,
+        )
 
-        present = set(scores.columns)
+    def _respond(
+        self, rows: list[dict], present: set, total: int,
+        sort_col: str | None, fields: list[str],
+    ) -> SearchResponse:
+        """The response for winner rows (doc_id, score and any `present`
+        columns), with their url, timestamp, sort value and requested
+        fields read by _fetch_stored."""
+        extra = fields + ([sort_col] if sort_col else [])
         stored = self._fetch_stored(
-            [r["doc_id"] for r in win_rows],
+            [r["doc_id"] for r in rows],
             list(dict.fromkeys(
-                ["url", "warc_ts"] + [c for c in fields if c not in present]
+                ["url", "warc_ts"] + [c for c in extra if c not in present]
             )),
         )
         documents = []
-        for r in win_rows:
-            d = {**stored[r["doc_id"]], **r.asDict()}
+        for r in rows:
+            d = {**stored[r["doc_id"]], **r}
             ts = d.get("warc_ts")
             # response shape per docs/rest_api/search_api.md: score is 0
             # under a field sort, sort_value is 0 under a score sort, and
@@ -1388,8 +1782,6 @@ class SearchEngine:
         they equal a Spark collect() of the same rows; a column a file
         lacks (an older segment) reads as None, like the unionByName of
         `docs`."""
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
         from pyspark.sql.conversion import ArrowTableToRowsConversion
         from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.sql.types import StructType

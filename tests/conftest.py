@@ -96,3 +96,23 @@ def pruned_idx(spark):
     builder.build(src, resume=False)
     yield spark, root, builder
     shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.fixture()
+def on_site():
+    """on_site(engine, "driver" | "spark"): a context in which `engine`
+    answers search() at that execution site. It sets and then deletes an
+    instance attribute, so a class-level gate patched elsewhere still
+    reaches the shared engines afterwards."""
+    from contextlib import contextmanager
+
+    @contextmanager
+    def at(engine, site):
+        assert site in ("driver", "spark")
+        engine.DRIVER_MAX_POSTINGS = 1 << 62 if site == "driver" else 0
+        try:
+            yield engine
+        finally:
+            del engine.DRIVER_MAX_POSTINGS
+
+    return at

@@ -6,15 +6,22 @@
    and on an index whose threshold block is deleted whole).
 
 TestTombstonePruning deletes 20 docs from the shared fixture, so it runs
-after the count tests.
+after the count tests. Pruning is part of the Spark plan, so every search
+here runs on the Spark site (the driver-site gate is 0).
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from bayard_spark.build.segments import SegmentWriter
 from bayard_spark.query import SearchEngine
 
 N = 1600  # docs in the pruned_idx fixture (tests/conftest.py)
+
+
+@pytest.fixture(autouse=True)
+def spark_site(monkeypatch):
+    monkeypatch.setattr(SearchEngine, "DRIVER_MAX_POSTINGS", 0)
 
 
 class TestPrunedCount:

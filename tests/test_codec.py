@@ -203,6 +203,28 @@ class TestBlock:
             k += n
         assert k == dec.doc_ids.size
 
+    def test_doc_ids_only_mode_matches_full_decode(self):
+        """A random batch of blocks: decoding doc_bytes alone gives the
+        full decode's doc ids and per-block counts, and no tfs or lens."""
+        rng = np.random.default_rng(23)
+        blocks = []
+        for _ in range(60):
+            n = int(rng.integers(1, 129))
+            ids = np.unique(rng.integers(0, 2**40, size=n))
+            positions = [
+                sorted(rng.choice(2**20, size=int(rng.integers(1, 5)),
+                                  replace=False).tolist())
+                for _ in ids
+            ]
+            blocks.append(_encode_shape(ids.tolist(), positions,
+                                        with_positions=bool(rng.random() < .5)))
+        cols = _batch_columns(blocks)
+        full = decode_blocks(*cols)
+        ids_only = decode_blocks(cols[0])
+        assert np.array_equal(ids_only.doc_ids, full.doc_ids)
+        assert np.array_equal(ids_only.counts, full.counts)
+        assert ids_only.tfs is None and ids_only.lens is None
+
     def test_partial_block_and_single_doc(self):
         d = np.array([42], dtype=np.uint64)
         t = np.array([3], dtype=np.uint64)

@@ -10,12 +10,23 @@
   tombstoned or the candidate array is empty.
 - Under TOMBSTONE_BROADCAST_MAX tombstoned ids drop inside the decoder;
   above it an unhinted anti-join drops them, with identical results.
+
+These are the Spark site's decode paths, so every search here runs there
+(the driver-site gate is 0).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
+
+from bayard_spark.query import SearchEngine
+
+
+@pytest.fixture(autouse=True)
+def spark_site(monkeypatch):
+    monkeypatch.setattr(SearchEngine, "DRIVER_MAX_POSTINGS", 0)
 
 
 def test_batched_decode_matches_per_block_path(built):

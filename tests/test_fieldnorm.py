@@ -103,6 +103,14 @@ class TestLossyRankIdentity:
         assert [d for d, _ in got] == [d for d, _ in expected]
         for (gd, gs), (_, es) in zip(got, expected):
             assert math.isclose(gs, es, rel_tol=1e-9, abs_tol=1e-12)
+        # the driver site quantizes the decoded lengths the same way
+        assert engine._postings_bound(q) < engine.DRIVER_MAX_POSTINGS
+        resp = engine.search({"query": q, "collection_kind": "top_docs"})
+        assert [d["id"] for d in resp.documents] == [
+            oracle.docs[d]["url"] for d, _ in expected
+        ]
+        for d, (_, es) in zip(resp.documents, expected):
+            assert math.isclose(d["score"], es, rel_tol=1e-9, abs_tol=1e-12)
 
     def test_lossy_differs_from_exact(self, lossy_idx):
         engine, oracle = lossy_idx

@@ -5,7 +5,8 @@ webtext, then runs the reference query-shape set (BASELINE.md: term, phrase,
 boolean must/should/must_not, range, query_string, all, boost, fuzzy_term,
 regex — mirroring /root/reference/examples/*_query.json) on BOTH engines and
 asserts identical top-k doc ids AND BM25 scores (rel tol 1e-9; k1=1.2,
-b=0.75; ties broken by doc_id asc).
+b=0.75; ties broken by doc_id asc): the Spark plan (`scores()`), and
+`search()` at each execution site, on a clean and on a tombstoned snapshot.
 """
 
 import math
@@ -196,10 +197,36 @@ QUERIES = [
 ]
 
 
+SITES = ("driver", "spark")
+
+
+def assert_search_matches(engine, oracle, name, query, expected, n_live):
+    """Both collectors of search() against the oracle's expected top-K:
+    top_docs (block-max pruning allowed on the Spark site) and
+    count_and_top_docs (total_hits over the live matches)."""
+    for kind in ("top_docs", "count_and_top_docs"):
+        resp = engine.search(
+            {"query": query, "collection_kind": kind, "hits": K}
+        )
+        assert [d["id"] for d in resp.documents] == [
+            oracle.docs[d]["url"] for d, _ in expected
+        ], f"{name} {kind}: ranking diverges"
+        for d, (_, es) in zip(resp.documents, expected):
+            assert math.isclose(d["score"], es, rel_tol=1e-9, abs_tol=1e-12)
+        if kind == "count_and_top_docs":
+            assert resp.total_hits == n_live, name
+
+
 @pytest.mark.parametrize("name,query", QUERIES, ids=[q[0] for q in QUERIES])
-def test_rank_identity(built, name, query):
+def test_rank_identity(built, on_site, name, query):
     engine, oracle = built
     expected = oracle.top_k(query, k=K)
+    for site in SITES:
+        with on_site(engine, site):
+            assert_search_matches(
+                engine, oracle, f"{name} on the {site} site", query,
+                expected, len(oracle.run(query)),
+            )
     got_rows = (
         engine.scores(query, topk_hint=K)
         .orderBy("score", ascending=False)
@@ -325,21 +352,15 @@ def tombstoned(spark):
 
 
 @pytest.mark.parametrize("name,query", QUERIES, ids=[q[0] for q in QUERIES])
-def test_rank_identity_with_tombstones(tombstoned, name, query):
-    """Both collectors: top_docs (block-max pruning allowed, which must
-    stay off while deleted docs sit in full blocks) and
-    count_and_top_docs (total_hits over the live matches)."""
+def test_rank_identity_with_tombstones(tombstoned, on_site, name, query):
+    """On each site; on the Spark site block-max pruning must stay off
+    while deleted docs sit in full blocks."""
     engine, oracle, dead = tombstoned
     live = {d: s for d, s in oracle.run(query).items() if d not in dead}
     expected = sorted(live.items(), key=lambda kv: (-kv[1], kv[0]))[:K]
-    for kind in ("top_docs", "count_and_top_docs"):
-        resp = engine.search(
-            {"query": query, "collection_kind": kind, "hits": K}
-        )
-        assert [d["id"] for d in resp.documents] == [
-            oracle.docs[d]["url"] for d, _ in expected
-        ], f"{name} {kind}: ranking diverges"
-        for d, (_, es) in zip(resp.documents, expected):
-            assert math.isclose(d["score"], es, rel_tol=1e-9, abs_tol=1e-12)
-        if kind == "count_and_top_docs":
-            assert resp.total_hits == len(live), name
+    for site in SITES:
+        with on_site(engine, site):
+            assert_search_matches(
+                engine, oracle, f"{name} on the {site} site", query,
+                expected, len(live),
+            )

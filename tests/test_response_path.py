@@ -1,9 +1,12 @@
 """How a search turns winners into a response.
 
-- A request is one Spark action: term top_docs and count_and_top_docs run
-  one job each, a 5-url `should` lookup at most two and a sorted match-all
-  three, on a snapshot with tombstones. total_hits rides the top-k collect
-  (an Observation).
+- A request below the driver-site gate runs no Spark job, for every query
+  kind, on a clean and on a tombstoned snapshot; one whose postings bound
+  is at the gate or over it runs the Spark plan.
+- On the Spark site (gate 0) a request is one Spark action: term top_docs
+  and count_and_top_docs run one job each, a 5-url `should` lookup at most
+  two and a sorted match-all three, on a snapshot with tombstones.
+  total_hits rides the top-k collect (an Observation).
 - The winners' url, timestamp and requested stored fields are read on the
   driver for the winners only; the values equal a Spark collect() of the
   same rows for every stored type (timestamp, binary, u64 decimal, json),
@@ -13,13 +16,15 @@
   sort, sort_value=0 under a score sort, integer unix timestamps; phrase
   queries on fields without positions raise a clear error.
 - One engine answers concurrent client threads with the sequential
-  results, and its plan caches are bounded LRU maps.
+  results on each site, and its plan caches are bounded LRU maps, as are
+  its df and bucket caches when the dictionary is not preloaded.
 """
 
 from __future__ import annotations
 
 import datetime
 import itertools
+import math
 import shutil
 import tempfile
 from decimal import Decimal
@@ -194,8 +199,9 @@ def test_plan_caches_are_bounded_lru(built):
     assert ("regex", "text", "wat.*") not in small._expansion_cache
 
 
-def test_term_top_k_single_action(built):
+def test_term_top_k_single_action(built, monkeypatch):
     engine, _ = built
+    monkeypatch.setattr(SearchEngine, "DRIVER_MAX_POSTINGS", 0)
     for kind in ("top_docs", "count_and_top_docs"):
         engine.search({"query": _term("water"), "collection_kind": kind})
         _, n = spark_jobs(
@@ -205,6 +211,27 @@ def test_term_top_k_single_action(built):
             ),
         )
         assert n == 1, kind
+
+
+def test_lazy_caches_stay_bounded(built, monkeypatch):
+    """Without a preloaded dictionary the df and bucket caches are LRU
+    maps: a stream of novel terms leaves both at CACHE_ENTRIES, and a
+    request with more terms than that still gets every df."""
+    engine, _ = built
+    monkeypatch.setattr(SearchEngine, "MAX_DICT_TERMS", 0)
+
+    class FourEntryEngine(SearchEngine):
+        CACHE_ENTRIES = 4
+
+    lazy = FourEntryEngine(engine.spark, engine.paths.root)
+    assert not lazy._dict_complete
+    terms = sorted({t for (f, t) in engine._df_cache if f == "text"})[:10]
+    assert lazy._df_of_many("text", terms) == engine._df_of_many("text", terms)
+    assert len(lazy._df_cache) <= 4 and len(lazy._bucket_cache) <= 4
+    for t in terms + ["zzzz-novel-1", "zzzz-novel-2"]:
+        resp = lazy.search({"query": _term(t), "hits": 3})
+        assert resp.total_hits == engine._df_of("text", t)
+        assert len(lazy._df_cache) <= 4 and len(lazy._bucket_cache) <= 4
 
 
 # ---------------------------------------------------------------- tombstones
@@ -239,8 +266,11 @@ def tombstoned(spark):
     shutil.rmtree(root, ignore_errors=True)
 
 
-def test_jobs_per_request_on_tombstoned_snapshot(spark, tombstoned):
+def test_jobs_per_request_on_tombstoned_snapshot(
+    spark, tombstoned, monkeypatch
+):
     root, new_urls, base = tombstoned
+    monkeypatch.setattr(SearchEngine, "DRIVER_MAX_POSTINGS", 0)
     engine = SearchEngine(spark, root)
     assert engine._n_tombstones == 9
     for kind in ("top_docs", "count_and_top_docs"):
@@ -269,6 +299,141 @@ def test_jobs_per_request_on_tombstoned_snapshot(spark, tombstoned):
     resp, n = spark_jobs(spark, lambda: engine.search(all_sorted))
     assert n == 3
     assert resp.total_hits == 200 + 25 - 4
+
+
+def kinds_requests(urls):
+    """One request per query kind (and the sorted match-all and url
+    lookup shapes), each with a stored field."""
+    queries = {
+        "all": {"kind": "all"},
+        "term": _term("water"),
+        "phrase": {"kind": "phrase", "options": {
+            "field": "text", "phrase_terms": ["of", "the"], "slop": 1}},
+        "range": {"kind": "range", "options": {
+            "field": "lang", "start": "de", "end": "fr"}},
+        "boost": {"kind": "boost", "options": {
+            "query": _term("people"), "boost": 2.0}},
+        "fuzzy_term": {"kind": "fuzzy_term", "options": {
+            "field": "text", "term": "watr", "distance": 1}},
+        "regex": {"kind": "regex", "options": {
+            "field": "text", "regex": "wa.*"}},
+        "boolean": {"kind": "boolean", "options": {"subqueries": [
+            {"occurrence": "must", "query": _term("water")},
+            {"occurrence": "should", "query": _term("day")},
+            {"occurrence": "must_not", "query": _term("people")}]}},
+        "must_not_only": {"kind": "boolean", "options": {"subqueries": [
+            {"occurrence": "must_not", "query": _term("the")}]}},
+        "query_string": {"kind": "query_string", "options": {
+            "query": 'water "of the" -people',
+            "default_search_fields": ["text"]}},
+        "url_lookup": {"kind": "boolean", "options": {"subqueries": [
+            {"occurrence": "should", "query": _term(u, "url")}
+            for u in urls]}},
+    }
+    reqs = {
+        name: {"query": q, "collection_kind": "count_and_top_docs",
+               "hits": 10, "fields": ["lang"]}
+        for name, q in queries.items()
+    }
+    reqs["all_sorted"] = {
+        "query": {"kind": "all"}, "collection_kind": "top_docs", "hits": 10,
+        "sort": {"field": "warc_ts", "order": "desc"},
+    }
+    return reqs
+
+
+def assert_no_jobs_below_gate(spark, engine, on_site, reqs):
+    for name, req in reqs.items():
+        assert engine._postings_bound(req["query"]) < engine.DRIVER_MAX_POSTINGS
+        resp, n = spark_jobs(spark, lambda: engine.search(req))
+        assert n == 0, name
+        with on_site(engine, "spark"):
+            want = engine.search(req)
+        assert resp.total_hits == want.total_hits, name
+        assert len(resp.documents) == len(want.documents), name
+        for got, exp in zip(resp.documents, want.documents):
+            # a per-doc sum over several terms may add in another order
+            assert math.isclose(got.pop("score"), exp.pop("score"),
+                                rel_tol=1e-12), name
+            assert got == exp, name
+
+
+def test_no_spark_job_below_the_gate(spark, built, on_site):
+    engine, _ = built
+    urls = [r["url"] for r in engine.docs.select("url").limit(3).collect()]
+    assert_no_jobs_below_gate(spark, engine, on_site, kinds_requests(urls))
+
+
+def test_no_spark_job_below_the_gate_on_tombstoned_snapshot(
+    spark, tombstoned, on_site
+):
+    root, new_urls, base = tombstoned
+    engine, n_open = spark_jobs(spark, lambda: SearchEngine(spark, root))
+    assert n_open == 0 and engine._n_tombstones == 9
+    reqs = kinds_requests(new_urls[:2] + base[:2] + base[5:6])
+    assert_no_jobs_below_gate(spark, engine, on_site, reqs)
+
+
+def test_both_sites_raise_the_same_errors(built, on_site):
+    engine, _ = built
+    narrow = SearchEngine(engine.spark, engine.paths.root, max_expansions=2)
+    bad = [
+        {"query": {"kind": "phrase", "options": {
+            "field": "lang", "phrase_terms": ["en", "de"]}}},
+        {"query": {"kind": "phrase", "options": {
+            "field": "text", "phrase_terms": ["water"]}}},
+        {"query": {"kind": "range", "options": {
+            "field": "warc_ts", "start": 0, "end": 1}}},
+        {"query": {"kind": "nope"}},
+        {"query": {"kind": "regex", "options": {
+            "field": "text", "regex": "wa.*"}}},
+        {"query": _term("water"), "sort": {"field": "lang"}},
+        {"query": _term("water"), "fields": ["nope"]},
+    ]
+    for req in bad:
+        raised = []
+        for site in ("driver", "spark"):
+            with on_site(narrow, site), pytest.raises(Exception) as err:
+                narrow.search(req)
+            raised.append((type(err.value), str(err.value)))
+        assert raised[0] == raised[1], req
+
+
+def test_gate_boundary(built):
+    """A request whose postings bound reaches the gate runs the Spark
+    plan; one below it runs on the driver."""
+    engine, _ = built
+    req = {"query": _term("water"), "collection_kind": "top_docs"}
+    df = engine._df_of("text", "water")
+    assert engine._postings_bound(req["query"]) == df > 0
+    try:
+        for gate, want_jobs in ((df - 1, 1), (df, 1), (df + 1, 0)):
+            engine.DRIVER_MAX_POSTINGS = gate
+            _, n = spark_jobs(spark=engine.spark, fn=lambda: engine.search(req))
+            assert n == want_jobs, gate
+    finally:
+        del engine.DRIVER_MAX_POSTINGS
+
+
+def test_driver_site_builds_no_spark_frame(spark, tombstoned, monkeypatch):
+    """A fresh snapshot answering only driver-site requests never builds
+    the Spark site's postings, docs or tombstone frames."""
+    from bayard_spark.build.segments import Snapshot
+
+    root, new_urls, base = tombstoned
+
+    def no_frame(self, spark):
+        raise AssertionError("a Spark frame was built")
+
+    for name in ("postings", "docs", "tombstones"):
+        monkeypatch.setattr(Snapshot, name, no_frame)
+    engine = SearchEngine(spark, root)
+    for req in kinds_requests(new_urls[:2] + base[5:6]).values():
+        engine.search(req)
+    monkeypatch.undo()
+    monkeypatch.setattr(SearchEngine, "DRIVER_MAX_POSTINGS", 0)
+    resp = engine.search({"query": _term("water"), "hits": 3})
+    assert resp.documents and "postings" in vars(engine)
 
 
 @pytest.fixture(scope="module")
@@ -399,13 +564,19 @@ class TestPhraseRecordValidation:
             })
 
 
-def test_engine_is_thread_safe_for_concurrent_search(built):
-    """One engine snapshot, 8 client threads, mixed query shapes —
-    results must equal the sequential answers (shared plan caches may
-    race benignly but never corrupt)."""
+def test_engine_is_thread_safe_for_concurrent_search(built, on_site):
+    """One engine snapshot, 8 client threads, mixed query shapes, on each
+    site — results must equal the sequential answers (shared plan caches
+    may race benignly but never corrupt)."""
+    engine, _ = built
+    for site in ("driver", "spark"):
+        with on_site(engine, site):
+            concurrent_equals_sequential(engine)
+
+
+def concurrent_equals_sequential(engine):
     from concurrent.futures import ThreadPoolExecutor
 
-    engine, _ = built
     shapes = [
         {"kind": "term", "options": {"field": "text", "term": "water"}},
         {"kind": "term", "options": {"field": "text", "term": "people"}},

@@ -292,7 +292,7 @@ class TestSnapshotOpen:
         monkeypatch.setattr(SearchEngine, "MAX_DICT_TERMS", 10)
         engine = SearchEngine(spark, root)
         assert not engine._dict_complete
-        assert engine._df_cache == {} and engine._bucket_cache == {}
+        assert len(engine._df_cache) == len(engine._bucket_cache) == 0
         q = {
             "query": {"kind": "term",
                       "options": {"field": "text", "term": "water"}},
