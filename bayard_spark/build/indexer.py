@@ -46,6 +46,7 @@ import re
 import time
 from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -72,6 +73,11 @@ POSTING_ROW_SCHEMA = (
     "doc_id long, field string, term string, tf int, doc_len int, "
     "pos_bytes binary"
 )
+# The same rows as Arrow, as `TextAnalysis.analyze_batch` yields them.
+POSTING_ROW_ARROW = pa.schema([
+    ("doc_id", pa.int64()), ("field", pa.string()), ("term", pa.string()),
+    ("tf", pa.int32()), ("doc_len", pa.int32()), ("pos_bytes", pa.binary()),
+])
 BLOCK_SCHEMA = (
     "field string, bucket int, term string, salt int, block_id int, "
     "n_docs int, first_doc_id long, last_doc_id long, max_tf int, "
@@ -193,6 +199,49 @@ def _runs_from_ints(
     return pa.RecordBatch.from_arrays(
         arrays, ["doc_id", "field", "term", "tf", "doc_len", "pos_bytes"]
     )
+
+
+@dataclass(frozen=True)
+class TextAnalysis:
+    """The analyzer pass over a meta's indexed text fields: per field its
+    name, analyzer, whether it records positions and whether the Arrow
+    kernels (`arrow_native`) run it. `analyze_batch` is the one tokenizer
+    of the build's and a large put's mapInArrow and of a driver put."""
+
+    fields: tuple[tuple[str, Analyzer, bool, bool], ...]
+
+    @property
+    def columns(self) -> list[str]:
+        """The text columns `analyze_batch` reads besides doc_id."""
+        return [name for name, *_ in self.fields]
+
+    def analyze_batch(self, rb: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
+        """Posting rows (POSTING_ROW_SCHEMA) of the docs in `rb`, a batch
+        of doc_id and the text columns: one batch per field with tokens.
+        Each row depends on its own doc only, so any split of the docs
+        into batches gives the same rows."""
+        from bayard_spark.analysis import arrow_native
+
+        doc_ids = rb.column("doc_id").to_numpy(zero_copy_only=False)
+        pdf = None
+        for fname, an, want_pos, arrow_ok in self.fields:
+            if arrow_ok:
+                row_id, codes, pos, dictionary, doc_len = (
+                    arrow_native.tokenize_ints(rb.column(fname), an)
+                )
+                batch = _runs_from_ints(
+                    row_id, codes, pos, dictionary, doc_len,
+                    doc_ids, fname, want_pos,
+                )
+            else:
+                if pdf is None:
+                    pdf = rb.to_pandas()
+                frame = an.tokenize(pdf[fname].reset_index(drop=True))
+                if len(frame) == 0:
+                    continue
+                batch = _runs_to_record_batch(frame, doc_ids, fname, want_pos)
+            if batch is not None:
+                yield batch
 
 
 def encode_group_table(table: pa.Table, block_size: int = 128) -> pa.Table:
@@ -606,73 +655,46 @@ class IndexBuilder:
     def posting_fields(self, type_: str | None = None) -> list[FieldDef]:
         """The indexed fields posting_rows reads (of one type, if given).
         posting_rows and its bytes and json parts take their fields from
-        here, so posting_columns names every column they read."""
+        here, so a driver put knows every column they read."""
         return [
             f for f in self.meta.fields
             if f.indexed and f.type in self.POSTING_TYPES
             and type_ in (None, f.type)
         ]
 
-    def posting_columns(self) -> list[str]:
-        """The columns besides doc_id that posting_rows reads."""
-        return [f.name for f in self.posting_fields()]
-
-    def posting_rows(self, docs: DataFrame) -> DataFrame:
-        fields = [
-            (f.name, self.analyzers[f.analyzer], f.record)
-            for f in self.posting_fields("text")
-        ]
-        want_pos = {name: rec == "position" for name, _, rec in fields}
-        analyzer_by_field: dict[str, Analyzer] = {
-            name: an for name, an, _ in fields
-        }
-        field_names = [name for name, _, _ in fields]
-
+    def text_analysis(self) -> TextAnalysis:
+        """The analyzer pass over the meta's indexed text fields."""
         from bayard_spark.analysis import arrow_native
 
-        arrow_ok = {
-            name: arrow_native.supports(analyzer_by_field[name])
-            for name in field_names
-        }
+        return TextAnalysis(tuple(
+            (f.name, an, f.record == "position", arrow_native.supports(an))
+            for f in self.posting_fields("text")
+            for an in [self.analyzers[f.analyzer]]
+        ))
 
-        def analyze_batch(rb: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
-            doc_ids = rb.column("doc_id").to_numpy(zero_copy_only=False)
-            pdf = None
-            for fname in field_names:
-                an = analyzer_by_field[fname]
-                if arrow_ok[fname]:
-                    row_id, codes, pos, dictionary, doc_len = (
-                        arrow_native.tokenize_ints(rb.column(fname), an)
-                    )
-                    batch = _runs_from_ints(
-                        row_id, codes, pos, dictionary, doc_len,
-                        doc_ids, fname, want_pos[fname],
-                    )
-                else:
-                    if pdf is None:
-                        pdf = rb.to_pandas()
-                    frame = an.tokenize(pdf[fname].reset_index(drop=True))
-                    if len(frame) == 0:
-                        continue
-                    batch = _runs_to_record_batch(
-                        frame, doc_ids, fname, want_pos[fname]
-                    )
-                if batch is not None:
-                    yield batch
+    def posting_rows(self, docs: DataFrame) -> DataFrame:
+        text = self.text_analysis()
 
         def analyze(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for rb in batches:
-                yield from analyze_batch(rb)
+                yield from text.analyze_batch(rb)
 
-        cols = ["doc_id"] + field_names
-        out = docs.select(*cols).mapInArrow(analyze, POSTING_ROW_SCHEMA)
-        extra = self._bytes_posting_rows(docs)
-        if extra is not None:
-            out = out.unionByName(extra)
-        extra = self._json_posting_rows(docs)
-        if extra is not None:
-            out = out.unionByName(extra)
-        return out
+        out = docs.select("doc_id", *text.columns).mapInArrow(
+            analyze, POSTING_ROW_SCHEMA
+        )
+        extra = self.jvm_posting_rows(docs)
+        return out if extra is None else out.unionByName(extra)
+
+    def jvm_posting_rows(self, docs: DataFrame) -> DataFrame | None:
+        """The posting rows of the bytes and json_object fields, built in
+        the JVM (json leaves are tokenized in Python), or None when the
+        meta indexes neither."""
+        parts = [
+            p for p in (self._bytes_posting_rows(docs),
+                        self._json_posting_rows(docs))
+            if p is not None
+        ]
+        return reduce(DataFrame.unionByName, parts) if parts else None
 
     def _bytes_posting_rows(self, docs: DataFrame) -> DataFrame | None:
         """bytes fields (docs/schema.md:27,106-122): one raw term per value,

@@ -6,7 +6,8 @@ Reference semantics re-expressed for a storage-shared Spark layout:
   (bayard/src/node.rs:1108-1196, upsert pair :1191-1192). Here: a new
   SEGMENT (one postings file + a docs table) is staged; existing urls
   are tombstoned. Nothing is visible until commit(). An update-sized
-  batch stages on the driver in two Spark jobs; a larger one in Spark.
+  batch stages on the driver in one Spark job, the one that brings it
+  back; a larger one in Spark.
 - delete_documents: tombstone doc_ids by url (node.rs:1198-1241), found
   through the url field's postings on the driver (no Spark job).
 - commit: atomically publish staged segments + tombstones by rewriting the
@@ -34,6 +35,7 @@ import re
 import secrets
 import time
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 from functools import cached_property, reduce
 
 import numpy as np
@@ -49,14 +51,17 @@ from pyspark.sql.types import LongType, StructField, StructType
 from bayard_spark.build.codec import decode_blocks
 from bayard_spark.build.indexer import (
     BLOCK_SCHEMA,
+    POSTING_ROW_ARROW,
     TIEBREAK,
     UPSERT_ORDER,
+    TextAnalysis,
     encode_blocks,
     row_tiebreak,
     salt_column,
     upsert_order,
     write_base_blocks,
 )
+from bayard_spark.build.xxh64 import hash_buckets
 from bayard_spark.fsio import IndexFS
 from bayard_spark.schema import IndexPaths
 
@@ -120,17 +125,21 @@ class SegmentWriter:
 
     # A put of at most BULK_ID_THRESHOLD rows and BULK_BYTES_THRESHOLD
     # Arrow bytes runs on the driver: one Spark job brings the batch back,
-    # the driver deduplicates it, finds the urls it replaces, assigns ids
-    # and writes the docs and tombstone files, and a second job runs the
-    # analyzer and the term bucket. A larger batch, which need not fit in
+    # and the driver deduplicates it, finds the urls it replaces, assigns
+    # ids, writes the docs and tombstone files, analyzes and buckets the
+    # text and writes the postings. A larger batch, which need not fit in
     # driver memory, stages through Spark with the build's bucket-offset
-    # ids. The row bound caps what the first job brings back; the byte
-    # bound caps the driver's work after it, whose peak grows with the
-    # batch's bytes (about 8x its Arrow bytes on webtext). On webtext, 4
-    # cores and a 2 GB driver heap, the driver path was 2.3-2.7x faster
-    # than Spark at 16,384 rows (22 MB) for 230 MB more driver Python,
-    # and 1.7-2.1x at 65,536 rows (87 MB) for 770 MB and up to 1.9 GB of
-    # JVM heap (ARCHITECTURE.md, Commit/rollback).
+    # ids. The row bound caps what the job brings back; the byte bound
+    # caps the driver's work after it, whose peak grows with the batch's
+    # bytes: about 10x its Arrow bytes of Python on webtext, since the
+    # analyzer's token arrays live on the driver. Measured on webtext, 4
+    # cores, 2 GB driver heap (median of 3 puts; Python peak by
+    # tracemalloc), against the two-job put this replaced: 1,024 rows
+    # 0.29 s (was 0.73 s), 17 MB (8 MB); 4,096 rows 0.56 s (1.10 s),
+    # 52 MB (29 MB); 16,384 rows (22 MB of Arrow) 1.96 s (2.87 s), 235 MB
+    # (114 MB); 7,800 wide rows (30 MiB) 2.06 s (2.76 s), 295 MB
+    # (116 MB). The Spark path took 7.3-8.5 s at 16,384 rows
+    # (ARCHITECTURE.md, Commit/rollback).
     BULK_ID_THRESHOLD = 16_384
     BULK_BYTES_THRESHOLD = 32 << 20
 
@@ -267,9 +276,12 @@ class SegmentWriter:
     def _put_on_driver(
         self, seg: str, batch: pa.Table, schema: StructType
     ) -> str:
-        """Dedupe, url lookup, ids and the docs and tombstone files on the
-        driver with pyarrow; the analyzer pass and the term bucket are the
-        one Spark job, over doc_id and the indexed columns only."""
+        """Dedupe, url lookup, ids, the docs and tombstone files, the
+        text fields' analyzer pass (`analyze_on_driver`), the term buckets
+        (`hash_buckets`, Spark's xxhash64 in numpy) and the encode step,
+        all on the driver: no Spark job. A meta with indexed bytes or
+        json_object fields builds their rows in Spark, in one action over
+        doc_id and those columns only."""
         check_urls(batch["url"])
         batch = batch.take(pc.sort_indices(
             batch, sort_keys=list(UPSERT_ORDER), null_placement="at_end"
@@ -294,18 +306,21 @@ class SegmentWriter:
         self._write_docs(seg, latest, StructType(
             schema.fields + [StructField("doc_id", LongType(), False)]
         ))
-        cols = self.b.posting_columns()
-        rows = (
-            self.b.posting_rows(self.spark.createDataFrame(
-                latest.select(["doc_id", *cols]),
+        rows = [analyze_on_driver(self.b.text_analysis(), latest)]
+        jvm_cols = [
+            f.name for f in self.b.posting_fields() if f.type != "text"
+        ]
+        if jvm_cols:
+            rows.append(self.b.jvm_posting_rows(self.spark.createDataFrame(
+                latest.select(["doc_id", *jvm_cols]),
                 StructType([StructField("doc_id", LongType(), False)]
-                           + [schema[c] for c in cols]),
-            ))
-            .withColumn("bucket", self.b.term_bucket())
-            .toArrow()
-        )
+                           + [schema[c] for c in jvm_cols]),
+            )).toArrow().cast(POSTING_ROW_ARROW))
+        rows = pa.concat_tables(rows)
         blocks = encode_blocks(
             rows.append_column(
+                "bucket", [hash_buckets(rows["term"], self.b.meta.num_buckets)]
+            ).append_column(
                 "salt", pa.array(np.zeros(rows.num_rows, dtype=np.int32))
             ),
             self.b.meta.block_size,
@@ -772,6 +787,27 @@ def write_parquet(io: IndexFS, table_dir: str, table: pa.Table, **options) -> No
     pq.write_table(
         table, posixpath.join(table_dir, "part-00000.parquet"),
         filesystem=io.fs, store_schema=bool(table.schema.metadata), **options,
+    )
+
+
+def analyze_on_driver(text: TextAnalysis, docs: pa.Table) -> pa.Table:
+    """The posting rows of `docs`' text fields (POSTING_ROW_ARROW): the
+    build's `analyze_batch` over one row slice per driver core, in a
+    thread pool. The tokenizer kernels release the GIL for most of their
+    work, so the slices run in parallel."""
+    batch = docs.select(["doc_id", *text.columns]).combine_chunks()
+    n = batch.num_rows
+    k = max(1, min(len(os.sched_getaffinity(0)), n))
+    bounds = np.linspace(0, n, k + 1).astype(np.int64)
+    slices = [batch.slice(s, e - s) for s, e in zip(bounds[:-1], bounds[1:])]
+    with ThreadPoolExecutor(k) as pool:
+        parts = list(pool.map(
+            lambda t: [rb for b in t.to_batches()
+                       for rb in text.analyze_batch(b)],
+            slices,
+        ))
+    return pa.Table.from_batches(
+        [rb for part in parts for rb in part], POSTING_ROW_ARROW
     )
 
 

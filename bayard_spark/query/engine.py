@@ -69,6 +69,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from bayard_spark.build.codec import decode_blocks
+from bayard_spark.build.xxh64 import hash_buckets
 from bayard_spark.fieldnorm import quantize
 from bayard_spark.query.parser import parse_query_string
 from bayard_spark.schema import IndexMeta, IndexPaths
@@ -399,22 +400,18 @@ class SearchEngine:
     # ---------- helpers ----------
 
     def _buckets(self, terms: list[str]) -> dict[str, int]:
-        """term → bucket; the values computed here are returned directly,
-        since a bounded cache may already have evicted them."""
+        """term → bucket, the build's `pmod(xxhash64(term), num_buckets)`;
+        uncached terms are hashed on the driver (no Spark job). The values
+        computed here are returned directly, since a bounded cache may
+        already have evicted them."""
         out = {t: self._bucket_cache.get(t) for t in set(terms)}
         missing = [t for t, b in out.items() if b is None]
         if missing:
-            df = self.spark.createDataFrame(
-                [(t,) for t in missing], "term string"
+            hashed = hash_buckets(
+                pa.array(missing, type=pa.string()), self.meta.num_buckets
             )
-            rows = df.select(
-                "term",
-                F.pmod(F.xxhash64("term"), F.lit(self.meta.num_buckets))
-                .cast("int")
-                .alias("b"),
-            ).collect()
-            for r in rows:
-                out[r["term"]] = self._bucket_cache[r["term"]] = r["b"]
+            for t, b in zip(missing, hashed.tolist()):
+                out[t] = self._bucket_cache[t] = b
         return out
 
     def _leaf_blocks(self, fld: str, term: str) -> DataFrame:
@@ -1484,11 +1481,13 @@ class SearchEngine:
         files, as `Snapshot.live_url_ids` reads them, and decoded on the
         driver. Returns [index into terms, doc id, tf, len] arrays, one
         entry per posting, plus the positions as a ListArray."""
-        filt = (pc.field("field") == fld) & pc.field("term").isin(terms)
-        buckets = {self._bucket_cache.get(t) for t in terms}
-        if None not in buckets:
-            # prunes the base tree's (field, bucket) directories before I/O
-            filt &= pc.field("bucket").isin(sorted(buckets))
+        # the bucket prunes the base tree's (field, bucket) directories
+        # before I/O
+        filt = (
+            (pc.field("field") == fld)
+            & pc.field("bucket").isin(sorted(set(self._buckets(terms).values())))
+            & pc.field("term").isin(terms)
+        )
         cols = ["doc_bytes", "tf_bytes", "len_bytes"] + (
             ["pos_bytes"] if want_positions else []
         )

@@ -234,6 +234,36 @@ def test_lazy_caches_stay_bounded(built, monkeypatch):
         assert len(lazy._df_cache) <= 4 and len(lazy._bucket_cache) <= 4
 
 
+def test_lazy_buckets_run_no_spark_job(built, monkeypatch):
+    """Without a preloaded dictionary `_buckets` hashes uncached terms on
+    the driver: 0 Spark jobs, and over the whole index vocabulary (and a
+    term it lacks) each bucket is Spark's pmod(xxhash64(term), n) and the
+    one the term's blocks carry."""
+    engine, _ = built
+    monkeypatch.setattr(SearchEngine, "MAX_DICT_TERMS", 0)
+    lazy = SearchEngine(engine.spark, engine.paths.root)
+    assert not lazy._dict_complete
+    vocab = (
+        lazy._postings_ds.to_table(columns=["term", "bucket"])
+        .group_by("term").aggregate([("bucket", "min"), ("bucket", "max")])
+    )
+    terms = vocab["term"].to_pylist() + ["zzzz-novel"]
+    got, jobs = spark_jobs(lazy.spark, lambda: lazy._buckets(terms))
+    assert jobs == 0
+    n = lazy.meta.num_buckets
+    want = dict(
+        lazy.spark.createDataFrame([(t,) for t in terms], "term string")
+        .select("term", F.pmod(F.xxhash64("term"), F.lit(n)).cast("int"))
+        .collect()
+    )
+    assert got == want
+    assert vocab["bucket_min"] == vocab["bucket_max"]
+    assert dict(zip(vocab["term"].to_pylist(),
+                    vocab["bucket_min"].to_pylist())) == {
+        t: got[t] for t in terms[:-1]
+    }
+
+
 # ---------------------------------------------------------------- tombstones
 
 
