@@ -18,6 +18,7 @@ from dataclasses import dataclass, field
 from typing import Any, Callable
 
 import pandas as pd
+import pyarrow as pa
 
 from bayard_spark.analysis.filters import FILTERS
 from bayard_spark.analysis.tokenizers import TOKENIZERS
@@ -42,7 +43,16 @@ class Analyzer:
 
     def analyze_one(self, text: str) -> list[str]:
         """Analyze a single string → list of token texts (driver-side use:
-        query_string analysis, tests)."""
+        query_string analysis, tests). An analyzer the build runs on the
+        Arrow kernels (`arrow_native.supports`) runs on them here too, so
+        a query splits text the way the index did."""
+        from bayard_spark.analysis import arrow_native
+
+        if arrow_native.supports(self):
+            _, codes, _, words, _ = arrow_native.tokenize_ints(
+                pa.array([text], type=pa.string()), self
+            )
+            return words.take(pa.array(codes)).to_pylist()
         frame = self.tokenize(pd.Series([text]))
         return frame["token"].tolist()
 

@@ -29,7 +29,20 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 SIMPLE_PATTERN = r"[^\p{L}\p{N}]+"
+# The same split on ASCII-only text. RE2 compiles it in ~16 us, where the
+# Unicode classes take ~0.9 ms on every call: most of the time a short
+# query string's analysis took.
+SIMPLE_ASCII_PATTERN = r"[^A-Za-z0-9]+"
 WHITESPACE_PATTERN = r"\s+"
+
+
+def _split_pattern(analyzer, texts) -> str:
+    """The RE2 pattern the analyzer's tokenizer splits `texts` on."""
+    if analyzer.tokenizer_name != "simple":
+        return WHITESPACE_PATTERN
+    if pc.all(pc.string_is_ascii(texts)).as_py() is False:
+        return SIMPLE_PATTERN
+    return SIMPLE_ASCII_PATTERN
 
 
 def supports(analyzer) -> bool:
@@ -66,12 +79,9 @@ def doc_lengths(texts: pa.Array, analyzer) -> np.ndarray:
             lowercase = True
     if stop_words and lowercase:
         texts = pc.utf8_lower(texts)
-    pattern = (
-        SIMPLE_PATTERN
-        if analyzer.tokenizer_name == "simple"
-        else WHITESPACE_PATTERN
+    lists = pc.split_pattern_regex(
+        texts, pattern=_split_pattern(analyzer, texts)
     )
-    lists = pc.split_pattern_regex(texts, pattern=pattern)
     flat = pc.list_flatten(lists)
     counts = pc.list_value_length(lists).to_numpy(zero_copy_only=False)
     counts = np.nan_to_num(counts, nan=0).astype(np.int64)
@@ -135,12 +145,9 @@ def tokenize_ints(
             kept.astype(np.int32),
         )
 
-    pattern = (
-        SIMPLE_PATTERN
-        if analyzer.tokenizer_name == "simple"
-        else WHITESPACE_PATTERN
+    lists = pc.split_pattern_regex(
+        texts, pattern=_split_pattern(analyzer, texts)
     )
-    lists = pc.split_pattern_regex(texts, pattern=pattern)
     flat = pc.list_flatten(lists)
     counts = pc.list_value_length(lists).to_numpy(zero_copy_only=False)
     counts = np.nan_to_num(counts, nan=0).astype(np.int64)

@@ -6,10 +6,14 @@ terms from the term dictionary (fuzzy/regex after their cached
 expansion), plus the commit log's doc-id high-water mark for `all`,
 `range`, a must_not-only boolean or a fast-field sort.
 
-- Driver site, bound below DRIVER_MAX_POSTINGS: no Spark job. The leaf
-  terms' blocks are read with pyarrow from the snapshot's files (field,
-  bucket and term filters), decoded by `codec.decode_blocks`, tombstoned
-  ids dropped, and scored in numpy with the Spark plan's BM25 operation
+- Driver site, bound below DRIVER_MAX_POSTINGS: no Spark job. Every file
+  read goes through the engine's read cache (`_read_cache`, bounded by
+  READ_CACHE_BYTES, as long-lived as the snapshot): a term's live
+  postings are read once — its blocks read with pyarrow from the
+  snapshot's files (field, bucket and term filters, one scan for all the
+  terms a request lacks), decoded by `codec.decode_blocks`, tombstoned
+  ids dropped — and so are the winners' docs columns per row group.
+  Scores are computed in numpy with the Spark plan's BM25 operation
   order; boolean, phrase, boost and top-k compose on sorted doc-id arrays.
 - Spark site, above it: the DataFrame plan below, which parallelizes
   decode for head terms at web scale.
@@ -58,7 +62,8 @@ import threading
 from collections import OrderedDict
 from collections.abc import Iterator
 from dataclasses import dataclass, field as dc_field
-from functools import cached_property, reduce
+from functools import cached_property, partial, reduce
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -150,30 +155,86 @@ def _top_order(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
     return cand[np.lexsort((ids[cand], -scores[cand]))][:k]
 
 
-class LRUCache:
-    """A fixed-capacity, thread-safe least-recently-used map. The engine's
-    plan and expansion caches live as long as the snapshot and are shared
-    by every client thread; a stream of novel queries must not grow them
-    without bound."""
+class _Postings(NamedTuple):
+    """One term's live postings in a field, as the driver site reads them:
+    doc ids ascending, tf and length (quantized under lossy norms) as
+    float64, all read-only; positions an int32 ListArray aligned to the
+    ids, or None until a phrase asks for them."""
 
-    def __init__(self, capacity: int):
+    ids: np.ndarray
+    tfs: np.ndarray
+    lens: np.ndarray
+    positions: pa.ListArray | None
+
+
+def _frozen(a: np.ndarray) -> np.ndarray:
+    """`a`, read-only: a read-cache value is shared by every request."""
+    a.flags.writeable = False
+    return a
+
+
+# What the read cache charges an entry beyond its buffers: the key, the
+# tuples and the array headers. tracemalloc read 749 B per entry for
+# 10,000 one-posting url terms (24 B of which are postings), so a stream
+# of novel url lookups is bounded by the real footprint too.
+_ENTRY_BYTES = 768
+
+
+def _entry_bytes(value) -> int:
+    """The read cache's weight of an entry: its Arrow and numpy buffers
+    plus `_ENTRY_BYTES`."""
+    parts = value if isinstance(value, tuple) else (value,)
+    return _ENTRY_BYTES + sum(p.nbytes for p in parts if p is not None)
+
+
+class LRUCache:
+    """A bounded, thread-safe least-recently-used map. The engine's caches
+    live as long as the snapshot and are shared by every client thread; a
+    stream of novel queries must not grow them without bound.
+
+    `capacity` bounds the total weight of the entries: each weighs 1, or
+    `weigh(value)` when given (the read cache weighs bytes). An entry
+    heavier than the whole capacity is not kept."""
+
+    def __init__(self, capacity: int, weigh=None):
         self.capacity = capacity
-        self._items: OrderedDict = OrderedDict()
+        self._weigh = weigh
+        self._items: OrderedDict = OrderedDict()  # key → (value, weight)
         self._lock = threading.Lock()
+        self.weight = 0
 
     def get(self, key):
         with self._lock:
             if key not in self._items:
                 return None
             self._items.move_to_end(key)
-            return self._items[key]
+            return self._items[key][0]
 
     def __setitem__(self, key, value) -> None:
+        w = 1 if self._weigh is None else self._weigh(value)
         with self._lock:
-            self._items[key] = value
-            self._items.move_to_end(key)
-            while len(self._items) > self.capacity:
-                self._items.popitem(last=False)
+            if key in self._items:
+                self.weight -= self._items.pop(key)[1]
+            if w > self.capacity:
+                return
+            # evict first, so the weight never reads above the capacity
+            while self.weight + w > self.capacity:
+                self.weight -= self._items.popitem(last=False)[1][1]
+            self._items[key] = (value, w)
+            self.weight += w
+
+    def fetch(self, keys, load, usable=None) -> dict:
+        """Read-through: {key: value} for `keys`, with the ones not held
+        (or held but not `usable`) loaded by ONE call of `load(missing)`,
+        which returns {key: value} for at least those, and stored."""
+        got = {k: self.get(k) for k in keys}
+        missing = [k for k, v in got.items()
+                   if v is None or (usable is not None and not usable(v))]
+        if missing:
+            loaded = load(missing)
+            for k in missing:
+                self[k] = got[k] = loaded[k]
+        return got
 
     def __contains__(self, key) -> bool:
         with self._lock:
@@ -186,6 +247,7 @@ class LRUCache:
     def clear(self) -> None:
         with self._lock:
             self._items.clear()
+            self.weight = 0
 
 
 @dataclass
@@ -242,6 +304,18 @@ class SearchEngine:
     # the two densest head terms at 2M; memory sets the bound, since such
     # a phrase peaks at about 730 B of numpy per posting on the driver.
     DRIVER_MAX_POSTINGS = 500_000
+    # Byte bound of the read cache (`_read_cache`): what the driver site
+    # reads from the snapshot's files, kept for the engine's life.
+    # Measured on perfbench's query_mix (4 clients on local[4]): the
+    # mix's whole working set (every leaf's postings with positions, the
+    # winners' docs row groups, the live sort column) peaked at 1.6 MB on
+    # the 1k-doc index and 30 MB on a 20k-doc one, where it served 95% of
+    # leaf-postings and 99.9% of docs-column reads; the driver's VmHWM
+    # did not move (196 vs 203 MB, 545 vs 550 MB without the cache). An
+    # entry costs 24 B per posting (with positions, 4 B more per posting
+    # and 4 B per position), so the entries of a request at the site
+    # gate (500k postings, ~17 MB) fit about three times over.
+    READ_CACHE_BYTES = 64 << 20
 
     def __init__(self, spark: SparkSession, root: str,
                  max_expansions: int = 1024):
@@ -295,13 +369,12 @@ class SearchEngine:
         # a stream of novel terms cannot grow them.
         self._bucket_cache = LRUCache(self.CACHE_ENTRIES)
         self._df_cache = LRUCache(self.CACHE_ENTRIES)
-        # Prepared-plan cache for decoded LEAF frames (scan→decode→score),
-        # keyed per (field, term, positions?, pruned?). These plans are
-        # NARROW (no shuffle boundary), so re-collecting a cached frame
-        # re-executes the scan+decode in full — only the driver-side plan
-        # construction (py4j + Catalyst analysis, ~100 ms/query measured)
-        # is amortized, the way a search server keeps prepared readers
-        # open over an immutable index snapshot. Compositions that contain
+        # The Spark site's prepared-plan cache for decoded LEAF frames
+        # (scan→decode→score), keyed per (field, term, positions?,
+        # pruned?). These plans are NARROW (no shuffle boundary), so
+        # re-collecting a cached frame re-executes the scan+decode in full
+        # — only the driver-side Spark planning (py4j + Catalyst analysis,
+        # ~100 ms/query measured) is amortized. Compositions that contain
         # shuffles (boolean joins, should-aggs) are rebuilt per call so no
         # shuffle-stage output is ever silently reused as a cached result.
         self._leaf_cache = LRUCache(self.CACHE_ENTRIES)
@@ -313,9 +386,16 @@ class SearchEngine:
         # not re-run that job per request (r7; same rationale as the
         # leaf plan cache above).
         self._expansion_cache = LRUCache(self.CACHE_ENTRIES)
-        # (live doc ids, values) of the fast fields the driver site sorts
-        # by, one entry per field at most
-        self._fast_columns = LRUCache(len(self.meta.fields))
+        # The driver site's read-through cache, bounded in bytes: every
+        # file read a driver-site request makes goes through it (`_load_*`
+        # are its miss paths), so a repeated leaf or winner reads no file.
+        # Entries: a term's live postings ("postings", field, term), a docs
+        # column of one row group ("docs", file, row group, column) and a
+        # column over the live docs in doc-id order ("live", column; None
+        # for the ids alone).
+        self._read_cache = LRUCache(self.READ_CACHE_BYTES, _entry_bytes)
+        # query_string leaves: (analyzer name, text) → tokens
+        self._analyzed = LRUCache(self.CACHE_ENTRIES)
         self._dict_complete = False
         self.k1 = self.meta.bm25_k1
         self.b = self.meta.bm25_b
@@ -1231,7 +1311,18 @@ class SearchEngine:
             opts["default_search_fields"],
             self.analyzers,
             self.field_analyzers,
+            analyze=self._analyze,
         )
+
+    def _analyze(self, aname: str, text: str) -> tuple:
+        """`analyzers[aname].analyze_one(text)`, memoized: analysis is a
+        pure function of the analyzer and the text."""
+        key = (aname, text)
+        toks = self._analyzed.get(key)
+        if toks is None:
+            toks = tuple(self.analyzers[aname].analyze_one(text))
+            self._analyzed[key] = toks
+        return toks
 
     def _expansion(self, kind: str, opts: dict) -> dict[str, int]:
         """{term: df} a fuzzy_term or regex query expands to (cached)."""
@@ -1475,12 +1566,27 @@ class SearchEngine:
 
     def _driver_postings(
         self, fld: str, terms: list[str], want_positions: bool = False
-    ) -> list:
+    ) -> list[_Postings]:
         """The live postings of `terms` (distinct, each with df > 0) in
-        field `fld`: their blocks read with pyarrow from the snapshot's
-        files, as `Snapshot.live_url_ids` reads them, and decoded on the
-        driver. Returns [index into terms, doc id, tf, len] arrays, one
-        entry per posting, plus the positions as a ListArray."""
+        field `fld`, in the order of `terms`, from the read cache; the
+        terms it lacks (or holds without positions a phrase needs) are
+        read together by `_load_postings`."""
+        keys = [("postings", fld, t) for t in terms]
+        got = self._read_cache.fetch(
+            keys,
+            partial(self._load_postings, fld, want_positions),
+            (lambda p: p.positions is not None) if want_positions else None,
+        )
+        return [got[k] for k in keys]
+
+    def _load_postings(
+        self, fld: str, want_positions: bool, keys: list[tuple]
+    ) -> dict:
+        """Read-cache miss path: the blocks of the terms of `keys` read in
+        ONE pyarrow scan of the snapshot's files, as
+        `Snapshot.live_url_ids` reads them, decoded on the driver and
+        split into one `_Postings` per term, tombstoned ids dropped."""
+        terms = [t for _, _, t in keys]
         # the bucket prunes the base tree's (field, bucket) directories
         # before I/O
         filt = (
@@ -1494,22 +1600,28 @@ class SearchEngine:
         blocks = self._postings_ds.to_table(columns=["term"] + cols, filter=filt)
         dec = decode_blocks(*(blocks[c].combine_chunks() for c in cols))
         ids = dec.doc_ids.astype(np.int64)
-        live = ~_sorted_member(self._dead_sorted, ids)
         lens = quantize(dec.lens) if self.meta.lossy_fieldnorms else dec.lens
-        out = [
-            np.repeat(
-                pc.index_in(blocks["term"], value_set=pa.array(terms))
-                .to_numpy(), dec.counts,
-            )[live],
-            ids[live],
-            dec.tfs[live].astype(np.float64),
-            lens[live].astype(np.float64),
-        ]
-        if want_positions:
-            out.append(pa.ListArray.from_arrays(
-                pa.array(dec.pos_offsets, type=pa.int32()),
-                pa.array(dec.positions.astype(np.int32)),
-            ).filter(pa.array(live)))
+        ix = np.repeat(
+            pc.index_in(blocks["term"], value_set=pa.array(terms)).to_numpy(),
+            dec.counts,
+        )
+        # the live postings, grouped by term, doc ids ascending in each
+        live = np.flatnonzero(~_sorted_member(self._dead_sorted, ids))
+        order = live[np.lexsort((ids[live], ix[live]))]
+        bounds = np.searchsorted(ix[order], np.arange(len(terms) + 1))
+        pos = pa.ListArray.from_arrays(
+            pa.array(dec.pos_offsets, type=pa.int32()),
+            pa.array(dec.positions.astype(np.int32)),
+        ) if want_positions else None
+        out = {}
+        for key, lo, hi in zip(keys, bounds[:-1], bounds[1:]):
+            rows = order[lo:hi]
+            out[key] = _Postings(
+                _frozen(ids[rows]),
+                _frozen(dec.tfs[rows].astype(np.float64)),
+                _frozen(lens[rows].astype(np.float64)),
+                pos.take(pa.array(rows)) if want_positions else None,
+            )
         return out
 
     def _bm25(self, idf, tf: np.ndarray, ln: np.ndarray, avg: float):
@@ -1520,15 +1632,22 @@ class SearchEngine:
 
     def _driver_terms(self, fld: str, term_dfs: dict[str, int]) -> tuple:
         """Per-doc sum of per-term BM25 over a term set (a term, or a
-        fuzzy/regex expansion)."""
+        fuzzy/regex expansion), added in sorted-term order."""
         terms = sorted(t for t, d in term_dfs.items() if d > 0)
         if not terms:
             return _NO_HITS
-        ix, ids, tfs, lens = self._driver_postings(fld, terms)
-        idf = np.array([self.idf(fld, term_dfs[t]) for t in terms])
-        return _sum_by_doc(
-            ids, self._bm25(idf[ix], tfs, lens, self.stats[fld]["avg_len"])
+        posts = self._driver_postings(fld, terms)
+        idf = np.repeat(
+            [self.idf(fld, term_dfs[t]) for t in terms],
+            [p.ids.size for p in posts],
         )
+        scores = self._bm25(
+            idf,
+            np.concatenate([p.tfs for p in posts]),
+            np.concatenate([p.lens for p in posts]),
+            self.stats[fld]["avg_len"],
+        )
+        return _sum_by_doc(np.concatenate([p.ids for p in posts]), scores)
 
     def _driver_phrase(
         self, fld: str, phrase_terms: list[str], slop: int
@@ -1538,22 +1657,18 @@ class SearchEngine:
         if any(d == 0 for d in df_map.values()):
             return _NO_HITS
         uniq = sorted(df_map)
-        ix, ids, _, lens, pos = self._driver_postings(
-            fld, uniq, want_positions=True
-        )
-        # each term's postings in doc-id order, then the docs all hold
-        rows = [np.flatnonzero(ix == j) for j in range(len(uniq))]
-        rows = [r[np.argsort(ids[r], kind="stable")] for r in rows]
-        common = reduce(np.intersect1d, (ids[r] for r in rows))
-        at = {
-            t: r[np.searchsorted(ids[r], common)] for t, r in zip(uniq, rows)
-        }
-        taken = {t: pos.take(pa.array(at[t])) for t in uniq}
+        posts = dict(zip(
+            uniq, self._driver_postings(fld, uniq, want_positions=True)
+        ))
+        # the docs every term holds, and each term's postings of them
+        common = reduce(np.intersect1d, (p.ids for p in posts.values()))
+        at = {t: np.searchsorted(p.ids, common) for t, p in posts.items()}
+        taken = {t: posts[t].positions.take(pa.array(at[t])) for t in uniq}
         counts = phrase_match_counts([taken[t] for t in phrase_terms], slop)
         hit = counts > 0
         sum_idf = sum(self.idf(fld, df_map[t]) for t in phrase_terms)
         return common[hit], self._bm25(
-            sum_idf, counts[hit], lens[at[uniq[0]][hit]],
+            sum_idf, counts[hit], posts[uniq[0]].lens[at[uniq[0]][hit]],
             self.stats[fld]["avg_len"],
         )
 
@@ -1596,21 +1711,23 @@ class SearchEngine:
             ids, score = ids[keep], score[keep]
         return ids, score
 
-    @cached_property
+    @property
     def _live_doc_ids(self) -> np.ndarray:
         return self._live_column(None)[0]
 
     def _live_column(self, col: str | None) -> tuple[np.ndarray, pa.Array]:
-        """(ids ascending, values of `col`) over the live docs, read on the
-        driver with the snapshot's footers; a docs file without the column
-        reads nulls, as the unionByName of `docs` does. A fast field's
-        column is cached (the driver site sorts by it)."""
+        """(ids ascending, values of `col`) over the live docs, from the
+        read cache (`_load_live_column`)."""
+        key = ("live", col)
+        return self._read_cache.fetch([key], self._load_live_column)[key]
+
+    def _load_live_column(self, keys: list[tuple]) -> dict:
+        """Read-cache miss path of `_live_column`: the column read on the
+        driver with the snapshot's footers; a docs file without it reads
+        nulls, as the unionByName of `docs` does."""
         from pyspark.sql.pandas.types import to_arrow_type
 
-        fast = col is not None and self.meta.field_def(col).fast
-        cached = self._fast_columns.get(col) if fast else None
-        if cached is not None:
-            return cached
+        [(_, col)] = keys
         types = [s[col].dataType for _, s, _, _ in self._doc_files
                  if col is not None and col in s.names]
         if col is not None and not types:
@@ -1621,7 +1738,10 @@ class SearchEngine:
             with pq.ParquetFile(
                 path, metadata=footer, filesystem=self._io.fs
             ) as pf:
-                t = pf.read(columns=["doc_id"] + ([col] if has else []))
+                t = pf.read_row_groups(
+                    range(footer.num_row_groups),
+                    columns=["doc_id"] + ([col] if has else []),
+                )
             ids.append(t["doc_id"].to_numpy())
             if types:
                 atype = to_arrow_type(types[0])
@@ -1630,13 +1750,10 @@ class SearchEngine:
         ids = np.concatenate(ids or [np.empty(0, dtype=np.int64)])
         order = np.argsort(ids, kind="stable")
         order = order[~_sorted_member(self._dead_sorted, ids[order])]
-        out = (
-            ids[order],
+        return {keys[0]: (
+            _frozen(ids[order]),
             pa.concat_arrays(vals).take(pa.array(order)) if types else None,
-        )
-        if fast:
-            self._fast_columns[col] = out
-        return out
+        )}
 
     def _search_on_driver(
         self, query: dict, hits: int, offset: int, want_count: bool,
@@ -1773,10 +1890,11 @@ class SearchEngine:
         return SearchResponse(total_hits=total, documents=documents)
 
     def _fetch_stored(self, ids: list[int], cols: list[str]) -> dict:
-        """doc_id → {doc_id, *cols} for the winner ids, read on the driver
-        with pyarrow (no Spark job): only the row groups whose doc-id range
-        holds a winner are read, each file opened with the footer the
-        snapshot already holds. Values are converted from Arrow the way
+        """doc_id → {doc_id, *cols} for the winner ids, on the driver with
+        no Spark job: the columns of the row groups whose doc-id range
+        holds a winner come from the read cache (`_load_doc_columns`
+        reads the ones it lacks, each file opened with the footer the
+        snapshot already holds). Values are converted from Arrow the way
         Spark Connect's collect() does, with each file's footer schema, so
         they equal a Spark collect() of the same rows; a column a file
         lacks (an older segment) reads as None, like the unionByName of
@@ -1794,22 +1912,41 @@ class SearchEngine:
         for path, schema, footer, ranges in self._doc_files:
             groups = np.flatnonzero(
                 ((want >= ranges[:, :1]) & (want <= ranges[:, 1:])).any(axis=1)
-            )
-            if not groups.size:
+            ).tolist()
+            if not groups:
                 continue
             sub = StructType(
                 [schema["doc_id"]] + [schema[c] for c in cols if c in schema.names]
             )
-            with pq.ParquetFile(
-                path, metadata=footer, filesystem=self._io.fs
-            ) as pf:
-                table = pf.read_row_groups(groups.tolist(), columns=sub.names)
+            got = self._read_cache.fetch(
+                [("docs", path, g, c) for g in groups for c in sub.names],
+                partial(self._load_doc_columns, path, footer),
+            )
+            table = pa.table({
+                c: pa.chunked_array([got[("docs", path, g, c)] for g in groups])
+                for c in sub.names
+            })
             table = table.filter(
                 pc.is_in(table["doc_id"], value_set=pa.array(want))
-            ).select(sub.names)
+            )
             rows = ArrowTableToRowsConversion.convert(
                 table.cast(to_arrow_schema(sub)), sub
             )
             for row in rows:
                 out[row["doc_id"]] = {**dict.fromkeys(cols), **row.asDict()}
+        return out
+
+    def _load_doc_columns(self, path: str, footer, keys: list[tuple]) -> dict:
+        """Read-cache miss path of `_fetch_stored`: the (row group,
+        column) arrays of `keys` in docs file `path`, each row group read
+        on its own so an entry holds only its own buffers."""
+        by_group: dict[int, list[str]] = {}
+        for _, _, g, c in keys:
+            by_group.setdefault(g, []).append(c)
+        out = {}
+        with pq.ParquetFile(path, metadata=footer, filesystem=self._io.fs) as pf:
+            for g, cols in sorted(by_group.items()):
+                table = pf.read_row_groups([g], columns=cols)
+                for c in cols:
+                    out[("docs", path, g, c)] = table[c].combine_chunks()
         return out

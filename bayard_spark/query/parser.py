@@ -82,7 +82,11 @@ def parse_query_string(
     default_search_fields: list[str],
     analyzers,
     field_analyzers: dict[str, str],
+    analyze=None,
 ) -> dict:
+    """The AST of a query_string. A leaf's text is analyzed by
+    `analyze(analyzer name, text)` when given (the engine's memo), else by
+    the field's analyzer directly."""
     if not default_search_fields:
         # query_string.rs:20-22
         raise ValueError("default_search_fields must not be empty")
@@ -91,7 +95,10 @@ def parse_query_string(
 
     def leaf(field: str, text: str) -> dict | None:
         aname = field_analyzers.get(field, "default")
-        toks = analyzers[aname].analyze_one(text)
+        toks = list(
+            analyze(aname, text) if analyze is not None
+            else analyzers[aname].analyze_one(text)
+        )
         if not toks:
             return None
         if len(toks) == 1:

@@ -4,6 +4,7 @@ Each case cites the reference test it reproduces (file:line under
 /root/reference/bayard/src/index/).
 """
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -271,3 +272,126 @@ def test_offsets_path_agrees_with_fast_path(tokenize, text):
     assert last[["token", "pos", "start", "end"]].values.tolist() == (
         rows[["token", "pos", "start", "end"]].values.tolist()
     )
+
+
+# ------------------------------------------- query-time analysis on Arrow
+
+def _pandas_tokens(analyzer, text):
+    return analyzer.tokenize(pd.Series([text]))["token"].tolist()
+
+
+STOP = {"name": "stop_word", "args": {"words": ["the", "of", "a", "und"]}}
+ARROW_ANALYZERS = {
+    f"{tok}{suffix}": build_analyzer(f"{tok}{suffix}", {
+        "tokenizer": {"name": tok}, "filters": filters,
+    })
+    for tok in ("simple", "whitespace", "raw")
+    for suffix, filters in (
+        ("", []),
+        ("+lower", [{"name": "lower_case"}]),
+        ("+stop", [STOP]),
+        ("+lower+stop", [{"name": "lower_case"}, STOP]),
+    )
+}
+
+# Unicode, digit and underscore cases on which the build's Arrow kernels
+# and the pandas path split and lowercase the same way
+ANALYSIS_PROBES = [
+    "",
+    " ",
+    "Hello World!",
+    "snake_case_word __x__ _",
+    "a__b_1 _2_",
+    "x1 2y 3.14 10,000 ½ ² ٣ Ⅻ ١٢٣ ४५",
+    "naïve CAFÉ ñ Été ÀÉÎõü",
+    "日本語 テキスト 中文",
+    "emoji 😀 ok",
+    "tab\tnew\nline  twice",
+    "O'Neil's RUST-lang.rs x.y@z",
+    "The Of the OF a A Und",
+    "ǅ ǈ ﬁ Ꭰ",
+]
+
+
+def _webtext_texts():
+    from bayard_spark.sources.webtext import synthesize_batch
+
+    return synthesize_batch(np.arange(40))["text"].tolist()
+
+
+@pytest.mark.parametrize("name", sorted(ARROW_ANALYZERS))
+def test_analyze_one_on_arrow_equals_pandas_path(name):
+    """Every analyzer the Arrow kernels support answers analyze_one with
+    the pandas path's tokens, on webtext texts and on the edge cases."""
+    from bayard_spark.analysis import arrow_native
+
+    an = ARROW_ANALYZERS[name]
+    assert arrow_native.supports(an)
+    for text in ANALYSIS_PROBES + _webtext_texts():
+        assert an.analyze_one(text) == _pandas_tokens(an, text), repr(text)
+
+
+def test_analyze_one_splits_as_the_build_does():
+    """Where the kernels and the pandas path disagree (Unicode lowercasing
+    of 'İ' and final sigma, non-ASCII whitespace), analyze_one follows the
+    kernel the build indexes with, so a query finds what was indexed."""
+    import pyarrow as pa
+
+    from bayard_spark.analysis import arrow_native
+
+    default = builtin_analyzers()["default"]
+    ws = ARROW_ANALYZERS["whitespace+lower"]
+    for an, text in ((default, "İstanbul ΣΑΣ"), (ws, "a\u00a0b\u2003C")):
+        _, codes, _, words, _ = arrow_native.tokenize_ints(
+            pa.array([text]), an
+        )
+        built = words.take(pa.array(codes)).to_pylist()
+        assert an.analyze_one(text) == built
+        assert built != _pandas_tokens(an, text)
+
+
+def test_stemming_analyzer_falls_back_to_pandas(monkeypatch):
+    from bayard_spark.analysis import arrow_native
+
+    an = build_analyzer("en", {
+        "tokenizer": {"name": "simple"},
+        "filters": [{"name": "lower_case"},
+                    {"name": "stemming", "args": {"language": "english"}}],
+    })
+    assert not arrow_native.supports(an)
+
+    def no_kernel(*a, **k):
+        raise AssertionError("the Arrow kernel ran for a stemming analyzer")
+
+    monkeypatch.setattr(arrow_native, "tokenize_ints", no_kernel)
+    assert an.analyze_one("Running flies") == ["run", "fli"]
+    assert an.analyze_one("Running flies") == _pandas_tokens(an, "Running flies")
+
+
+def test_ascii_split_pattern_equals_the_unicode_one():
+    """On ASCII-only text the simple tokenizer splits on an ASCII class
+    (fast to compile) and elsewhere on the Unicode one; around every
+    ASCII character, and over a batch that mixes both kinds of row, the
+    two agree."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from bayard_spark.analysis import arrow_native
+
+    texts = pa.array([f"a{chr(i)}b{chr(i)}{chr(i)}9" for i in range(128)])
+    split = {
+        p: pc.split_pattern_regex(texts, pattern=p).to_pylist()
+        for p in (arrow_native.SIMPLE_PATTERN,
+                  arrow_native.SIMPLE_ASCII_PATTERN)
+    }
+    assert split[arrow_native.SIMPLE_PATTERN] == \
+        split[arrow_native.SIMPLE_ASCII_PATTERN]
+    an = ARROW_ANALYZERS["simple+lower+stop"]
+    rows = ANALYSIS_PROBES + _webtext_texts()[:5]
+    row_ids, codes, _, words, _ = arrow_native.tokenize_ints(
+        pa.array(rows), an
+    )
+    batch = words.take(pa.array(codes)).to_pylist()
+    for i, text in enumerate(rows):
+        assert [w for w, r in zip(batch, row_ids) if r == i] == \
+            an.analyze_one(text), repr(text)

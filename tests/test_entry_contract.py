@@ -130,6 +130,68 @@ def test_one_block_decoder():
     assert not offenders, offenders
 
 
+ENGINE = os.path.join(ROOT, "bayard_spark", "query", "engine.py")
+# pyarrow calls that read index files: dataset scans and parquet reads
+FILE_READS = {"to_table", "read", "read_row_group", "read_row_groups",
+              "iter_batches", "read_table"}
+
+
+def _parents(tree: ast.AST) -> dict:
+    return {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+
+
+def _enclosing(node: ast.AST, parents: dict, kind=ast.FunctionDef):
+    while node in parents:
+        node = parents[node]
+        if isinstance(node, kind):
+            return node
+    return None
+
+
+def _is_cache_fetch(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "fetch"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "_read_cache"
+    )
+
+
+def test_driver_site_reads_only_on_the_read_cache_miss_path():
+    # the engine reads postings (`_postings_ds.to_table`) and docs row
+    # groups (`read_row_groups`) only inside the read cache's miss paths
+    # (`_load_*`), besides the open's one dictionary read; and a miss
+    # path is only ever handed to `_read_cache.fetch`, never called
+    # directly, so no driver-site read can bypass the cache
+    tree = ast.parse(open(ENGINE).read(), ENGINE)
+    parents = _parents(tree)
+    outside, loaders, direct = [], set(), []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Attribute):
+            continue
+        fn = _enclosing(node, parents)
+        if node.attr in FILE_READS and isinstance(parents[node], ast.Call):
+            name = fn.name if fn else "<module>"
+            if not name.startswith("_load_") and name != "_preload_dictionary":
+                outside.append(f"{name}:{node.lineno} {node.attr}")
+        if node.attr.startswith("_load_"):
+            loaders.add(node.attr)
+            call = parents[node]
+            while call in parents and not _is_cache_fetch(call):
+                call = parents[call]
+            if not _is_cache_fetch(call) or call.func is node:
+                direct.append(f"{node.lineno} {node.attr}")
+    defined = {
+        n.name for n in ast.walk(tree)
+        if isinstance(n, ast.FunctionDef) and n.name.startswith("_load_")
+    }
+    assert not outside, outside
+    assert not direct, direct
+    assert defined == loaders == {
+        "_load_postings", "_load_doc_columns", "_load_live_column"
+    }
+
+
 INDEXER = os.path.join(ROOT, "bayard_spark", "build", "indexer.py")
 
 

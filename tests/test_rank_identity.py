@@ -6,7 +6,9 @@ boolean must/should/must_not, range, query_string, all, boost, fuzzy_term,
 regex — mirroring /root/reference/examples/*_query.json) on BOTH engines and
 asserts identical top-k doc ids AND BM25 scores (rel tol 1e-9; k1=1.2,
 b=0.75; ties broken by doc_id asc): the Spark plan (`scores()`), and
-`search()` at each execution site, on a clean and on a tombstoned snapshot.
+`search()` at each execution site, on a clean and on a tombstoned snapshot;
+on the driver site a cold read cache and a warm one answer bit for bit
+alike.
 """
 
 import math
@@ -200,6 +202,16 @@ QUERIES = [
 SITES = ("driver", "spark")
 
 
+def assert_cold_equals_warm(engine, on_site, query):
+    """On the driver site, the answer from an empty read cache and its
+    warm repeat are equal bit for bit."""
+    req = {"query": query, "collection_kind": "count_and_top_docs", "hits": K}
+    with on_site(engine, "driver"):
+        engine._read_cache.clear()
+        cold = engine.search(req)
+        assert engine.search(req) == cold
+
+
 def assert_search_matches(engine, oracle, name, query, expected, n_live):
     """Both collectors of search() against the oracle's expected top-K:
     top_docs (block-max pruning allowed on the Spark site) and
@@ -221,6 +233,7 @@ def assert_search_matches(engine, oracle, name, query, expected, n_live):
 def test_rank_identity(built, on_site, name, query):
     engine, oracle = built
     expected = oracle.top_k(query, k=K)
+    assert_cold_equals_warm(engine, on_site, query)
     for site in SITES:
         with on_site(engine, site):
             assert_search_matches(
@@ -358,6 +371,7 @@ def test_rank_identity_with_tombstones(tombstoned, on_site, name, query):
     engine, oracle, dead = tombstoned
     live = {d: s for d, s in oracle.run(query).items() if d not in dead}
     expected = sorted(live.items(), key=lambda kv: (-kv[1], kv[0]))[:K]
+    assert_cold_equals_warm(engine, on_site, query)
     for site in SITES:
         with on_site(engine, site):
             assert_search_matches(

@@ -18,6 +18,11 @@
 - One engine answers concurrent client threads with the sequential
   results on each site, and its plan caches are bounded LRU maps, as are
   its df and bucket caches when the dictionary is not preloaded.
+- The driver site reads files only through the engine's byte-bounded read
+  cache: per query kind, a cold and a warm answer are equal bit for bit,
+  and the warm one reads no postings and no docs row group; an engine
+  opened after a commit sees the new docs. query_string leaves are
+  analyzed once per engine.
 """
 
 from __future__ import annotations
@@ -597,14 +602,17 @@ class TestPhraseRecordValidation:
 def test_engine_is_thread_safe_for_concurrent_search(built, on_site):
     """One engine snapshot, 8 client threads, mixed query shapes, on each
     site — results must equal the sequential answers (shared plan caches
-    may race benignly but never corrupt)."""
+    may race benignly but never corrupt). On the driver site the threads
+    also start once from an empty read cache, so they fill it together."""
     engine, _ = built
     for site in ("driver", "spark"):
         with on_site(engine, site):
             concurrent_equals_sequential(engine)
+    with on_site(engine, "driver"):
+        concurrent_equals_sequential(engine, cold=True)
 
 
-def concurrent_equals_sequential(engine):
+def concurrent_equals_sequential(engine, cold: bool = False):
     from concurrent.futures import ThreadPoolExecutor
 
     shapes = [
@@ -629,6 +637,8 @@ def concurrent_equals_sequential(engine):
         return [d["id"] for d in resp.documents]
 
     sequential = [ids(q) for q in shapes]
+    if cold:
+        engine._read_cache.clear()
     reqs = shapes * 6
     with ThreadPoolExecutor(8) as ex:
         got = list(ex.map(ids, reqs))
@@ -636,16 +646,18 @@ def concurrent_equals_sequential(engine):
         assert g == sequential[i % len(shapes)]
 
 
-def test_lru_cache_under_thread_contention():
+@pytest.mark.parametrize("weighted", [False, True], ids=["count", "bytes"])
+def test_lru_cache_under_thread_contention(weighted):
     """More threads than cores hammer one small cache with a short switch
-    interval: it never holds more than its capacity and every read returns
-    the value stored under its key."""
+    interval: it never holds more than its capacity (in entries, or in
+    weight when entries are weighed) and every read returns the value
+    stored under its key."""
     import sys
     import threading
 
     from bayard_spark.query.engine import LRUCache
 
-    cache = LRUCache(8)
+    cache = LRUCache(24, lambda v: v[1] % 5 + 1) if weighted else LRUCache(8)
     errors: list[str] = []
 
     def work(tid):
@@ -655,8 +667,10 @@ def test_lru_cache_under_thread_contention():
             got = cache.get(key)
             if got is not None and got != ("v", key):
                 errors.append(f"{key}: {got}")
-            if len(cache) > 8:
+            if len(cache) > 8 and not weighted:
                 errors.append(f"size {len(cache)}")
+            if cache.weight > cache.capacity:
+                errors.append(f"weight {cache.weight}")
 
     prev = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -670,4 +684,218 @@ def test_lru_cache_under_thread_contention():
         sys.setswitchinterval(prev)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
-    assert len(cache) == 8
+    held = [cache.get(k) for k in range(32)]
+    assert cache.weight == sum(
+        (v[1] % 5 + 1) if weighted else 1 for v in held if v is not None
+    )
+    if not weighted:
+        assert len(cache) == 8
+    else:
+        assert cache.capacity - 5 < cache.weight <= cache.capacity
+
+
+def test_weighted_lru_bounds_total_weight():
+    """Random weights: after every store the total weight is at most the
+    capacity and equals the weights of the entries held."""
+    from bayard_spark.query.engine import LRUCache
+
+    rng = np.random.default_rng(0)
+    cache = LRUCache(100, len)
+    for i in range(2000):
+        cache[int(rng.integers(0, 60))] = "x" * int(rng.integers(0, 40))
+        held = [cache.get(k) for k in range(60)]
+        assert cache.weight <= 100
+        assert cache.weight == sum(len(v) for v in held if v is not None)
+
+
+def test_weighted_lru_keeps_no_over_budget_entry():
+    from bayard_spark.query.engine import LRUCache
+
+    cache = LRUCache(10, len)
+    cache["a"] = "x" * 4
+    cache["big"] = "x" * 11
+    assert "big" not in cache and cache.get("a") == "xxxx"
+    # a key re-stored over budget is dropped, not left with its old value
+    cache["a"] = "x" * 11
+    assert "a" not in cache and cache.weight == 0
+    # fetch hands an over-budget value to its caller without keeping it
+    got = cache.fetch(["w"], lambda keys: {k: "y" * 20 for k in keys})
+    assert got == {"w": "y" * 20} and "w" not in cache
+    cache["e"] = "x" * 10
+    assert "e" in cache and cache.weight == 10
+
+
+def test_weighted_lru_evicts_least_recently_used():
+    from bayard_spark.query.engine import LRUCache
+
+    cache = LRUCache(10, len)
+    cache["a"], cache["b"] = "x" * 4, "x" * 4
+    cache.get("a")  # b is now least recently used
+    cache["c"] = "x" * 4
+    assert "b" not in cache and "a" in cache and "c" in cache
+    cache["d"] = "x" * 7  # 15 > 10: a goes first, then c
+    assert "a" not in cache and "c" not in cache
+    assert "d" in cache and cache.weight == 7
+    cache["e"] = "x" * 2
+    cache["f"] = "x" * 1
+    assert cache.weight == 10 and len(cache) == 3
+
+
+# ------------------------------------------------------------ the read cache
+
+
+class ReadSpy:
+    """Counts the driver site's file reads: postings scans through the
+    engine's `_postings_ds.to_table`, docs row groups through
+    `ParquetFile.read_row_groups`."""
+
+    def __init__(self, engine, monkeypatch):
+        import pyarrow.parquet as pq
+
+        self.scans = self.row_groups = 0
+        spy = self
+        ds = engine._postings_ds
+
+        class Dataset:
+            def __getattr__(self, name):
+                return getattr(ds, name)
+
+            def to_table(self, *a, **k):
+                spy.scans += 1
+                return ds.to_table(*a, **k)
+
+        real = pq.ParquetFile.read_row_groups
+
+        def read_row_groups(pf, row_groups, *a, **k):
+            spy.row_groups += len(list(row_groups))
+            return real(pf, row_groups, *a, **k)
+
+        monkeypatch.setattr(engine, "_postings_ds", Dataset())
+        monkeypatch.setattr(pq.ParquetFile, "read_row_groups", read_row_groups)
+
+    def take(self) -> tuple[int, int]:
+        out = (self.scans, self.row_groups)
+        self.scans = self.row_groups = 0
+        return out
+
+
+def assert_cache_invisible(engine, reqs, monkeypatch, oracle=None):
+    """Per request, from an empty read cache: the cold answer reads files,
+    a warm repeat reads none, and the two are equal bit for bit (and, for
+    a score-ranked request, equal the oracle's ranking)."""
+    spy = ReadSpy(engine, monkeypatch)
+    cold_reads = 0
+    for name, req in reqs.items():
+        engine._read_cache.clear()
+        cold = engine.search(req)
+        cold_reads += sum(spy.take())
+        warm = engine.search(req)
+        assert spy.take() == (0, 0), name
+        assert warm == cold, name
+        assert engine._read_cache.weight <= engine.READ_CACHE_BYTES
+        if oracle is not None and "sort" not in req:
+            query = req["query"]
+            want = oracle.top_k(query, k=req["hits"])
+            assert [d["id"] for d in cold.documents] == [
+                oracle.docs[d]["url"] for d, _ in want
+            ], name
+            for d, (_, score) in zip(cold.documents, want):
+                assert math.isclose(d["score"], score, rel_tol=1e-9), name
+            assert cold.total_hits == len(oracle.run(query)), name
+    assert cold_reads > 0
+
+
+def test_read_cache_is_invisible(spark, built, on_site, monkeypatch):
+    """Every query kind on the driver site of a clean snapshot."""
+    engine, oracle = built
+    urls = [r["url"] for r in engine.docs.select("url").limit(3).collect()]
+    with on_site(engine, "driver"):
+        assert_cache_invisible(
+            engine, kinds_requests(urls), monkeypatch, oracle
+        )
+
+
+def test_read_cache_is_invisible_on_tombstoned_snapshot(
+    spark, tombstoned, monkeypatch
+):
+    root, new_urls, base = tombstoned
+    engine = SearchEngine(spark, root)
+    assert engine._n_tombstones == 9
+    reqs = kinds_requests(new_urls[:2] + base[:2] + base[5:6])
+    assert_cache_invisible(engine, reqs, monkeypatch)
+
+
+def test_read_cache_entries_are_read_only(built, on_site):
+    engine, _ = built
+    with on_site(engine, "driver"):
+        engine.search({"query": {"kind": "phrase", "options": {
+            "field": "text", "phrase_terms": ["of", "the"]}}})
+        engine.search({"query": {"kind": "all"}, "sort": {"field": "warc_ts"}})
+    post = engine._read_cache.get(("postings", "text", "the"))
+    assert post.positions is not None and post.ids.size > 0
+    ids, _ = engine._read_cache.get(("live", "warc_ts"))
+    for arr in (post.ids, post.tfs, post.lens, ids, engine._live_doc_ids):
+        with pytest.raises(ValueError, match="read-only"):
+            arr[0] = 0
+
+
+def test_new_engine_after_a_commit_sees_the_new_docs(spark):
+    """The read cache belongs to an engine: one opened before a commit
+    keeps answering from its snapshot, one opened after it sees the put
+    docs and misses the deleted one, though both cached the same terms."""
+    from bayard_spark.build.indexer import IndexBuilder
+    from bayard_spark.build.segments import SegmentWriter
+    from bayard_spark.schema import webtext_index_meta
+    from bayard_spark.sources.webtext import (
+        WEBTEXT_SCHEMA,
+        synthesize_batch,
+        webtext_df,
+    )
+
+    root = tempfile.mkdtemp(prefix="resp_reopen_idx_")
+    try:
+        builder = IndexBuilder(spark, webtext_index_meta(num_buckets=4), root)
+        builder.build(webtext_df(spark, 60, partitions=2))
+        base = sorted(
+            r["url"] for r in spark.read.parquet(builder.paths.docs).collect()
+        )
+        pdf = synthesize_batch(np.arange(500, 520), 11)
+        lookup = {"query": {"kind": "boolean", "options": {"subqueries": [
+            {"occurrence": "should", "query": _term(u, "url")}
+            for u in [pdf.url[0], base[0]]]}}, "hits": 10}
+        before = SearchEngine(spark, root)
+        old = [before.search(lookup), before.search({"query": _term("the")})]
+        w = SegmentWriter(spark, builder)
+        w.put_documents(spark.createDataFrame(pdf, WEBTEXT_SCHEMA))
+        w.delete_documents([base[0]])
+        w.commit()
+        after = SearchEngine(spark, root)
+        new = [after.search(lookup), after.search({"query": _term("the")})]
+        assert [d["id"] for d in old[0].documents] == [base[0]]
+        assert [d["id"] for d in new[0].documents] == [pdf.url[0]]
+        assert new[1].total_hits > old[1].total_hits
+        assert [before.search(lookup), before.search(
+            {"query": _term("the")})] == old
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+
+def test_query_string_leaves_are_analyzed_once(built, monkeypatch):
+    from bayard_spark.analysis.analyzer import Analyzer
+
+    engine, _ = built
+    calls = []
+    real = Analyzer.analyze_one
+
+    def spy(self, text):
+        calls.append(text)
+        return real(self, text)
+
+    monkeypatch.setattr(Analyzer, "analyze_one", spy)
+    engine._analyzed.clear()
+    opts = {"query": 'water "of the" -people', "default_search_fields": ["text"]}
+    first = engine._parse(opts)
+    assert engine._parse(opts) == first
+    assert sorted(calls) == ["of the", "people", "water"]
+    assert engine._analyzed.capacity == engine.CACHE_ENTRIES
