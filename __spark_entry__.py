@@ -33,7 +33,8 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- block-codec engine gates
 # These entries run the REAL engine end-to-end: IndexBuilder writes
 # delta+varint posting blocks (build/codec.py) to a temp dir, SearchEngine
-# decodes them (query/engine.py _decode) and answers BM25 top-k — so the
+# decodes them (query/engine.py postings_from_blocks) and answers BM25
+# top-k with its one scorer (_score) — so the
 # DuckDB oracle comparison exercises the codec path. The index build is
 # cached per sf_dir within the process so the gates share one build.
 
@@ -88,8 +89,8 @@ def _engine_search_df(
 
 def q_engine_term_bm25(spark, sf_dir):
     """BM25 top-10 for 'spark' answered by the block-codec SearchEngine
-    (posting-block scan -> numpy varint decode -> JVM scoring ->
-    TakeOrderedAndProject), built from the same documents table the
+    (posting-block scan -> numpy varint decode -> numpy BM25 -> top-k),
+    built from the same documents table the
     DuckDB oracle sees. Reference: tantivy block postings decode;
     bayard/src/search/query/term.rs."""
     return _engine_search_df(
@@ -112,9 +113,9 @@ def q_engine_phrase_bm25(spark, sf_dir):
 
 
 def q_engine_bool_must(spark, sf_dir):
-    """Boolean must-chain through the codec engine: rarest-df-first join
-    ordering over REAL decoded posting blocks with the clause-order score
-    sum (query/engine.py _boolean_scores) — the boolean path was
+    """Boolean must-chain through the codec engine: a sorted doc-id
+    intersection over REAL decoded posting blocks with the clause-order
+    score sum (query/engine.py _score) — the boolean path was
     pytest-only in r4 (VERDICT r4 Next #4). Oracle twin: two term-score
     CTEs joined on doc_id. Reference: bayard/src/search/query/boolean.rs:272-290."""
     return _engine_search_df(

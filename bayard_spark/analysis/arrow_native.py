@@ -33,16 +33,43 @@ SIMPLE_PATTERN = r"[^\p{L}\p{N}]+"
 # Unicode classes take ~0.9 ms on every call: most of the time a short
 # query string's analysis took.
 SIMPLE_ASCII_PATTERN = r"[^A-Za-z0-9]+"
-WHITESPACE_PATTERN = r"\s+"
+# Python's Unicode \s (str.isspace), which the pandas path splits on;
+# RE2's \s is [\t\n\f\r ] alone.
+WHITESPACE_PATTERN = (
+    r"[\t-\r\x{1c}-\x{20}\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+    r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+"
+)
 
 
-def _split_pattern(analyzer, texts) -> str:
-    """The RE2 pattern the analyzer's tokenizer splits `texts` on."""
+def _is_ascii(texts) -> bool:
+    return pc.all(pc.string_is_ascii(texts)).as_py() is not False
+
+
+def _split_pattern(analyzer, ascii: bool) -> str:
+    """The RE2 pattern the analyzer's tokenizer splits a batch on."""
     if analyzer.tokenizer_name != "simple":
         return WHITESPACE_PATTERN
-    if pc.all(pc.string_is_ascii(texts)).as_py() is False:
-        return SIMPLE_PATTERN
-    return SIMPLE_ASCII_PATTERN
+    return SIMPLE_ASCII_PATTERN if ascii else SIMPLE_PATTERN
+
+
+def _encode(tokens, lower: bool) -> tuple[np.ndarray, pa.Array]:
+    """(int32 codes, dictionary) of `tokens`. With `lower`, each DISTINCT
+    token is lowercased as `str.lower` does — Arrow's utf8_lower maps
+    'İ' to 'i' and never writes a final sigma — and tokens that lowercase
+    alike share a code: Python runs per dictionary entry, not per row."""
+    enc = pc.dictionary_encode(tokens)
+    if isinstance(enc, pa.ChunkedArray):
+        enc = enc.combine_chunks()
+    codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int32)
+    dictionary = enc.dictionary
+    if lower:
+        low = pc.dictionary_encode(pa.array(
+            [t.lower() for t in dictionary.to_pylist()], type=pa.string()
+        ))
+        codes = low.indices.to_numpy(zero_copy_only=False).astype(
+            np.int32)[codes]
+        dictionary = low.dictionary
+    return codes, dictionary
 
 
 def supports(analyzer) -> bool:
@@ -77,19 +104,21 @@ def doc_lengths(texts: pa.Array, analyzer) -> np.ndarray:
             stop_words = list(dict(fargs).get("words") or [])
         if fname == "lower_case":
             lowercase = True
-    if stop_words and lowercase:
-        texts = pc.utf8_lower(texts)
+    ascii = _is_ascii(texts)
     lists = pc.split_pattern_regex(
-        texts, pattern=_split_pattern(analyzer, texts)
+        texts, pattern=_split_pattern(analyzer, ascii)
     )
     flat = pc.list_flatten(lists)
     counts = pc.list_value_length(lists).to_numpy(zero_copy_only=False)
     counts = np.nan_to_num(counts, nan=0).astype(np.int64)
     kept = pc.not_equal(flat, "").to_numpy(zero_copy_only=False)
     if stop_words:
+        if lowercase and ascii:
+            flat = pc.utf8_lower(flat)
+        codes, words = _encode(flat, lowercase and not ascii)
         kept &= ~pc.is_in(
-            flat, value_set=pa.array(stop_words)
-        ).to_numpy(zero_copy_only=False)
+            words, value_set=pa.array(stop_words)
+        ).to_numpy(zero_copy_only=False)[codes]
     n = len(texts)
     row_start = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(counts, out=row_start[1:])
@@ -120,21 +149,18 @@ def tokenize_ints(
     for fname, fargs in analyzer.filter_specs:
         if fname == "stop_word":
             stop_words = list(dict(fargs).get("words") or [])
-    if lowercase:
+    # split first, lowercase after, as the pandas path filters: on ASCII
+    # text utf8_lower is str.lower and moves no split, so the whole batch
+    # lowercases at once; elsewhere each distinct token does (`_encode`)
+    ascii = _is_ascii(texts)
+    if lowercase and ascii:
         texts = pc.utf8_lower(texts)
+    lower_tokens = lowercase and not ascii
     n = len(texts)
 
     if analyzer.tokenizer_name == "raw":
         kept = pc.not_equal(texts, "").to_numpy(zero_copy_only=False)
-        enc = pc.dictionary_encode(texts)
-        codes_all = enc.combine_chunks().indices.to_numpy(
-            zero_copy_only=False
-        ).astype(np.int32) if isinstance(enc, pa.ChunkedArray) else enc.indices.to_numpy(zero_copy_only=False).astype(np.int32)
-        dictionary = (
-            enc.combine_chunks().dictionary
-            if isinstance(enc, pa.ChunkedArray)
-            else enc.dictionary
-        )
+        codes_all, dictionary = _encode(texts, lower_tokens)
         sel = np.flatnonzero(kept)
         row_id = sel.astype(np.int64)
         return (
@@ -146,7 +172,7 @@ def tokenize_ints(
         )
 
     lists = pc.split_pattern_regex(
-        texts, pattern=_split_pattern(analyzer, texts)
+        texts, pattern=_split_pattern(analyzer, ascii)
     )
     flat = pc.list_flatten(lists)
     counts = pc.list_value_length(lists).to_numpy(zero_copy_only=False)
@@ -160,11 +186,7 @@ def tokenize_ints(
     base = np.where(row_start[:-1] > 0, csum[row_start[:-1] - 1], 0)
     pos_all = csum - 1 - np.repeat(base, counts)
 
-    enc = pc.dictionary_encode(flat)
-    if isinstance(enc, pa.ChunkedArray):
-        enc = enc.combine_chunks()
-    codes_all = enc.indices.to_numpy(zero_copy_only=False).astype(np.int32)
-    dictionary = enc.dictionary
+    codes_all, dictionary = _encode(flat, lower_tokens)
 
     kept_final = kept
     if stop_words:

@@ -310,6 +310,8 @@ ANALYSIS_PROBES = [
     "O'Neil's RUST-lang.rs x.y@z",
     "The Of the OF a A Und",
     "ǅ ǈ ﬁ Ꭰ",
+    "İstanbul ΣΑΣ ΟΔΟΣ. Σ",
+    "a\u00a0b\u2003c\u000bd\u001fe\u3000f\u0085g",
 ]
 
 
@@ -332,22 +334,29 @@ def test_analyze_one_on_arrow_equals_pandas_path(name):
 
 
 def test_analyze_one_splits_as_the_build_does():
-    """Where the kernels and the pandas path disagree (Unicode lowercasing
-    of 'İ' and final sigma, non-ASCII whitespace), analyze_one follows the
-    kernel the build indexes with, so a query finds what was indexed."""
+    """On non-ASCII text the kernels split first and lowercase each token
+    as str.lower does ('İ', a final sigma) and split whitespace on
+    Python's Unicode \\s set, so the build's tokens, analyze_one's and the
+    pandas path's (the oracle's) are the same; doc_lengths counts them."""
     import pyarrow as pa
 
     from bayard_spark.analysis import arrow_native
 
     default = builtin_analyzers()["default"]
     ws = ARROW_ANALYZERS["whitespace+lower"]
-    for an, text in ((default, "İstanbul ΣΑΣ"), (ws, "a\u00a0b\u2003C")):
-        _, codes, _, words, _ = arrow_native.tokenize_ints(
+    for an, text, want in (
+        (default, "İstanbul ΣΑΣ", ["i\u0307stanbul", "σας"]),
+        (ws, "a\u00a0b\u2003C\u000bd\u3000ΣΑΣ", ["a", "b", "c", "d", "σας"]),
+    ):
+        _, codes, _, words, lens = arrow_native.tokenize_ints(
             pa.array([text]), an
         )
         built = words.take(pa.array(codes)).to_pylist()
+        assert built == _pandas_tokens(an, text) == want
         assert an.analyze_one(text) == built
-        assert built != _pandas_tokens(an, text)
+        assert lens.tolist() == arrow_native.doc_lengths(
+            pa.array([text]), an
+        ).tolist() == [len(want)]
 
 
 def test_stemming_analyzer_falls_back_to_pandas(monkeypatch):

@@ -6,7 +6,7 @@
    and on an index whose threshold block is deleted whole).
 
 TestTombstonePruning deletes 20 docs from the shared fixture, so it runs
-after the count tests. Pruning is part of the Spark plan, so every search
+after the count tests. Pruning runs in the Spark site's shards, so every search
 here runs on the Spark site (the driver-site gate is 0).
 """
 

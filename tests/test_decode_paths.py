@@ -1,27 +1,29 @@
 """Posting decode paths of the engine.
 
-- The decode without positions (codec.decode_blocks over whole Arrow
-  batches) yields the same postings as the decode with positions, for one
-  term and for several terms across buckets.
-- Above DECODE_PARALLEL_MIN_DOCS the block frame gains a round-robin
-  exchange; results are identical either way.
-- The candidate-filtered phrase decode keeps rank identity, opens only on
-  df skew, and returns an empty result when every candidate is
-  tombstoned or the candidate array is empty.
-- Under TOMBSTONE_BROADCAST_MAX tombstoned ids drop inside the decoder;
-  above it an unhinted anti-join drops them, with identical results.
+- `postings_from_blocks`, the one function the driver's read cache and
+  every Spark-site shard turn blocks into postings with, yields the
+  per-block reference decode with and without positions, for one term and
+  for several terms across buckets in one call.
+- A term's Spark-site scores are identical over one doc-id shard and over
+  the most shards the index allows.
+- A phrase whose every holder of one term is tombstoned has no hits.
+- Under TOMBSTONE_BROADCAST_MAX tombstoned ids drop inside the shards'
+  scorer; above it an unhinted anti-join drops them, with identical
+  results.
 
-These are the Spark site's decode paths, so every search here runs there
-(the driver-site gate is 0).
+These are the Spark site's paths, so every search here runs there (the
+driver-site gate is 0).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow.compute as pc
 import pytest
-from pyspark.sql import functions as F
 
+from bayard_spark.build.codec import decode_block
 from bayard_spark.query import SearchEngine
+from bayard_spark.query.engine import postings_from_blocks
 
 
 @pytest.fixture(autouse=True)
@@ -29,145 +31,89 @@ def spark_site(monkeypatch):
     monkeypatch.setattr(SearchEngine, "DRIVER_MAX_POSTINGS", 0)
 
 
+def _blocks(engine, terms):
+    return engine._postings_ds.to_table(
+        columns=["term", "doc_bytes", "tf_bytes", "len_bytes", "pos_bytes"],
+        filter=(pc.field("field") == "text") & pc.field("term").isin(terms),
+    )
+
+
+def _per_block(blocks, term):
+    """(doc ids, tfs, positions per doc) of `term`, one block at a time."""
+    ids, tfs, pos = [], [], []
+    for row in blocks.filter(pc.equal(blocks["term"], term)).to_pylist():
+        d, t, p, offs = decode_block(
+            row["doc_bytes"], row["tf_bytes"], row["pos_bytes"]
+        )
+        ids += d.tolist()
+        tfs += t.tolist()
+        pos += [p[a:b].tolist() for a, b in zip(offs[:-1], offs[1:])]
+    order = np.argsort(ids, kind="stable")
+    return ([ids[i] for i in order], [float(tfs[i]) for i in order],
+            [pos[i] for i in order])
+
+
 def test_batched_decode_matches_per_block_path(built):
     engine, _ = built
-    blocks = engine._leaf_blocks("text", "the")
-    fast = (
-        engine._decode(blocks, want_positions=False)
-        .select("term", "doc_id", "tf", "len")
-        .orderBy("doc_id")
-        .collect()
+    blocks = _blocks(engine, ["the"])
+    want = _per_block(blocks, "the")
+    dead = np.empty(0, dtype=np.int64)
+    [fast] = postings_from_blocks(blocks, ["the"], dead, False, False)
+    [slow] = postings_from_blocks(blocks, ["the"], dead, False, True)
+    assert len(want[0]) == engine._df_of("text", "the") > 0
+    for p in (fast, slow):
+        assert p.ids.tolist() == want[0] and p.tfs.tolist() == want[1]
+    assert fast.lens.tolist() == slow.lens.tolist()
+    assert fast.positions is None and slow.positions.to_pylist() == want[2]
+    # a span keeps the doc ids in [lo, hi), tombstones drop
+    lo, hi = want[0][5], want[0][-5]
+    [cut] = postings_from_blocks(
+        blocks, ["the"], np.array(want[0][6:8]), False, True, (lo, hi)
     )
-    slow = (
-        engine._decode(blocks, want_positions=True)
-        .select("term", "doc_id", "tf", "len")
-        .orderBy("doc_id")
-        .collect()
-    )
-    assert len(fast) > 0
-    assert [tuple(r) for r in fast] == [tuple(r) for r in slow]
+    assert cut.ids.tolist() == [i for i in want[0][5:-5]
+                                if i not in want[0][6:8]]
+    assert cut.positions.to_pylist() == [
+        p for i, p in zip(want[0], want[2]) if i in set(cut.ids.tolist())
+    ]
 
 
 def test_batched_decode_multibucket_multi_term(built):
-    """The multi-term (fuzzy/regex) decode shape: blocks of several terms
-    from several buckets through one batched decode pass."""
+    """Several terms from several buckets in one call: each term's
+    postings equal its own call's."""
     engine, _ = built
     terms = ["the", "water", "of"]
-    buckets = engine._buckets(terms)
-    blocks = engine.postings.filter(
-        (F.col("field") == "text")
-        & F.col("bucket").isin(sorted(set(buckets.values())))
-        & F.col("term").isin(terms)
+    assert len(set(engine._buckets(terms).values())) > 1
+    dead = np.empty(0, dtype=np.int64)
+    together = postings_from_blocks(
+        _blocks(engine, terms), terms, dead, False, True
     )
-    fast = (
-        engine._decode(blocks, want_positions=False)
-        .select("term", "doc_id", "tf", "len")
-        .orderBy("term", "doc_id")
-        .collect()
-    )
-    slow = (
-        engine._decode(blocks, want_positions=True)
-        .select("term", "doc_id", "tf", "len")
-        .orderBy("term", "doc_id")
-        .collect()
-    )
-    assert len(fast) > 0
-    assert [tuple(r) for r in fast] == [tuple(r) for r in slow]
+    for t, p in zip(terms, together):
+        [alone] = postings_from_blocks(
+            _blocks(engine, [t]), [t], dead, False, True
+        )
+        assert p.ids.size > 0
+        assert p.ids.tolist() == alone.ids.tolist()
+        assert p.tfs.tolist() == alone.tfs.tolist()
+        assert p.lens.tolist() == alone.lens.tolist()
+        assert p.positions.equals(alone.positions)
 
 
-def test_decode_repartition_engages_above_hint(built, monkeypatch):
+def test_term_scores_identical_with_forced_parallel_decode(built):
+    """One doc-id shard, and the most shards the index allows."""
     engine, _ = built
-    blocks = engine._leaf_blocks("text", "the")
-    df_count = engine._df_of("text", "the")
-
-    plain = engine._decode(blocks, want_positions=False)
-    assert "RoundRobinPartitioning" not in plain._jdf.queryExecution().toString()
-
-    monkeypatch.setattr(engine, "DECODE_PARALLEL_MIN_DOCS", 1)
-    monkeypatch.setattr(engine, "DECODE_DOCS_PER_TASK", 16)
-    par = engine._decode(blocks, want_positions=False, n_docs_hint=df_count)
-    assert "RoundRobinPartitioning" in par._jdf.queryExecution().toString()
-
-    a = sorted(
-        tuple(r) for r in plain.select("doc_id", "tf", "len").collect()
-    )
-    b = sorted(tuple(r) for r in par.select("doc_id", "tf", "len").collect())
-    assert a == b and len(a) == df_count
-
-
-def test_term_scores_identical_with_forced_parallel_decode(
-    built, monkeypatch
-):
-    engine, _ = built
-    base = sorted(
-        (r["doc_id"], round(r["score"], 9))
-        for r in engine._term_scores("text", "the").collect()
-    )
-    engine._leaf_cache.clear()
-    monkeypatch.setattr(engine, "DECODE_PARALLEL_MIN_DOCS", 1)
-    monkeypatch.setattr(engine, "DECODE_DOCS_PER_TASK", 8)
-    par = sorted(
-        (r["doc_id"], round(r["score"], 9))
-        for r in engine._term_scores("text", "the").collect()
-    )
-    engine._leaf_cache.clear()
-    assert base == par
-
-
-def test_phrase_semi_decode_rank_identity(built):
-    """Forcing the candidate-filtered decode path must not change any
-    phrase result: same doc ids AND scores as the oracle, for rare+hot
-    and hot+hot shapes."""
-    engine, oracle = built
-    shapes = [
-        ["the", "water"], ["water", "the"], ["of", "the"],
-        ["people", "know"],
-    ]
-    engine._leaf_cache.clear()
-    engine.PHRASE_SEMI_RATIO = 1  # open the gate for every phrase
-    engine.PHRASE_SEMI_MAX = 10**9
+    q = {"kind": "term", "options": {"field": "text", "term": "the"}}
+    by_gate = []
     try:
-        for terms in shapes:
-            q = {"kind": "phrase",
-                 "options": {"field": "text", "phrase_terms": terms,
-                             "slop": 0}}
-            resp = engine.search(
-                {"query": q, "collection_kind": "count_and_top_docs",
-                 "hits": 10}
-            )
-            ranked = oracle.top_k(q, 10)
-            want_urls = [oracle.docs[i]["url"] for i, _s in ranked]
-            got_urls = [d["id"] for d in resp.documents]
-            assert got_urls == want_urls, terms
-            for d, (_i, s) in zip(resp.documents, ranked):
-                assert abs(d["score"] - s) < 1e-9
-            assert resp.total_hits == len(oracle.run(q))
+        for gate in (1 << 62, 0):
+            engine.DRIVER_MAX_POSTINGS = gate
+            by_gate.append(sorted(
+                (r["doc_id"], r["score"]) for r in engine.scores(q).collect()
+            ))
     finally:
-        del engine.PHRASE_SEMI_RATIO, engine.PHRASE_SEMI_MAX
-        engine._leaf_cache.clear()
-
-
-def test_phrase_semi_gate_opens_only_on_skew(built, monkeypatch):
-    engine, _ = built
-    seen = []
-    real = engine._decode
-
-    def spy(blocks, want_positions, candidate_ids=None, **kwargs):
-        seen.append(candidate_ids is not None)
-        return real(blocks, want_positions, candidate_ids, **kwargs)
-
-    monkeypatch.setattr(engine, "_decode", spy)
-    engine._leaf_cache.clear()
-    # similar dfs: gate stays closed -> no candidate decode anywhere
-    engine.search(
-        {"query": {"kind": "phrase",
-                   "options": {"field": "text",
-                               "phrase_terms": ["people", "know"],
-                               "slop": 0}},
-         "collection_kind": "top_docs", "hits": 5}
-    )
-    assert not any(seen)
-    engine._leaf_cache.clear()
+        del engine.DRIVER_MAX_POSTINGS
+    assert engine._n_shards(engine._df_of("text", "the")) > 1
+    assert by_gate[0] == by_gate[1]
+    assert len(by_gate[0]) == engine._df_of("text", "the")
 
 
 def _mini_builder(spark, tmp_path_factory, n_docs=40):
@@ -205,8 +151,6 @@ def test_phrase_semi_decode_all_candidates_tombstoned(
     w.delete_documents(holders)
     w.commit()
     engine = SearchEngine(spark, root)
-    engine.PHRASE_SEMI_RATIO = 1  # force the candidate-filtered path
-    engine.PHRASE_SEMI_MAX = 10**9
     resp = engine.search(
         {"query": {"kind": "phrase",
                    "options": {"field": "text",
@@ -217,19 +161,9 @@ def test_phrase_semi_decode_all_candidates_tombstoned(
     assert resp.total_hits == 0 and resp.documents == []
 
 
-def test_decode_guard_on_empty_candidate_array(built):
-    engine, _ = built
-    blocks = engine._leaf_blocks("text", "the")
-    out = engine._decode(
-        blocks, want_positions=True,
-        candidate_ids=np.array([], dtype=np.int64),
-    )
-    assert out.count() == 0
-
-
 def test_tombstone_broadcast_gate(spark, tmp_path_factory, monkeypatch):
     """Under TOMBSTONE_BROADCAST_MAX the tombstoned ids drop inside the
-    decoder (the plan has no join); above it the decoded stream is
+    shards' scorer (the plan has no join); above it the shards' output is
     anti-joined with no broadcast hint (a web-scale purge cannot ride a
     broadcast). Both give the same results, without the deleted docs."""
     import bayard_spark.build.segments as seg
@@ -248,7 +182,8 @@ def test_tombstone_broadcast_gate(spark, tmp_path_factory, monkeypatch):
 
     def plan(engine):
         return (
-            engine._term_scores("text", "the")
+            engine.scores({"kind": "term",
+                           "options": {"field": "text", "term": "the"}})
             ._jdf.queryExecution().optimizedPlan().toString()
         )
 

@@ -192,6 +192,57 @@ def test_driver_site_reads_only_on_the_read_cache_miss_path():
     }
 
 
+# names and columns BM25 is computed from
+BM25_NAMES = {"k1", "b", "idf", "idfs", "avg_len", "bm25", "_bm25"}
+BM25_COLUMNS = {"tf", "len", "max_tf", "min_tf", "min_len", "max_len"}
+
+
+def _calls_of(tree: ast.AST, name: str) -> list[ast.Call]:
+    return [
+        n for n in ast.walk(tree) if isinstance(n, ast.Call) and (
+            isinstance(n.func, ast.Attribute) and n.func.attr == name
+            or isinstance(n.func, ast.Name) and n.func.id == name
+        )
+    ]
+
+
+def test_one_scorer_at_both_sites():
+    # the Spark site runs the driver's scorer per doc-id shard: the engine
+    # starts one Arrow UDF, in the shard path; no Spark column expression
+    # (an `F.` call) is built from a BM25 input; and the driver's read
+    # cache and the shard turn blocks into postings with one function,
+    # the only caller of the block decoder
+    tree = ast.parse(open(ENGINE).read(), ENGINE)
+    parents = _parents(tree)
+    udfs = _calls_of(tree, "applyInArrow") + _calls_of(tree, "mapInArrow")
+    assert [_enclosing(c, parents).name for c in udfs] == ["_spark_scores"]
+    column_bm25 = [
+        f"{node.lineno} {ast.unparse(node)[:60]}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and isinstance(node.func.value, ast.Name) and node.func.value.id == "F"
+        for sub in ast.walk(node)
+        if isinstance(sub, ast.Name) and sub.id in BM25_NAMES
+        or isinstance(sub, ast.Attribute) and sub.attr in BM25_NAMES
+        or isinstance(sub, ast.Constant) and sub.value in BM25_COLUMNS
+    ]
+    assert not column_bm25, column_bm25
+    assert not _calls_of(tree, "withColumn")
+
+    def callers(name):
+        return sorted(
+            _enclosing(c, parents).name for c in _calls_of(tree, name)
+        )
+
+    # the shard calls it from its source's postings(), nested in the
+    # shard function
+    shard = {n.name: n for n in tree.body
+             if isinstance(n, ast.FunctionDef)}["_score_shard"]
+    assert callers("postings_from_blocks") == ["_load_postings", "postings"]
+    assert _calls_of(shard, "postings_from_blocks")
+    assert callers("decode_blocks") == ["postings_from_blocks"]
+
+
 INDEXER = os.path.join(ROOT, "bayard_spark", "build", "indexer.py")
 
 

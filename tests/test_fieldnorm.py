@@ -104,7 +104,7 @@ class TestLossyRankIdentity:
         for (gd, gs), (_, es) in zip(got, expected):
             assert math.isclose(gs, es, rel_tol=1e-9, abs_tol=1e-12)
         # the driver site quantizes the decoded lengths the same way
-        assert engine._postings_bound(q) < engine.DRIVER_MAX_POSTINGS
+        assert engine._resolve(q)[1] < engine.DRIVER_MAX_POSTINGS
         resp = engine.search({"query": q, "collection_kind": "top_docs"})
         assert [d["id"] for d in resp.documents] == [
             oracle.docs[d]["url"] for d, _ in expected

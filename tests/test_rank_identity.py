@@ -8,12 +8,15 @@ asserts identical top-k doc ids AND BM25 scores (rel tol 1e-9; k1=1.2,
 b=0.75; ties broken by doc_id asc): the Spark plan (`scores()`), and
 `search()` at each execution site, on a clean and on a tombstoned snapshot;
 on the driver site a cold read cache and a warm one answer bit for bit
-alike.
+alike. On a snapshot with a committed put (re-puts and deletes), every
+query, a fast-field sort and an offset page run on the Spark site over at
+least 3 doc-id shards whose boundaries fall inside blocks.
 """
 
 import math
 
 import numpy as np
+import pyarrow.compute as pc
 import pytest
 
 from bayard_spark.build.indexer import IndexBuilder
@@ -378,3 +381,141 @@ def test_rank_identity_with_tombstones(tombstoned, on_site, name, query):
                 engine, oracle, f"{name} on the {site} site", query,
                 expected, len(live),
             )
+
+
+# ------------------------------------------- many shards on the Spark site
+
+SHARD_DOCS = 600
+
+
+class SnapshotOracle(OracleIndex):
+    """The oracle under a snapshot's BM25 stats: n_docs and the average
+    lengths stay the build's until a merge, while df counts every version
+    of a doc put since (deleted or replaced ones too)."""
+
+    def __init__(self, stats, **kwargs):
+        super().__init__(**kwargs)
+        self.stats = stats
+
+    def idf(self, field, df):
+        n = self.stats[field]["n_docs"]
+        return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+
+    def avg_len(self, field):
+        return self.stats[field]["avg_len"]
+
+
+@pytest.fixture(scope="module")
+def sharded(spark):
+    """A salted 600-doc build, then one committed put of 40 docs (10 of
+    them re-puts of base urls) and 5 deletes: the oracle holds every
+    version, and the expected answers drop the replaced and deleted ids."""
+    import shutil
+    import tempfile
+
+    from bayard_spark.build.segments import SegmentWriter
+    from bayard_spark.sources.webtext import WEBTEXT_SCHEMA
+
+    root = tempfile.mkdtemp(prefix="shard_rank_idx_")
+    meta = webtext_index_meta(
+        num_buckets=8, salt_span=100, hot_df_threshold=250
+    )
+    builder = IndexBuilder(spark, meta, root)
+    builder.build(webtext_df(spark, SHARD_DOCS, partitions=8))
+    base_id = {
+        r["url"]: r["doc_id"]
+        for r in spark.read.parquet(builder.paths.docs)
+        .select("url", "doc_id").collect()
+    }
+    base = synthesize_batch(np.arange(SHARD_DOCS))
+    put = synthesize_batch(np.arange(5000, 5040), 3)
+    put.loc[30:, "url"] = base.url[:10].to_numpy()
+    gone = list(base.url[100:105])
+    writer = SegmentWriter(spark, builder)
+    writer.put_documents(spark.createDataFrame(put, WEBTEXT_SCHEMA))
+    writer.delete_documents(gone)
+    writer.commit()
+    engine = SearchEngine(spark, root)
+    put_id = {
+        r["url"]: r["doc_id"]
+        for r in engine.docs.select("url", "doc_id").collect()
+        if r["doc_id"] >= SHARD_DOCS
+    }
+    oracle = SnapshotOracle(
+        engine.stats, analyzers=engine.analyzers,
+        field_analyzers={"url": "raw", "text": "default", "lang": "raw"},
+    )
+    for frame, ids in ((base, base_id), (put, put_id)):
+        for row in frame.itertuples(index=False):
+            oracle.add(ids[row.url], {"url": row.url, "text": row.text,
+                                      "lang": row.lang,
+                                      "warc_ts": row.warc_ts})
+    dead = {base_id[u] for u in list(base.url[:10]) + gone}
+    assert engine._n_tombstones == len(dead)
+    assert engine.postings.filter("salt > 0 AND term = 'the'").count() > 0
+    yield engine, oracle, dead
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def at_three_shards(engine, query) -> int:
+    """Sets the engine's gate so that `query` runs on the Spark site over
+    at least 3 doc-id shards, and returns the shard width."""
+    bound = engine._resolve(query)[1]
+    engine.DRIVER_MAX_POSTINGS = max(1, bound // 3)
+    n = engine._n_shards(bound)
+    assert n >= 3 or bound < 3
+    return -(-engine._n_docs_estimate // n)
+
+
+@pytest.mark.parametrize("name,query", QUERIES, ids=[q[0] for q in QUERIES])
+def test_rank_identity_over_shards(sharded, name, query):
+    """Every query kind on the Spark site over ≥ 3 doc-id shards whose
+    boundaries fall inside blocks: the ids, scores and total_hits equal
+    the oracle's, so no shard drops or double-counts a doc near a
+    boundary."""
+    engine, oracle, dead = sharded
+    live = {d: s for d, s in oracle.run(query).items() if d not in dead}
+    expected = sorted(live.items(), key=lambda kv: (-kv[1], kv[0]))[:K]
+    try:
+        width = at_three_shards(engine, query)
+        assert_search_matches(
+            engine, oracle, f"{name} over shards", query, expected, len(live)
+        )
+        # the page after the first K
+        page = engine.search({"query": query, "hits": K, "offset": K})
+        want = sorted(live.items(), key=lambda kv: (-kv[1], kv[0]))[K:2 * K]
+        assert [d["id"] for d in page.documents] == [
+            oracle.docs[d]["url"] for d, _ in want
+        ], name
+        assert page.total_hits == len(live), name
+    finally:
+        del engine.DRIVER_MAX_POSTINGS
+    if name == "term":
+        blocks = engine._postings_ds.to_table(
+            columns=["first_doc_id", "last_doc_id"],
+            filter=(pc.field("field") == "text") & (pc.field("term") == "the"),
+        )
+        first = blocks["first_doc_id"].to_numpy() // width
+        assert (first != blocks["last_doc_id"].to_numpy() // width).any()
+
+
+@pytest.mark.parametrize("query", [
+    {"kind": "all"},
+    {"kind": "term", "options": {"field": "text", "term": "water"}},
+], ids=["all", "term"])
+def test_fast_field_sort_over_shards(sharded, query):
+    engine, oracle, dead = sharded
+    live = [d for d in oracle.run(query) if d not in dead]
+    want = sorted(live, key=lambda d: (-oracle.docs[d]["warc_ts"].value, d))
+    try:
+        at_three_shards(engine, query)
+        resp = engine.search({
+            "query": query, "hits": K, "offset": 3,
+            "sort": {"field": "warc_ts", "order": "desc"},
+        })
+    finally:
+        del engine.DRIVER_MAX_POSTINGS
+    assert [d["id"] for d in resp.documents] == [
+        oracle.docs[d]["url"] for d in want[3:3 + K]
+    ]
+    assert resp.total_hits == len(live)

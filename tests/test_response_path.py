@@ -2,10 +2,11 @@
 
 - A request below the driver-site gate runs no Spark job, for every query
   kind, on a clean and on a tombstoned snapshot; one whose postings bound
-  is at the gate or over it runs the Spark plan.
-- On the Spark site (gate 0) a request is one Spark action: term top_docs
-  and count_and_top_docs run one job each, a 5-url `should` lookup at most
-  two and a sorted match-all three, on a snapshot with tombstones.
+  is at the gate or over it runs on the Spark site.
+- On the Spark site (gate 0) a request is one Spark action over the
+  doc-id shards: term top_docs and count_and_top_docs run two jobs each
+  (the shards' shuffle, then the top-k), a 5-url `should` lookup at most
+  two and a sorted match-all four, on a snapshot with tombstones.
   total_hits rides the top-k collect (an Observation).
 - The winners' url, timestamp and requested stored fields are read on the
   driver for the winners only; the values equal a Spark collect() of the
@@ -191,17 +192,12 @@ def test_plan_caches_are_bounded_lru(built):
         CACHE_ENTRIES = 2
 
     small = TwoEntryEngine(engine.spark, engine.paths.root)
-    for t in ("water", "people", "water", "day"):
-        small.scores(_term(t))
-    keys = [("term", "text", t, False) for t in ("water", "people", "day")]
-    assert len(small._leaf_cache) == 2
-    # "people" was least recently used when "day" arrived
-    assert keys[0] in small._leaf_cache and keys[2] in small._leaf_cache
-    assert keys[1] not in small._leaf_cache
-    for pattern in ("wat.*", "peo.*", "da.*"):
+    for pattern in ("wat.*", "peo.*", "wat.*", "da.*"):
         small._expand_regex("text", pattern)
     assert len(small._expansion_cache) == 2
-    assert ("regex", "text", "wat.*") not in small._expansion_cache
+    # "peo.*" was least recently used when "da.*" arrived
+    assert ("regex", "text", "wat.*") in small._expansion_cache
+    assert ("regex", "text", "peo.*") not in small._expansion_cache
 
 
 def test_term_top_k_single_action(built, monkeypatch):
@@ -215,7 +211,7 @@ def test_term_top_k_single_action(built, monkeypatch):
                 {"query": _term("water"), "collection_kind": kind}
             ),
         )
-        assert n == 1, kind
+        assert n == 2, kind
 
 
 def test_lazy_caches_stay_bounded(built, monkeypatch):
@@ -311,7 +307,7 @@ def test_jobs_per_request_on_tombstoned_snapshot(
     for kind in ("top_docs", "count_and_top_docs"):
         req = {"query": _term("water"), "collection_kind": kind, "hits": 10}
         resp, n = spark_jobs(spark, lambda: engine.search(req))
-        assert n == 1, kind
+        assert n == 2, kind
         assert resp.documents
     live, gone = new_urls[:2] + base[:2], base[5:6]
     lookup = {
@@ -322,17 +318,18 @@ def test_jobs_per_request_on_tombstoned_snapshot(
         "hits": 10,
     }
     resp, n = spark_jobs(spark, lambda: engine.search(lookup))
-    assert n <= 2
+    assert n <= 2, n
     assert resp.total_hits == len(live)
     assert sorted(d["id"] for d in resp.documents) == sorted(live)
-    # the docs anti-join the tombstones without a distinct: the sorted
-    # match-all runs 3 jobs (4 with the distinct's shuffle)
+    # the shards drop the tombstoned docs themselves (no anti-join): the
+    # sorted match-all runs 4 jobs, the shards' shuffle and the sort
+    # column's join among them
     all_sorted = {
         "query": {"kind": "all"}, "collection_kind": "count_and_top_docs",
         "hits": 10, "sort": {"field": "warc_ts", "order": "desc"},
     }
     resp, n = spark_jobs(spark, lambda: engine.search(all_sorted))
-    assert n == 3
+    assert n == 4, n
     assert resp.total_hits == 200 + 25 - 4
 
 
@@ -379,7 +376,7 @@ def kinds_requests(urls):
 
 def assert_no_jobs_below_gate(spark, engine, on_site, reqs):
     for name, req in reqs.items():
-        assert engine._postings_bound(req["query"]) < engine.DRIVER_MAX_POSTINGS
+        assert engine._resolve(req["query"])[1] < engine.DRIVER_MAX_POSTINGS
         resp, n = spark_jobs(spark, lambda: engine.search(req))
         assert n == 0, name
         with on_site(engine, "spark"):
@@ -440,9 +437,9 @@ def test_gate_boundary(built):
     engine, _ = built
     req = {"query": _term("water"), "collection_kind": "top_docs"}
     df = engine._df_of("text", "water")
-    assert engine._postings_bound(req["query"]) == df > 0
+    assert engine._resolve(req["query"])[1] == df > 0
     try:
-        for gate, want_jobs in ((df - 1, 1), (df, 1), (df + 1, 0)):
+        for gate, want_jobs in ((df - 1, 2), (df, 2), (df + 1, 0)):
             engine.DRIVER_MAX_POSTINGS = gate
             _, n = spark_jobs(spark=engine.spark, fn=lambda: engine.search(req))
             assert n == want_jobs, gate
@@ -538,25 +535,47 @@ def test_fetched_values_equal_spark_collect_for_every_type(spark, typed):
         assert d["timestamp"] == int(row["warc_ts"].timestamp())
 
 
-def test_candidate_estimate_composes_through_musts(built):
-    """The must-join order's size estimate: a term's df, the smallest must
-    of a boolean, and no estimate for a regex before its expansion."""
+def test_plan_bound_composes(built):
+    """The plan's bound, which picks the site and the shard count: a
+    term's df, Σ df over a phrase's distinct terms, a boolean's clauses
+    and a regex's expansion, plus the doc-id high-water mark for `all`,
+    `range` and a must_not-only boolean."""
     engine, _ = built
-    hot_df = engine._df_of("text", "the")
-    assert engine._cand_upper_estimate(_term("the")) == hot_df
-    must = {
-        "kind": "boolean",
-        "options": {"subqueries": [
-            {"occurrence": "must", "query": _term("water")},
-            {"occurrence": "must", "query": _term("the")},
-        ]},
-    }
-    assert engine._cand_upper_estimate(must) == engine._df_of(
-        "text", "water"
-    )
-    assert engine._cand_upper_estimate(
-        {"kind": "regex", "options": {"field": "text", "regex": "wat.*"}}
-    ) is None
+    df = {t: engine._df_of("text", t) for t in ("the", "water", "of")}
+    n = engine._n_docs_estimate
+
+    def bound(q):
+        return engine._resolve(q)[1]
+
+    def boolean(*clauses):
+        return {"kind": "boolean", "options": {"subqueries": [
+            {"occurrence": o, "query": q} for o, q in clauses]}}
+
+    assert bound(_term("the")) == df["the"] > 0
+    assert bound(_term("zzzz-none")) == 0
+    assert bound({"kind": "phrase", "options": {
+        "field": "text", "phrase_terms": ["of", "the", "of"]}}) == (
+        df["of"] + df["the"])
+    assert bound(boolean(("must", _term("water")), ("must", _term("the")),
+                         ("must_not", _term("of")))) == sum(df.values())
+    assert bound(boolean(("must_not", _term("the")))) == n + df["the"]
+    assert bound({"kind": "all"}) == bound({"kind": "range", "options": {
+        "field": "lang", "start": "de", "end": "fr"}}) == n
+    assert bound({"kind": "boost", "options": {
+        "query": _term("water"), "boost": 3.0}}) == df["water"]
+    assert bound({"kind": "regex", "options": {
+        "field": "text", "regex": "wat.*"}}) == sum(
+        engine._expand_regex("text", "wat.*").values())
+    # one shard per gate's worth of postings, at most one per block
+    most = -(-n // engine.meta.block_size)
+    assert engine._n_shards(0) == 1
+    try:
+        for gate, want in ((1 << 62, 1), (df["the"], 1), (df["the"] - 1, 2),
+                           (1, most), (0, most)):
+            engine.DRIVER_MAX_POSTINGS = gate
+            assert engine._n_shards(df["the"]) == min(want, most), gate
+    finally:
+        del engine.DRIVER_MAX_POSTINGS
 
 
 class TestResponseShape:

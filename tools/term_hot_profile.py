@@ -5,9 +5,11 @@ Usage: python tools/term_hot_profile.py [index_root] [term]
 Breaks the term_hot search into its physical pieces so the 100-TB-relevant
 cost (decode of a df~=corpus posting list) is attributed, not guessed:
   1. whole search() wall (matches bench's measurement)
-  2. scores() -> topk only (no stored-field response path)
-  3. block metadata scan (count of blocks pre/post block-max pruning)
-  4. decode-only throughput (postings/s through mapInArrow)
+  2. scores() -> topk only (no stored-field response path), on the Spark
+     site's doc-id shards
+  3. the term's blocks and the doc-id shards they go to
+  4. the shards' scorer throughput (postings/s through applyInArrow),
+     unpruned and block-max pruned
 """
 from __future__ import annotations
 
@@ -51,32 +53,21 @@ def main() -> None:
     print(f"scores+topk wall:       {time.time() - t0:.3f} s ({len(rows)} rows)")
 
     df_count = engine._df_of("text", term)
-    idf = engine.idf("text", df_count)
-    avg = engine.stats["text"]["avg_len"]
-    blocks = engine._leaf_blocks("text", term)
+    n_shards = engine._n_shards(df_count)
+    print(f"df={df_count}; doc-id shards: {n_shards}")
+    blocks = engine.postings.filter(
+        (F.col("field") == "text") & (F.col("term") == term)
+    )
     t0 = time.time()
     n_blocks = blocks.count()
-    print(f"df={df_count} idf={idf:.4f}; blocks total: {n_blocks} "
-          f"(count in {time.time() - t0:.3f} s)")
+    print(f"blocks total: {n_blocks} (count in {time.time() - t0:.3f} s)")
 
-    t0 = time.time()
-    n_pruned = engine._prune_blocks(blocks, idf, avg).count()
-    print(f"blocks after block-max prune: {n_pruned} "
-          f"({100.0 * n_pruned / max(n_blocks, 1):.1f}%) "
-          f"(count in {time.time() - t0:.3f} s)")
-
-    t0 = time.time()
-    n_postings = engine._decode(blocks, want_positions=False).count()
-    dt = time.time() - t0
-    print(f"decode-only: {n_postings} postings in {dt:.3f} s "
-          f"= {n_postings / dt / 1e6:.2f} M postings/s")
-
-    t0 = time.time()
-    n2 = engine._decode(
-        engine._prune_blocks(blocks, idf, avg), want_positions=False
-    ).count()
-    dt = time.time() - t0
-    print(f"decode after prune: {n2} postings in {dt:.3f} s")
+    for hint, what in ((None, "unpruned"), (10, "top-10 pruned")):
+        t0 = time.time()
+        n = engine.scores(q["query"], topk_hint=hint).count()
+        dt = time.time() - t0
+        print(f"shards' scorer, {what}: {n} rows out of {df_count} "
+              f"postings in {dt:.3f} s = {df_count / dt / 1e6:.2f} M postings/s")
 
     # pure scan cost of the payload bytes (no python decode)
     t0 = time.time()
