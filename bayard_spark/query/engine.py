@@ -24,15 +24,18 @@ intersects and sums in clause order, should union-sums, must_not removes
   winners' docs columns per row group.
 - Spark site, at or above it (`_spark_scores`): the doc-id space splits
   into ceil(bound / DRIVER_MAX_POSTINGS) shards, so each is a driver-sized
-  request; every block the plan reads goes to each shard its
+  request, and at least one per core of the session's default
+  parallelism; every block the plan reads goes to each shard its
   [first_doc_id, last_doc_id] covers, docs rows (for `all`, `range`, a
-  must_not-only boolean) to their own. One `applyInArrow` runs the same
-  scorer on each shard, over `postings_from_blocks` of the shard's blocks
-  cut to its doc ids, and emits (doc_id, score) — the doc-shard search of
-  the reference (client.rs:833-958). For a top-k term request block-max
-  pruning runs in the shard first: a block survives only if its metadata
-  upper bound (max_tf, min_len) can reach τ, the best guaranteed floor
-  (min_tf, max_len) of a full block inside the shard (SURVEY §4).
+  must_not-only boolean, a fast-field sort) to their own. One
+  `applyInArrow` runs the same scorer on each shard, over
+  `postings_from_blocks` of the shard's blocks cut to its doc ids, and
+  emits (doc_id, score), with the sort column under a fast-field sort —
+  the doc-shard search of the reference (client.rs:833-958). For a top-k
+  term request block-max pruning runs in the shard first: a block
+  survives only if its metadata upper bound (max_tf, min_len) can reach
+  τ, the best guaranteed floor (min_tf, max_len) of a full block inside
+  the shard (SURVEY §4).
   top-k: orderBy(score desc, doc_id asc).offset(o).limit(k), which Spark
   compiles to TakeOrderedAndProject (client.rs:843-844); the same
   collect() counts the matches through an Observation, and the winners'
@@ -58,7 +61,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from bayard_spark.build.codec import decode_blocks
@@ -385,13 +388,14 @@ def _block_max_prune(blocks: pa.Table, lo: int, hi: int, idf: float,
     return blocks.filter(pa.array(ub >= tau))
 
 
-def _score_shard(root, width: int, dead, lossy: bool, prune,
+def _score_shard(root, width: int, dead, lossy: bool, prune, sort_col,
                  table: pa.Table) -> pa.Table:
     """One doc-id shard of the Spark site: `_score` over the shard's rows —
     its blocks cut to its doc ids, and its docs rows (`doc_id` set) — as
-    a (doc_id, score) table. `dead` is the broadcast of the tombstoned
-    ids or None; `prune`, (idf, bm25, block_size) for a pruned top-k term
-    request, or None."""
+    a (doc_id, score) table, plus the matches' `sort_col` values unless it
+    is None. `dead` is the broadcast of the tombstoned ids or None;
+    `prune`, (idf, bm25, block_size) for a pruned top-k term request, or
+    None."""
     lo = table["shard"][0].as_py() * width
     hi = lo + width
     dead = dead.value if dead is not None else np.empty(0, dtype=np.int64)
@@ -421,7 +425,11 @@ def _score_shard(root, width: int, dead, lossy: bool, prune,
         return ids[order], vals
 
     ids, scores = _score(root, _Source(postings, live))
-    return pa.table({"doc_id": ids, "score": scores})
+    out = {"doc_id": ids, "score": scores}
+    if sort_col is not None:
+        col_ids, vals = live(sort_col)
+        out[sort_col] = vals.take(pa.array(np.searchsorted(col_ids, ids)))
+    return pa.table(out)
 
 
 class LRUCache:
@@ -1211,11 +1219,14 @@ class SearchEngine:
 
     def _n_shards(self, bound: int) -> int:
         """ceil(bound / DRIVER_MAX_POSTINGS) doc-id shards, so each is a
-        driver-sized request; at least 1 and at most one per block_size
-        doc ids (a gate of 0 gives the most)."""
+        driver-sized request, and at least the session's default
+        parallelism, so a request just over the gate still scores on every
+        core; at most one per block_size doc ids (a gate of 0 gives the
+        most), and at least 1."""
         most = max(1, -(-self._n_docs_estimate // self.meta.block_size))
         gate = self.DRIVER_MAX_POSTINGS
-        return max(1, min(most, -(-bound // gate) if gate > 0 else most))
+        want = -(-bound // gate) if gate > 0 else most
+        return min(most, max(want, self.spark.sparkContext.defaultParallelism))
 
     def _prune_args(self, root, bound: int, topk_hint: int | None):
         """(idf, bm25, block_size) when a shard may block-max prune `root`:
@@ -1236,20 +1247,25 @@ class SearchEngine:
             return None
         return root.idfs[0], root.bm25, bs
 
-    def _spark_scores(self, plan: tuple, topk_hint: int | None) -> DataFrame:
+    def _spark_scores(
+        self, plan: tuple, topk_hint: int | None, sort_col: str | None = None
+    ) -> DataFrame:
         """`_score` of a resolved (node, bound) on each doc-id shard: the
-        blocks of the plan's terms go to every shard their doc ids cover,
-        and the docs rows (ids and range columns, for `all`, `range` and
-        a must_not-only boolean) to their own."""
+        blocks of the plan's terms go to every shard their doc ids cover
+        (with positions for its phrases' terms only), and the docs rows
+        (ids and range columns, for `all`, `range` and a must_not-only
+        boolean, and the `sort_col` values) to their own. With `sort_col`
+        the frame carries that column too."""
         root, bound = plan
         width = -(-max(self._n_docs_estimate, 1) // self._n_shards(bound))
         terms: dict[str, set] = {}
-        phrase = False
-        cols: set = set()
+        phrased: dict[str, set] = {}
+        cols: set = {sort_col} if sort_col else set()
         for node in _nodes(root):
             if isinstance(node, (_Terms, _Phrase)):
                 terms.setdefault(node.field, set()).update(node.terms)
-                phrase |= isinstance(node, _Phrase)
+            if isinstance(node, _Phrase):
+                phrased.setdefault(node.field, set()).update(node.terms)
             elif isinstance(node, _Live):
                 cols.add(node.column)
             elif isinstance(node, _Bool) and not node.musts + node.shoulds:
@@ -1258,18 +1274,23 @@ class SearchEngine:
         def shard_of(col):
             return F.floor(F.col(col) / F.lit(width))
 
-        match = F.lit(False)
-        for fld, ts in terms.items():
-            ts = sorted(ts)
-            match |= (
-                (F.col("field") == fld)
-                & F.col("bucket").isin(sorted(set(self._buckets(ts).values())))
-                & F.col("term").isin(ts)
-            )
-        frame = self.postings.filter(match).select(
+        def held(by_field: dict) -> Column:
+            match = F.lit(False)
+            for fld, ts in by_field.items():
+                ts = sorted(ts)
+                match |= (
+                    (F.col("field") == fld)
+                    & F.col("bucket").isin(
+                        sorted(set(self._buckets(ts).values())))
+                    & F.col("term").isin(ts)
+                )
+            return match
+
+        frame = self.postings.filter(held(terms)).select(
             "field", "term", "n_docs", "first_doc_id", "last_doc_id",
             "max_tf", "min_tf", "min_len", "max_len", *_PAYLOAD,
-            *(["pos_bytes"] if phrase else []),
+            *([F.when(held(phrased), F.col("pos_bytes")).alias("pos_bytes")]
+              if phrased else []),
             F.explode(F.sequence(
                 shard_of("first_doc_id"), shard_of("last_doc_id")
             )).alias("shard"),
@@ -1286,16 +1307,18 @@ class SearchEngine:
                 docs, allowMissingColumns=True
             ) if terms else docs
         args = (root, width, self._dead_ids, self.meta.lossy_fieldnorms,
-                self._prune_args(root, bound, topk_hint))
+                self._prune_args(root, bound, topk_hint), sort_col)
 
         # a plain function: applyInArrow reads a UDF's type hints, and
         # fails on a functools.partial
         def score_shard(table):
             return _score_shard(*args, table)
 
-        out = frame.groupBy("shard").applyInArrow(
-            score_shard, "doc_id long, score double"
+        out_schema = "doc_id long, score double" + (
+            f", `{sort_col}` {self.docs.schema[sort_col].dataType.simpleString()}"
+            if sort_col else ""
         )
+        out = frame.groupBy("shard").applyInArrow(score_shard, out_schema)
         if self.tombstones is not None:
             out = out.join(self.tombstones, "doc_id", "left_anti")
         return out
@@ -1340,10 +1363,6 @@ class SearchEngine:
             blocks, terms, self._dead_sorted, self.meta.lossy_fieldnorms,
             want_positions,
         )))
-
-    @property
-    def _live_doc_ids(self) -> np.ndarray:
-        return self._live_column(None)[0]
 
     def _live_column(self, col: str | None) -> tuple[np.ndarray, pa.Array]:
         """(ids ascending, values of `col`) over the live docs, from the
@@ -1454,7 +1473,10 @@ class SearchEngine:
         # counting request scores an UNPRUNED plan — block-max pruning is
         # only legal when nothing is counted.
         prune = want_docs and not want_count and not sort
-        scores = self._spark_scores(plan, (hits + offset) if prune else None)
+        scores = self._spark_scores(
+            plan, (hits + offset) if prune else None,
+            sort["field"] if sort and want_docs else None,
+        )
         if not want_docs or hits <= 0:
             # a zero-row limit is optimized away with the observation in
             # it, so an empty page counts on its own
@@ -1465,16 +1487,13 @@ class SearchEngine:
             counted = Observation()
             scores = scores.observe(counted, F.count(F.lit(1)).alias("n"))
         if sort:
+            # the shards emit the sort column with the scores
             sort_col = sort["field"]
             key = F.col(sort_col)
             order = [
                 key.asc() if sort.get("order", "asc") == "asc" else key.desc(),
                 F.col("doc_id").asc(),
             ]
-            # the ordering needs the sort column before the top-k
-            scores = scores.join(
-                self.docs.select("doc_id", sort_col), "doc_id"
-            )
         else:
             sort_col = None
             order = [F.desc("score"), F.asc("doc_id")]

@@ -98,11 +98,16 @@ def test_batched_decode_multibucket_multi_term(built):
         assert p.positions.equals(alone.positions)
 
 
-def test_term_scores_identical_with_forced_parallel_decode(built):
+def test_term_scores_identical_with_forced_parallel_decode(
+    built, monkeypatch
+):
     """One doc-id shard, and the most shards the index allows."""
     engine, _ = built
     q = {"kind": "term", "options": {"field": "text", "term": "the"}}
     by_gate = []
+    # one core, so a gate above the df gives one shard
+    monkeypatch.setattr(type(engine.spark.sparkContext),
+                        "defaultParallelism", 1)
     try:
         for gate in (1 << 62, 0):
             engine.DRIVER_MAX_POSTINGS = gate

@@ -6,13 +6,13 @@
 - On the Spark site (gate 0) a request is one Spark action over the
   doc-id shards: term top_docs and count_and_top_docs run two jobs each
   (the shards' shuffle, then the top-k), a 5-url `should` lookup at most
-  two and a sorted match-all four, on a snapshot with tombstones.
+  two and a sorted match-all three, on a snapshot with tombstones.
   total_hits rides the top-k collect (an Observation).
 - The winners' url, timestamp and requested stored fields are read on the
   driver for the winners only; the values equal a Spark collect() of the
   same rows for every stored type (timestamp, binary, u64 decimal, json),
   and no session conf is set.
-- A fast-field sort joins its sort column before the top-k.
+- A fast-field sort's column comes out of the shards with the scores.
 - Response shape (docs/rest_api/search_api.md): score=0 under a field
   sort, sort_value=0 under a score sort, integer unix timestamps; phrase
   queries on fields without positions raise a clear error.
@@ -321,15 +321,15 @@ def test_jobs_per_request_on_tombstoned_snapshot(
     assert n <= 2, n
     assert resp.total_hits == len(live)
     assert sorted(d["id"] for d in resp.documents) == sorted(live)
-    # the shards drop the tombstoned docs themselves (no anti-join): the
-    # sorted match-all runs 4 jobs, the shards' shuffle and the sort
-    # column's join among them
+    # the shards drop the tombstoned docs themselves (no anti-join) and
+    # emit the sort column (no join): the sorted match-all runs 3 jobs,
+    # the shards' shuffle among them
     all_sorted = {
         "query": {"kind": "all"}, "collection_kind": "count_and_top_docs",
         "hits": 10, "sort": {"field": "warc_ts", "order": "desc"},
     }
     resp, n = spark_jobs(spark, lambda: engine.search(all_sorted))
-    assert n == 4, n
+    assert n == 3, n
     assert resp.total_hits == 200 + 25 - 4
 
 
@@ -535,7 +535,7 @@ def test_fetched_values_equal_spark_collect_for_every_type(spark, typed):
         assert d["timestamp"] == int(row["warc_ts"].timestamp())
 
 
-def test_plan_bound_composes(built):
+def test_plan_bound_composes(built, monkeypatch):
     """The plan's bound, which picks the site and the shard count: a
     term's df, Σ df over a phrase's distinct terms, a boolean's clauses
     and a regex's expansion, plus the doc-id high-water mark for `all`,
@@ -566,14 +566,20 @@ def test_plan_bound_composes(built):
     assert bound({"kind": "regex", "options": {
         "field": "text", "regex": "wat.*"}}) == sum(
         engine._expand_regex("text", "wat.*").values())
-    # one shard per gate's worth of postings, at most one per block
+    # one shard per gate's worth of postings, at least one per core of
+    # the session's default parallelism, at most one per block
     most = -(-n // engine.meta.block_size)
-    assert engine._n_shards(0) == 1
+    assert engine._n_shards(0) == min(
+        engine.spark.sparkContext.defaultParallelism, most)
     try:
-        for gate, want in ((1 << 62, 1), (df["the"], 1), (df["the"] - 1, 2),
-                           (1, most), (0, most)):
-            engine.DRIVER_MAX_POSTINGS = gate
-            assert engine._n_shards(df["the"]) == min(want, most), gate
+        for par in (1, 2):
+            monkeypatch.setattr(type(engine.spark.sparkContext),
+                                "defaultParallelism", par)
+            for gate, want in ((1 << 62, 1), (df["the"], 1),
+                               (df["the"] - 1, 2), (1, most), (0, most)):
+                engine.DRIVER_MAX_POSTINGS = gate
+                assert engine._n_shards(df["the"]) == min(
+                    max(want, par), most), (par, gate)
     finally:
         del engine.DRIVER_MAX_POSTINGS
 
@@ -853,7 +859,8 @@ def test_read_cache_entries_are_read_only(built, on_site):
     post = engine._read_cache.get(("postings", "text", "the"))
     assert post.positions is not None and post.ids.size > 0
     ids, _ = engine._read_cache.get(("live", "warc_ts"))
-    for arr in (post.ids, post.tfs, post.lens, ids, engine._live_doc_ids):
+    for arr in (post.ids, post.tfs, post.lens, ids,
+                engine._live_column(None)[0]):
         with pytest.raises(ValueError, match="read-only"):
             arr[0] = 0
 
